@@ -16,12 +16,15 @@
 from __future__ import annotations
 
 import os
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.abspath(__file__))
+if REPO not in sys.path:  # the package imports below resolve from here
+    sys.path.insert(0, REPO)
 FIXTURE_ROOT = os.path.join(REPO, "fixtures")
 
 # --------------------------------------------------------------------
@@ -33,8 +36,6 @@ def _fixture_dir(sf_dir: str) -> str:
     """Map the driver's testdata dir (…/sf0.01) to our interleaved
     fixture corpus of the same scale, generating it if absent."""
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.fixtures.build import ensure_fixtures
     ensure_fixtures(FIXTURE_ROOT, (sf,))
     return os.path.join(FIXTURE_ROOT, f"sf{sf}")
@@ -93,8 +94,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
         return memo
     df = _read_pq(spark, path)
     if do_fan:
-        import sys
-        sys.path.insert(0, REPO)
         from pdf_table_spark.sources.corpus import fan_small_scan
         df = fan_small_scan(spark, df, path)
     _DF_MEMO[key] = df
@@ -102,8 +101,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
 
 
 def _extract_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.spark.pipeline import extract_documents, flatten_output
     return flatten_output(extract_documents(_spans_df(spark, sf_dir)))
 
@@ -136,10 +133,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    import sys
-    sys.path.insert(0, REPO)
-    from pdf_table_spark.ops import (dedup, dsir, multimodal, sampling,
-                                     similarity, text, textfilters)
+    from pdf_table_spark.ops import (dedup, dsir, sampling, similarity,
+                                     text, textfilters)
 
     def q_extract_spans(spark, sf_dir):
         return _extract_flat(spark, sf_dir)
@@ -153,8 +148,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the exchange: the one shuffle here moves six narrow columns
         # instead of every output string (guide §2.3, project before
         # the exchange), and no per-doc array is built.
-        import sys
-        sys.path.insert(0, REPO)
         from pdf_table_spark.spark.pipeline import extract_fragments
         from pyspark.sql.window import Window
         frags = extract_fragments(_spans_df(spark, sf_dir)).select(
@@ -195,8 +188,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Python decode of every other doc — the "don't compute things
         # you throw away" rule (optimization guide §1.2), replacing
         # the old extract-everything-then-broadcast-join shape.
-        import sys
-        sys.path.insert(0, REPO)
         from pdf_table_spark.spark.pipeline import (extract_documents,
                                                     flatten_output)
         docs = _spans_df(spark, sf_dir).filter(F.expr(doc_pred))
@@ -245,8 +236,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pre-reassembly fragment stream: same rows as _extract_flat
         # on every column except the dense offset — consumers that
         # aggregate per kind/doc skip the reassembly shuffle
-        import sys
-        sys.path.insert(0, REPO)
         from pdf_table_spark.spark.pipeline import extract_fragments
         return extract_fragments(_spans_df(spark, sf_dir))
 
@@ -298,31 +287,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # queries are consolidated — union-with-tag for same-shape pairs,
     # doc_id joins for per-doc stat families — keeping every operator
     # oracle-checked each round while staying under the cap.
-    def q_token_stats(spark, sf_dir):
-        return text.token_stats(_t(spark, sf_dir, "documents"))
-
     def q_corpus_stats(spark, sf_dir):
         # one-row dataset-card rollup (totals + exact token-count
         # percentiles)
         return text.corpus_stats(_t(spark, sf_dir, "documents", fan=False))
-
-    def q_quality_score(spark, sf_dir):
-        return text.quality_score(_t(spark, sf_dir, "documents"))
-
-    def q_lang_id(spark, sf_dir):
-        return text.lang_id(_t(spark, sf_dir, "documents"))
-
-    def q_lang_id_ngram(spark, sf_dir):
-        # Cavnar-Trenkle char-trigram out-of-place language ID (the
-        # n-gram heuristic companion to the stopword-hit lang_id)
-        return text.lang_id_ngram(_t(spark, sf_dir, "documents"))
-
-    def q_fingerprint(spark, sf_dir):
-        return text.fingerprint(_t(spark, sf_dir, "documents"))
-
-    def q_winnow_fingerprint(spark, sf_dir):
-        # rolling-hash winnowing fingerprints, summarized per doc
-        return text.winnow_fingerprints(_t(spark, sf_dir, "documents"))
 
     def q_exact_dedup(spark, sf_dir):
         return dedup.exact_dedup(_t(spark, sf_dir, "documents", fan=False))
@@ -336,16 +304,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _lined_docs(spark, sf_dir, fan=True):
         return _t(spark, sf_dir, "documents", fan=fan).select(
             "doc_id", F.expr(_LINED).alias("text"))
-
-    def q_repetition_signals(spark, sf_dir):
-        return textfilters.repetition_signals(_lined_docs(spark, sf_dir))
-
-    def q_gopher_quality(spark, sf_dir):
-        # published thresholds except word count / stopword hits,
-        # scaled to the short synthetic docs
-        return textfilters.gopher_quality(
-            _lined_docs(spark, sf_dir),
-            min_words=10, min_stopword_hits=1)
 
     def q_c4_filters(spark, sf_dir):
         return textfilters.c4_line_filter(_lined_docs(spark, sf_dir))
@@ -441,12 +399,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             neardup_threshold=0.5, max_df=20, max_bucket=10,
             hash_fn="md5")
 
-    def q_assemble_provenance(spark, sf_dir):
-        return _assemble(spark, sf_dir)["provenance"]
-
-    def q_assemble_rows(spark, sf_dir):
-        return _assemble(spark, sf_dir)["assembled"]
-
     def q_resample_mixture(spark, sf_dir):
         # epoch-weighted mixture: 2.4 copies of src1, a quarter of
         # src2, src3 dropped, everything else 1 epoch
@@ -462,12 +414,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # computation, so the pair set matches exactly either way
         return similarity.semdedup(_t(spark, sf_dir, "embeddings"),
                                    threshold=0.45)
-
-    def q_semdedup_assign(spark, sf_dir):
-        return _semdedup(spark, sf_dir)["components"]
-
-    def q_semdedup_keep(spark, sf_dir):
-        return _semdedup(spark, sf_dir)["keep"]
 
     def q_data_selection(spark, sf_dir):
         # merged selection family, union-with-tag (arm, doc_id,
@@ -570,41 +516,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # caps band buckets. The oracle mirrors every cap.
     _DC = dict(threshold=0.5, max_df=20, max_bucket=10, hash_fn="md5")
 
-    def q_dedup_corpus_pairs(spark, sf_dir):
-        return dedup.dedup_corpus(
-            _t(spark, sf_dir, "documents"), **_DC)["pairs"]
-
-    def q_dedup_corpus_keep(spark, sf_dir):
-        return dedup.dedup_corpus(
-            _t(spark, sf_dir, "documents"), **_DC)["keep"]
-
-    # transitive closure over the verified pairs: one canonical doc
-    # per duplicate CLUSTER (alternating large-star/small-star), not
-    # per pair -- chains A~B~C keep exactly min(A,B,C)
-    def q_dedup_cluster_assign(spark, sf_dir):
-        return dedup.dedup_corpus_clusters(
-            _t(spark, sf_dir, "documents"), **_DC)["components"]
-
-    def q_dedup_cluster_keep(spark, sf_dir):
-        return dedup.dedup_corpus_clusters(
-            _t(spark, sf_dir, "documents"), **_DC)["keep"]
-
-    def q_minhash_signatures(spark, sf_dir):
-        return dedup.minhash_signatures(_t(spark, sf_dir, "documents")).select(
-            "doc_id", *[f"s{i}" for i in range(8)])  # first 8 perms checked
-
-    def q_minhash_lsh_pairs(spark, sf_dir):
-        return dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"))
-
-    def q_simhash(spark, sf_dir):
-        return dedup.simhash(_t(spark, sf_dir, "documents", fan=False))
-
-    def q_simhash_pairs(spark, sf_dir):
-        # banded hamming pair join (pigeonhole: d+1 bands find every
-        # pair within hamming d) + exact bit_count verify
-        return dedup.simhash_pairs(
-            _t(spark, sf_dir, "documents", fan=False), max_hamming=3)
-
     def q_audio_chunks(spark, sf_dir, refs: DataFrame | None = None):
         # audio modality: windowed 30s chunk enumeration (JVM-side
         # sequence/explode; only kept windows would reach a decoder).
@@ -646,45 +557,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return sample_frames(videos, every_n=5).select(
             "media_ref", "frame_idx", "ts_sec")
 
-    def q_media_resize(spark, sf_dir):
-        # aspect-preserving thumbnail fit: source dims from the
-        # declared decode stub, fit arithmetic + schema fully
-        # oracle-able (the pixel resample is the stubbed codec step)
-        from pdf_table_spark.ops.multimodal import (
-            media_refs_with_payloads, resize_media)
-        refs = media_refs_with_payloads(_spans_df(spark, sf_dir))
-        return resize_media(refs)
-
-    def q_cosine_topk(spark, sf_dir):
-        return similarity.cosine_topk(_t(spark, sf_dir, "embeddings"), k=5)
-
-    def q_ann_topk_lsh(spark, sf_dir):
-        return similarity.ann_topk_lsh(_t(spark, sf_dir, "embeddings"), k=5)
-
-    def q_ann_topk_ivf(spark, sf_dir):
-        # IVF-Flat: narrow centroid-cell assignment, probe n nearest
-        # cells, exact search within — the second ANN scale path
-        return similarity.ann_topk_ivf(_t(spark, sf_dir, "embeddings"),
-                                       k=5)
-
     def q_embedding_neardup(spark, sf_dir):
         return similarity.embedding_neardup_pairs(
             _t(spark, sf_dir, "embeddings"), threshold=0.95)
-
-    def q_media_features(spark, sf_dir):
-        # feature (float32 vector) is pytest-checked; the md5-derived
-        # metadata is oracle-checked exactly
-        return multimodal.decode_media(
-            multimodal.media_refs_with_payloads(_spans_df(spark, sf_dir))
-        ).select("media_ref", "n_bytes", "width", "height", "format")
 
     # ---- §2 operator families exposed on the extraction output ----
     def q_doc_metrics(spark, sf_dir):
         # A9/A10 metrics rollup over the pipeline output — every agg
         # is an order-independent count/sum per doc, so it runs on the
         # fragment stream (one shuffle instead of two)
-        import sys
-        sys.path.insert(0, REPO)
         from pdf_table_spark.spark.metrics import doc_metrics
         return doc_metrics(_extract_frags(spark, sf_dir))
 
@@ -698,24 +579,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return flat.select(
             "doc_id", "offset", F.length("text").alias("n_chars"),
             F.row_number().over(w).cast("int").alias("para_rank"))
-
-    def q_top_docs_by_tables(spark, sf_dir):
-        # O-family top-k: docs with the most extracted tables
-        return (
-            _extract_flat(spark, sf_dir)
-            .filter(F.col("kind") == "table_html")
-            .groupBy("doc_id").agg(F.count("*").alias("n_tables"))
-            .orderBy(F.col("n_tables").desc(), F.col("doc_id"))
-            .limit(20)
-        )
-
-    def q_lsh_dedup_keep(spark, sf_dir):
-        # U1-style anti-join: survivors after MinHash-LSH dedup (drop
-        # the lexicographically-larger member of every candidate pair)
-        docs = _t(spark, sf_dir, "documents")
-        dupes = (dedup.minhash_lsh_pairs(docs)
-                 .select(F.col("doc_b").alias("doc_id")).distinct())
-        return docs.join(dupes, "doc_id", "left_anti").select("doc_id")
 
     def q_text_normalize(spark, sf_dir):
         # X1/X2 scalar family: punct strip + numberish/OCR-zero token
@@ -733,17 +596,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("n_ocr_zero_tokens"),
         )
 
-    def q_layout_scores(spark, sf_dir):
-        # M-family plug point: broadcast-weights batched inference
-        from pdf_table_spark.spark.model_stage import score_page_layout
-        return score_page_layout(_spans_df(spark, sf_dir))
-
-    def q_quality_model_scores(spark, sf_dir):
-        # the same broadcast-weights seam, text-side: a fastText-style
-        # linear quality classifier over the documents table
-        from pdf_table_spark.spark.model_stage import score_doc_quality
-        return score_doc_quality(_t(spark, sf_dir, "documents"))
-
     def q_page_select(spark, sf_dir):
         # S2 page-range predicate: keep pages 2..end per doc (flattened
         # to counts so the compare is nesting-free)
@@ -754,11 +606,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.expr("size(filter(spans, s -> s.kind = 'pdf_page'))")
             .alias("n_pages_kept"),
             F.size("spans").alias("n_spans_kept"))
-
-    def q_table_exports(spark, sf_dir):
-        # S7 export fan-out: csv/markdown/json per extracted table
-        from pdf_table_spark.ops.export import export_tables
-        return export_tables(_extract_flat(spark, sf_dir))
 
     def q_doc_html(spark, sf_dir, flat: DataFrame | None = None):
         # S7 merged multi-page HTML: per doc, spans in offset order
@@ -1361,8 +1208,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _dk_minhash_sig_sql(n_perms: int) -> str:
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.ops.dedup import PERM_CONSTS
     mins = ", ".join(
         f"min(({a} * h % {P} + {b}) % {P}) as s{i}"
@@ -1380,8 +1225,6 @@ def _dk_minhash_sig_sql(n_perms: int) -> str:
 
 
 def _dk_minhash_bands_cte() -> str:
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.ops.dedup import BANDS, PERM_CONSTS, ROWS_PER_BAND
     mins = ", ".join(
         f"min(({a} * h % {P} + {b}) % {P}) as s{i}"
@@ -1415,8 +1258,6 @@ def _dk_dedup_corpus_cte(threshold: float, max_df: int,
     MinHash signatures → band join with bucket cap → exact Jaccard
     verify on candidates. Ends with a ``pairs`` CTE; callers select
     pairs or the anti-joined survivors."""
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.ops.dedup import BANDS, PERM_CONSTS, ROWS_PER_BAND
     mins = ", ".join(
         f"min(({a} * h % {P} + {b}) % {P}) as s{i}"
@@ -1487,8 +1328,6 @@ def _dk_prepare_sql() -> str:
     (_dk_dedup_corpus_cte over the survivors CTE) -> quality-model
     gate (literal QUALITY_WEIGHTS) -> first-failing-stage provenance.
     """
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.spark.model_stage import QUALITY_WEIGHTS
     g = _dk_gates()
     lined, lines = g["lined"], g["lines"]
@@ -1701,8 +1540,6 @@ def _dk_lang_ngram_sql(top_n: int = 20) -> str:
     """DuckDB twin of ``ops.text.lang_id_ngram`` over the 40 data-file
     trigram profiles: Cavnar-Trenkle out-of-place scores per language,
     ascending (penalty, lang) rank, winner + confidence margin."""
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.ops.text import LANG_TRIGRAM_PROFILES, OOP_MAX
     langs = sorted(LANG_TRIGRAM_PROFILES)
 
@@ -1815,8 +1652,6 @@ def _dk_ann_ivf_sql(k: int = 5, n_centroids: int = 16,
 
 
 def _dk_plane_literal(dim: int, plane_idx: int) -> str:
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.ops.similarity import hyperplane
     return "[" + ", ".join(
         "1.0" if c > 0 else "-1.0"
@@ -1906,8 +1741,6 @@ def _dk_neardup_sql(threshold: float = 0.95, dim: int = 64,
 
 
 def _dk_layout_scores_sql(spans_rel: str) -> str:
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.spark.model_stage import WEIGHTS
     w = WEIGHTS
     score = ("(f0 * {a} + f1 * {b} + f2 * {c} + {d})")
@@ -1955,8 +1788,6 @@ def _dk_orient_sql(spans_rel: str) -> str:
     class, pred in degrees. Poison contract mirrored exactly for the
     fixture domain: invalid JSON OR a first line with a missing /
     non-numeric coordinate → scores 0, pred = declared = -1."""
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.spark.model_stage import ORIENT_WEIGHTS
     w = ORIENT_WEIGHTS
 
@@ -2037,8 +1868,6 @@ def _dk_quality_model_sql() -> str:
     QUALITY_WEIGHTS head): integer text features cast to double, the
     same 5x2 matmul, argmax over the ROUNDED scores with keep winning
     ties — exactly what the Arrow stage computes."""
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.ops.textfilters import GOPHER_STOPWORDS
     from pdf_table_spark.spark.model_stage import QUALITY_WEIGHTS
     w = QUALITY_WEIGHTS
@@ -2079,8 +1908,6 @@ def _dk_gates() -> dict:
     single source for every oracle that embeds the gate formulas
     (_dk_filter_sqls AND _dk_prepare_sql), so the two can never
     drift apart."""
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.ops.textfilters import (GOPHER_STOPWORDS,
                                                  PII_PATTERNS)
 
@@ -2460,8 +2287,6 @@ def _dk_filter_sqls() -> dict[str, str]:
 
 
 def oracle_sql() -> dict[str, str]:
-    import sys
-    sys.path.insert(0, REPO)
     from pdf_table_spark.ops.text import (LANG_STOPWORDS, cjk_count_exprs,
                                           cjk_gate_expr)
 

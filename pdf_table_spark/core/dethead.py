@@ -23,7 +23,7 @@ no access to the planted ``det_cells``:
     width (word gaps are exactly one empty char slot wide).
 
 The three factors are the head's parameters, loaded from a ``.npz``
-artifact and broadcast by ``spark.model_stage.score_text_detection``
+artifact and broadcast by ``spark.model_stage.score_det_contours``
 exactly like the other heads. Pure functions — shared by the Spark
 Arrow stage and tests; the driver oracle is an independent
 planted-interval twin in SQL (same-extent dets merged by x-gap).

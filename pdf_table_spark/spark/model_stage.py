@@ -1,40 +1,200 @@
-"""Broadcast-weights model stage — the M-family plug point (SURVEY
-§2.9: layout analysis / TSR models M1-M10 share one contract:
-``_preprocess → _run_model → _postprocess`` over page batches,
-``base_infer_task.py:96-126``).
+"""Broadcast-weights model heads — the M-family plug point (SURVEY
+§2.9: the reference's layout / TSR / OCR models M1-M10 share one
+contract, ``_preprocess → _run_model → _postprocess`` over page
+batches, ``base_infer_task.py:96-126``).
 
-This module demonstrates the full distributed pattern with a
-deterministic stand-in model, so swapping in real ONNX/torch weights
-changes ONE function:
+A head is data, a :class:`Head`: its name and version, its default
+tensors (the same ``{name: array}`` dict an ``.npz`` artifact loads
+to), ``materialise(tensors) → model``, the input projection it reads,
+``decode_batch(model, batch) → output rows`` and its output schema.
+:func:`run_head` is the one Spark runner every head shares:
 
-  * weights live on the driver once and ship via
-    ``spark.sparkContext.broadcast`` — never captured per-task;
-  * each Python worker materializes the model ONCE (module-level
-    singleton keyed by broadcast id — the executor-side lazy init the
-    reference does per process, ``ocr_system_task.py:72-75``);
-  * inference is batched: one matrix multiply per Arrow batch, not per
-    row.
+  * tensors come from ``weights_path`` (an ``.npz`` written by
+    ``save_weights`` / ``save_weights_dict``, version embedded) or
+    the head's literal defaults, loaded ONCE on the driver and shipped
+    via ``spark.sparkContext.broadcast`` — never captured per task;
+  * each Python worker materialises a head ONCE per (head name,
+    version) in a module-level singleton — the executor-side lazy
+    init the reference does per process (``ocr_system_task.py:72-75``).
+    The key is explicit: each task deserialises a fresh Broadcast
+    wrapper, so an id()-based key would re-materialise (and leak) the
+    model on every task, and a version-only key would hand one head
+    another head's model when two artifacts share a version string;
+  * ONE ``mapInArrow`` per head: a narrow plan with a single Python
+    boundary; the linear heads run one matmul per Arrow batch.
 
-The stand-in "layout model" scores each page from geometry-count
-features (n_text_lines, n_rects, n_images, bias) through a fixed
-linear head over 3 classes (table / text / figure) — deterministic and
-cheap, so the *distributed plumbing* is what gets tested and oracled.
+The heads are deterministic stand-ins (linear heads over page-geometry
+or text features, parameter vectors for the glyph and postprocess
+decoders, hand-constructed CNN tensors), so the DuckDB oracle can embed
+the literal weights; a trained checkpoint is a new artifact, not new
+plumbing. Each head keeps its own quarantine rule for a bad payload:
+layout and orientation emit zeroed ``error`` / ``-1`` rows, TSR emits
+``""``, the glyph and postprocess decoders drop the page, and the
+scan-CNN heads drop only undecodable images (``ValueError``).
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
+from typing import Any
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.dethead import DET_VERSION, DET_WEIGHTS
+from ..core.nn import (DET_CNN, DETCNN_VERSION, OCR_DET_CNN, OCRCNN_VERSION,
+                       REC_CNN)
+from ..core.tsrhead import TSR_VERSION, TSR_WEIGHTS
+
+
+@dataclass(frozen=True)
+class Head:
+    """One broadcast-weights model head. ``schema`` is a Spark DDL
+    string; a ``{col}`` placeholder takes that input column's type
+    (the quality head passes ``doc_id`` through with the input's
+    type). ``decode_batch`` returns either a dict of output columns
+    or a list of row tuples in schema order."""
+    name: str
+    version: str
+    tensors: Callable[[], dict]
+    materialise: Callable[[dict], Any]
+    project: Callable[[DataFrame], DataFrame]
+    decode_batch: Callable[[Any, pa.RecordBatch], dict | list]
+    schema: str
+
+
+def save_weights_dict(path: str, tensors: dict, version: str) -> None:
+    """Serialize a head to ``.npz``: one named float64 array per
+    tensor + the version string — the artifact ``run_head`` loads on
+    the driver and broadcasts."""
+    np.savez(path, version=np.array(version),
+             **{k: np.asarray(v, dtype=np.float64)
+                for k, v in tensors.items()})
+
+
+def save_weights(path: str, weights, version: str) -> None:
+    """Serialize a single-matrix head: the ``{"weights": matrix}``
+    case of ``save_weights_dict``."""
+    save_weights_dict(path, {"weights": weights}, version)
+
+
+def load_artifact(path: str) -> tuple[dict, str]:
+    """Load an ``.npz`` head → (dict of ndarrays, version str)."""
+    with np.load(path) as npz:
+        return ({k: npz[k] for k in npz.files if k != "version"},
+                str(npz["version"]))
+
+
+_MODEL_SINGLETON: dict = {}
+
+
+def _model(key: tuple[str, str], tensors_bc, materialise,
+           mat_counter=None):
+    """Executor-side lazy singleton: one materialised model per Python
+    worker per (head name, version). Module-level so the closure that
+    calls it resolves THIS module's dict on the worker, not a pickled
+    copy. ``mat_counter`` (an Accumulator) counts materialisations so
+    tests can assert once-per-worker-per-version."""
+    model = _MODEL_SINGLETON.get(key)
+    if model is None:
+        model = _MODEL_SINGLETON[key] = materialise(tensors_bc.value)
+        if mat_counter is not None:
+            mat_counter.add(1)
+    return model
+
+
+def run_head(df: DataFrame, head: Head, weights_path: str | None = None,
+             _mat_counter=None) -> DataFrame:
+    """Project ``df`` for ``head`` and score it through one
+    broadcast-weights Arrow stage. ``weights_path``: an ``.npz``
+    artifact whose embedded version keys the worker singleton, so two
+    artifacts coexist in one long-lived worker without re-materialising
+    either; omitted → the head's literal tensors and version (what the
+    DuckDB oracle embeds)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+    if weights_path is not None:
+        tensors, version = load_artifact(weights_path)
+    else:
+        tensors, version = head.tensors(), head.version
+    tensors_bc = df.sparkSession.sparkContext.broadcast(
+        {k: np.asarray(v, dtype=np.float64) for k, v in tensors.items()})
+    rows = head.project(df)
+    schema = head.schema
+    if "{" in schema:
+        schema = schema.format(**dict(rows.dtypes))
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    key = (head.name, version)
+    materialise, decode = head.materialise, head.decode_batch
+
+    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        model = _model(key, tensors_bc, materialise, _mat_counter)
+        for batch in batches:
+            out = decode(model, batch)
+            if isinstance(out, list):  # row tuples → columns
+                out = {f.name: [r[i] for r in out]
+                       for i, f in enumerate(arrow_schema)}
+            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
+
+    return rows.mapInArrow(stage, schema=struct)
+
+
+# ---------------------------------------------------- shared pieces
+
+
+def _pages(kind: str) -> Callable[[DataFrame], DataFrame]:
+    """documents(doc_id, spans) → (doc_id, offset, text) per span of
+    ``kind`` (explode + codegen filter, ahead of the Arrow stage)."""
+    def project(docs: DataFrame) -> DataFrame:
+        return (docs.select("doc_id", F.explode("spans").alias("s"))
+                .filter(F.col("s.kind") == kind)
+                .select("doc_id", F.col("s.offset").alias("offset"),
+                        F.col("s.text").alias("text")))
+    return project
+
+
+def _scans(scans: DataFrame) -> DataFrame:
+    """(media_ref, payload) scan images, widened for the CPU-bound CNN
+    forwards (``sources.corpus.fan_cpu_bound``)."""
+    from ..sources.corpus import fan_cpu_bound
+    return fan_cpu_bound(scans.select("media_ref", "payload"))
+
+
+def _rows(batch: pa.RecordBatch):
+    return zip(*(c.to_pylist() for c in batch.columns))
+
+
+def _matrix(tensors: dict) -> np.ndarray:
+    return tensors["weights"]
+
+
+def _nested(tensors: dict) -> list:
+    return tensors["weights"].tolist()
+
+
+def _split(*prefixes: str) -> Callable[[dict], tuple]:
+    """Combined scan-CNN artifact → one tensor dict per prefix (None
+    when the artifact carries none, so the built-in tensors apply)."""
+    def materialise(tensors: dict) -> tuple:
+        return tuple({k[len(p):]: v for k, v in tensors.items()
+                      if k.startswith(p)} or None for p in prefixes)
+    return materialise
+
+
+def _prefixed(**parts: dict) -> dict:
+    return {f"{p}_{k}": v for p, ts in parts.items() for k, v in ts.items()}
+
+
+# ------------------------------------------------------- page layout
+
 # fixed 4x3 linear head: rows = (n_text_lines, n_rects, n_images, bias),
 # cols = (table, text, figure). Literal so the DuckDB oracle can embed
-# the identical values. This is the FALLBACK when no serialized
-# artifact is supplied — production loads a .npz via ``weights_path``
+# the identical values; production loads a .npz via ``weights_path``
 # (the reference's weights come off disk too, base_infer_task.py:171-303).
 WEIGHTS = [
     [0.05, 0.40, -0.10],
@@ -43,125 +203,50 @@ WEIGHTS = [
     [0.10, 0.50, 0.20],
 ]
 
-
-def save_weights(path: str, weights, version: str) -> None:
-    """Serialize a layout head to ``.npz`` (weights matrix + version
-    string) — the artifact format ``score_page_layout(weights_path=…)``
-    loads on the driver and broadcasts."""
-    np.savez(path, weights=np.asarray(weights, dtype=np.float64),
-             version=np.array(version))
-
-
-def load_weights(path: str):
-    """Load a ``.npz`` layout head → (weights ndarray, version str)."""
-    with np.load(path) as npz:
-        return npz["weights"], str(npz["version"])
-
 CLASSES = ["table", "text", "figure"]
 
-SCORE_SCHEMA = ("doc_id string, offset int, score_table double, "
-                "score_text double, score_figure double, "
-                "layout_class string")
 
-MODEL_VERSION = "layout-linear-v1"
-
-_MODEL_SINGLETON: dict = {}
-
-
-def _get_model(version: str, weights_bc, mat_counter=None):
-    """Executor-side lazy singleton: one materialized model per Python
-    worker per model VERSION. Keyed by an explicit version string, not
-    the broadcast object — each task deserializes a fresh Broadcast
-    wrapper, so an id()-based key would re-materialize (and leak) the
-    model on every task. ``mat_counter`` (an Accumulator) counts actual
-    materializations so tests can assert once-per-worker-per-version."""
-    model = _MODEL_SINGLETON.get(version)
-    if model is None:
-        model = np.asarray(weights_bc.value, dtype=np.float64)
-        _MODEL_SINGLETON[version] = model
-        if mat_counter is not None:
-            mat_counter.add(1)
-    return model
-
-
-def _make_stage(weights_bc, version: str = MODEL_VERSION,
-                mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        w = _get_model(version, weights_bc, mat_counter)
-        for batch in batches:
-            cols = {n: batch.column(i).to_pylist()
-                    for i, n in enumerate(batch.schema.names)}
-            feats = np.zeros((batch.num_rows, 4), dtype=np.float64)
-            poisoned = np.zeros(batch.num_rows, dtype=bool)
-            for i, text in enumerate(cols["text"]):
-                try:
-                    page = json.loads(text)
-                    feats[i] = (len(page.get("text_lines") or ()),
-                                len(page.get("rects") or ()),
-                                len(page.get("images") or ()), 1.0)
-                except Exception:  # noqa: BLE001 — quarantine, don't
-                    poisoned[i] = True  # crash the job on one bad page
-            scores = feats @ w                    # one matmul per batch
-            cls = np.argmax(scores, axis=1)
-            scores = np.round(scores, 6)
-            scores[poisoned] = 0.0
-            labels = ["error" if poisoned[i] else CLASSES[c]
-                      for i, c in enumerate(cls)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["doc_id"], pa.string()),
-                 pa.array(cols["offset"], pa.int32()),
-                 pa.array(scores[:, 0]), pa.array(scores[:, 1]),
-                 pa.array(scores[:, 2]),
-                 pa.array(labels, pa.string())],
-                names=["doc_id", "offset", "score_table", "score_text",
-                       "score_figure", "layout_class"])
-    return stage
+def _layout_decode(w: np.ndarray, batch: pa.RecordBatch) -> dict:
+    texts = batch.column("text").to_pylist()
+    feats = np.zeros((len(texts), 4), dtype=np.float64)
+    poisoned = np.zeros(len(texts), dtype=bool)
+    for i, text in enumerate(texts):
+        try:
+            page = json.loads(text)
+            feats[i] = (len(page.get("text_lines") or ()),
+                        len(page.get("rects") or ()),
+                        len(page.get("images") or ()), 1.0)
+        except Exception:  # noqa: BLE001 — quarantine, don't
+            poisoned[i] = True  # crash the job on one bad page
+    scores = feats @ w                    # one matmul per batch
+    cls = np.argmax(scores, axis=1)
+    scores = np.round(scores, 6)
+    scores[poisoned] = 0.0
+    return {"doc_id": batch.column("doc_id"),
+            "offset": batch.column("offset"),
+            "score_table": scores[:, 0], "score_text": scores[:, 1],
+            "score_figure": scores[:, 2],
+            "layout_class": ["error" if p else CLASSES[c]
+                             for p, c in zip(poisoned, cls)]}
 
 
-def score_page_layout(docs_spans: DataFrame,
-                      weights_path: str | None = None,
-                      _mat_counter=None) -> DataFrame:
-    """documents(doc_id, spans) → one scored row per pdf_page span.
-
-    Plan: explode → filter to pages (codegen) → broadcast-weights Arrow
-    stage. The same shape carries a real PicoDet/SLANet/LORE model at
-    production scale — only ``_get_model``/the matmul change.
-
-    ``weights_path``: a ``.npz`` artifact (see ``save_weights``) loaded
-    ONCE on the driver and broadcast; its embedded version string keys
-    the executor-side singleton, so two different artifacts coexist in
-    one long-lived worker without re-materializing either. Omitted →
-    the module-literal WEIGHTS / MODEL_VERSION fallback (what the
-    DuckDB oracle embeds).
-    """
-    spark = docs_spans.sparkSession
-    if weights_path is not None:
-        weights, version = load_weights(weights_path)
-        weights_bc = spark.sparkContext.broadcast(weights.tolist())
-    else:
-        weights, version = WEIGHTS, MODEL_VERSION
-        weights_bc = spark.sparkContext.broadcast(WEIGHTS)
-    pages = (
-        docs_spans.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "pdf_page")
-        .select("doc_id", F.col("s.offset").alias("offset"),
-                F.col("s.text").alias("text"))
-    )
-    return pages.mapInArrow(
-        _make_stage(weights_bc, version, _mat_counter),
-        schema=SCORE_SCHEMA)
+LAYOUT_HEAD = Head(
+    name="layout",
+    version="layout-linear-v1",
+    tensors=lambda: {"weights": WEIGHTS},
+    materialise=_matrix,
+    project=_pages("pdf_page"),
+    decode_batch=_layout_decode,
+    schema=("doc_id string, offset int, score_table double, "
+            "score_text double, score_figure double, layout_class string"))
 
 
-# --------------------------------------------------------------------
-# doc-quality head — a second consumer of the same seam, text-side
-# --------------------------------------------------------------------
+# ------------------------------------------------------- doc quality
 
 # 5x2 linear head over integer text features:
 # rows = (n_words, word_chars, n_alpha_words, stopword_hits, bias),
-# cols = (keep, drop). Literal so the DuckDB oracle embeds identical
-# values; ``weights_path`` swaps in a file-loaded artifact exactly like
-# the layout head. The shape is the fastText-style quality classifier
-# a corpus pipeline runs at ingest (linear over cheap text features).
+# cols = (keep, drop) — the fastText-style quality classifier a corpus
+# pipeline runs at ingest (linear over cheap text features).
 QUALITY_WEIGHTS = [
     [0.015, 0.010],
     [0.001, 0.001],
@@ -171,13 +256,6 @@ QUALITY_WEIGHTS = [
 ]
 
 QUALITY_CLASSES = ["keep", "drop"]
-
-# doc_id passes through with the INPUT's type (bigint corpora and
-# string/synthetic ids both flow); the rest of the schema is fixed
-QUALITY_SCHEMA = ("doc_id {id_ty}, score_keep double, "
-                  "score_drop double, pred string")
-
-QUALITY_VERSION = "doc-quality-linear-v1"
 
 
 def _quality_features(texts) -> "np.ndarray":
@@ -199,119 +277,60 @@ def _quality_features(texts) -> "np.ndarray":
     return feats
 
 
-def _make_quality_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        w = _get_model(version, weights_bc, mat_counter)
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            scores = np.round(_quality_features(texts) @ w, 6)
-            # argmax over the ROUNDED scores, first index wins ties —
-            # mirrored by the oracle's `score_keep >= score_drop`
-            cls = np.argmax(scores, axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0),
-                 pa.array(scores[:, 0]), pa.array(scores[:, 1]),
-                 pa.array([QUALITY_CLASSES[c] for c in cls], pa.string())],
-                names=["doc_id", "score_keep", "score_drop", "pred"])
-    return stage
+def _quality_decode(w: np.ndarray, batch: pa.RecordBatch) -> dict:
+    scores = np.round(
+        _quality_features(batch.column("text").to_pylist()) @ w, 6)
+    # argmax over the ROUNDED scores, first index wins ties —
+    # mirrored by the oracle's `score_keep >= score_drop`
+    cls = np.argmax(scores, axis=1)
+    return {"doc_id": batch.column("doc_id"),
+            "score_keep": scores[:, 0], "score_drop": scores[:, 1],
+            "pred": [QUALITY_CLASSES[c] for c in cls]}
 
 
-def score_doc_quality(docs: DataFrame,
-                      weights_path: str | None = None,
-                      _mat_counter=None) -> DataFrame:
-    """documents(doc_id, text) → (doc_id, score_keep, score_drop,
-    pred) through the SAME broadcast-weights Arrow seam as the layout
-    head: driver-loaded (or literal) weights broadcast once, executor
-    singleton keyed by version, one matmul per Arrow batch. Narrow —
-    no shuffle; at 100 TB this runs at scan speed."""
-    spark = docs.sparkSession
-    if weights_path is not None:
-        weights, version = load_weights(weights_path)
-        weights_bc = spark.sparkContext.broadcast(weights.tolist())
-    else:
-        version = QUALITY_VERSION
-        weights_bc = spark.sparkContext.broadcast(QUALITY_WEIGHTS)
-    id_ty = dict(docs.dtypes)["doc_id"]
-    return docs.select("doc_id", "text").mapInArrow(
-        _make_quality_stage(weights_bc, version, _mat_counter),
-        schema=QUALITY_SCHEMA.format(id_ty=id_ty))
+QUALITY_HEAD = Head(
+    name="quality",
+    version="doc-quality-linear-v1",
+    tensors=lambda: {"weights": QUALITY_WEIGHTS},
+    materialise=_matrix,
+    project=lambda docs: docs.select("doc_id", "text"),
+    decode_batch=_quality_decode,
+    schema=("doc_id {doc_id}, score_keep double, score_drop double, "
+            "pred string"))
 
 
-# --------------------------------------------------------------------
-# TSR head — third consumer of the seam: artifact → structure → HTML
-# --------------------------------------------------------------------
+# ---------------------------------------------- table structure (TSR)
 
-# the TSR stand-in head's literal weights/version live in core.tsrhead
-# (shared with the single-process fixture oracle); this section wires
-# them through the SAME broadcast/singleton/Arrow plumbing as the
-# layout and quality heads — the reference's base_infer_task dispatch
-# (base_infer_task.py:311-315) feeding lineless_table_process decode.
-
-TSR_SCHEMA = "doc_id string, offset int, kind string, text string"
+# the literal weights/version live in core.tsrhead (shared with the
+# single-process fixture oracle); decode is the reference's
+# base_infer_task dispatch (base_infer_task.py:311-315) feeding
+# lineless_table_process
 
 
-def _make_tsr_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core.tsrhead import extract_page_from_model
-        w = _get_model(version, weights_bc, mat_counter)
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            offsets = batch.column(1).to_pylist()
-            payloads = batch.column(2).to_pylist()
-            htmls = []
-            for p in payloads:
-                try:
-                    htmls.append(extract_page_from_model(
-                        json.loads(p), w.tolist()))
-                except Exception:  # noqa: BLE001 — quarantine bad pages
-                    htmls.append("")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(offsets, pa.int32()),
-                 pa.array(["table_html"] * len(htmls), pa.string()),
-                 pa.array(htmls, pa.string())],
-                names=["doc_id", "offset", "kind", "text"])
-    return stage
+def _tsr_decode(w: list, batch: pa.RecordBatch) -> dict:
+    from ..core.tsrhead import extract_page_from_model
+    htmls = []
+    for p in batch.column("text").to_pylist():
+        try:
+            htmls.append(extract_page_from_model(json.loads(p), w))
+        except Exception:  # noqa: BLE001 — quarantine bad pages
+            htmls.append("")
+    return {"doc_id": batch.column("doc_id"),
+            "offset": batch.column("offset"),
+            "kind": ["table_html"] * len(htmls), "text": htmls}
 
 
-def score_table_structure(docs_spans: DataFrame,
-                          weights_path: str | None = None,
-                          _mat_counter=None) -> DataFrame:
-    """documents(doc_id, spans) → one (doc_id, offset, 'table_html',
-    html) row per ocr_page span, with the STRUCTURE inferred by the
-    TSR head at runtime (core.tsrhead: grid clustering + linear axis
-    head) and decoded through core.logicell — no pre-filled fixture
-    structure anywhere on the path.
-
-    Same seam as the other heads: ``weights_path`` loads a ``.npz``
-    once on the driver, broadcasts it, and the executor singleton keys
-    on the artifact's version string; omitted → the literal
-    core.tsrhead.TSR_WEIGHTS the fixture oracle embeds. ONE Python
-    boundary (plan-asserted), narrow — runs at scan speed."""
-    from ..core.tsrhead import TSR_VERSION, TSR_WEIGHTS
-    spark = docs_spans.sparkSession
-    if weights_path is not None:
-        weights, version = load_weights(weights_path)
-        weights_bc = spark.sparkContext.broadcast(weights.tolist())
-    else:
-        version = TSR_VERSION
-        weights_bc = spark.sparkContext.broadcast(TSR_WEIGHTS)
-    pages = (
-        docs_spans.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "ocr_page")
-        .select("doc_id", F.col("s.offset").alias("offset"),
-                F.col("s.text").alias("text"))
-    )
-    return pages.mapInArrow(
-        _make_tsr_stage(weights_bc, version, _mat_counter),
-        schema=TSR_SCHEMA)
+TSR_HEAD = Head(
+    name="tsr",
+    version=TSR_VERSION,
+    tensors=lambda: {"weights": TSR_WEIGHTS},
+    materialise=_nested,
+    project=_pages("ocr_page"),
+    decode_batch=_tsr_decode,
+    schema="doc_id string, offset int, kind string, text string")
 
 
-# --------------------------------------------------------------------
-# page-orientation head — fourth consumer of the seam (M1/M4's PULC
-# text_image_orientation classifier half)
-# --------------------------------------------------------------------
+# -------------------------------------------------- page orientation
 
 # 4x4 linear head over page-geometry features, rows = (first-line-is-
 # vertical, first-line center x / width, center y / height, bias),
@@ -323,23 +342,13 @@ def score_table_structure(docs_spans: DataFrame,
 # PDF-coordinate (origin bottom-left, y up), so an upright page's
 # first content line sits at LARGE y; the 90-cw point map
 # (x,y)->(y,W-x) then sends it to the right edge, 180 to the bottom,
-# 270 to the left. Literal so the DuckDB oracle embeds identical
-# values; ``weights_path`` swaps in a .npz artifact exactly like the
-# other heads.
+# 270 to the left.
 ORIENT_WEIGHTS = [
     [-2.0, 2.0, -2.0, 2.0],
     [0.0, 2.0, 0.0, -2.0],
     [2.0, 0.0, -2.0, 0.0],
     [0.0, -2.0, 2.0, 0.0],
 ]
-
-ORIENT_CLASSES = ["rot0", "rot90", "rot180", "rot270"]
-
-ORIENT_SCHEMA = ("doc_id string, offset int, score_rot0 double, "
-                 "score_rot90 double, score_rot180 double, "
-                 "score_rot270 double, pred_rot int, declared_rot int")
-
-ORIENT_VERSION = "page-orient-linear-v1"
 
 
 def _orient_features(page: dict) -> tuple[float, float, float]:
@@ -358,183 +367,72 @@ def _orient_features(page: dict) -> tuple[float, float, float]:
             (float(t["y0"]) + float(t["y1"])) / 2.0 / h)
 
 
-def _make_orient_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        w = _get_model(version, weights_bc, mat_counter)
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            offsets = batch.column(1).to_pylist()
-            payloads = batch.column(2).to_pylist()
-            n = len(payloads)
-            feats = np.zeros((n, 4), dtype=np.float64)
-            feats[:, 3] = 1.0
-            declared = np.zeros(n, dtype=np.int32)
-            poisoned = np.zeros(n, dtype=bool)
-            for i, p in enumerate(payloads):
-                try:
-                    page = json.loads(p)
-                    feats[i, :3] = _orient_features(page)
-                    declared[i] = int(page.get("rotation") or 0)
-                except Exception:  # noqa: BLE001 — quarantine bad pages
-                    poisoned[i] = True
-            scores = np.round(feats @ w, 6)
-            cls = np.argmax(scores, axis=1)
-            scores[poisoned] = 0.0
-            pred = np.where(poisoned, -1, cls * 90).astype(np.int32)
-            declared[poisoned] = -1
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(offsets, pa.int32()),
-                 pa.array(scores[:, 0]), pa.array(scores[:, 1]),
-                 pa.array(scores[:, 2]), pa.array(scores[:, 3]),
-                 pa.array(pred, pa.int32()),
-                 pa.array(declared, pa.int32())],
-                names=["doc_id", "offset", "score_rot0", "score_rot90",
-                       "score_rot180", "score_rot270", "pred_rot",
-                       "declared_rot"])
-    return stage
+def _orient_decode(w: np.ndarray, batch: pa.RecordBatch) -> dict:
+    payloads = batch.column("text").to_pylist()
+    n = len(payloads)
+    feats = np.zeros((n, 4), dtype=np.float64)
+    feats[:, 3] = 1.0
+    declared = np.zeros(n, dtype=np.int32)
+    poisoned = np.zeros(n, dtype=bool)
+    for i, p in enumerate(payloads):
+        try:
+            page = json.loads(p)
+            feats[i, :3] = _orient_features(page)
+            declared[i] = int(page.get("rotation") or 0)
+        except Exception:  # noqa: BLE001 — quarantine bad pages
+            poisoned[i] = True
+    scores = np.round(feats @ w, 6)
+    cls = np.argmax(scores, axis=1)
+    scores[poisoned] = 0.0
+    declared[poisoned] = -1
+    return {"doc_id": batch.column("doc_id"),
+            "offset": batch.column("offset"),
+            **{f"score_rot{90 * j}": scores[:, j] for j in range(4)},
+            "pred_rot": np.where(poisoned, -1, cls * 90),
+            "declared_rot": declared}
 
 
-def score_page_orientation(docs_spans: DataFrame,
-                           weights_path: str | None = None,
-                           _mat_counter=None) -> DataFrame:
-    """documents(doc_id, spans) → one orientation prediction per
-    pdf_page span: (scores over rot0/90/180/270, pred_rot in degrees,
-    declared_rot from the payload for parity checks; -1 on a poisoned
-    payload). Same seam as the other heads — broadcast weights,
-    version-keyed executor singleton, one matmul per Arrow batch,
-    narrow plan."""
-    spark = docs_spans.sparkSession
-    if weights_path is not None:
-        weights, version = load_weights(weights_path)
-        weights_bc = spark.sparkContext.broadcast(weights.tolist())
-    else:
-        version = ORIENT_VERSION
-        weights_bc = spark.sparkContext.broadcast(ORIENT_WEIGHTS)
-    pages = (
-        docs_spans.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "pdf_page")
-        .select("doc_id", F.col("s.offset").alias("offset"),
-                F.col("s.text").alias("text"))
-    )
-    return pages.mapInArrow(
-        _make_orient_stage(weights_bc, version, _mat_counter),
-        schema=ORIENT_SCHEMA)
+ORIENT_HEAD = Head(
+    name="orient",
+    version="page-orient-linear-v1",
+    tensors=lambda: {"weights": ORIENT_WEIGHTS},
+    materialise=_matrix,
+    project=_pages("pdf_page"),
+    decode_batch=_orient_decode,
+    schema=("doc_id string, offset int, score_rot0 double, "
+            "score_rot90 double, score_rot180 double, score_rot270 double, "
+            "pred_rot int, declared_rot int"))
 
 
-# --------------------------------------------------------------------
-# det/rec head — fifth consumer of the seam (M3 text detection + M5
-# recognition over glyph evidence; core.dethead holds the decode)
-# --------------------------------------------------------------------
-
-DET_SCHEMA = ("doc_id string, offset int, x0 double, y0 double, "
-              "x1 double, y1 double, text string")
+# ----------------------------------- det/rec + contours (core.dethead)
 
 
-def _make_det_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core.dethead import detect_lines
-        w = _get_model(version, weights_bc, mat_counter)
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            offsets = batch.column(1).to_pylist()
-            payloads = batch.column(2).to_pylist()
-            rows = {k: [] for k in
-                    ("doc_id", "offset", "x0", "y0", "x1", "y1", "text")}
-            for did, off, p in zip(doc_ids, offsets, payloads):
-                try:
-                    dets = detect_lines(json.loads(p), w.tolist())
-                except Exception:  # noqa: BLE001 — quarantine bad pages
-                    continue
-                for d in dets:
-                    rows["doc_id"].append(did)
-                    rows["offset"].append(off)
-                    for k in ("x0", "y0", "x1", "y1", "text"):
-                        rows[k].append(d[k])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(rows["doc_id"], pa.string()),
-                 pa.array(rows["offset"], pa.int32()),
-                 pa.array(rows["x0"], pa.float64()),
-                 pa.array(rows["y0"], pa.float64()),
-                 pa.array(rows["x1"], pa.float64()),
-                 pa.array(rows["y1"], pa.float64()),
-                 pa.array(rows["text"], pa.string())],
-                names=["doc_id", "offset", "x0", "y0",
-                       "x1", "y1", "text"])
-    return stage
+def _det_contours_decode(w: list, batch: pa.RecordBatch) -> list:
+    from ..core.dethead import (contour_blobs, detect_lines,
+                                format_contour, format_det)
+    out = []
+    for did, off, p in _rows(batch):
+        try:
+            lines = detect_lines(json.loads(p), w)
+        except Exception:  # noqa: BLE001 — quarantine bad pages
+            continue
+        out += [(did, off, "det_cell", format_det(d)) for d in lines]
+        out += [(did, off, "contour", format_contour(b))
+                for b in contour_blobs(lines)]
+    return out
 
 
-def score_text_detection(docs_spans: DataFrame,
-                         weights_path: str | None = None,
-                         _mat_counter=None) -> DataFrame:
-    """documents(doc_id, spans) → one row per DETECTED text line on
-    each ocr_page span: box + recognized text, recovered from the
-    page's per-character ``glyphs`` evidence with NO access to the
-    planted det_cells (core.dethead). The driver oracle checks the
-    output against the planted detections via an interval-merge twin
-    in pure SQL — an independent ground truth, not shared code.
-
-    Same seam as the other heads: ``weights_path`` loads a ``.npz``
-    parameter vector once on the driver, broadcasts it, and the
-    executor singleton keys on the artifact's version string; one
-    Python boundary, narrow plan."""
-    from ..core.dethead import DET_VERSION, DET_WEIGHTS
-    spark = docs_spans.sparkSession
-    if weights_path is not None:
-        weights, version = load_weights(weights_path)
-        weights_bc = spark.sparkContext.broadcast(weights.tolist())
-    else:
-        version = DET_VERSION
-        weights_bc = spark.sparkContext.broadcast(DET_WEIGHTS)
-    pages = (
-        docs_spans.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "ocr_page")
-        .select("doc_id", F.col("s.offset").alias("offset"),
-                F.col("s.text").alias("text"))
-    )
-    return pages.mapInArrow(
-        _make_det_stage(weights_bc, version, _mat_counter),
-        schema=DET_SCHEMA)
+DET_CONTOURS_HEAD = Head(
+    name="det_contours",
+    version=DET_VERSION,
+    tensors=lambda: {"weights": DET_WEIGHTS},
+    materialise=_nested,
+    project=_pages("ocr_page"),
+    decode_batch=_det_contours_decode,
+    schema="doc_id string, offset int, kind string, text string")
 
 
-DETC_SCHEMA = "doc_id string, offset int, kind string, text string"
-
-
-def _make_detc_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core.dethead import (contour_blobs, detect_lines,
-                                    format_contour, format_det)
-        w = _get_model(version, weights_bc, mat_counter)
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            offsets = batch.column(1).to_pylist()
-            payloads = batch.column(2).to_pylist()
-            out = {k: [] for k in ("doc_id", "offset", "kind", "text")}
-            for did, off, p in zip(doc_ids, offsets, payloads):
-                try:
-                    lines = detect_lines(json.loads(p), w.tolist())
-                except Exception:  # noqa: BLE001 — quarantine bad pages
-                    continue
-                for d in lines:
-                    out["doc_id"].append(did)
-                    out["offset"].append(off)
-                    out["kind"].append("det_cell")
-                    out["text"].append(format_det(d))
-                for b in contour_blobs(lines):
-                    out["doc_id"].append(did)
-                    out["offset"].append(off)
-                    out["kind"].append("contour")
-                    out["text"].append(format_contour(b))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["doc_id"], pa.string()),
-                 pa.array(out["offset"], pa.int32()),
-                 pa.array(out["kind"], pa.string()),
-                 pa.array(out["text"], pa.string())],
-                names=["doc_id", "offset", "kind", "text"])
-    return stage
-
-
-NEURAL_SCHEMA = "doc_id string, offset int, kind string, text string"
+# ------------------------------------------- neural postprocess decoders
 
 # DBPostProcess parameter vector shipped as the .npz "weights":
 # (thresh, box_thresh, max_candidates, unclip_ratio, min_size) —
@@ -544,523 +442,323 @@ DB_PARAM_VECTOR = [[0.3], [0.7], [1000.0], [2.0], [3.0]]
 NEURAL_VERSION = "neural-postprocess-v1"
 
 
-def _make_neural_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core import picodet as pico
-        from ..core.centernet import decode_payload, format_cn_poly
-        from ..core.ctchead import ctc_decode, format_rec
-        from ..core.dbnet import (db_postprocess, format_db_box,
-                                  prob_map_from_payload)
-        from ..core.masterhead import master_output
-        from ..core.slanethead import format_slanet, slanet_decode
-        w = _get_model(version, weights_bc, mat_counter)
-        thresh, box_thresh, max_cand, ratio, min_size = w.ravel()
-        db_params = {"thresh": thresh, "box_thresh": box_thresh,
-                     "max_candidates": int(max_cand),
-                     "unclip_ratio": ratio, "min_size": int(min_size)}
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            offsets = batch.column(1).to_pylist()
-            payloads = batch.column(2).to_pylist()
-            out = {k: [] for k in ("doc_id", "offset", "kind", "text")}
-
-            def emit(did, off, kind, text):
-                out["doc_id"].append(did)
-                out["offset"].append(off)
-                out["kind"].append(kind)
-                out["text"].append(text)
-
-            for did, off, p in zip(doc_ids, offsets, payloads):
-                try:
-                    page = json.loads(p)
-                except Exception:  # noqa: BLE001 — quarantine bad pages
-                    continue
-                db = page.get("db_prob")
-                if db:
-                    boxes, scores = db_postprocess(
-                        prob_map_from_payload(db),
-                        int(db["dest_w"]), int(db["dest_h"]),
-                        db_params)
-                    for b, s in zip(boxes, scores):
-                        emit(did, off, "db_box", format_db_box(b, s))
-                for line in page.get("rec_lines") or ():
-                    text, conf = ctc_decode(
-                        line["path"], [0.9] * len(line["path"]))
-                    emit(did, off, "rec_text", format_rec(text, conf))
-                sl = page.get("slanet")
-                if sl:
-                    tokens, cells = slanet_decode(
-                        sl["ids"], sl["bboxes"], sl["shape"])
-                    emit(did, off, "slanet",
-                         format_slanet(tokens, cells))
-                cnp = page.get("centernet")
-                if cnp:
-                    for poly, score in decode_payload(cnp):
-                        emit(did, off, "cn_poly",
-                             format_cn_poly(poly, score))
-                pdp = page.get("picodet")
-                if pdp:
-                    for label, clsid, score, box in \
-                            pico.decode_payload(pdp):
-                        emit(did, off, "layout_box",
-                             pico.format_layout_box(
-                                 label, clsid, score, box))
-                ms = page.get("master")
-                if ms:
-                    try:
-                        html_wire, box_wires = master_output(ms)
-                    except Exception:  # noqa: BLE001 — a degenerate
-                        # stream (e.g. decoding to a single token)
-                        # IndexErrors in the reference's own
-                        # text_to_list; quarantine the page instead
-                        # of failing every page in the partition
-                        continue
-                    emit(did, off, "master_html", html_wire)
-                    for bw in box_wires:
-                        emit(did, off, "master_box", bw)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["doc_id"], pa.string()),
-                 pa.array(out["offset"], pa.int32()),
-                 pa.array(out["kind"], pa.string()),
-                 pa.array(out["text"], pa.string())],
-                names=["doc_id", "offset", "kind", "text"])
-    return stage
+def _db_params(tensors: dict) -> dict:
+    thresh, box_thresh, max_cand, ratio, min_size = \
+        tensors["weights"].ravel()
+    return {"thresh": thresh, "box_thresh": box_thresh,
+            "max_candidates": int(max_cand),
+            "unclip_ratio": ratio, "min_size": int(min_size)}
 
 
-def score_neural_decoders(docs_spans: DataFrame,
+def _neural_decode(db_params: dict, batch: pa.RecordBatch) -> list:
+    from ..core import picodet as pico
+    from ..core.centernet import decode_payload, format_cn_poly
+    from ..core.ctchead import ctc_decode, format_rec
+    from ..core.dbnet import (db_postprocess, format_db_box,
+                              prob_map_from_payload)
+    from ..core.masterhead import master_output
+    from ..core.slanethead import format_slanet, slanet_decode
+    out = []
+    for did, off, p in _rows(batch):
+        def emit(kind, text):
+            out.append((did, off, kind, text))
+
+        try:
+            page = json.loads(p)
+        except Exception:  # noqa: BLE001 — quarantine bad pages
+            continue
+        db = page.get("db_prob")
+        if db:
+            boxes, scores = db_postprocess(
+                prob_map_from_payload(db),
+                int(db["dest_w"]), int(db["dest_h"]), db_params)
+            for b, s in zip(boxes, scores):
+                emit("db_box", format_db_box(b, s))
+        for line in page.get("rec_lines") or ():
+            text, conf = ctc_decode(
+                line["path"], [0.9] * len(line["path"]))
+            emit("rec_text", format_rec(text, conf))
+        sl = page.get("slanet")
+        if sl:
+            tokens, cells = slanet_decode(
+                sl["ids"], sl["bboxes"], sl["shape"])
+            emit("slanet", format_slanet(tokens, cells))
+        cnp = page.get("centernet")
+        if cnp:
+            for poly, score in decode_payload(cnp):
+                emit("cn_poly", format_cn_poly(poly, score))
+        pdp = page.get("picodet")
+        if pdp:
+            for label, clsid, score, box in pico.decode_payload(pdp):
+                emit("layout_box",
+                     pico.format_layout_box(label, clsid, score, box))
+        ms = page.get("master")
+        if ms:
+            try:
+                html_wire, box_wires = master_output(ms)
+            except Exception:  # noqa: BLE001 — a degenerate stream
+                # (e.g. decoding to a single token) IndexErrors in the
+                # reference's own text_to_list; quarantine the page
+                # instead of failing every page in the partition
+                continue
+            emit("master_html", html_wire)
+            for bw in box_wires:
+                emit("master_box", bw)
+    return out
+
+
+NEURAL_HEAD = Head(
+    name="neural",
+    version=NEURAL_VERSION,
+    tensors=lambda: {"weights": DB_PARAM_VECTOR},
+    materialise=_db_params,
+    project=_pages("ocr_page"),
+    decode_batch=_neural_decode,
+    schema="doc_id string, offset int, kind string, text string")
+
+
+# ------------------------------------------------ scan-image CNN heads
+
+
+def _det_cnn_decode(w: dict, batch: pa.RecordBatch) -> list:
+    from ..core import codecs, nn
+    from ..core.dbnet import DB_PARAMS, db_postprocess, format_db_box
+    out = []
+    for ref, payload in _rows(batch):
+        try:
+            scan, _fmt = codecs.decode_image(bytes(payload))
+        except ValueError:
+            continue  # undecodable page → quarantine
+        prob = nn.det_forward(nn.ink_from_scan(codecs.to_gray(scan)), w)
+        h, wd = prob.shape
+        boxes, scores = db_postprocess(prob, wd, h, DB_PARAMS)
+        out += [(ref, j, "db_cnn_box", format_db_box(b, s))
+                for j, (b, s) in enumerate(zip(boxes, scores))]
+    return out
+
+
+DET_CNN_HEAD = Head(
+    name="det_cnn",
+    version=DETCNN_VERSION,
+    tensors=lambda: DET_CNN,
+    materialise=dict,
+    project=_scans,
+    decode_batch=_det_cnn_decode,
+    schema="media_ref string, box_idx int, kind string, text string")
+
+
+def _ocr_cnn_decode(w: tuple, batch: pa.RecordBatch) -> list:
+    from ..core import codecs
+    from ..core.ocrpage import ocr_scan_page
+    det_w, rec_w = w
+    out = []
+    for ref, payload in _rows(batch):
+        try:
+            img, _fmt = codecs.decode_image(bytes(payload))
+        except ValueError:
+            continue  # undecodable page → quarantine
+        res = ocr_scan_page(codecs.to_gray(img), det_weights=det_w,
+                            rec_weights=rec_w)
+        wire = []
+        for t in res["tables"]:
+            wire.append(("ocr_shape", f"{t['n_rows']}x{t['n_cols']}"))
+            wire += [("ocr_cell", f"{r},{c}|{text}")
+                     for (r, c, _rs, _cs, text) in t["cells"]]
+            wire.append(("ocr_html", t["html"]))
+        wire += [("ocr_line", ln["text"]) for ln in res["remainder"]]
+        out += [(ref, off, kind, text)
+                for off, (kind, text) in enumerate(wire)]
+    return out
+
+
+def _det_rec_tensors() -> dict:
+    return _prefixed(det=OCR_DET_CNN, rec=REC_CNN)
+
+
+OCR_CNN_HEAD = Head(
+    name="ocr_cnn",
+    version=OCRCNN_VERSION,
+    tensors=_det_rec_tensors,
+    materialise=_split("det_", "rec_"),
+    project=_scans,
+    decode_batch=_ocr_cnn_decode,
+    schema="media_ref string, offset int, kind string, text string")
+
+
+def _layout_cnn_decode(w: tuple, batch: pa.RecordBatch) -> list:
+    from ..core import codecs
+    from ..core.ocrpage import layout_regions
+    det_w, lay_w = w
+    out = []
+    for ref, payload in _rows(batch):
+        try:
+            img, _fmt = codecs.decode_image(bytes(payload))
+        except ValueError:
+            continue
+        out += [(ref, j, *reg["scores"][:3],
+                 f"{reg['label']}|{reg['x0']},{reg['y0']},"
+                 f"{reg['x1']},{reg['y1']}")
+                for j, reg in enumerate(layout_regions(
+                    codecs.to_gray(img), weights=lay_w,
+                    det_weights=det_w))]
+    return out
+
+
+def _det_layout_tensors() -> dict:
+    from ..core.ocrpage import LAYOUT_CNN
+    return _prefixed(det=OCR_DET_CNN, layout=LAYOUT_CNN)
+
+
+LAYOUT_CNN_HEAD = Head(
+    name="layout_cnn",
+    version=OCRCNN_VERSION,
+    tensors=_det_layout_tensors,
+    materialise=_split("det_", "layout_"),
+    project=_scans,
+    decode_batch=_layout_cnn_decode,
+    schema=("media_ref string, offset int, score_table double, "
+            "score_text double, score_figure double, label string"))
+
+
+def _orient_cnn_decode(w: tuple, batch: pa.RecordBatch) -> list:
+    from ..core import codecs
+    from ..core.ocrpage import orient_scan_page
+    det_w, rec_w = w
+    out = []
+    for ref, payload in _rows(batch):
+        try:
+            img, _fmt = codecs.decode_image(bytes(payload))
+        except ValueError:
+            continue
+        pred, votes = orient_scan_page(codecs.to_gray(img),
+                                       det_weights=det_w,
+                                       rec_weights=rec_w)
+        out.append((ref, *(float(v) for v in votes[:4]), pred))
+    return out
+
+
+ORIENT_CNN_HEAD = Head(
+    name="orient_cnn",
+    version=OCRCNN_VERSION,
+    tensors=_det_rec_tensors,
+    materialise=_split("det_", "rec_"),
+    project=_scans,
+    decode_batch=_orient_cnn_decode,
+    schema=("media_ref string, score_rot0 double, score_rot90 double, "
+            "score_rot180 double, score_rot270 double, pred_rot int"))
+
+
+# ------------------------------------------------------ public heads
+
+
+def score_page_layout(docs_spans: DataFrame, weights_path: str | None = None,
+                      _mat_counter=None) -> DataFrame:
+    """documents(doc_id, spans) → one (scores over table / text /
+    figure, class) row per pdf_page span; a poisoned payload comes
+    back as a zeroed ``error`` row."""
+    return run_head(docs_spans, LAYOUT_HEAD, weights_path, _mat_counter)
+
+
+def score_doc_quality(docs: DataFrame, weights_path: str | None = None,
+                      _mat_counter=None) -> DataFrame:
+    """documents(doc_id, text) → (doc_id, score_keep, score_drop,
+    pred). Narrow — no shuffle; at 100 TB this runs at scan speed."""
+    return run_head(docs, QUALITY_HEAD, weights_path, _mat_counter)
+
+
+def score_table_structure(docs_spans: DataFrame,
                           weights_path: str | None = None,
                           _mat_counter=None) -> DataFrame:
-    """The six round-5 deterministic postprocess decoders over the
-    model seam, one scan and ONE Python boundary: DBNet probability
-    map → text boxes (``core.dbnet``, M3's postprocess half — NO
-    planted det_cells anywhere on this path), CTC greedy label decode
-    (``core.ctchead``, M5), SLANet structure-token decode
-    (``core.slanethead``, M7), the Cycle-CenterNet paired-keypoint
-    TSR decode — heatmap peaks → cell polygons with corner snapping
-    (``core.centernet``, M6), the PicoDet DFL layout decode
-    (``core.picodet``, M2), and the TableMaster structure+bbox decode
-    with the deal_bb repair passes (``core.masterhead``, M10). Each
-    ocr_page span emits ``db_box`` / ``rec_text`` / ``slanet`` /
-    ``cn_poly`` / ``layout_box`` / ``master_html`` / ``master_box``
-    rows for whichever contracts its payload carries.
+    """documents(doc_id, spans) → one (doc_id, offset, 'table_html',
+    html) row per ocr_page span, the STRUCTURE inferred at runtime
+    (core.tsrhead: grid clustering + linear axis head) and decoded
+    through core.logicell — no pre-filled fixture structure anywhere
+    on the path."""
+    return run_head(docs_spans, TSR_HEAD, weights_path, _mat_counter)
 
-    Same seam as every other head: ``weights_path`` loads the
-    DBPostProcess parameter vector from ``.npz`` once on the driver,
-    broadcasts it, executor singleton keyed by the artifact version;
-    omitted → the literal DB_PARAM_VECTOR. The per-step rec
-    probability is the contract constant 0.9 (fixtures plant the
-    argmax path; a real recognizer ships its max-prob row alongside).
-    Narrow plan — runs at scan speed; the oracle twins are
-    independent SQL over the planted contracts (the db twin recomputes
-    grow/scale/round from blob coords, not from this code)."""
-    spark = docs_spans.sparkSession
-    if weights_path is not None:
-        weights, version = load_weights(weights_path)
-        weights_bc = spark.sparkContext.broadcast(weights.tolist())
-    else:
-        version = NEURAL_VERSION
-        weights_bc = spark.sparkContext.broadcast(DB_PARAM_VECTOR)
-    pages = (
-        docs_spans.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "ocr_page")
-        .select("doc_id", F.col("s.offset").alias("offset"),
-                F.col("s.text").alias("text"))
-    )
-    return pages.mapInArrow(
-        _make_neural_stage(weights_bc, version, _mat_counter),
-        schema=NEURAL_SCHEMA)
+
+def score_page_orientation(docs_spans: DataFrame,
+                           weights_path: str | None = None,
+                           _mat_counter=None) -> DataFrame:
+    """documents(doc_id, spans) → one orientation prediction per
+    pdf_page span: (scores over rot0/90/180/270, pred_rot in degrees,
+    declared_rot from the payload for parity checks; -1 on a poisoned
+    payload)."""
+    return run_head(docs_spans, ORIENT_HEAD, weights_path, _mat_counter)
 
 
 def score_det_contours(docs_spans: DataFrame,
                        weights_path: str | None = None,
                        _mat_counter=None) -> DataFrame:
-    """Combined det/rec + O4 contour-proposal arm for the from-model
-    query: one scan, ONE Python boundary emitting both the detected
-    text lines (``det_cell`` rows, ``core.dethead.detect_lines``) and
-    the page's top-10 ink-blob region proposals (``contour`` rows,
-    ``core.dethead.contour_blobs``) in the driver wire format."""
-    from ..core.dethead import DET_VERSION, DET_WEIGHTS
-    spark = docs_spans.sparkSession
-    if weights_path is not None:
-        weights, version = load_weights(weights_path)
-        weights_bc = spark.sparkContext.broadcast(weights.tolist())
-    else:
-        version = DET_VERSION
-        weights_bc = spark.sparkContext.broadcast(DET_WEIGHTS)
-    pages = (
-        docs_spans.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "ocr_page")
-        .select("doc_id", F.col("s.offset").alias("offset"),
-                F.col("s.text").alias("text"))
-    )
-    return pages.mapInArrow(
-        _make_detc_stage(weights_bc, version, _mat_counter),
-        schema=DETC_SCHEMA)
+    """Det/rec + O4 contour proposals per ocr_page span: the text
+    lines recovered from the page's per-character ``glyphs`` with NO
+    access to the planted det_cells (``det_cell`` rows,
+    ``core.dethead.detect_lines``) and the page's top-10 ink-blob
+    region proposals (``contour`` rows) in the driver wire format."""
+    return run_head(docs_spans, DET_CONTOURS_HEAD, weights_path, _mat_counter)
 
 
-# ------------------------------------------------- det CNN forward
-
-def save_weights_dict(path: str, tensors: dict, version: str) -> None:
-    """Serialize a multi-tensor model (e.g. the det CNN's conv
-    kernels) to ``.npz``: one named array per tensor + the version
-    string. The single-matrix ``save_weights`` format is the
-    degenerate case of this one."""
-    np.savez(path, version=np.array(version),
-             **{k: np.asarray(v, dtype=np.float64)
-                for k, v in tensors.items()})
-
-
-def load_weights_dict(path: str):
-    """Load a multi-tensor ``.npz`` model → (dict of ndarrays,
-    version str)."""
-    with np.load(path) as npz:
-        version = str(npz["version"])
-        return {k: npz[k] for k in npz.files if k != "version"}, version
-
-
-DETCNN_SCHEMA = "media_ref string, box_idx int, kind string, text string"
+def score_neural_decoders(docs_spans: DataFrame,
+                          weights_path: str | None = None,
+                          _mat_counter=None) -> DataFrame:
+    """The deterministic postprocess decoders over one scan and ONE
+    Python boundary: DBNet probability map → text boxes
+    (``core.dbnet``, M3's postprocess half — NO planted det_cells on
+    this path), CTC greedy label decode (``core.ctchead``, M5), SLANet
+    structure-token decode (``core.slanethead``, M7), the
+    Cycle-CenterNet paired-keypoint TSR decode (``core.centernet``,
+    M6), the PicoDet DFL layout decode (``core.picodet``, M2) and the
+    TableMaster structure+bbox decode with the deal_bb repair passes
+    (``core.masterhead``, M10). Each ocr_page span emits ``db_box`` /
+    ``rec_text`` / ``slanet`` / ``cn_poly`` / ``layout_box`` /
+    ``master_html`` / ``master_box`` rows for whichever contracts its
+    payload carries. The weights are the DBPostProcess parameter
+    vector; the per-step rec probability is the contract constant 0.9
+    (fixtures plant the argmax path)."""
+    return run_head(docs_spans, NEURAL_HEAD, weights_path, _mat_counter)
 
 
-def _make_detcnn_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core import codecs, nn
-        from ..core.dbnet import DB_PARAMS, db_postprocess, format_db_box
-        w = _MODEL_SINGLETON.get(version)
-        if w is None:
-            w = {k: np.asarray(v, dtype=np.float64)
-                 for k, v in weights_bc.value.items()}
-            _MODEL_SINGLETON[version] = w
-            if mat_counter is not None:
-                mat_counter.add(1)
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            out = {k: [] for k in ("media_ref", "box_idx", "kind",
-                                   "text")}
-            for ref, payload in zip(refs, payloads):
-                try:
-                    scan, _fmt = codecs.decode_image(bytes(payload))
-                except ValueError:
-                    continue  # undecodable page → quarantine
-                prob = nn.det_forward(
-                    nn.ink_from_scan(codecs.to_gray(scan)), w)
-                h, wd = prob.shape
-                boxes, scores = db_postprocess(prob, wd, h, DB_PARAMS)
-                for j, (b, s) in enumerate(zip(boxes, scores)):
-                    out["media_ref"].append(ref)
-                    out["box_idx"].append(j)
-                    out["kind"].append("db_cnn_box")
-                    out["text"].append(format_db_box(b, s))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["media_ref"], pa.string()),
-                 pa.array(out["box_idx"], pa.int32()),
-                 pa.array(out["kind"], pa.string()),
-                 pa.array(out["text"], pa.string())],
-                names=["media_ref", "box_idx", "kind", "text"])
-    return stage
-
-
-OCRCNN_SCHEMA = "media_ref string, offset int, kind string, text string"
-
-
-def _make_ocrcnn_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core import codecs
-        from ..core.ocrpage import ocr_scan_page
-        w = _MODEL_SINGLETON.get(version)
-        if w is None:
-            raw = {k: np.asarray(v, dtype=np.float64)
-                   for k, v in weights_bc.value.items()}
-            det = {k[4:]: v for k, v in raw.items()
-                   if k.startswith("det_")}
-            rec = {k[4:]: v for k, v in raw.items()
-                   if k.startswith("rec_")}
-            w = (det or None, rec or None)
-            _MODEL_SINGLETON[version] = w
-            if mat_counter is not None:
-                mat_counter.add(1)
-        det_w, rec_w = w
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            out = {k: [] for k in ("media_ref", "offset", "kind",
-                                   "text")}
-
-            def emit(ref, off, kind, text):
-                out["media_ref"].append(ref)
-                out["offset"].append(off)
-                out["kind"].append(kind)
-                out["text"].append(text)
-
-            for ref, payload in zip(refs, payloads):
-                try:
-                    img, _fmt = codecs.decode_image(bytes(payload))
-                except ValueError:
-                    continue  # undecodable page → quarantine
-                res = ocr_scan_page(codecs.to_gray(img),
-                                    det_weights=det_w,
-                                    rec_weights=rec_w)
-                off = 0
-                for t in res["tables"]:
-                    emit(ref, off, "ocr_shape",
-                         f"{t['n_rows']}x{t['n_cols']}")
-                    off += 1
-                    for (r, c, _rs, _cs, text) in t["cells"]:
-                        emit(ref, off, "ocr_cell", f"{r},{c}|{text}")
-                        off += 1
-                    emit(ref, off, "ocr_html", t["html"])
-                    off += 1
-                for ln in res["remainder"]:
-                    emit(ref, off, "ocr_line", ln["text"])
-                    off += 1
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["media_ref"], pa.string()),
-                 pa.array(out["offset"], pa.int32()),
-                 pa.array(out["kind"], pa.string()),
-                 pa.array(out["text"], pa.string())],
-                names=["media_ref", "offset", "kind", "text"])
-    return stage
-
-
-def _fan_cpu_bound(scans: DataFrame) -> DataFrame:
-    """CPU-bound widening for the scan-CNN stages — see
-    ``sources.corpus.fan_cpu_bound`` (the canonical definition and
-    rationale; measured here: score_orient_cnn 3.4 s as one task at
-    local[32], 0.35 s fanned)."""
-    from ..sources.corpus import fan_cpu_bound
-    return fan_cpu_bound(scans)
+def score_det_cnn(scans: DataFrame, weights_path: str | None = None,
+                  _mat_counter=None) -> DataFrame:
+    """Scan-page image (PNG/BMP/PNM, ``core.codecs``) → text boxes
+    through the REAL forward pass: ``core.nn.det_forward`` (conv →
+    relu → max-pool dilation → conv → sigmoid) feeding the same
+    ``core.dbnet`` postprocess the contract path uses — the
+    reference's image→boxes dispatch
+    (``model/ocr_pdf/base_infer_task.py:317-381``). Defaults to the
+    hand-constructed ``core.nn.DET_CNN`` tensors (the swap point for a
+    trained checkpoint)."""
+    return run_head(scans, DET_CNN_HEAD, weights_path, _mat_counter)
 
 
 def score_ocr_cnn(scans: DataFrame, weights_path: str | None = None,
                   _mat_counter=None) -> DataFrame:
-    """The COMPLETE imaged-page OCR path as one Arrow stage: scan
-    PNG/BMP/PNM payload → real pixel decode → morphological ruling
-    extraction → det-CNN forward (conv/pool/sigmoid) → DBNet
-    postprocess → rec-CNN forward + CTC greedy decode → lattice grid /
-    logical-cell merge / text placement → wire rows (table shape,
-    cells, HTML, free lines). No planted model output anywhere on the
-    path — this is the reference's full imaged-PDF dispatch
+    """The complete imaged-page OCR path: pixel decode → ruling
+    extraction → det-CNN forward → DBNet postprocess → rec-CNN forward
+    + CTC decode → lattice grid / logical-cell merge / text placement
+    → wire rows (table shape, cells, HTML, free lines), the
+    reference's imaged-PDF dispatch
     (``model/ocr_pdf/base_infer_task.py:317-381`` +
-    ``table/table_extractor_lattice.py``) over broadcast ``.npz``
-    weights, executor-singleton per version, shuffle-free: at 10^12
-    pages the only data motion is the scan itself.
-
-    ``weights_path``: a ``save_weights_dict`` artifact with ``det_*``
-    and ``rec_*`` tensors; omitted → the built-in ``OCR_DET_CNN`` /
-    ``REC_CNN`` hand-constructed tensors (the trained-checkpoint swap
-    point)."""
-    from ..core.nn import OCR_DET_CNN, OCRCNN_VERSION, REC_CNN
-    spark = scans.sparkSession
-    if weights_path is not None:
-        tensors, version = load_weights_dict(weights_path)
-        weights_bc = spark.sparkContext.broadcast(
-            {k: v.tolist() for k, v in tensors.items()})
-    else:
-        version = OCRCNN_VERSION
-        combined = {f"det_{k}": np.asarray(v).tolist()
-                    for k, v in OCR_DET_CNN.items()}
-        combined.update({f"rec_{k}": np.asarray(v).tolist()
-                         for k, v in REC_CNN.items()})
-        weights_bc = spark.sparkContext.broadcast(combined)
-    return _fan_cpu_bound(scans.select("media_ref", "payload")).mapInArrow(
-        _make_ocrcnn_stage(weights_bc, version, _mat_counter),
-        schema=OCRCNN_SCHEMA)
-
-
-LAYOUTCNN_SCHEMA = ("media_ref string, offset int, score_table double, "
-                    "score_text double, score_figure double, "
-                    "label string")
-
-
-def _make_layoutcnn_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core import codecs
-        from ..core.ocrpage import layout_regions
-        key = version + "/layout"
-        w = _MODEL_SINGLETON.get(key)
-        if w is None:
-            raw = {k: np.asarray(v, dtype=np.float64)
-                   for k, v in weights_bc.value.items()}
-            det = {k[4:]: v for k, v in raw.items()
-                   if k.startswith("det_")}
-            lay = {k[7:]: v for k, v in raw.items()
-                   if k.startswith("layout_")}
-            w = (det or None, lay or None)
-            _MODEL_SINGLETON[key] = w
-            if mat_counter is not None:
-                mat_counter.add(1)
-        det_w, lay_w = w
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            out = {"media_ref": [], "offset": [], "s0": [], "s1": [],
-                   "s2": [], "label": []}
-            for ref, payload in zip(refs, payloads):
-                try:
-                    img, _fmt = codecs.decode_image(bytes(payload))
-                except ValueError:
-                    continue
-                for j, reg in enumerate(layout_regions(
-                        codecs.to_gray(img), weights=lay_w,
-                        det_weights=det_w)):
-                    out["media_ref"].append(ref)
-                    out["offset"].append(j)
-                    for k in range(3):
-                        out[f"s{k}"].append(reg["scores"][k])
-                    out["label"].append(
-                        f"{reg['label']}|{reg['x0']},{reg['y0']},"
-                        f"{reg['x1']},{reg['y1']}")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["media_ref"], pa.string()),
-                 pa.array(out["offset"], pa.int32()),
-                 pa.array(out["s0"], pa.float64()),
-                 pa.array(out["s1"], pa.float64()),
-                 pa.array(out["s2"], pa.float64()),
-                 pa.array(out["label"], pa.string())],
-                names=["media_ref", "offset", "score_table",
-                       "score_text", "score_figure", "label"])
-    return stage
+    ``table/table_extractor_lattice.py``). ``weights_path``: a
+    ``save_weights_dict`` artifact with ``det_*`` and ``rec_*``
+    tensors."""
+    return run_head(scans, OCR_CNN_HEAD, weights_path, _mat_counter)
 
 
 def score_layout_cnn(scans: DataFrame, weights_path: str | None = None,
                      _mat_counter=None) -> DataFrame:
     """Layout analysis from pixels (M2's PicoDet/DocXLayout half):
-    per scan payload, propose regions by coarse ink connectivity and
-    classify each table / text / figure from conv-derived features
-    (ink density, thin-ruling fraction, det-probability mass) through
-    a broadcast linear head (``core.ocrpage.layout_regions``). One
-    shuffle-free Arrow stage; ``layout_*`` tensors ride the same
-    ``.npz`` artifact as the det/rec heads."""
-    from ..core.nn import OCR_DET_CNN, OCRCNN_VERSION
-    from ..core.ocrpage import LAYOUT_CNN
-    spark = scans.sparkSession
-    if weights_path is not None:
-        tensors, version = load_weights_dict(weights_path)
-        weights_bc = spark.sparkContext.broadcast(
-            {k: v.tolist() for k, v in tensors.items()})
-    else:
-        version = OCRCNN_VERSION
-        combined = {f"det_{k}": np.asarray(v).tolist()
-                    for k, v in OCR_DET_CNN.items()}
-        combined.update({f"layout_{k}": np.asarray(v).tolist()
-                         for k, v in LAYOUT_CNN.items()})
-        weights_bc = spark.sparkContext.broadcast(combined)
-    return _fan_cpu_bound(scans.select("media_ref", "payload")).mapInArrow(
-        _make_layoutcnn_stage(weights_bc, version, _mat_counter),
-        schema=LAYOUTCNN_SCHEMA)
-
-
-ORIENTCNN_SCHEMA = ("media_ref string, score_rot0 double, "
-                    "score_rot90 double, score_rot180 double, "
-                    "score_rot270 double, pred_rot int")
-
-
-def _make_orientcnn_stage(weights_bc, version: str, mat_counter=None):
-    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core import codecs
-        from ..core.ocrpage import orient_scan_page
-        key = version + "/orient"
-        w = _MODEL_SINGLETON.get(key)
-        if w is None:
-            raw = {k: np.asarray(v, dtype=np.float64)
-                   for k, v in weights_bc.value.items()}
-            det = {k[4:]: v for k, v in raw.items()
-                   if k.startswith("det_")}
-            rec = {k[4:]: v for k, v in raw.items()
-                   if k.startswith("rec_")}
-            w = (det or None, rec or None)
-            _MODEL_SINGLETON[key] = w
-            if mat_counter is not None:
-                mat_counter.add(1)
-        det_w, rec_w = w
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            out = {"media_ref": [], "v0": [], "v1": [], "v2": [],
-                   "v3": [], "pred": []}
-            for ref, payload in zip(refs, payloads):
-                try:
-                    img, _fmt = codecs.decode_image(bytes(payload))
-                except ValueError:
-                    continue
-                pred, votes = orient_scan_page(
-                    codecs.to_gray(img), det_weights=det_w,
-                    rec_weights=rec_w)
-                out["media_ref"].append(ref)
-                for j in range(4):
-                    out[f"v{j}"].append(float(votes[j]))
-                out["pred"].append(pred)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["media_ref"], pa.string()),
-                 pa.array(out["v0"], pa.float64()),
-                 pa.array(out["v1"], pa.float64()),
-                 pa.array(out["v2"], pa.float64()),
-                 pa.array(out["v3"], pa.float64()),
-                 pa.array(out["pred"], pa.int32())],
-                names=["media_ref", "score_rot0", "score_rot90",
-                       "score_rot180", "score_rot270", "pred_rot"])
-    return stage
+    coarse-ink region proposals, each classified table / text / figure
+    from conv-derived features through a linear head
+    (``core.ocrpage.layout_regions``); ``layout_*`` tensors ride the
+    same artifact as the ``det_*`` ones."""
+    return run_head(scans, LAYOUT_CNN_HEAD, weights_path, _mat_counter)
 
 
 def score_orient_cnn(scans: DataFrame, weights_path: str | None = None,
                      _mat_counter=None) -> DataFrame:
-    """Image-based page-orientation classification (M1's PULC text-
-    image-orientation model): per scan payload, try all four 90°
-    corrections and score each by how much text the det+rec forward
-    passes decode (``core.ocrpage.orient_scan_page``); the argmax is
-    the predicted counter-clockwise correction angle. One shuffle-free
-    Arrow stage over the same broadcast ``det_*``/``rec_*`` artifact
-    as ``score_ocr_cnn``."""
-    from ..core.nn import OCR_DET_CNN, OCRCNN_VERSION, REC_CNN
-    spark = scans.sparkSession
-    if weights_path is not None:
-        tensors, version = load_weights_dict(weights_path)
-        weights_bc = spark.sparkContext.broadcast(
-            {k: v.tolist() for k, v in tensors.items()})
-    else:
-        version = OCRCNN_VERSION
-        combined = {f"det_{k}": np.asarray(v).tolist()
-                    for k, v in OCR_DET_CNN.items()}
-        combined.update({f"rec_{k}": np.asarray(v).tolist()
-                         for k, v in REC_CNN.items()})
-        weights_bc = spark.sparkContext.broadcast(combined)
-    return _fan_cpu_bound(scans.select("media_ref", "payload")).mapInArrow(
-        _make_orientcnn_stage(weights_bc, version, _mat_counter),
-        schema=ORIENTCNN_SCHEMA)
-
-
-def score_det_cnn(scans: DataFrame, weights_path: str | None = None,
-                  _mat_counter=None) -> DataFrame:
-    """The REAL forward-pass detection path: page IMAGE → text boxes
-    with no planted model output anywhere.
-
-    Each (media_ref, payload) row is a scan-page image (PNG/BMP/PNM —
-    decoded by ``core.codecs``, not a contract payload); the stage
-    runs ``core.nn.det_forward`` (conv → relu → stride-1 max-pool
-    dilation → conv → sigmoid, weights from the ``.npz`` artifact,
-    broadcast once, executor singleton per version) and feeds the
-    resulting probability map to the SAME ``core.dbnet``
-    postprocess the contract path uses. This is the reference's
-    base_infer_task image→boxes dispatch
-    (``model/ocr_pdf/base_infer_task.py:317-381``) re-expressed as
-    one Arrow boundary over broadcast weights: decode, forward and
-    postprocess all happen inside a single mapInArrow per batch —
-    at 10^12 pages nothing but the scan shuffle-free pipeline runs.
-
-    ``weights_path``: a ``save_weights_dict`` artifact; omitted → the
-    built-in hand-constructed ``core.nn.DET_CNN`` (the sandbox has no
-    trained checkpoint; the architecture and execution path are what
-    a trained one would use — the tensors are the swap point)."""
-    from ..core.nn import DET_CNN, DETCNN_VERSION
-    spark = scans.sparkSession
-    if weights_path is not None:
-        tensors, version = load_weights_dict(weights_path)
-        weights_bc = spark.sparkContext.broadcast(
-            {k: v.tolist() for k, v in tensors.items()})
-    else:
-        version = DETCNN_VERSION
-        weights_bc = spark.sparkContext.broadcast(
-            {k: np.asarray(v).tolist() for k, v in DET_CNN.items()})
-    return _fan_cpu_bound(scans.select("media_ref", "payload")).mapInArrow(
-        _make_detcnn_stage(weights_bc, version, _mat_counter),
-        schema=DETCNN_SCHEMA)
+    """Image-based page orientation (M1's PULC text-image-orientation
+    model): try all four 90° corrections and score each by how much
+    text the det+rec forwards decode (``core.ocrpage.orient_scan_page``);
+    the argmax is the predicted counter-clockwise correction."""
+    return run_head(scans, ORIENT_CNN_HEAD, weights_path, _mat_counter)

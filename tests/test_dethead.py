@@ -1,4 +1,4 @@
-"""M3/M5 det/rec head (`core.dethead` + `score_text_detection`):
+"""M3/M5 det/rec head (`core.dethead` + `score_det_contours`):
 text-line detection + recognition recovered from per-character glyph
 evidence, never reading the planted det_cells.
 
@@ -129,31 +129,6 @@ def test_fixture_corpus_parity_with_planted_dets(fixture_root):
         assert got == sorted(exp)
 
 
-def test_stage_npz_artifact_and_quarantine(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from pdf_table_spark.core.dethead import DET_WEIGHTS
-    from pdf_table_spark.spark.model_stage import (
-        save_weights, score_text_detection)
-    payload = json.dumps({
-        "det_cells": [], "glyphs": _glyphs("kilo", 50.0, 100.0, 118.0)})
-    df = spark.createDataFrame(
-        [("d0", [("ocr_page", payload, None, 0)]),
-         ("d1", [("ocr_page", '{"glyphs": broken', None, 0)])],
-        PAGE_SCHEMA)
-    lit = score_text_detection(df).collect()
-    assert [(r.doc_id, r.text) for r in lit] == [("d0", "kilo")]
-    path = str(tmp_path / "det_v1.npz")
-    save_weights(path, DET_WEIGHTS, "det-rec-linear-v1-file")
-    art = score_text_detection(df, weights_path=path).collect()
-    assert [tuple(r) for r in art] == [tuple(r) for r in lit]
-    plan = (score_text_detection(df)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("MapInArrow") + plan.count("ArrowEvalPython") == 1
-    # narrow: no exchange anywhere in the stage's plan
-    assert "Exchange" not in plan
-
-
 def test_contour_blobs_grouping_and_rank():
     from pdf_table_spark.core.dethead import contour_blobs
     mk = lambda x0, y0, x1, y1: {"x0": x0, "y0": y0, "x1": x1,
@@ -192,7 +167,32 @@ def test_contour_blobs_top_k_and_running_reach():
     assert contour_blobs([]) == []
 
 
+def test_stage_npz_artifact_and_quarantine(spark, tmp_path):
+    """The det stage drops (quarantines) an unparseable payload, and an
+    ``.npz`` artifact of the literal weights reproduces its rows."""
+    from pdf_table_spark.core.dethead import DET_WEIGHTS
+    from pdf_table_spark.spark.model_stage import (
+        save_weights, score_det_contours)
+    payload = json.dumps({
+        "det_cells": [], "glyphs": _glyphs("kilo", 50.0, 100.0, 118.0)})
+    df = spark.createDataFrame(
+        [("d0", [("ocr_page", payload, None, 0)]),
+         ("d1", [("ocr_page", '{"glyphs": broken', None, 0)])],
+        PAGE_SCHEMA)
+    lit = score_det_contours(df).collect()
+    assert {(r.doc_id, r.kind) for r in lit} == {
+        ("d0", "det_cell"), ("d0", "contour")}
+    assert [r.text.split("|")[1] for r in lit
+            if r.kind == "det_cell"] == ["kilo"]
+    path = str(tmp_path / "det_v1.npz")
+    save_weights(path, DET_WEIGHTS, "det-rec-linear-v1-file")
+    art = score_det_contours(df, weights_path=path).collect()
+    assert [tuple(r) for r in art] == [tuple(r) for r in lit]
+
+
 def test_score_det_contours_shares_one_boundary(spark):
+    """Det lines and contour proposals come out of ONE narrow Python
+    boundary."""
     from pdf_table_spark.spark.model_stage import score_det_contours
     payload = json.dumps({
         "det_cells": [],
@@ -206,3 +206,5 @@ def test_score_det_contours_shares_one_boundary(spark):
     plan = (score_det_contours(df)
             ._jdf.queryExecution().executedPlan().toString())
     assert plan.count("MapInArrow") + plan.count("ArrowEvalPython") == 1
+    # narrow: no exchange anywhere in the stage's plan
+    assert "Exchange" not in plan

@@ -82,13 +82,56 @@ def test_single_materialization_per_worker_across_versions(
 
 
 def test_save_load_roundtrip(tmp_path):
-    from pdf_table_spark.spark.model_stage import load_weights, save_weights
+    from pdf_table_spark.spark.model_stage import load_artifact, save_weights
     w = [[1.5, -2.0], [0.25, 4.0]]
     path = str(tmp_path / "rt.npz")
     save_weights(path, w, "rt-v9")
-    got, version = load_weights(path)
+    tensors, version = load_artifact(path)
     assert version == "rt-v9"
-    assert np.array_equal(got, np.asarray(w))
+    assert np.array_equal(tensors["weights"], np.asarray(w))
+
+
+def test_heads_sharing_a_version_keep_separate_models(
+        spark, tmp_path, monkeypatch):
+    """Two heads whose artifacts carry the SAME version string each
+    materialise their own model in a worker. The stage functions are
+    captured at the mapInArrow call and driven in this one process, so
+    the quality stage runs in a process that already materialised the
+    layout head (deterministically, unlike Spark's worker reuse)."""
+    import json
+
+    import pyarrow as pa
+
+    from pdf_table_spark.spark.model_stage import (
+        QUALITY_WEIGHTS, WEIGHTS, save_weights, score_doc_quality,
+        score_page_layout)
+    stages = []
+    frame = spark.createDataFrame([(1, "x")], "doc_id bigint, text string")
+    monkeypatch.setattr(type(frame), "mapInArrow",
+                        lambda df, fn, schema, **kw: stages.append(fn))
+    lay_path = str(tmp_path / "layout_shared.npz")
+    qu_path = str(tmp_path / "quality_shared.npz")
+    save_weights(lay_path, WEIGHTS, "shared-collide-v1")
+    save_weights(qu_path, QUALITY_WEIGHTS, "shared-collide-v1")
+    spans = spark.createDataFrame(
+        [("d0", [("pdf_page", "{}", None, 0)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>")
+    score_page_layout(spans, weights_path=lay_path)
+    score_doc_quality(frame, weights_path=qu_path)
+    layout_stage, quality_stage = stages
+
+    page = json.dumps({"text_lines": [{}], "rects": [], "images": []})
+    lay = next(layout_stage(iter([pa.RecordBatch.from_pydict(
+        {"doc_id": ["d0"], "offset": pa.array([0], pa.int32()),
+         "text": [page]})])))
+    assert lay.column("layout_class").to_pylist() == ["text"]
+    qu = next(quality_stage(iter([pa.RecordBatch.from_pydict(
+        {"doc_id": pa.array([1], pa.int64()),
+         "text": ["the cat sat"]})])))
+    # keep = .015*3 + .001*9 + .005*3 + 1*1; drop = .010*3 + .001*9 + 1.4
+    assert qu.column("score_keep").to_pylist() == [pytest.approx(1.069)]
+    assert qu.column("score_drop").to_pylist() == [pytest.approx(1.439)]
 
 
 # ---- doc-quality head: the same seam, text-side ----

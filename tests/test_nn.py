@@ -120,11 +120,11 @@ def test_planted_lines_recovered_one_to_one():
 
 
 def test_weights_dict_seam_roundtrip(tmp_path):
-    from pdf_table_spark.spark.model_stage import (load_weights_dict,
+    from pdf_table_spark.spark.model_stage import (load_artifact,
                                                    save_weights_dict)
     path = str(tmp_path / "det_cnn.npz")
     save_weights_dict(path, nn.DET_CNN, nn.DETCNN_VERSION)
-    tensors, version = load_weights_dict(path)
+    tensors, version = load_artifact(path)
     assert version == nn.DETCNN_VERSION
     assert set(tensors) == set(nn.DET_CNN)
     for k in tensors:

@@ -174,7 +174,7 @@ class TestPlans:
         scan images one; the round-5c full-OCR pixel pipeline one),
         no KEYED exchange — the whole thing runs at scan speed. The
         CPU-bound CNN arms may add bounded round-robin widenings on
-        tiny local scan files (model_stage._fan_cpu_bound — absent at
+        tiny local scan files (sources.corpus.fan_cpu_bound — absent at
         web scale), which don't count against the shuffle budget."""
         plan = plan_of(queries["ocr_from_model"](spark, SF_DIR))
         assert n_nodes(plan, "MapInArrow") == 5
