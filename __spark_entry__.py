@@ -41,26 +41,41 @@ def _fixture_dir(sf_dir: str) -> str:
     return os.path.join(FIXTURE_ROOT, f"sf{sf}")
 
 
-# Session-scoped DataFrame-handle registry. ``spark.read.parquet`` on
-# a bare path re-lists the directory and re-reads a footer for schema
-# inference on EVERY call (~70 ms here); unlike catalog tables, bare
-# paths get no metadata caching from Spark. One full query-build pass
-# makes 44 such reads over ~10 distinct paths (~3 s of pure repeated
-# driver I/O). This memoizes the unexecuted *DataFrame definition*
-# per (session, path[, fan]) — the same class of metadata cache the
-# optimization guide §6 describes for file listings. No data or
-# results are cached: every action still computes from the parquet
-# files, and the key includes applicationId so a stopped session's
-# handles are never reused.
-_DF_MEMO: dict[tuple, DataFrame] = {}
+# DataFrame handles of the live session, keyed by (path, fan).
+# ``spark.read.parquet`` on a bare path re-lists the directory and
+# re-reads a footer for schema inference on EVERY call (~70 ms on a
+# local disk); unlike catalog tables, bare paths get no metadata
+# caching from Spark, and one full query-build pass makes 44 such
+# reads over ~10 distinct paths. Only unexecuted DataFrame definitions
+# are kept: every action still computes from the parquet files. The
+# fixture directories are immutable within a session, so the file
+# listing a handle took at its first read stays valid. A new
+# applicationId clears the memo, so a stopped session's handles are
+# released, never reused. Arm builders read from worker threads;
+# ``setdefault`` hands every racing reader of one key the first
+# stored handle.
+_MEMO: dict[tuple[str, bool], DataFrame] = {}
+_memo_app: str | None = None
 
 
-def _read_pq(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    df = _DF_MEMO.get(key)
+def _read_pq(spark: SparkSession, path: str,
+             fan: bool = False) -> DataFrame:
+    """The session's handle on ``path``; ``fan=True`` widens a small
+    scan to the session parallelism (``sources.corpus.fan_small_scan``)
+    on top of the plain handle."""
+    global _memo_app
+    app = spark.sparkContext.applicationId
+    if app != _memo_app:
+        _MEMO.clear()
+        _memo_app = app
+    df = _MEMO.get((path, fan))
     if df is None:
-        df = spark.read.parquet(path)
-        _DF_MEMO[key] = df
+        if fan:
+            from pdf_table_spark.sources.corpus import fan_small_scan
+            df = fan_small_scan(spark, _read_pq(spark, path), path)
+        else:
+            df = spark.read.parquet(path)
+        df = _MEMO.setdefault((path, fan), df)
     return df
 
 
@@ -85,19 +100,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
     # and their un-rounded double sums (pricing_summary) are
     # float-association-sensitive to row order, so reordering would
     # shift the last ulps vs the oracle.
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    do_fan = (fan and name in ("documents", "embeddings")
-              and not os.environ.get("SPARK_GRAFT_NO_FAN"))
-    key = (spark.sparkContext.applicationId, path, do_fan)
-    memo = _DF_MEMO.get(key)
-    if memo is not None:
-        return memo
-    df = _read_pq(spark, path)
-    if do_fan:
-        from pdf_table_spark.sources.corpus import fan_small_scan
-        df = fan_small_scan(spark, df, path)
-    _DF_MEMO[key] = df
-    return df
+    return _read_pq(spark, os.path.join(sf_dir, f"{name}.parquet"),
+                    fan and name in ("documents", "embeddings"))
 
 
 def _extract_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -516,18 +520,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # caps band buckets. The oracle mirrors every cap.
     _DC = dict(threshold=0.5, max_df=20, max_bucket=10, hash_fn="md5")
 
-    def q_audio_chunks(spark, sf_dir, refs: DataFrame | None = None):
+    def q_audio_chunks(refs: DataFrame):
         # audio modality: windowed 30s chunk enumeration (JVM-side
         # sequence/explode; only kept windows would reach a decoder).
         # Audio metadata is hash-derived from media refs (no audio
         # table in the corpus): duration 1-90s at 16 kHz.
-        # ``refs`` lets a composed query share the ref table.
         from pdf_table_spark.ops.dedup import H60_SPARK
-        from pdf_table_spark.ops.multimodal import (
-            chunk_audio, media_refs_with_payloads)
-        if refs is None:
-            refs = media_refs_with_payloads(
-                _spans_df(spark, sf_dir)).select("media_ref")
+        from pdf_table_spark.ops.multimodal import chunk_audio
         audio = refs.select(
             "media_ref",
             F.expr(f"(({H60_SPARK.format(s='media_ref')} % 90) + 1) "
@@ -536,18 +535,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return chunk_audio(audio, window_sec=30.0, hop_sec=30.0).select(
             "media_ref", "chunk_idx", "start_sec", "end_sec")
 
-    def q_video_frames(spark, sf_dir, refs: DataFrame | None = None):
+    def q_video_frames(refs: DataFrame):
         # video modality: every-5th-frame sampling enumeration
         # (JVM-side sequence/explode; only sampled frames would reach
         # a decoder). Video metadata is hash-derived from media refs:
         # 1-240 frames at 1-30 fps.
-        # ``refs`` lets a composed query share the ref table.
         from pdf_table_spark.ops.dedup import H60_SPARK
-        from pdf_table_spark.ops.multimodal import (
-            media_refs_with_payloads, sample_frames)
-        if refs is None:
-            refs = media_refs_with_payloads(
-                _spans_df(spark, sf_dir)).select("media_ref")
+        from pdf_table_spark.ops.multimodal import sample_frames
         h = H60_SPARK.format(s="media_ref")
         hf = H60_SPARK.format(s="media_ref || 'f'")
         videos = refs.select(
@@ -607,16 +601,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .alias("n_pages_kept"),
             F.size("spans").alias("n_spans_kept"))
 
-    def q_doc_html(spark, sf_dir, flat: DataFrame | None = None):
+    def q_doc_html(flat: DataFrame):
         # S7 merged multi-page HTML: per doc, spans in offset order
         # rendered and concatenated, source spans (pages) joined with
         # the reference CLI's '@@@@@@' merge separator — all JVM array
         # expressions (make_pdf_output_html, cli/main.py:154-226).
-        # ``flat`` lets a composed query (q_exports) hand in a shared
-        # extraction frame instead of re-running the pipeline.
-        out = flat if flat is not None else _extract_flat(spark, sf_dir)
+        # ``flat`` is the extraction frame q_exports shares.
         return (
-            out.groupBy("doc_id")
+            flat.groupBy("doc_id")
             .agg(F.array_sort(F.collect_list(F.struct(
                 "offset", "kind", "text", "media_ref",
                 "src_offset"))).alias("a"))
@@ -909,12 +901,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             media_refs_with_payloads)
         refs = media_refs_with_payloads(
             _spans_df(spark, sf_dir)).select("media_ref")
-        au = q_audio_chunks(spark, sf_dir, refs=refs).select(
+        au = q_audio_chunks(refs).select(
             "media_ref", F.lit("audio").alias("modality"),
             F.col("chunk_idx").alias("idx"),
             F.col("start_sec").alias("t0"),
             F.col("end_sec").alias("t1"))
-        vi = q_video_frames(spark, sf_dir, refs=refs).select(
+        vi = q_video_frames(refs).select(
             "media_ref", F.lit("video").alias("modality"),
             F.col("frame_idx").alias("idx"),
             F.col("ts_sec").alias("t0"),
@@ -1044,7 +1036,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "'json_rows', json_rows, 'sqlite_sql', sqlite_sql, "
                 "'excel_xml', excel_xml, 'html_db', html_db) "
                 "as (fmt, payload)"))
-        dh = q_doc_html(spark, sf_dir, flat=flat).select(
+        dh = q_doc_html(flat).select(
             "doc_id", F.lit(-1).cast(off_ty).alias("offset"),
             F.lit("doc_html").alias("fmt"),
             F.col("html").alias("payload"))
@@ -1205,23 +1197,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # --------------------------------------------------------------------
 # oracles (DuckDB SQL, sf0.01 views pre-registered by the driver)
 # --------------------------------------------------------------------
-
-
-def _dk_minhash_sig_sql(n_perms: int) -> str:
-    from pdf_table_spark.ops.dedup import PERM_CONSTS
-    mins = ", ".join(
-        f"min(({a} * h % {P} + {b}) % {P}) as s{i}"
-        for i, (a, b) in enumerate(PERM_CONSTS[:n_perms]))
-    return f"""
-        with toks as (
-          select doc_id, {DK_TOKENS} as toks from documents
-        ), sh as (
-          select doc_id, unnest({DK_SHINGLES}) as shingle from toks
-        ), hashed as (
-          select doc_id, {DK_H60.format(s='shingle')} % {P} as h from sh
-        )
-        select doc_id, {mins} from hashed group by doc_id
-    """
 
 
 def _dk_minhash_bands_cte() -> str:
@@ -1983,7 +1958,11 @@ def _dk_gates() -> dict:
 
 
 def _dk_filter_sqls() -> dict[str, str]:
-    """DuckDB twins for the corpus filter gates (ops/textfilters.py).
+    """DuckDB twins for the corpus filter gates (ops/textfilters.py):
+    the four consecutive ``queries()`` entries ``gopher_quality``
+    (Gopher gates joined with the repetition signals), ``c4_filters``
+    (C4 gates joined with PII counts), ``corpus_clean`` and
+    ``span_dedup``.
 
     Float discipline mirrors the Spark side: integer counts, one final
     division — so the doubles are bit-identical across engines.
@@ -2277,16 +2256,27 @@ def _dk_filter_sqls() -> dict[str, str]:
     """
 
     return {
-        "repetition_signals": repetition,
-        "gopher_quality": gopher,
-        "c4_filters": c4,
-        "pii_redact": pii,
+        "gopher_quality": f"""
+        with g as ({gopher}),
+             r as ({repetition})
+        select g.*, r.* exclude (doc_id)
+        from g join r using (doc_id)
+    """,
+        "c4_filters": f"""
+        with c as ({c4}), p as ({pii})
+        select c.*, p.* exclude (doc_id)
+        from c join p using (doc_id)
+    """,
         "corpus_clean": clean,
         "span_dedup": span_dedup,
     }
 
 
 def oracle_sql() -> dict[str, str]:
+    """One DuckDB twin per query, keyed and ordered as ``queries()``.
+    A merged query's twin is a UNION ALL or join of the single-operator
+    bodies defined just above the returned dict, so merging changes no
+    per-operator semantics."""
     from pdf_table_spark.ops.text import (LANG_STOPWORDS, cjk_count_exprs,
                                           cjk_gate_expr)
 
@@ -2378,7 +2368,222 @@ def oracle_sql() -> dict[str, str]:
         from ranked where rank <= 5
     """
 
-    o = {
+    # single-operator bodies composed by the merged twins below
+    token_stats = f"""
+            select doc_id,
+                   len(toks) as n_tokens,
+                   len(list_distinct(toks)) as n_distinct_tokens,
+                   length(text) as n_chars_seen,
+                   round(list_sum(list_transform(toks, t -> length(t)))
+                         / greatest(len(toks), 1), 4) as mean_token_len,
+                   cast(list_sum(list_transform(toks,
+                        t -> ceil(length(t) / 4.0))) as bigint)
+                     as n_subword_units
+            from (select doc_id, text, {DK_TOKENS_CASED} as toks
+                  from documents)
+        """
+    quality_score = f"""
+            with base as (
+              select doc_id, text, {DK_TOKENS_CASED} as toks,
+                     length(regexp_replace(text, '[^!-/:-@\\[-`{{-~]', '', 'g'))
+                       as punct
+              from documents
+            ), m as (
+              select doc_id,
+                     len(toks) as n_tokens,
+                     punct / greatest(length(text), 1) as punct_ratio,
+                     len(list_distinct(toks)) / greatest(len(toks), 1)
+                       as diversity,
+                     least(len(toks) / 20.0, 1.0) as length_ok
+              from base
+            )
+            select doc_id, n_tokens,
+                   round(punct_ratio, 4) as punct_ratio,
+                   round(diversity, 4) as lexical_diversity,
+                   round(length_ok * (1 - punct_ratio) * (0.5 + diversity / 2),
+                         4) as quality
+            from m
+        """
+    text_normalize = f"""
+            select doc_id,
+                   length(regexp_replace(text, '[!-/:-@\\[-`{{-~]', '', 'g'))
+                     as n_chars_no_punct,
+                   len(list_filter({DK_TOKENS_CASED},
+                       t -> regexp_matches(t, '^[0-9.,%+-]+$')
+                        and regexp_matches(t, '[0-9]')))
+                     as n_numberish_tokens,
+                   len(list_filter({DK_TOKENS_CASED},
+                       t -> t in ('O', 'o'))) as n_ocr_zero_tokens
+            from documents
+        """
+    md5_fp = f"""
+            select doc_id,
+                   md5(array_to_string({DK_TOKENS}, ' ')) as fingerprint
+            from documents
+        """
+    # winnowing: k=8 char-gram h60 hashes, min per window of 4,
+    # distinct; summarized per doc (count/min/max/xor of the set)
+    winnow_fp = """
+            with norm as (
+              select doc_id,
+                     regexp_replace(lower(text), '\\s+', ' ', 'g') as t
+              from documents
+            ), grams as (
+              select doc_id, list_transform(
+                generate_series(1, greatest(length(t) - 7, 1)),
+                i -> cast('0x' || substr(md5(substr(t, i, 8)), 1, 15)
+                     as bigint)) as hs
+              from norm
+            ), wins as (
+              select doc_id, unnest(list_distinct(list_transform(
+                generate_series(1, greatest(len(hs) - 3, 1)),
+                i -> list_min(list_slice(hs, i, i + 3))))) as fp
+              from grams
+            )
+            select doc_id, count(*) as n_fps,
+                   min(fp) as min_fp, max(fp) as max_fp,
+                   bit_xor(fp) as xor_fp
+            from wins group by doc_id
+        """
+    imaged_doc_classifier = f"""
+            select doc_id,
+                   len(list_filter(spans, s -> s.kind = 'image')) > 0
+                     as has_media,
+                   len(list_filter(spans,
+                       s -> s.kind in ('text', 'pdf_page'))) > 0 as has_text,
+                   len(list_filter(spans, s -> s.kind = 'image')) > 0 and
+                   len(list_filter(spans,
+                       s -> s.kind in ('text', 'pdf_page'))) = 0 as is_imaged
+            from {spans}
+        """
+    page_select = f"""
+            with po as (
+              select doc_id, spans,
+                     list_transform(
+                       list_filter(spans, p -> p.kind = 'pdf_page'),
+                       p -> p."offset") as pg_offsets
+              from {spans}
+            ), kept as (
+              select doc_id,
+                     list_transform(
+                       list_filter(
+                         list_transform(spans, s -> {{'s': s,
+                           'pg': len(list_filter(pg_offsets,
+                                     o -> o <= s."offset"))}}),
+                         x -> x.s.kind is distinct from 'pdf_page'
+                              or x.pg >= 2),
+                       x -> x.s) as spans
+              from po
+            )
+            select doc_id,
+                   len(list_filter(spans, s -> s.kind = 'pdf_page'))
+                     as n_pages_kept,
+                   len(spans) as n_spans_kept
+            from kept
+        """
+    tables_per_doc = (
+        f"select doc_id, count(*) as n_tables from {golden} "
+        f"where kind = 'table_html' group by doc_id")
+    media_resize = f"""
+            with refs as (
+              select distinct s.media_ref as media_ref
+              from (select unnest(spans) as s from {spans})
+              where s.kind = 'image'
+            ), dims as (
+              select media_ref,
+                64 + cast('0x' || substr(md5(media_ref), 1, 2) as int) * 8
+                  as sw,
+                64 + cast('0x' || substr(md5(media_ref), 3, 2) as int) * 8
+                  as sh,
+                (['png', 'jpeg', 'webp'])[
+                  cast('0x' || substr(md5(media_ref), 5, 2) as int) % 3 + 1]
+                  as format
+              from refs
+            )
+            select media_ref,
+                   cast(floor(sw * least(256.0 / sw, 256.0 / sh, 1.0))
+                        as int) as width,
+                   cast(floor(sh * least(256.0 / sw, 256.0 / sh, 1.0))
+                        as int) as height,
+                   sw as src_width, sh as src_height, format
+            from dims
+        """
+    video_frames = f"""
+            with refs as (
+              select distinct s.media_ref as media_ref
+              from (select unnest(spans) as s from {spans})
+              where s.kind = 'image'
+            ), videos as (
+              select media_ref,
+                     cast((cast('0x' || substr(md5(media_ref), 1, 15) as bigint) % 240) + 1 as int) as n_frames,
+                     cast((cast('0x' || substr(md5(media_ref || 'f'), 1, 15) as bigint) % 30) + 1 as double) as fps
+              from refs
+            )
+            select media_ref, cast(frame_idx as int) as frame_idx,
+                   frame_idx / fps as ts_sec
+            from (select media_ref, fps,
+                         unnest(generate_series(0, n_frames - 1, 5))
+                           as frame_idx
+                  from videos where n_frames > 0)
+        """
+    audio_chunks = f"""
+            with refs as (
+              select distinct s.media_ref as media_ref
+              from (select unnest(spans) as s from {spans})
+              where s.kind = 'image'
+            ), audio as (
+              select media_ref,
+                     cast(({DK_H60.format(s='media_ref')} % 90) + 1
+                          as double) as dur
+              from refs
+            ), chunks as (
+              select media_ref, dur,
+                     unnest(generate_series(0,
+                       greatest(cast(ceil((dur - 30.0) / 30.0) as int),
+                                0), 1)) as chunk_idx
+              from audio
+            )
+            select media_ref, cast(chunk_idx as int) as chunk_idx,
+                   cast(chunk_idx * 30.0 as double) as start_sec,
+                   cast(least(chunk_idx * 30.0 + 30.0, dur) as double)
+                     as end_sec
+            from chunks where chunk_idx * 30.0 < dur
+        """
+    # table_exports: checked against golden_exports.parquet, rendered
+    # by the same core.export_render function inside the
+    # single-process oracle (fixtures/build.py) — the extract_spans
+    # pattern applied to the S7 export fan-out.
+    table_exports = (
+        f'select doc_id, "offset" as offset, n_rows, n_cols, '
+        f"csv, markdown, json_rows, sqlite_sql, excel_xml, html_db "
+        f"from read_parquet('{EXPORTS_001}')")
+    doc_html = f"""
+            with g as (
+              select doc_id, "offset", kind, text, media_ref,
+                     lag(src_offset) over (partition by doc_id
+                                           order by "offset") as prev,
+                     src_offset
+              from {golden}
+            )
+            select doc_id,
+                   string_agg(
+                     (case when prev is not null and prev <> src_offset
+                           then '@@@@@@' || chr(10) else '' end) ||
+                     case when kind = 'paragraph'
+                            then '<p>' || text || '</p>'
+                          when kind = 'table_html' then text
+                          when kind = 'image'
+                            then '<img src="' || media_ref || '"/>'
+                          else '' end,
+                     chr(10) order by "offset") as html
+            from g group by doc_id
+        """
+    sig_concat = " || ',' || ".join(
+        f"cast(s{i} as varchar)" for i in range(8))
+    media_golden = os.path.join(FIXTURE_ROOT, "sf0.01",
+                                "golden_media_meta.parquet")
+
+    return {
         "extract_spans": (
             f'select doc_id, "offset" as offset, kind, text, media_ref, '
             f"src_offset, accuracy, whitespace from {golden}"),
@@ -2406,15 +2611,6 @@ def oracle_sql() -> dict[str, str]:
                         s -> s.kind = 'ocr_page')) > 0) d
               on g.doc_id = d.doc_id
         """,
-        "html_main_content": f"""
-            select g.doc_id, g."offset" as offset, g.kind, g.text,
-                   g.media_ref
-            from {golden} g
-            join (select doc_id from {spans}
-                  where len(list_filter(spans,
-                        s -> s.kind = 'html_page')) > 0) d
-              on g.doc_id = d.doc_id
-        """,
         "ocr_table_logi": f"""
             select g.doc_id, g."offset" as offset, g.kind, g.text
             from {golden} g
@@ -2433,31 +2629,35 @@ def oracle_sql() -> dict[str, str]:
                         and s.text like '%"lgpma"%')) > 0) d
               on g.doc_id = d.doc_id
         """,
+        "html_main_content": f"""
+            select g.doc_id, g."offset" as offset, g.kind, g.text,
+                   g.media_ref
+            from {golden} g
+            join (select doc_id from {spans}
+                  where len(list_filter(spans,
+                        s -> s.kind = 'html_page')) > 0) d
+              on g.doc_id = d.doc_id
+        """,
         # casts: DuckDB sum(bigint) returns HUGEINT (int128); Spark
         # returns BIGINT — cast so the driver's value hash matches.
         "extract_kind_stats": (
             f"select kind, count(*) as n_spans, "
             f"cast(sum(length(text)) as bigint) as "
             f"total_chars from {golden} group by kind"),
-        "extract_tables_per_doc": (
-            f"select doc_id, count(*) as n_tables from {golden} "
-            f"where kind = 'table_html' group by doc_id"),
-        "imaged_doc_classifier": f"""
-            select doc_id,
-                   len(list_filter(spans, s -> s.kind = 'image')) > 0
-                     as has_media,
-                   len(list_filter(spans,
-                       s -> s.kind in ('text', 'pdf_page'))) > 0 as has_text,
-                   len(list_filter(spans, s -> s.kind = 'image')) > 0 and
-                   len(list_filter(spans,
-                       s -> s.kind in ('text', 'pdf_page'))) = 0 as is_imaged
-            from {spans}
-        """,
         "span_inventory": f"""
             select s.kind as kind, count(*) as n, max(s.offset) as max_offset
             from (select unnest(spans) as s from {spans})
             group by s.kind
         """,
+        "doc_text_stats": f"""
+        with t as ({token_stats}),
+             q as ({quality_score}),
+             n as ({text_normalize})
+        select t.*, q.punct_ratio, q.lexical_diversity, q.quality,
+               n.n_chars_no_punct, n.n_numberish_tokens,
+               n.n_ocr_zero_tokens
+        from t join q using (doc_id) join n using (doc_id)
+    """,
         "corpus_stats": f"""
             with per_doc as (
               select len({DK_TOKENS_CASED}) as n_tokens,
@@ -2475,109 +2675,60 @@ def oracle_sql() -> dict[str, str]:
                    cast(sum(n_tokens) as double) / count(*) as mean_tokens
             from per_doc
         """,
-        "token_stats": f"""
-            select doc_id,
-                   len(toks) as n_tokens,
-                   len(list_distinct(toks)) as n_distinct_tokens,
-                   length(text) as n_chars_seen,
-                   round(list_sum(list_transform(toks, t -> length(t)))
-                         / greatest(len(toks), 1), 4) as mean_token_len,
-                   cast(list_sum(list_transform(toks,
-                        t -> ceil(length(t) / 4.0))) as bigint)
-                     as n_subword_units
-            from (select doc_id, text, {DK_TOKENS_CASED} as toks
-                  from documents)
-        """,
-        "quality_score": f"""
-            with base as (
-              select doc_id, text, {DK_TOKENS_CASED} as toks,
-                     length(regexp_replace(text, '[^!-/:-@\\[-`{{-~]', '', 'g'))
-                       as punct
-              from documents
-            ), m as (
-              select doc_id,
-                     len(toks) as n_tokens,
-                     punct / greatest(length(text), 1) as punct_ratio,
-                     len(list_distinct(toks)) / greatest(len(toks), 1)
-                       as diversity,
-                     least(len(toks) / 20.0, 1.0) as length_ok
-              from base
-            )
-            select doc_id, n_tokens,
-                   round(punct_ratio, 4) as punct_ratio,
-                   round(diversity, 4) as lexical_diversity,
-                   round(length_ok * (1 - punct_ratio) * (0.5 + diversity / 2),
-                         4) as quality
-            from m
-        """,
-        "lang_id": lang_sql,
-        "lang_id_ngram": _dk_lang_ngram_sql(),
+        "lang_id": f"""
+        with sw as ({lang_sql}), ng as ({_dk_lang_ngram_sql()})
+        select doc_id, 'stopword' as method, pred_lang, top_score,
+               margin
+        from sw
+        union all
+        select doc_id, 'trigram', pred_lang, top_score, margin
+        from ng
+    """,
         "fingerprint": f"""
-            select doc_id,
-                   md5(array_to_string({DK_TOKENS}, ' ')) as fingerprint
-            from documents
-        """,
-        # winnowing: k=8 char-gram h60 hashes, min per window of 4,
-        # distinct; summarized per doc (count/min/max/xor of the set)
-        "winnow_fingerprint": """
-            with norm as (
-              select doc_id,
-                     regexp_replace(lower(text), '\\s+', ' ', 'g') as t
-              from documents
-            ), grams as (
-              select doc_id, list_transform(
-                generate_series(1, greatest(length(t) - 7, 1)),
-                i -> cast('0x' || substr(md5(substr(t, i, 8)), 1, 15)
-                     as bigint)) as hs
-              from norm
-            ), wins as (
-              select doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(hs) - 3, 1)),
-                i -> list_min(list_slice(hs, i, i + 3))))) as fp
-              from grams
-            )
-            select doc_id, count(*) as n_fps,
-                   min(fp) as min_fp, max(fp) as max_fp,
-                   bit_xor(fp) as xor_fp
-            from wins group by doc_id
-        """,
+        with md as ({md5_fp}),
+             wn as ({winnow_fp})
+        select doc_id, 'md5' as method, fingerprint as fp from md
+        union all
+        select doc_id, 'winnow',
+               cast(n_fps as varchar) || ':' || cast(min_fp as varchar)
+               || ':' || cast(max_fp as varchar) || ':'
+               || cast(xor_fp as varchar)
+        from wn
+    """,
         "exact_dedup": """
             select md5(text) as text_hash, min(doc_id) as keeper_doc_id,
                    count(*) as n_docs
             from documents group by md5(text) having count(*) > 1
         """,
         **_dk_filter_sqls(),
-        "ngram_jaccard": jacc,
-        "dedup_corpus_pairs": _dk_dedup_corpus_cte(0.5, 20, 10) + """
-            select doc_a, doc_b, jaccard from pairs
-        """,
-        "prepare_corpus": _dk_prepare_sql(),
-        "dedup_corpus_keep": _dk_dedup_corpus_cte(0.5, 20, 10) + """
-            select d.doc_id from documents d
-            left join (select distinct doc_b from pairs) p
-              on d.doc_id = p.doc_b
-            where p.doc_b is null
-        """,
-        "dedup_cluster_assign": _dk_dedup_corpus_cte(0.5, 20, 10, lead="with recursive ") + """
-            , edges as (
-              select doc_a as u, doc_b as v from pairs
-              union select doc_b, doc_a from pairs
-            ), reach as (
-              select u as node, v as r from edges
-              union
-              select e.u, reach.r from edges e
-                join reach on reach.node = e.v
-            ), comp as (
-              select node as doc_id,
-                     least(node, min(r)) as component
-              from reach group by node
+        "decontaminate": r"""
+            with toks as (
+              select doc_id, source,
+                     list_filter(string_split_regex(lower(text), '\s+'),
+                                 t -> t <> '') as tk
+              from documents
+            ), grams as (
+              select doc_id, source, unnest(list_distinct(list_transform(
+                       generate_series(1, greatest(len(tk) - 12, 0)),
+                       i -> md5(array_to_string(
+                              list_slice(tk, i, i + 12), ' '))))) as g
+              from toks where len(tk) >= 13
+            ), bench as (
+              select distinct g from grams where source = 'src0'
             )
-            select doc_id, component from comp
+            select t.doc_id, count(*) as n_hits
+            from grams t join bench using (g)
+            where t.source <> 'src0'
+            group by t.doc_id
         """,
-        "assemble_provenance": _dk_assemble_sql(
-            "select doc_id, stage, stage = 'kept' as kept from final"),
-        "assemble_rows": _dk_assemble_sql(
-            "select doc_id, source, copy, split from assembled"),
+        "assemble": _dk_assemble_sql("""
+        select f.doc_id, f.stage, f.stage = 'kept' as kept,
+               a.source, a.n_copies, a.split
+        from final f left join (
+          select doc_id, max(source) as source,
+                 count(*) as n_copies, max(split) as split
+          from assembled group by doc_id) a using (doc_id)
+    """),
         "resample_mixture": """
             with w as (
               select doc_id, source,
@@ -2598,6 +2749,24 @@ def oracle_sql() -> dict[str, str]:
                    unnest(generate_series(0, nc - 1)) as copy
             from n where nc >= 1
         """,
+        "semdedup": _dk_neardup_sql(0.45, as_cte=True) + """
+        , edges as (
+          select vec_a as u, vec_b as v from pairs
+          union select vec_b, vec_a from pairs
+        ), reach as (
+          select u as node, v as r from edges
+          union
+          select e.u, reach.r from edges e
+            join reach on reach.node = e.v
+        ), comp as (
+          select node as vec_id, least(node, min(r)) as component
+          from reach group by node
+        )
+        select e.vec_id,
+               coalesce(c.component, e.vec_id) as component,
+               coalesce(c.component, e.vec_id) = e.vec_id as kept
+        from embeddings e left join comp c on e.vec_id = c.vec_id
+    """,
         "data_selection": r"""
             with t as (
               select doc_id, cast(n_chars as double) as score,
@@ -2768,44 +2937,101 @@ def oracle_sql() -> dict[str, str]:
                    min(doc_id) as first_doc, max(doc_id) as last_doc
             from spans group by chunk_id
         """,
-        "decontaminate": r"""
-            with toks as (
-              select doc_id, source,
-                     list_filter(string_split_regex(lower(text), '\s+'),
-                                 t -> t <> '') as tk
-              from documents
-            ), grams as (
-              select doc_id, source, unnest(list_distinct(list_transform(
-                       generate_series(1, greatest(len(tk) - 12, 0)),
-                       i -> md5(array_to_string(
-                              list_slice(tk, i, i + 12), ' '))))) as g
-              from toks where len(tk) >= 13
-            ), bench as (
-              select distinct g from grams where source = 'src0'
-            )
-            select t.doc_id, count(*) as n_hits
-            from grams t join bench using (g)
-            where t.source <> 'src0'
-            group by t.doc_id
-        """,
-        "dedup_cluster_keep": _dk_dedup_corpus_cte(0.5, 20, 10, lead="with recursive ") + """
-            , edges as (
-              select doc_a as u, doc_b as v from pairs
-              union select doc_b, doc_a from pairs
-            ), reach as (
-              select u as node, v as r from edges
-              union
-              select e.u, reach.r from edges e
-                join reach on reach.node = e.v
-            ), comp as (
-              select node as doc_id,
-                     least(node, min(r)) as component
-              from reach group by node
-            )
-            select d.doc_id from documents d
-              left join comp on d.doc_id = comp.doc_id
-            where comp.doc_id is null or comp.doc_id = comp.component
-        """,
+        "prepare_corpus": _dk_prepare_sql(),
+        "ngram_jaccard": jacc,
+        "dedup_corpus": _dk_dedup_corpus_cte(0.5, 20, 10) + """
+        select 'pair' as part, doc_a as a, doc_b as b, jaccard
+        from pairs
+        union all
+        select 'keep', d.doc_id, cast(null as bigint),
+               cast(null as double)
+        from documents d
+        left join (select distinct doc_b from pairs) p
+          on d.doc_id = p.doc_b
+        where p.doc_b is null
+    """,
+        "dedup_clusters": _dk_dedup_corpus_cte(
+            0.5, 20, 10, lead="with recursive ") + """
+        , edges as (
+          select doc_a as u, doc_b as v from pairs
+          union select doc_b, doc_a from pairs
+        ), reach as (
+          select u as node, v as r from edges
+          union
+          select e.u, reach.r from edges e
+            join reach on reach.node = e.v
+        ), comp as (
+          select node as doc_id, least(node, min(r)) as component
+          from reach group by node
+        )
+        select d.doc_id,
+               coalesce(c.component, d.doc_id) as component,
+               coalesce(c.component, d.doc_id) = d.doc_id as kept
+        from documents d left join comp c on d.doc_id = c.doc_id
+    """,
+        "minhash_lsh": _dk_minhash_bands_cte() + f"""
+        , cand as (
+          select distinct x.doc_id as doc_a, y.doc_id as doc_b
+          from bands x join bands y
+            on x.band = y.band and x.bh = y.bh and x.doc_id < y.doc_id
+        )
+        select 'pair' as part, doc_a as a, doc_b as b,
+               cast(null as varchar) as val from cand
+        union all
+        select 'keep', d.doc_id, cast(null as bigint),
+               cast(null as varchar)
+        from documents d
+        where d.doc_id not in (select doc_b from cand)
+        union all
+        select 'sig', doc_id, cast(null as bigint), {sig_concat}
+        from sig
+    """,
+        "simhash": f"""
+        with sims as ({_dk_simhash_sql()})
+        select 'sig' as part, doc_id as a, cast(null as bigint) as b,
+               simhash as val from sims
+        union all
+        select 'pair', x.doc_id, y.doc_id,
+               cast(bit_count(xor(x.simhash, y.simhash)) as bigint)
+        from sims x join sims y on x.doc_id < y.doc_id
+        where bit_count(xor(x.simhash, y.simhash)) <= 3
+    """,
+        "ann_topk": f"""
+        with b as ({cosine}),
+             l as ({_dk_ann_lsh_sql()}),
+             i as ({_dk_ann_ivf_sql()})
+        select 'brute' as method, * from b
+        union all select 'lsh', * from l
+        union all select 'ivf', * from i
+    """,
+        "media_sampling": f"""
+        with au as ({audio_chunks}),
+             vi as ({video_frames})
+        select media_ref, 'audio' as modality, chunk_idx as idx,
+               start_sec as t0, end_sec as t1 from au
+        union all
+        select media_ref, 'video', frame_idx, ts_sec,
+               cast(null as double) from vi
+    """,
+        # second arm: encode-side truth for the planted REAL media corpus
+        # (dims/format/n_bytes recorded before core.codecs encoding; the
+        # thumbnail fit is recomputed here independently in SQL)
+        "media_meta": f"""
+        with r as ({media_resize}),
+             g as (select * from read_parquet('{media_golden}'))
+        select media_ref, width, height, src_width, src_height, format,
+               cast(length(media_ref) as bigint) as n_bytes
+        from r
+        union all
+        select media_ref,
+               cast(floor(src_width * least(256.0 / src_width,
+                    256.0 / src_height, 1.0)) as int) as width,
+               cast(floor(src_height * least(256.0 / src_width,
+                    256.0 / src_height, 1.0)) as int) as height,
+               src_width, src_height, format, n_bytes
+        from g
+    """,
+        "embedding_neardup": _dk_neardup_sql(),
         "doc_metrics": f"""
             select doc_id, count(*) as n_spans,
                    cast(sum(case when kind = 'table_html' then 1 else 0 end)
@@ -2823,484 +3049,18 @@ def oracle_sql() -> dict[str, str]:
                    ) as int) as para_rank
             from {golden} where kind = 'paragraph'
         """,
-        "top_docs_by_tables": f"""
-            select doc_id, count(*) as n_tables from {golden}
-            where kind = 'table_html' group by doc_id
-            order by n_tables desc, doc_id limit 20
-        """,
-        "lsh_dedup_keep": _dk_minhash_bands_cte() + """
-            select d.doc_id from documents d
-            where d.doc_id not in (
-              select distinct y.doc_id
-              from bands x join bands y
-                on x.band = y.band and x.bh = y.bh
-               and x.doc_id < y.doc_id)
-        """,
-        "text_normalize": f"""
-            select doc_id,
-                   length(regexp_replace(text, '[!-/:-@\\[-`{{-~]', '', 'g'))
-                     as n_chars_no_punct,
-                   len(list_filter({DK_TOKENS_CASED},
-                       t -> regexp_matches(t, '^[0-9.,%+-]+$')
-                        and regexp_matches(t, '[0-9]')))
-                     as n_numberish_tokens,
-                   len(list_filter({DK_TOKENS_CASED},
-                       t -> t in ('O', 'o'))) as n_ocr_zero_tokens
-            from documents
-        """,
-        "layout_scores": _dk_layout_scores_sql(spans),
-        "quality_model_scores": _dk_quality_model_sql(),
-        "page_select": f"""
-            with po as (
-              select doc_id, spans,
-                     list_transform(
-                       list_filter(spans, p -> p.kind = 'pdf_page'),
-                       p -> p."offset") as pg_offsets
-              from {spans}
-            ), kept as (
-              select doc_id,
-                     list_transform(
-                       list_filter(
-                         list_transform(spans, s -> {{'s': s,
-                           'pg': len(list_filter(pg_offsets,
-                                     o -> o <= s."offset"))}}),
-                         x -> x.s.kind is distinct from 'pdf_page'
-                              or x.pg >= 2),
-                       x -> x.s) as spans
-              from po
-            )
-            select doc_id,
-                   len(list_filter(spans, s -> s.kind = 'pdf_page'))
-                     as n_pages_kept,
-                   len(spans) as n_spans_kept
-            from kept
-        """,
-        # table_exports: checked against golden_exports.parquet, rendered
-        # by the same core.export_render function inside the
-        # single-process oracle (fixtures/build.py) — the extract_spans
-        # pattern applied to the S7 export fan-out.
-        "table_exports": (
-            f'select doc_id, "offset" as offset, n_rows, n_cols, '
-            f"csv, markdown, json_rows, sqlite_sql, excel_xml, html_db "
-            f"from read_parquet('{EXPORTS_001}')"),
-        "doc_html": f"""
-            with g as (
-              select doc_id, "offset", kind, text, media_ref,
-                     lag(src_offset) over (partition by doc_id
-                                           order by "offset") as prev,
-                     src_offset
-              from {golden}
-            )
-            select doc_id,
-                   string_agg(
-                     (case when prev is not null and prev <> src_offset
-                           then '@@@@@@' || chr(10) else '' end) ||
-                     case when kind = 'paragraph'
-                            then '<p>' || text || '</p>'
-                          when kind = 'table_html' then text
-                          when kind = 'image'
-                            then '<img src="' || media_ref || '"/>'
-                          else '' end,
-                     chr(10) order by "offset") as html
-            from g group by doc_id
-        """,
-        "minhash_signatures": _dk_minhash_sig_sql(8),
-        "minhash_lsh_pairs": _dk_minhash_bands_cte() + """
-            select distinct x.doc_id as doc_a, y.doc_id as doc_b
-            from bands x join bands y
-              on x.band = y.band and x.bh = y.bh and x.doc_id < y.doc_id
-        """,
-        "simhash": _dk_simhash_sql(),
-        # oracle = brute-force hamming self-join; equals the banded
-        # plan because d+1 bands have perfect recall at hamming <= d
-        "simhash_pairs": f"""
-            with sims as ({_dk_simhash_sql()})
-            select x.doc_id as doc_a, y.doc_id as doc_b,
-                   cast(bit_count(xor(x.simhash, y.simhash)) as int)
-                     as hamming
-            from sims x join sims y on x.doc_id < y.doc_id
-            where bit_count(xor(x.simhash, y.simhash)) <= 3
-        """,
-        "cosine_topk": cosine,
-        "ann_topk_lsh": _dk_ann_lsh_sql(),
-        "ann_topk_ivf": _dk_ann_ivf_sql(),
-        "media_resize": f"""
-            with refs as (
-              select distinct s.media_ref as media_ref
-              from (select unnest(spans) as s from {spans})
-              where s.kind = 'image'
-            ), dims as (
-              select media_ref,
-                64 + cast('0x' || substr(md5(media_ref), 1, 2) as int) * 8
-                  as sw,
-                64 + cast('0x' || substr(md5(media_ref), 3, 2) as int) * 8
-                  as sh,
-                (['png', 'jpeg', 'webp'])[
-                  cast('0x' || substr(md5(media_ref), 5, 2) as int) % 3 + 1]
-                  as format
-              from refs
-            )
-            select media_ref,
-                   cast(floor(sw * least(256.0 / sw, 256.0 / sh, 1.0))
-                        as int) as width,
-                   cast(floor(sh * least(256.0 / sw, 256.0 / sh, 1.0))
-                        as int) as height,
-                   sw as src_width, sh as src_height, format
-            from dims
-        """,
-        "video_frames": f"""
-            with refs as (
-              select distinct s.media_ref as media_ref
-              from (select unnest(spans) as s from {spans})
-              where s.kind = 'image'
-            ), videos as (
-              select media_ref,
-                     cast((cast('0x' || substr(md5(media_ref), 1, 15) as bigint) % 240) + 1 as int) as n_frames,
-                     cast((cast('0x' || substr(md5(media_ref || 'f'), 1, 15) as bigint) % 30) + 1 as double) as fps
-              from refs
-            )
-            select media_ref, cast(frame_idx as int) as frame_idx,
-                   frame_idx / fps as ts_sec
-            from (select media_ref, fps,
-                         unnest(generate_series(0, n_frames - 1, 5))
-                           as frame_idx
-                  from videos where n_frames > 0)
-        """,
-        "audio_chunks": f"""
-            with refs as (
-              select distinct s.media_ref as media_ref
-              from (select unnest(spans) as s from {spans})
-              where s.kind = 'image'
-            ), audio as (
-              select media_ref,
-                     cast(({DK_H60.format(s='media_ref')} % 90) + 1
-                          as double) as dur
-              from refs
-            ), chunks as (
-              select media_ref, dur,
-                     unnest(generate_series(0,
-                       greatest(cast(ceil((dur - 30.0) / 30.0) as int),
-                                0), 1)) as chunk_idx
-              from audio
-            )
-            select media_ref, cast(chunk_idx as int) as chunk_idx,
-                   cast(chunk_idx * 30.0 as double) as start_sec,
-                   cast(least(chunk_idx * 30.0 + 30.0, dur) as double)
-                     as end_sec
-            from chunks where chunk_idx * 30.0 < dur
-        """,
-        "embedding_neardup": _dk_neardup_sql(),
-        "semdedup_assign": _dk_neardup_sql(0.45, as_cte=True) + """
-            , edges as (
-              select vec_a as u, vec_b as v from pairs
-              union select vec_b, vec_a from pairs
-            ), reach as (
-              select u as node, v as r from edges
-              union
-              select e.u, reach.r from edges e
-                join reach on reach.node = e.v
-            ), comp as (
-              select node as vec_id, least(node, min(r)) as component
-              from reach group by node
-            )
-            select vec_id, component from comp
-        """,
-        "semdedup_keep": _dk_neardup_sql(0.45, as_cte=True) + """
-            , edges as (
-              select vec_a as u, vec_b as v from pairs
-              union select vec_b, vec_a from pairs
-            ), reach as (
-              select u as node, v as r from edges
-              union
-              select e.u, reach.r from edges e
-                join reach on reach.node = e.v
-            ), comp as (
-              select node as vec_id, least(node, min(r)) as component
-              from reach group by node
-            )
-            select e.vec_id from embeddings e
-              left join comp on e.vec_id = comp.vec_id
-            where comp.vec_id is null or comp.vec_id = comp.component
-        """,
-        "media_features": f"""
-            with refs as (
-              select distinct s.media_ref as media_ref
-              from (select unnest(spans) as s from {spans})
-              where s.kind = 'image'
-            )
-            select media_ref,
-                   cast(length(media_ref) as bigint) as n_bytes,
-                   64 + cast('0x' || substr(md5(media_ref), 1, 2) as int) * 8
-                     as width,
-                   64 + cast('0x' || substr(md5(media_ref), 3, 2) as int) * 8
-                     as height,
-                   (['png', 'jpeg', 'webp'])[
-                     cast('0x' || substr(md5(media_ref), 5, 2) as int) % 3 + 1]
-                     as format
-            from refs
-        """,
-        "pricing_summary": """
-            select l_returnflag, l_linestatus,
-                   sum(l_quantity) as sum_qty,
-                   sum(l_extendedprice) as sum_base_price,
-                   sum(l_extendedprice * (1 - l_discount)) as sum_disc_price,
-                   round(avg(l_quantity), 6) as avg_qty,
-                   count(*) as count_order
-            from lineitem
-            where l_shipdate <= timestamp '1998-09-02'
-            group by l_returnflag, l_linestatus
-        """,
-        "salted_priority_revenue": """
-            select o_orderpriority,
-                   cast(round(sum(l_extendedprice * (1 - l_discount)))
-                        as bigint) as revenue,
-                   count(*) as n_items
-            from lineitem
-            join orders on l_orderkey = o_orderkey
-            group by o_orderpriority
-        """,
-        "top_revenue_orders": """
-            with rev as (
-              select l_orderkey,
-                     round(sum(l_extendedprice * (1 - l_discount)), 6)
-                       as revenue
-              from lineitem group by l_orderkey
-            )
-            select o_orderkey, revenue, o_orderdate
-            from orders
-            join customer on o_custkey = c_custkey
-              and c_mktsegment = 'BUILDING'
-            join rev on o_orderkey = l_orderkey
-            order by revenue desc, o_orderkey
-            limit 10
-        """,
-        "event_sessions": """
-            with flagged as (
-              select user_id, ts, event_id,
-                     case when epoch(ts) - lag(epoch(ts)) over (
-                       partition by user_id order by ts, event_id) > 1800
-                       then 1 else 0 end as new_session
-              from events
-            ), sess as (
-              select user_id,
-                     sum(new_session) over (
-                       partition by user_id
-                       order by ts, event_id
-                       rows between unbounded preceding and current row)
-                       as session_id
-              from flagged
-            )
-            select user_id, cast(max(session_id) + 1 as bigint) as n_sessions,
-                   count(*) as n_events
-            from sess group by user_id
-        """,
-    }
-    return _merge_oracles(o)
-
-
-def _merge_oracles(o: dict[str, str]) -> dict[str, str]:
-    """Consolidate sibling oracles to mirror the merged queries (the
-    driver's correctness gate checks at most the first 50 entries, so
-    queries() unions/joins sibling operators under one key — each
-    merged oracle composes the SAME single-operator SQL bodies, so no
-    per-operator semantics change)."""
-    merged: dict[str, str] = {}
-
-    merged["doc_text_stats"] = f"""
-        with t as ({o.pop('token_stats')}),
-             q as ({o.pop('quality_score')}),
-             n as ({o.pop('text_normalize')})
-        select t.*, q.punct_ratio, q.lexical_diversity, q.quality,
-               n.n_chars_no_punct, n.n_numberish_tokens,
-               n.n_ocr_zero_tokens
-        from t join q using (doc_id) join n using (doc_id)
-    """
-
-    merged["lang_id"] = f"""
-        with sw as ({o.pop('lang_id')}), ng as ({o.pop('lang_id_ngram')})
-        select doc_id, 'stopword' as method, pred_lang, top_score,
-               margin
-        from sw
-        union all
-        select doc_id, 'trigram', pred_lang, top_score, margin
-        from ng
-    """
-
-    merged["fingerprint"] = f"""
-        with md as ({o.pop('fingerprint')}),
-             wn as ({o.pop('winnow_fingerprint')})
-        select doc_id, 'md5' as method, fingerprint as fp from md
-        union all
-        select doc_id, 'winnow',
-               cast(n_fps as varchar) || ':' || cast(min_fp as varchar)
-               || ':' || cast(max_fp as varchar) || ':'
-               || cast(xor_fp as varchar)
-        from wn
-    """
-
-    merged["gopher_quality"] = f"""
-        with g as ({o.pop('gopher_quality')}),
-             r as ({o.pop('repetition_signals')})
-        select g.*, r.* exclude (doc_id)
-        from g join r using (doc_id)
-    """
-
-    merged["c4_filters"] = f"""
-        with c as ({o.pop('c4_filters')}), p as ({o.pop('pii_redact')})
-        select c.*, p.* exclude (doc_id)
-        from c join p using (doc_id)
-    """
-
-    o.pop("assemble_provenance")
-    o.pop("assemble_rows")
-    merged["assemble"] = _dk_assemble_sql("""
-        select f.doc_id, f.stage, f.stage = 'kept' as kept,
-               a.source, a.n_copies, a.split
-        from final f left join (
-          select doc_id, max(source) as source,
-                 count(*) as n_copies, max(split) as split
-          from assembled group by doc_id) a using (doc_id)
-    """)
-
-    o.pop("semdedup_assign")
-    o.pop("semdedup_keep")
-    merged["semdedup"] = _dk_neardup_sql(0.45, as_cte=True) + """
-        , edges as (
-          select vec_a as u, vec_b as v from pairs
-          union select vec_b, vec_a from pairs
-        ), reach as (
-          select u as node, v as r from edges
-          union
-          select e.u, reach.r from edges e
-            join reach on reach.node = e.v
-        ), comp as (
-          select node as vec_id, least(node, min(r)) as component
-          from reach group by node
-        )
-        select e.vec_id,
-               coalesce(c.component, e.vec_id) as component,
-               coalesce(c.component, e.vec_id) = e.vec_id as kept
-        from embeddings e left join comp c on e.vec_id = c.vec_id
-    """
-
-    o.pop("dedup_corpus_pairs")
-    o.pop("dedup_corpus_keep")
-    merged["dedup_corpus"] = _dk_dedup_corpus_cte(0.5, 20, 10) + """
-        select 'pair' as part, doc_a as a, doc_b as b, jaccard
-        from pairs
-        union all
-        select 'keep', d.doc_id, cast(null as bigint),
-               cast(null as double)
-        from documents d
-        left join (select distinct doc_b from pairs) p
-          on d.doc_id = p.doc_b
-        where p.doc_b is null
-    """
-
-    o.pop("dedup_cluster_assign")
-    o.pop("dedup_cluster_keep")
-    merged["dedup_clusters"] = _dk_dedup_corpus_cte(
-        0.5, 20, 10, lead="with recursive ") + """
-        , edges as (
-          select doc_a as u, doc_b as v from pairs
-          union select doc_b, doc_a from pairs
-        ), reach as (
-          select u as node, v as r from edges
-          union
-          select e.u, reach.r from edges e
-            join reach on reach.node = e.v
-        ), comp as (
-          select node as doc_id, least(node, min(r)) as component
-          from reach group by node
-        )
-        select d.doc_id,
-               coalesce(c.component, d.doc_id) as component,
-               coalesce(c.component, d.doc_id) = d.doc_id as kept
-        from documents d left join comp c on d.doc_id = c.doc_id
-    """
-
-    o.pop("minhash_signatures")
-    o.pop("minhash_lsh_pairs")
-    o.pop("lsh_dedup_keep")
-    sig_concat = " || ',' || ".join(
-        f"cast(s{i} as varchar)" for i in range(8))
-    merged["minhash_lsh"] = _dk_minhash_bands_cte() + f"""
-        , cand as (
-          select distinct x.doc_id as doc_a, y.doc_id as doc_b
-          from bands x join bands y
-            on x.band = y.band and x.bh = y.bh and x.doc_id < y.doc_id
-        )
-        select 'pair' as part, doc_a as a, doc_b as b,
-               cast(null as varchar) as val from cand
-        union all
-        select 'keep', d.doc_id, cast(null as bigint),
-               cast(null as varchar)
-        from documents d
-        where d.doc_id not in (select doc_b from cand)
-        union all
-        select 'sig', doc_id, cast(null as bigint), {sig_concat}
-        from sig
-    """
-
-    sim = _dk_simhash_sql()
-    o.pop("simhash_pairs")
-    merged["simhash"] = f"""
-        with sims as ({sim})
-        select 'sig' as part, doc_id as a, cast(null as bigint) as b,
-               simhash as val from sims
-        union all
-        select 'pair', x.doc_id, y.doc_id,
-               cast(bit_count(xor(x.simhash, y.simhash)) as bigint)
-        from sims x join sims y on x.doc_id < y.doc_id
-        where bit_count(xor(x.simhash, y.simhash)) <= 3
-    """
-
-    merged["ann_topk"] = f"""
-        with b as ({o.pop('cosine_topk')}),
-             l as ({o.pop('ann_topk_lsh')}),
-             i as ({o.pop('ann_topk_ivf')})
-        select 'brute' as method, * from b
-        union all select 'lsh', * from l
-        union all select 'ivf', * from i
-    """
-
-    merged["media_sampling"] = f"""
-        with au as ({o.pop('audio_chunks')}),
-             vi as ({o.pop('video_frames')})
-        select media_ref, 'audio' as modality, chunk_idx as idx,
-               start_sec as t0, end_sec as t1 from au
-        union all
-        select media_ref, 'video', frame_idx, ts_sec,
-               cast(null as double) from vi
-    """
-
-    o.pop("media_features")
-    # second arm: encode-side truth for the planted REAL media corpus
-    # (dims/format/n_bytes recorded before core.codecs encoding; the
-    # thumbnail fit is recomputed here independently in SQL)
-    media_golden = os.path.join(FIXTURE_ROOT, "sf0.01",
-                                "golden_media_meta.parquet")
-    merged["media_meta"] = f"""
-        with r as ({o.pop('media_resize')}),
-             g as (select * from read_parquet('{media_golden}'))
-        select media_ref, width, height, src_width, src_height, format,
-               cast(length(media_ref) as bigint) as n_bytes
-        from r
-        union all
-        select media_ref,
-               cast(floor(src_width * least(256.0 / src_width,
-                    256.0 / src_height, 1.0)) as int) as width,
-               cast(floor(src_height * least(256.0 / src_width,
-                    256.0 / src_height, 1.0)) as int) as height,
-               src_width, src_height, format, n_bytes
-        from g
-    """
-
-    merged["model_scores"] = f"""
-        with l as ({o.pop('layout_scores')}),
-             q as ({o.pop('quality_model_scores')}),
-             r as ({_dk_orient_sql(
-                 f"read_parquet('{SPANS_001}/*.parquet')")})
+        "tables_per_doc": f"""
+        with c as ({tables_per_doc}),
+        t as (select doc_id, cast(row_number() over (
+                order by n_tables desc, doc_id) as int) as top_rank
+              from c order by n_tables desc, doc_id limit 20)
+        select c.doc_id, c.n_tables, t.top_rank
+        from c left join t using (doc_id)
+    """,
+        "model_scores": f"""
+        with l as ({_dk_layout_scores_sql(spans)}),
+             q as ({_dk_quality_model_sql()}),
+             r as ({_dk_orient_sql(spans)})
         select 'layout' as head, doc_id, "offset" as offset,
                score_table as score_a, score_text as score_b,
                score_figure as score_c, cast(null as double) as score_d,
@@ -3329,38 +3089,28 @@ def _merge_oracles(o: dict[str, str]) -> dict[str, str]:
                cast(null as double), label
         from read_parquet('{os.path.join(FIXTURE_ROOT, "sf0.01",
                                          "golden_layout_cnn.parquet")}')
-    """
-
-    merged["exports"] = f"""
-        with e as ({o.pop('table_exports')}), d as ({o.pop('doc_html')})
-        select doc_id, "offset" as offset, 'shape' as fmt,
-               cast(n_rows as varchar) || 'x' || cast(n_cols as varchar)
-                 as payload from e
-        union all select doc_id, "offset", 'csv', csv from e
-        union all select doc_id, "offset", 'markdown', markdown from e
-        union all select doc_id, "offset", 'json_rows', json_rows from e
-        union all
-        select doc_id, "offset", 'sqlite_sql', sqlite_sql from e
-        union all select doc_id, "offset", 'excel_xml', excel_xml from e
-        union all select doc_id, "offset", 'html_db', html_db from e
-        union all select doc_id, -1, 'doc_html', html from d
-    """
-
-    # from-model, two arms. TSR: checked against
-    # golden_model_tsr.parquet — written by fixtures/build.py from the
-    # SAME .npz artifact through the single-process core.tsrhead +
-    # core.logicell path (the extract_spans golden pattern applied to
-    # the model seam). det/rec: an INDEPENDENT pure-SQL twin — the
-    # head works from glyph evidence, the oracle merges the PLANTED
-    # det intervals (same visual line = same y-extent here; x-gaps >=
-    # 2x the median char width split detections, >= 0.5x insert the
-    # space) — code-disjoint ground truth, not a shared golden.
-    merged["ocr_from_model"] = (
-        f'select doc_id, "offset" as offset, kind, text '
-        f"from read_parquet('"
-        + os.path.join(FIXTURE_ROOT, "sf0.01",
-                       "golden_model_tsr.parquet") + "')"
-        + f"""
+    """,
+        "doc_profile": f"""
+        with i as ({imaged_doc_classifier}),
+             p as ({page_select})
+        select i.*, p.* exclude (doc_id)
+        from i join p using (doc_id)
+    """,
+        # from-model, two arms. TSR: checked against
+        # golden_model_tsr.parquet — written by fixtures/build.py from the
+        # SAME .npz artifact through the single-process core.tsrhead +
+        # core.logicell path (the extract_spans golden pattern applied to
+        # the model seam). det/rec: an INDEPENDENT pure-SQL twin — the
+        # head works from glyph evidence, the oracle merges the PLANTED
+        # det intervals (same visual line = same y-extent here; x-gaps >=
+        # 2x the median char width split detections, >= 0.5x insert the
+        # space) — code-disjoint ground truth, not a shared golden.
+        "ocr_from_model": (
+            f'select doc_id, "offset" as offset, kind, text '
+            f"from read_parquet('"
+            + os.path.join(FIXTURE_ROOT, "sf0.01",
+                           "golden_model_tsr.parquet") + "')"
+            + f"""
         union all
         select * from (
         with pages as materialized (
@@ -3369,7 +3119,7 @@ def _merge_oracles(o: dict[str, str]) -> dict[str, str]:
           -- throw on a non-JSON page payload (seen flaking)
           select doc_id, s."offset" as "offset", s.text as text
           from (select doc_id, unnest(spans) as s
-                from read_parquet('{SPANS_001}/*.parquet'))
+                from {spans})
           where s.kind = 'ocr_page' and json_valid(s.text)
         ), dets as (
           select doc_id, "offset",
@@ -3456,7 +3206,7 @@ def _merge_oracles(o: dict[str, str]) -> dict[str, str]:
           -- from running ahead of the kind/json_valid filter
           select doc_id, s."offset" as "offset", s.text as text
           from (select doc_id, unnest(spans) as s
-                from read_parquet('{SPANS_001}/*.parquet'))
+                from {spans})
           where s.kind = 'ocr_page' and json_valid(s.text)
         ), dblob as (
           select doc_id, "offset",
@@ -3707,30 +3457,81 @@ def _merge_oracles(o: dict[str, str]) -> dict[str, str]:
         union all
         select doc_id, "offset" as offset, kind, text
         from read_parquet('"""
-        + os.path.join(FIXTURE_ROOT, "sf0.01",
-                       "golden_scan_boxes.parquet") + """')
+            + os.path.join(FIXTURE_ROOT, "sf0.01",
+                           "golden_scan_boxes.parquet") + """')
         union all
         select doc_id, "offset" as offset, kind, text
         from read_parquet('"""
-        + os.path.join(FIXTURE_ROOT, "sf0.01",
-                       "golden_ocr_scan.parquet") + "')")
+            + os.path.join(FIXTURE_ROOT, "sf0.01",
+                           "golden_ocr_scan.parquet") + "')"),
+        "exports": f"""
+        with e as ({table_exports}), d as ({doc_html})
+        select doc_id, "offset" as offset, 'shape' as fmt,
+               cast(n_rows as varchar) || 'x' || cast(n_cols as varchar)
+                 as payload from e
+        union all select doc_id, "offset", 'csv', csv from e
+        union all select doc_id, "offset", 'markdown', markdown from e
+        union all select doc_id, "offset", 'json_rows', json_rows from e
+        union all
+        select doc_id, "offset", 'sqlite_sql', sqlite_sql from e
+        union all select doc_id, "offset", 'excel_xml', excel_xml from e
+        union all select doc_id, "offset", 'html_db', html_db from e
+        union all select doc_id, -1, 'doc_html', html from d
+    """,
+        "pricing_summary": """
+            select l_returnflag, l_linestatus,
+                   sum(l_quantity) as sum_qty,
+                   sum(l_extendedprice) as sum_base_price,
+                   sum(l_extendedprice * (1 - l_discount)) as sum_disc_price,
+                   round(avg(l_quantity), 6) as avg_qty,
+                   count(*) as count_order
+            from lineitem
+            where l_shipdate <= timestamp '1998-09-02'
+            group by l_returnflag, l_linestatus
+        """,
+        "top_revenue_orders": """
+            with rev as (
+              select l_orderkey,
+                     round(sum(l_extendedprice * (1 - l_discount)), 6)
+                       as revenue
+              from lineitem group by l_orderkey
+            )
+            select o_orderkey, revenue, o_orderdate
+            from orders
+            join customer on o_custkey = c_custkey
+              and c_mktsegment = 'BUILDING'
+            join rev on o_orderkey = l_orderkey
+            order by revenue desc, o_orderkey
+            limit 10
+        """,
+        "salted_priority_revenue": """
+            select o_orderpriority,
+                   cast(round(sum(l_extendedprice * (1 - l_discount)))
+                        as bigint) as revenue,
+                   count(*) as n_items
+            from lineitem
+            join orders on l_orderkey = o_orderkey
+            group by o_orderpriority
+        """,
+        "event_sessions": """
+            with flagged as (
+              select user_id, ts, event_id,
+                     case when epoch(ts) - lag(epoch(ts)) over (
+                       partition by user_id order by ts, event_id) > 1800
+                       then 1 else 0 end as new_session
+              from events
+            ), sess as (
+              select user_id,
+                     sum(new_session) over (
+                       partition by user_id
+                       order by ts, event_id
+                       rows between unbounded preceding and current row)
+                       as session_id
+              from flagged
+            )
+            select user_id, cast(max(session_id) + 1 as bigint) as n_sessions,
+                   count(*) as n_events
+            from sess group by user_id
+        """,
+    }
 
-    o.pop("top_docs_by_tables")
-    merged["tables_per_doc"] = f"""
-        with c as ({o.pop('extract_tables_per_doc')}),
-        t as (select doc_id, cast(row_number() over (
-                order by n_tables desc, doc_id) as int) as top_rank
-              from c order by n_tables desc, doc_id limit 20)
-        select c.doc_id, c.n_tables, t.top_rank
-        from c left join t using (doc_id)
-    """
-
-    merged["doc_profile"] = f"""
-        with i as ({o.pop('imaged_doc_classifier')}),
-             p as ({o.pop('page_select')})
-        select i.*, p.* exclude (doc_id)
-        from i join p using (doc_id)
-    """
-
-    o.update(merged)
-    return o

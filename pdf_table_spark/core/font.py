@@ -91,13 +91,6 @@ def glyph(ch: str) -> np.ndarray:
                      for row in rows], dtype=np.uint8)
 
 
-def glyph_stack(chars: str | None = None) -> np.ndarray:
-    """(n, 7, 5) uint8 stack in the order of ``chars`` (default
-    ``FONT_CHARS``) — the recognition CNN's template tensor."""
-    cs = FONT_CHARS if chars is None else chars
-    return np.stack([glyph(c) for c in cs])
-
-
 def text_width(text: str) -> int:
     """Rendered pixel width of ``text`` (no outer margins)."""
     w = 0

@@ -166,13 +166,6 @@ def segments_in_bbox(bbox, horizontal, vertical, tol: float = JOINT_TOL):
     return h, v
 
 
-def bbox_contains_center(bbox, tx0, ty0, tx1, ty1) -> bool:
-    """text_in_bbox containment test: the text's center in the bbox."""
-    x0, y0, x1, y1 = bbox
-    cx, cy = (tx0 + tx1) / 2.0, (ty0 + ty1) / 2.0
-    return x0 <= cx <= x1 and y0 <= cy <= y1
-
-
 def box_contains(outer, inner, diff: float = 2.0) -> bool:
     """inner box lies within outer (±diff) — reference
     ``box_in_other_box`` (``table_common.py:138-160``), used by the

@@ -151,18 +151,6 @@ def scan_payloads() -> list[dict]:
     return rows
 
 
-def scan_truth() -> list[dict]:
-    """The planted line rectangles (pre-render ground truth) for
-    recall/containment checks in pytest."""
-    rows = []
-    for i in range(N_SCANS):
-        for j, ln in enumerate(_scan_lines_for(i)):
-            rows.append({"media_ref": f"media://scan/{i:04d}",
-                         "line_idx": j, **{k: ln[k] for k in
-                                           ("x0", "y0", "x1", "y1")}})
-    return rows
-
-
 # ------------------------------------------- OCR scan-page corpus
 
 N_OCR_SCANS = 24

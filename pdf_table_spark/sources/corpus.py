@@ -77,8 +77,6 @@ def fan_small_scan(spark: SparkSession, df: DataFrame,
     Measured at sf0.1 / local[32]: lang_id 2.2 s → 0.5 s, trigram
     lang ID 4.1 s → 0.85 s (the map stage was one task)."""
     import os
-    if os.environ.get("SPARK_GRAFT_NO_FAN"):  # A/B kill switch
-        return df
     sizes = []
     if os.path.isfile(path):
         sizes = [os.path.getsize(path)]
@@ -122,9 +120,6 @@ def fan_cpu_bound(df: DataFrame) -> DataFrame:
     ``shuffle.partitions`` exceeds the core count still bypasses the
     guard — size ``shuffle.partitions`` to the session, as this
     repo's sessions do."""
-    import os
-    if os.environ.get("SPARK_GRAFT_NO_FAN"):  # A/B kill switch
-        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() <= par:
         return df.repartition(par)

@@ -35,15 +35,13 @@ def main() -> None:
     ap.add_argument("--shuffle-partitions", type=int, default=32)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from pdf_table_spark.ops import dsir
+    from pdf_table_spark.spark.session import build_session
 
-    spark = (SparkSession.builder
-             .config("spark.sql.shuffle.partitions",
-                     str(args.shuffle_partitions))
-             .getOrCreate())
+    spark = build_session("pdf_table_spark.dsir",
+                          shuffle_partitions=args.shuffle_partitions)
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(args.input)

@@ -25,30 +25,7 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-
-def build(master: str | None, shuffle_partitions: int | None):
-    from pdf_table_spark.spark.session import ARROW_BATCH_ROWS
-
-    b = SparkSession.builder.appName("pdf_table_spark.extract")
-    if master:
-        b = b.master(master)
-    if shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return (
-        b.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # don't let AQE coalesce the reassembly/write stage below the
-        # core count — 64 MB targets serialize the output tail
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(ARROW_BATCH_ROWS))
-        .getOrCreate()
-    )
 
 
 def main(argv=None):
@@ -72,8 +49,10 @@ def main(argv=None):
 
     from pdf_table_spark.spark.checkpoint import run_checkpointed
     from pdf_table_spark.spark.pipeline import extract_documents, flatten_output
+    from pdf_table_spark.spark.session import build_session
 
-    spark = build(args.master, args.shuffle_partitions)
+    spark = build_session("pdf_table_spark.extract", master=args.master,
+                          shuffle_partitions=args.shuffle_partitions)
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
 

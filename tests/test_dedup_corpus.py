@@ -114,9 +114,13 @@ def test_cache_scope_releases_all_persisted(spark, boiler_docs):
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    # ensure a clean slate (other module-scoped tests may have cached)
+    # ensure a clean slate: other modules may have cached, and RDDs they
+    # localCheckpointed stay registered until their last reference is
+    # garbage-collected — which can land mid-scope and move the count
     dedup.release_caches()
     spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
     base = n_cached()
     with dedup.cache_scope() as scope:
         out = dedup.dedup_corpus(boiler_docs, threshold=0.5,

@@ -66,7 +66,6 @@ def test_fan_small_scan_policy(spark, tmp_path):
     assert fan_small_scan(spark, df, "s3://bucket/corpus") is df
 
     # many files (>= parallelism): the scan already parallelizes
-    import os
     many = tmp_path / "many"
     many.mkdir()
     for i in range(par):
@@ -80,17 +79,8 @@ def test_fan_small_scan_policy(spark, tmp_path):
         fh.truncate(FAN_SMALL_BYTES)
     assert fan_small_scan(spark, df, str(big)) is df
 
-    # kill switch for A/B runs
-    os.environ["SPARK_GRAFT_NO_FAN"] = "1"
-    try:
-        assert fan_small_scan(spark, df, p) is df
-    finally:
-        del os.environ["SPARK_GRAFT_NO_FAN"]
-
 
 def test_fan_cpu_bound_policy(spark):
-    import os
-
     from pdf_table_spark.sources.corpus import fan_cpu_bound
     par = spark.sparkContext.defaultParallelism
 
@@ -111,10 +101,3 @@ def test_fan_cpu_bound_policy(spark):
     # genuinely wider frame: untouched (no added exchange)
     wide = spark.range(100).repartition(par + 1)
     assert fan_cpu_bound(wide) is wide
-
-    # kill switch for A/B runs
-    os.environ["SPARK_GRAFT_NO_FAN"] = "1"
-    try:
-        assert fan_cpu_bound(narrow) is narrow
-    finally:
-        del os.environ["SPARK_GRAFT_NO_FAN"]
