@@ -358,8 +358,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # original as the canonical occurrence). Persisted: the union's
         # arms reference this frame five times, and its orderBy+limit
         # dup-injection subtree would re-execute per reference
-        docs = _lined_with_dups(spark, sf_dir).persist()
-        dedup._PERSISTED.append(docs)
+        docs = dedup.persist(_lined_with_dups(spark, sf_dir))
         c4 = (textfilters.c4_span_dedup(docs)
               .select("doc_id", F.lit("c4_sent3").alias("method"),
                       F.col("n_sentences").alias("n_units"),
@@ -457,9 +456,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             budget = f_budget.result()
             lr = f_lr.result()
         raw = d.filter("source <> 'src1'")
-        scored = dsir.score_e6(raw, lr).select(
-            "doc_id", "score_e6").persist()
-        dedup._PERSISTED.append(scored)
+        scored = dedup.persist(
+            dsir.score_e6(raw, lr).select("doc_id", "score_e6"))
 
         def dsir_arm(mode, name):
             return (dsir.dsir_select(raw, lr, 50, mode=mode,
@@ -845,8 +843,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the token explode + 60 vote aggregations run once instead of
         # twice (released by dedup.release_caches()).
         d = _t(spark, sf_dir, "documents", fan=False)
-        fp = dedup.simhash(d).persist()
-        dedup._PERSISTED.append(fp)
+        fp = dedup.persist(dedup.simhash(d))
         sig = fp.select(
             F.lit("sig").alias("part"), F.col("doc_id").alias("a"),
             F.lit(None).cast("bigint").alias("b"),

@@ -60,6 +60,15 @@ PERM_CONSTS = _perm_consts()
 _PERSISTED: list = []
 
 
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it here, so ``release_caches()`` or
+    the enclosing ``cache_scope`` releases it. Every persisted
+    intermediate of the corpus operators goes through this."""
+    df = df.persist()
+    _PERSISTED.append(df)
+    return df
+
+
 def release_caches() -> int:
     """Unpersist every intermediate this module cached; returns how
     many were released. Kept for compat — new code should prefer the
@@ -129,23 +138,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
         .agg(F.min("doc_id").alias("keeper_doc_id"),
              F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") > 1)
-    )
-
-
-def shingle_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) distinct rows — the dedup workhorse layout.
-    The token split runs once per doc (materialized column), not once
-    per lambda reference."""
-    return (
-        docs.select(
-            "doc_id",
-            F.expr(f"filter(split(lower(text), '\\\\s+'), t -> t <> '')")
-            .alias("toks"))
-        .select("doc_id", F.explode(F.expr(
-            f"array_distinct(transform("
-            f"  sequence(1, greatest(size(toks) - {SHINGLE_K - 1}, 1)),"
-            f"  i -> array_join(slice(toks, i, {SHINGLE_K}), ' ')))"
-        )).alias("shingle"))
     )
 
 
@@ -228,8 +220,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
         arrs = (sh0.join(keep, "sh")
                 .groupBy("doc_id").agg(F.collect_list("sh").alias("shs")))
     if cache:
-        arrs = arrs.persist()
-        _PERSISTED.append(arrs)
+        arrs = persist(arrs)
 
     # global total order: FULL df-ascending, (df, sh) — the textbook
     # PPJoin choice. Rarest shingles fill prefixes first, so a
@@ -288,8 +279,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
         # + the n_inter join); unpersisted, each reference re-ran the
         # whole prefix self-join — measured 3/4 of the query wall.
         # The pair set is tiny by construction (prefix-filtered).
-        cand = cand.persist()
-        _PERSISTED.append(cand)
+        cand = persist(cand)
 
     # exact verify: per-candidate-pair array_intersect over the
     # compact per-doc arrays (linear in candidates, no shingle-row
@@ -321,20 +311,10 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """64-perm MinHash signature per doc: sig_i = min over shingles of
-    (a_i * h60(shingle) % P + b_i) % P. One groupBy, 64 min() aggs —
-    map-side combinable, JVM-only."""
-    sh = shingle_rows(docs).select(
-        "doc_id",
-        F.expr(H60_SPARK.format(s="shingle")).alias("h"))
-    sh = sh.select("doc_id", (F.col("h") % P).alias("h"))
-    # one parsed SQL string per agg: the Column-arithmetic form built
-    # each of the 64 perms from ~5 py4j round trips (≈0.4 s of pure
-    # driver chatter per query BUILD — measured, plan identical)
-    aggs = [
-        F.expr(f"min(({a}L * h % {P} + {b}L) % {P}) as s{i}")
-        for i, (a, b) in enumerate(PERM_CONSTS)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    (a_i * h60(shingle) % P + b_i) % P — the signature table over the
+    md5-prefix shingle hashes, which DuckDB reproduces bit for bit."""
+    return minhash_signatures_from_hashes(
+        shingle_hash_rows(docs, hash_fn="md5"))
 
 
 def minhash_lsh_pairs(docs: DataFrame,
@@ -361,6 +341,9 @@ def minhash_signatures_from_hashes(sh: DataFrame) -> DataFrame:
     exact-verification passes. xxhash64 values are pmod'ed into [0, P)
     before the universal-hash perms."""
     h = sh.select("doc_id", F.pmod(F.col("sh"), F.lit(P)).alias("h"))
+    # one parsed SQL string per agg: the Column-arithmetic form built
+    # each of the 64 perms from ~5 py4j round trips (≈0.4 s of pure
+    # driver chatter per query BUILD — measured, plan identical)
     aggs = [
         F.expr(f"min(({a}L * h % {P} + {b}L) % {P}) as s{i}")
         for i, (a, b) in enumerate(PERM_CONSTS)
@@ -475,8 +458,7 @@ def dedup_corpus(docs: DataFrame, threshold: float = 0.8,
     if materialize_dir is not None:
         dropped_sh = _mat(dropped_sh, "dropped_sh")
     else:
-        dropped_sh = dropped_sh.persist()
-        _PERSISTED.append(dropped_sh)
+        dropped_sh = persist(dropped_sh)
     bcast_limit = 5_000_000 if hash_fn == "xxhash64" else 1_000_000
     n_dropped = dropped_sh.count()
     if n_dropped == 0:
@@ -487,13 +469,10 @@ def dedup_corpus(docs: DataFrame, threshold: float = 0.8,
         sh = raw_sh.join(dropped_sh, "sh", "left_anti")
 
     if materialize_dir is None:
-        sh = sh.persist()
-        _PERSISTED.append(sh)
-        sig = minhash_signatures_from_hashes(sh).persist()
-        _PERSISTED.append(sig)
-        cand = _lsh_pairs_from_signatures(sig, max_bucket,
-                                          band_hash=hash_fn).persist()
-        _PERSISTED.append(cand)
+        sh = persist(sh)
+        sig = persist(minhash_signatures_from_hashes(sh))
+        cand = persist(_lsh_pairs_from_signatures(sig, max_bucket,
+                                                  band_hash=hash_fn))
     else:
         # sh stays UNPERSISTED: its two consumers (signatures, the
         # candidate-restricted verify below) each recompute it as one
@@ -516,8 +495,7 @@ def dedup_corpus(docs: DataFrame, threshold: float = 0.8,
     sh_c = sh.join(cand_docs, "doc_id", "semi")
     if materialize_dir is not None:
         # small (candidate docs only) and consumed three times below
-        sh_c = sh_c.persist()
-        _PERSISTED.append(sh_c)
+        sh_c = persist(sh_c)
 
     sizes = sh_c.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh_c.select(F.col("doc_id").alias("doc_a"), "sh")
@@ -834,10 +812,12 @@ def connected_components(pairs: DataFrame, a: str = "doc_a",
     them as their own singleton component.
 
     Each iteration localCheckpoints the shrinking edge list (lineage
-    would otherwise grow by four joins per round), and convergence is
-    detected by an order-free multiset signature (count + sum + xor of
-    xxhash64(u,v)): a 2^-64 collision risk, traded against re-scanning
-    the edge set with exceptAll every round at 10^12-doc scale.
+    would otherwise grow by four joins per round) and releases the
+    round before it, so only the final round stays persisted.
+    Convergence is detected by an order-free multiset signature
+    (count + sum + xor of xxhash64(u,v)): a 2^-64 collision risk,
+    traded against re-scanning the edge set with exceptAll every round
+    at 10^12-doc scale.
     """
     # any orderable id type works — the star steps only need
     # least/greatest/min over the ids (bigint corpora AND string ids)
@@ -847,7 +827,11 @@ def connected_components(pairs: DataFrame, a: str = "doc_a",
     prev_sig = None
     converged = False
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        done, e = e, _small_star(_large_star(e)).localCheckpoint()
+        # the eager checkpoint above cut e's lineage, so the previous
+        # round's blocks back nothing: free them now instead of at the
+        # JVM's next garbage collection
+        done._jdf.queryExecution().analyzed().rdd().unpersist(True)
         sig = tuple(e.agg(
             F.count("*"),
             # decimal(38,0) sums: overflow-free under ANSI mode at any

@@ -35,22 +35,64 @@ from . import dedup
 from .textfilters import corpus_clean
 
 
+def _lineage(name: str, build, partition_by: str | None = None):
+    """The stage boundary of a single-lineage run: the stage is its
+    lazy frame."""
+    return build()
+
+
+def _stage_boundary(spark, workdir: str | None, walls: dict):
+    """The boundary every assembly stage goes through. Without a
+    ``workdir`` a stage is its lazy frame (one lineage). With one,
+    ``stage(name, build, partition_by)`` writes the stage's COMPACT
+    result to ``workdir/<name>`` (skipped when its ``_SUCCESS`` marker
+    exists), releases every cache, records the stage's wall seconds in
+    ``walls`` and returns the frame read back — lineage restarts at
+    each boundary."""
+    if workdir is None:
+        return _lineage
+
+    def stage(name: str, build, partition_by: str | None = None):
+        p = os.path.join(workdir, name)
+        schema = None
+        if not os.path.exists(os.path.join(p, "_SUCCESS")):
+            t0 = time.perf_counter()
+            df = build()
+            schema = df.schema
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(partition_by)
+            w.parquet(p)
+            dedup.release_caches()
+            spark.catalog.clearCache()
+            walls[name] = round(time.perf_counter() - t0, 3)
+        try:
+            return spark.read.parquet(p)
+        except Exception:
+            if schema is None:   # resumed AND unreadable: genuine error
+                raise
+            # a fully-gated stage wrote zero files under partitionBy —
+            # the read cannot infer a schema; carry on with the empty
+            # frame so the run reports the histogram instead of dying
+            return spark.createDataFrame([], schema)
+    return stage
+
+
 def _clean_survivors(docs: DataFrame, min_words: int,
                      min_stopword_hits: int, min_sentences: int | None,
-                     line_sep: str = "\\n"):
-    """corpus_clean + the survivor subset, both persisted (the gate
-    columns and the survivor rows each feed 2-3 downstream consumers).
-    Registered with the dedup cache registry: one release_caches()
-    call frees the whole program's intermediates."""
+                     line_sep: str = "\\n", stage=_lineage):
+    """corpus_clean (through ``stage`` as the 'cc' stage) + the
+    survivor subset, both persisted (the gate columns and the survivor
+    rows each feed 2-3 downstream consumers). Registered with the
+    dedup cache registry: one release_caches() call frees the whole
+    program's intermediates."""
     kw = dict(min_words=min_words,
               min_stopword_hits=min_stopword_hits, line_sep=line_sep)
     if min_sentences is not None:
         kw["min_sentences"] = min_sentences
-    cc = corpus_clean(docs, **kw).persist()
-    dedup._PERSISTED.append(cc)
-    survivors = (docs.join(cc.filter("kept").select("doc_id"),
-                           "doc_id").persist())
-    dedup._PERSISTED.append(survivors)
+    cc = stage("cc", lambda: dedup.persist(corpus_clean(docs, **kw)))
+    survivors = dedup.persist(
+        docs.join(cc.filter("kept").select("doc_id"), "doc_id"))
     return cc, survivors
 
 
@@ -139,7 +181,8 @@ def assemble_training_set(docs: DataFrame,
                           select_k: int | None = None,
                           select_buckets: int = 65536,
                           select_mode: str = "gumbel",
-                          seed: str = "assemble-v1") -> dict:
+                          seed: str = "assemble-v1",
+                          workdir: str | None = None) -> dict:
     """The training-set ASSEMBLY program — everything between a raw
     corpus and the rows a data loader reads, composed end to end:
 
@@ -164,28 +207,49 @@ def assemble_training_set(docs: DataFrame,
     Each stage consumes only the previous stage's survivors (the
     expensive gram joins see the thinned corpus). Returns:
 
-      {"provenance": (doc_id, stage, kept) — first-failing stage per
-                     input doc, stage ∈ dup|gopher|c4|neardup|
-                     contaminated|unselected|kept;
-       "assembled":  (doc_id, source, copy, split) — the final rows,
-                     repeated per epoch copy, each carrying its split}
+      {"provenance":  (doc_id, stage, kept) — first-failing stage per
+                      input doc, stage ∈ dup|gopher|c4|neardup|
+                      contaminated|unselected|kept;
+       "assembled":   (doc_id, source, copy, split) — the final rows,
+                      repeated per epoch copy, each carrying its split;
+       "stage_walls": {stage: seconds} for the stages written this
+                      call ({} without a ``workdir``)}
 
-    Everything downstream of the gates is a pure function of
-    (doc_id, seed): reruns, resumes, and different cluster sizes
-    produce identical assignments. Call ``dedup.release_caches()``
-    when done.
+    Without ``workdir`` the program is one lazy lineage. With one,
+    every stage boundary is MATERIALIZED — the shape a corpus-scale
+    run needs:
+
+      * each stage writes its COMPACT result (ids / labels, never
+        text) to ``workdir/<stage>`` and the next stage reads it back,
+        restarting lineage — Spark can then GC the previous stage's
+        shuffle files and cached tables instead of pinning every
+        intermediate for the whole program. The single lineage held
+        ~70 GB of live shuffle + persisted blocks at 50M docs on one
+        node and exhausted the disk; staged, the peak is ONE stage's
+        working set (the near-dedup stage dominates).
+      * a stage whose ``_SUCCESS`` marker exists is skipped entirely —
+        a pre-empted assembly resumes at the failed stage, the same
+        boundary a 10^12-doc run would checkpoint at the lake.
+
+    Both modes emit the same rows: everything downstream of the gates
+    is a pure function of (doc_id, seed), so reruns, resumes, and
+    different cluster sizes produce identical assignments. Call
+    ``dedup.release_caches()`` when done.
     """
     from .sampling import resample_mixture, split_expr
     from .textfilters import decontaminate
 
-    cc, survivors = _clean_survivors(docs, min_words,
-                                     min_stopword_hits, min_sentences)
+    walls: dict[str, float] = {}
+    stage = _stage_boundary(docs.sparkSession, workdir, walls)
+    cc, survivors = _clean_survivors(docs, min_words, min_stopword_hits,
+                                     min_sentences, stage=stage)
 
-    cl = dedup.dedup_corpus_clusters(
+    comp = stage("components", lambda: dedup.dedup_corpus_clusters(
         survivors, threshold=neardup_threshold, max_df=max_df,
-        max_bucket=max_bucket, hash_fn=hash_fn)
-    nd_dropped = (cl["components"]
-                  .filter(F.col("doc_id") != F.col("component"))
+        max_bucket=max_bucket, hash_fn=hash_fn,
+        materialize_dir=workdir and os.path.join(workdir, "neardup_tmp"))
+        ["components"])
+    nd_dropped = (comp.filter(F.col("doc_id") != F.col("component"))
                   .select("doc_id"))
 
     after_nd = survivors.join(nd_dropped, "doc_id", "left_anti")
@@ -193,9 +257,9 @@ def assemble_training_set(docs: DataFrame,
         # gram hashes follow the pipeline's hash_fn: xxhash64 keeps
         # the bench gram set broadcastable ~6x longer (bigint vs
         # 32-char md5 keys); 'md5' remains the oracle contract
-        cont = (decontaminate(after_nd, benchmark, n=ngram_n,
-                              hash_fn=hash_fn)
-                ["contaminated"].select("doc_id"))
+        cont = stage("contaminated", lambda: decontaminate(
+            after_nd, benchmark, n=ngram_n, hash_fn=hash_fn)
+            ["contaminated"].select("doc_id"))
     else:
         # schema-matched empty frame whatever the doc_id type is
         cont = docs.select("doc_id").limit(0)
@@ -204,165 +268,36 @@ def assemble_training_set(docs: DataFrame,
     if select_target is not None and select_k:
         from . import dsir
         after_cont = after_nd.join(cont, "doc_id", "left_anti")
-        lr = dsir.fit_logratio_e6(select_target, after_cont,
-                                  n_buckets=select_buckets,
-                                  hash_fn=hash_fn)
-        selected = dsir.dsir_select(after_cont, lr, select_k,
-                                    hash_fn=hash_fn, mode=select_mode,
-                                    seed=f"{seed}-select")
-        drops.append(("unselected", after_cont.join(
-            selected.select("doc_id"), "doc_id", "left_anti")
-            .select("doc_id")))
-
-    provenance = _staged_provenance(cc, drops, with_clean_fp=False)
-
-    kept_docs = docs.join(
-        provenance.filter("kept").select("doc_id"), "doc_id")
-    mixed = resample_mixture(kept_docs, mixture or {},
-                             source_col=source_col,
-                             seed=f"{seed}-mix")
-    # split is a pure function of (doc_id, seed): append it as a
-    # column on the mixture rows instead of joining a separate split
-    # frame — same values, one whole-corpus shuffle less
-    assembled = mixed.select(
-        "doc_id", source_col, "copy",
-        F.expr(split_expr(split_weights, seed=f"{seed}-split"))
-        .alias("split"))
-    return {"provenance": provenance, "assembled": assembled}
-
-
-def assemble_training_set_staged(docs: DataFrame,
-                                 workdir: str,
-                                 benchmark: DataFrame | None = None,
-                                 mixture: dict[str, float] | None = None,
-                                 source_col: str = "source",
-                                 split_weights: dict[str, float] | None = None,
-                                 min_words: int = 50,
-                                 min_stopword_hits: int = 2,
-                                 min_sentences: int = 3,
-                                 neardup_threshold: float = 0.8,
-                                 max_df: int = 10_000,
-                                 max_bucket: int = 10_000,
-                                 hash_fn: str = "xxhash64",
-                                 ngram_n: int = 13,
-                                 select_target: DataFrame | None = None,
-                                 select_k: int | None = None,
-                                 select_buckets: int = 65536,
-                                 select_mode: str = "gumbel",
-                                 seed: str = "assemble-v1") -> dict:
-    """``assemble_training_set`` with MATERIALIZED stage boundaries —
-    the shape a corpus-scale run actually needs.
-
-    Same stages, same seeds, same rows: every assignment downstream of
-    the gates is a pure function of (doc_id, seed), so this variant is
-    output-identical to the single-lineage one (pinned by test). The
-    difference is operational:
-
-      * each stage writes its COMPACT result (ids / labels, never
-        text) to ``workdir/<stage>`` and the next stage reads it back,
-        restarting lineage — Spark can then GC the previous stage's
-        shuffle files and cached tables instead of pinning every
-        intermediate for the whole program. The monolithic lineage
-        held ~70 GB of live shuffle + persisted blocks at 50M docs on
-        one node and exhausted the disk; staged, the peak is ONE
-        stage's working set (the near-dedup stage dominates).
-      * a stage whose ``_SUCCESS`` marker exists is skipped entirely —
-        a pre-empted assembly resumes at the failed stage, the same
-        boundary a 10^12-doc run would checkpoint at the lake.
-
-    Returns {"provenance", "assembled" (both read back from workdir),
-    "stage_walls": {stage: seconds for stages run this call}}.
-    """
-    from .sampling import resample_mixture, split_expr
-    from .textfilters import decontaminate
-
-    spark = docs.sparkSession
-    walls: dict[str, float] = {}
-
-    def _release():
-        dedup.release_caches()
-        spark.catalog.clearCache()
-
-    def stage(name: str, build, partition_by: str | None = None):
-        p = os.path.join(workdir, name)
-        schema = None
-        if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            t0 = time.perf_counter()
-            df = build()
-            schema = df.schema
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(partition_by)
-            w.parquet(p)
-            _release()
-            walls[name] = round(time.perf_counter() - t0, 3)
-        try:
-            return spark.read.parquet(p)
-        except Exception:
-            if schema is None:   # resumed AND unreadable: genuine error
-                raise
-            # a fully-gated stage wrote zero files under partitionBy —
-            # the read cannot infer a schema; carry on with the empty
-            # frame so the run reports the histogram instead of dying
-            return spark.createDataFrame([], schema)
-
-    cc = stage("cc", lambda: corpus_clean(
-        docs, min_words=min_words, min_stopword_hits=min_stopword_hits,
-        min_sentences=min_sentences))
-
-    def _survivors():
-        return docs.join(cc.filter("kept").select("doc_id"), "doc_id")
-
-    comp = stage("components", lambda: dedup.dedup_corpus_clusters(
-        _survivors(), threshold=neardup_threshold, max_df=max_df,
-        max_bucket=max_bucket, hash_fn=hash_fn,
-        materialize_dir=os.path.join(workdir, "neardup_tmp"))
-        ["components"])
-    nd_dropped = (comp.filter(F.col("doc_id") != F.col("component"))
-                  .select("doc_id"))
-
-    if benchmark is not None:
-        cont = stage("contaminated", lambda: decontaminate(
-            _survivors().join(nd_dropped, "doc_id", "left_anti"),
-            benchmark, n=ngram_n, hash_fn=hash_fn)
-            ["contaminated"].select("doc_id"))
-    else:
-        cont = docs.select("doc_id").limit(0)
-
-    drops = [("neardup", nd_dropped), ("contaminated", cont)]
-    if select_target is not None and select_k:
-        from . import dsir
 
         def _selected():
-            after_cont = (_survivors()
-                          .join(nd_dropped, "doc_id", "left_anti")
-                          .join(cont, "doc_id", "left_anti"))
             lr = dsir.fit_logratio_e6(select_target, after_cont,
                                       n_buckets=select_buckets,
                                       hash_fn=hash_fn)
             return dsir.dsir_select(after_cont, lr, select_k,
                                     hash_fn=hash_fn, mode=select_mode,
                                     seed=f"{seed}-select")
-        sel = stage("selected", _selected)
-        drops.append(("unselected", (
-            _survivors().join(nd_dropped, "doc_id", "left_anti")
-            .join(cont, "doc_id", "left_anti")
-            .join(sel.select("doc_id"), "doc_id", "left_anti")
-            .select("doc_id"))))
+        selected = stage("selected", _selected)
+        drops.append(("unselected", after_cont.join(
+            selected.select("doc_id"), "doc_id", "left_anti")
+            .select("doc_id")))
 
-    prov = stage("provenance", lambda: _staged_provenance(
+    provenance = stage("provenance", lambda: _staged_provenance(
         cc, drops, with_clean_fp=False), partition_by="stage")
 
     def _assembled():
         kept_docs = docs.join(
-            prov.filter("kept").select("doc_id"), "doc_id")
+            provenance.filter("kept").select("doc_id"), "doc_id")
         mixed = resample_mixture(kept_docs, mixture or {},
                                  source_col=source_col,
                                  seed=f"{seed}-mix")
+        # split is a pure function of (doc_id, seed): append it as a
+        # column on the mixture rows instead of joining a separate
+        # split frame — same values, one whole-corpus shuffle less
         return mixed.select(
             "doc_id", source_col, "copy",
             F.expr(split_expr(split_weights, seed=f"{seed}-split"))
             .alias("split"))
 
-    asm = stage("assembled", _assembled, partition_by="split")
-    return {"provenance": prov, "assembled": asm, "stage_walls": walls}
+    assembled = stage("assembled", _assembled, partition_by="split")
+    return {"provenance": provenance, "assembled": assembled,
+            "stage_walls": walls}

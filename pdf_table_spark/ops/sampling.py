@@ -15,20 +15,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import dedup
+
 # 60-bit doc hash → uniform bucket in [0, 10_000)
 _BUCKETS = 10_000
 
-# frames persisted by the prefix-sum ops (tokenizing the corpus is the
-# expensive narrow stage; each op reads its counted frame 2-3 times)
-_PERSISTED: list = []
-
-
-def release_caches() -> int:
-    """Unpersist every frame this module cached; returns how many."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
+# the prefix-sum ops persist their counted frame (tokenizing the corpus
+# is the expensive narrow stage; each op reads it 2-3 times) in the
+# dedup cache registry, so ``dedup.cache_scope`` owns them too
+release_caches = dedup.release_caches
 
 
 def _hash_expr(seed: str, key: str = "doc_id") -> str:
@@ -125,9 +120,8 @@ def pack_chunks(docs: DataFrame, ctx_len: int = 512,
     # persisted: the id-span agg, bucket totals, and the offset join
     # each read this frame — without the cache the tokenizer (the
     # expensive narrow stage) runs three times over the corpus
-    counted = docs.select(
-        "doc_id", F.expr(toks).cast("long").alias("n_tok")).persist()
-    _PERSISTED.append(counted)
+    counted = dedup.persist(docs.select(
+        "doc_id", F.expr(toks).cast("long").alias("n_tok")))
 
     # 1. range buckets from the doc_id span (one cheap agg; ids need
     # not be dense — buckets only need to preserve order)
@@ -270,11 +264,10 @@ def select_token_budget(docs: DataFrame, budget: int,
     # scores have no place in a score ordering and would otherwise
     # land in the TOP bucket (b > score is null for every bound, the
     # filter drops all, size() = 0) — excluded explicitly.
-    counted = (docs.select(
+    counted = dedup.persist(docs.select(
         "doc_id", F.col(score_col).cast("double").alias("score"),
         F.expr(toks).cast("long").alias("n_tok"))
-        .filter(F.col("score").isNotNull()).persist())
-    _PERSISTED.append(counted)
+        .filter(F.col("score").isNotNull()))
 
     qs = [i / n_buckets for i in range(1, n_buckets)]
     bounds = sorted(set(counted.stat.approxQuantile("score", qs, 0.001)),

@@ -80,8 +80,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from pdf_table_spark.ops import dedup
-    from pdf_table_spark.ops.prepare import (assemble_training_set,
-                                             assemble_training_set_staged)
+    from pdf_table_spark.ops.prepare import assemble_training_set
     from pdf_table_spark.ops.sampling import write_shards
     from pdf_table_spark.spark.session import build_session
 
@@ -109,16 +108,11 @@ def main() -> None:
 
     t0 = time.perf_counter()
     shard_counts = None
-    stage_walls = None
-    if args.staged:
-        # writes <output>/provenance (by stage) and <output>/assembled
-        # (by split) itself, stage by stage
-        out = assemble_training_set_staged(docs, args.output, **kw)
-        stage_walls = out["stage_walls"]
-        wall = time.perf_counter() - t0
-    else:
-        out = assemble_training_set(docs, **kw)
-
+    # staged: writes <output>/provenance (by stage) and
+    # <output>/assembled (by split) itself, stage by stage
+    out = assemble_training_set(
+        docs, workdir=args.output if args.staged else None, **kw)
+    if not args.staged:
         (out["provenance"].write.mode("overwrite")
          .partitionBy("stage").parquet(f"{args.output}/provenance"))
 
@@ -136,7 +130,7 @@ def main() -> None:
         else:
             (asm.write.mode("overwrite")
              .partitionBy("split").parquet(f"{args.output}/assembled"))
-        wall = time.perf_counter() - t0
+    wall = time.perf_counter() - t0
 
     stages = {r["stage"]: r["n"] for r in
               (spark.read.parquet(f"{args.output}/provenance")
@@ -175,7 +169,7 @@ def main() -> None:
         "metric": "assemble_wall", "value": round(wall, 3),
         "unit": "sec", "stages": stages, "splits": splits,
         "shards": shard_counts and len(shard_counts),
-        "stage_walls": stage_walls,
+        "stage_walls": out["stage_walls"],
         "dataset_card": card and f"{args.output}/dataset_card.json",
     }))
     spark.stop()

@@ -108,8 +108,6 @@ def test_staged_matches_monolithic(spark, corpus, bench, tmp_path):
     """The disk-bounded staged variant is output-identical to the
     single-lineage program (same seeds, same stages), and a re-run
     resumes: every _SUCCESS-marked stage is skipped."""
-    from pdf_table_spark.ops.prepare import assemble_training_set_staged
-
     kw = dict(benchmark=bench, mixture={"web": 2.0},
               min_words=10, min_stopword_hits=1, min_sentences=0,
               neardup_threshold=0.8, max_df=1000, max_bucket=1000)
@@ -121,7 +119,7 @@ def test_staged_matches_monolithic(spark, corpus, bench, tmp_path):
     dedup.release_caches()
 
     wd = str(tmp_path / "staged")
-    staged = assemble_training_set_staged(corpus, wd, **kw)
+    staged = assemble_training_set(corpus, workdir=wd, **kw)
     assert {(r.doc_id, r.stage, r.kept)
             for r in staged["provenance"].collect()} == mono_prov
     assert {(r.doc_id, r.source, r.copy, r.split)
@@ -129,18 +127,44 @@ def test_staged_matches_monolithic(spark, corpus, bench, tmp_path):
     assert set(staged["stage_walls"]) == {
         "cc", "components", "contaminated", "provenance", "assembled"}
 
-    again = assemble_training_set_staged(corpus, wd, **kw)
+    again = assemble_training_set(corpus, workdir=wd, **kw)
     assert again["stage_walls"] == {}          # everything resumed
     assert {(r.doc_id, r.source, r.copy, r.split)
             for r in again["assembled"].collect()} == mono_rows
+
+
+def test_staged_partial_resume(spark, corpus, bench, tmp_path):
+    """A run that lost its last two stage outputs redoes exactly those
+    two and still emits the single-lineage rows."""
+    import shutil
+
+    kw = dict(benchmark=bench, mixture={"web": 2.0},
+              min_words=10, min_stopword_hits=1, min_sentences=0,
+              neardup_threshold=0.8, max_df=1000, max_bucket=1000)
+    mono = assemble_training_set(corpus, **kw)
+    mono_prov = {(r.doc_id, r.stage, r.kept)
+                 for r in mono["provenance"].collect()}
+    mono_rows = {(r.doc_id, r.source, r.copy, r.split)
+                 for r in mono["assembled"].collect()}
+    dedup.release_caches()
+
+    wd = str(tmp_path / "partial")
+    assemble_training_set(corpus, workdir=wd, **kw)
+    for name in ("provenance", "assembled"):
+        shutil.rmtree(tmp_path / "partial" / name)
+    again = assemble_training_set(corpus, workdir=wd, **kw)
+    assert set(again["stage_walls"]) == {"provenance", "assembled"}
+    assert {(r.doc_id, r.stage, r.kept)
+            for r in again["provenance"].collect()} == mono_prov
+    assert {(r.doc_id, r.source, r.copy, r.split)
+            for r in again["assembled"].collect()} == mono_rows
+    dedup.release_caches()
 
 
 def test_dsir_selection_stage(spark, corpus, bench, tmp_path):
     """Optional stage 4: DSIR selection keeps the select_k survivors
     most like the target; everything else lands in provenance as
     'unselected'; staged == monolithic including the new stage."""
-    from pdf_table_spark.ops.prepare import assemble_training_set_staged
-
     # target shares doc 0's vocabulary -> the exact/near family of 0
     # would be the closest, but it's deduped away; docs with low ids
     # share nothing (mostly-unique salads), so selection is driven by
@@ -166,11 +190,11 @@ def test_dsir_selection_stage(spark, corpus, bench, tmp_path):
     dedup.release_caches()
 
     wd = str(tmp_path / "staged_sel")
-    staged = assemble_training_set_staged(corpus, wd, **kw)
+    staged = assemble_training_set(corpus, workdir=wd, **kw)
     assert {r.doc_id: r.stage for r in
             staged["provenance"].collect()} == prov
     assert "selected" in staged["stage_walls"]
-    again = assemble_training_set_staged(corpus, wd, **kw)
+    again = assemble_training_set(corpus, workdir=wd, **kw)
     assert again["stage_walls"] == {}
     dedup.release_caches()
 

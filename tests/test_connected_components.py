@@ -42,6 +42,22 @@ def test_path_graph_converges_in_log_rounds(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_superseded_rounds_are_released(spark):
+    # only the final round's checkpoint backs the result; every earlier
+    # round (and the input checkpoint) is unpersisted as soon as the
+    # next round is materialized
+    sc = spark.sparkContext._jsc.sc()
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    base = sc.getPersistentRDDs().size()
+    n = 64
+    connected_components(
+        _pairs(spark, [(i, i + 1) for i in range(n - 1)]),
+        max_iter=12).count()
+    assert sc.getPersistentRDDs().size() == base + 1
+
+
 def test_edge_orientation_and_duplicates_are_irrelevant(spark):
     # reversed, duplicated, and self edges must not change the result
     got = _comp_map(connected_components(

@@ -90,6 +90,21 @@ def test_pack_chunks_empty_corpus(spark):
     assert pack_chunks(empty).count() == 0
 
 
+def test_cache_scope_owns_sampling_caches(docs, spark):
+    """The prefix-sum ops persist into the dedup cache registry, so a
+    ``cache_scope`` releases their counted frames on exit."""
+    from pdf_table_spark.ops import dedup
+    from pdf_table_spark.ops.sampling import select_token_budget
+
+    with dedup.cache_scope() as scope:
+        pack_chunks(docs, ctx_len=16, n_buckets=7).count()
+    assert scope.released >= 1
+    scored = docs.withColumn("score", F.col("doc_id") % 5)
+    with dedup.cache_scope() as scope:
+        select_token_budget(scored, 100, n_buckets=4).count()
+    assert scope.released >= 1
+
+
 def test_resample_mixture_copy_counts(spark):
     rows = [(i, f"doc {i}", ["a", "b", "c"][i % 3]) for i in range(300)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
