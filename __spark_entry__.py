@@ -602,29 +602,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_doc_html(flat: DataFrame):
         # S7 merged multi-page HTML: per doc, spans in offset order
         # rendered and concatenated, source spans (pages) joined with
-        # the reference CLI's '@@@@@@' merge separator — all JVM array
-        # expressions (make_pdf_output_html, cli/main.py:154-226).
-        # ``flat`` is the extraction frame q_exports shares.
+        # the reference CLI's '@@@@@@' merge separator
+        # (``api.doc_html_sql``). ``flat`` is the extraction frame
+        # q_exports shares.
+        from pdf_table_spark.api import PAGE_SEP, doc_html_sql
         return (
             flat.groupBy("doc_id")
             .agg(F.array_sort(F.collect_list(F.struct(
                 "offset", "kind", "text", "media_ref",
                 "src_offset"))).alias("a"))
-            .select(
-                "doc_id",
-                F.expr(
-                    "array_join(transform(a, (s, i) -> concat("
-                    "  if(i > 0 and s.src_offset != "
-                    "     element_at(a, i).src_offset, '@@@@@@\\n', ''),"
-                    "  case"
-                    "  when s.kind = 'paragraph'"
-                    "    then concat('<p>', s.text, '</p>')"
-                    "  when s.kind = 'table_html' then s.text"
-                    "  when s.kind = 'image'"
-                    "    then concat('<img src=\"', s.media_ref, '\"/>')"
-                    "  else '' end)), '\\n')"
-                ).alias("html"),
-            )
+            .select("doc_id", F.expr(
+                doc_html_sql("a", PAGE_SEP + "\\n")).alias("html"))
         )
 
     # ---- relational / window coverage on the star schema ----

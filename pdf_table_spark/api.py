@@ -52,12 +52,9 @@ def _load(spark: SparkSession, path: str, pages: str) -> DataFrame:
 
 
 def read_documents(spark: SparkSession, path: str, pages: str = "all",
-                   flavor: str = "auto",
-                   balance_partitions: int | None = None) -> DataFrame:
+                   flavor: str = "auto") -> DataFrame:
     """read_pdf analogue: extract every document → (doc_id, out_spans)."""
-    return extract_documents(_load(spark, path, pages),
-                             balance_partitions=balance_partitions,
-                             flavor=flavor)
+    return extract_documents(_load(spark, path, pages), flavor=flavor)
 
 
 def read_documents_flat(spark: SparkSession, path: str,
@@ -104,6 +101,26 @@ def extract_tables(spark: SparkSession, path: str, pages: str = "all",
 PAGE_SEP = "@@@@@@"
 
 
+def doc_html_sql(arr: str, sep: str) -> str:
+    """SQL merging the ordered span array column ``arr`` (structs with
+    kind, text, media_ref, src_offset) into one HTML string: fragments
+    of one source span (page) join with newlines, and ``sep`` (a SQL
+    string-literal body) opens each span that starts a new source
+    span. All JVM array expressions (make_pdf_output_html,
+    ``cli/main.py:154-226``)."""
+    return (
+        f"array_join(transform({arr}, (s, i) -> concat("
+        f"  if(i > 0 and s.src_offset != "
+        f"     element_at({arr}, i).src_offset, '{sep}', ''),"
+        "  case"
+        "  when s.kind = 'paragraph'"
+        "    then concat('<p>', s.text, '</p>')"
+        "  when s.kind = 'table_html' then s.text"
+        "  when s.kind = 'image'"
+        "    then concat('<img src=\"', s.media_ref, '\"/>')"
+        "  else '' end)), '\\n')")
+
+
 def document_html(spark: SparkSession, path: str, pages: str = "all",
                   flavor: str = "auto",
                   merge_sep: str = PAGE_SEP) -> DataFrame:
@@ -113,19 +130,8 @@ def document_html(spark: SparkSession, path: str, pages: str = "all",
     page separator. Pass ``merge_sep=''`` for an unseparated merge."""
     out = read_documents(spark, path, pages, flavor)
     sep = (merge_sep + "\\n") if merge_sep else ""
-    return out.select(
-        "doc_id",
-        F.expr(
-            "array_join(transform(out_spans, (s, i) -> concat("
-            f"  if(i > 0 and s.src_offset != "
-            f"     element_at(out_spans, i).src_offset, '{sep}', ''),"
-            "  case"
-            "  when s.kind = 'paragraph'"
-            "    then concat('<p>', s.text, '</p>')"
-            "  when s.kind = 'table_html' then s.text"
-            "  when s.kind = 'image'"
-            "    then concat('<img src=\"', s.media_ref, '\"/>')"
-            "  else '' end)), '\\n')").alias("html"))
+    return out.select("doc_id",
+                      F.expr(doc_html_sql("out_spans", sep)).alias("html"))
 
 
 def document_text(spark: SparkSession, path: str, pages: str = "all",

@@ -4,11 +4,11 @@ Four tiers, all shuffle-aware:
 
   exact         md5 hash-groupBy — one shuffle on a 32-byte key; the
                 100 TB plan: hash early, never shuffle raw text.
-  ngram_jaccard exact n-gram (shingle) Jaccard via shingle-explode +
-                self-equi-join on shingle hash + pair aggregation. The
-                join key is the *shingle hash*, so Catalyst plans a
-                shuffled hash join on small keys; AQE splits skewed
-                common-shingle buckets.
+  ngram_jaccard exact n-gram (shingle) Jaccard: a prefix-filtered
+                self-join on the 8-byte *shingle hash* proposes
+                candidate pairs, and one exact verify (shared with the
+                corpus near-dedup) intersects the candidates'
+                per-doc shingle-hash arrays.
   minhash_lsh   the scale path: 64-perm MinHash signatures (universal
                 hashing over a shared md5-derived 60-bit base hash,
                 mod p=2^31-1 so int64 math is overflow-free and
@@ -81,6 +81,14 @@ def release_caches() -> int:
         df.unpersist(blocking=True)
     _PERSISTED.clear()
     return n
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks behind a ``localCheckpoint()``ed frame now, not
+    at the JVM's next garbage collection (``release_caches`` and
+    ``cache_scope`` do not reach them). Only for a frame nothing reads
+    again: its lineage is cut, so it cannot be recomputed."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 class cache_scope:
@@ -181,6 +189,72 @@ def shingle_hash_arrays(docs: DataFrame,
     )
 
 
+def _df_cap(sh: DataFrame, max_df: int, keep,
+            hash_fn: str = "xxhash64") -> DataFrame:
+    """(doc_id, sh) rows minus every shingle in more than ``max_df``
+    docs — the one df cap of both near-dup operators. A shingle in k
+    docs contributes k² rows to any self-join, and ubiquitous
+    boilerplate carries no dedup signal.
+
+    Inverted on purpose: ubiquitous shingles are FEW by nature, so the
+    dropped set is kept (``keep(df, name)``, the caller's persist or
+    write step), counted, and broadcast-anti-joined instead of
+    inner-joining the (corpus-sized) keep list — at 50M docs the keep
+    join shuffled two ~1.3B-row sides. An adversarial corpus where the
+    dropped set itself is huge falls back to the keyed anti-join
+    (correct at any size, just slower)."""
+    dropped = keep(sh.groupBy("sh").agg(F.count("*").alias("df"))
+                   .filter(F.col("df") > max_df).select("sh"),
+                   "dropped_sh")
+    n_dropped = dropped.count()
+    if n_dropped == 0:
+        return sh
+    if n_dropped <= (5_000_000 if hash_fn == "xxhash64" else 1_000_000):
+        dropped = F.broadcast(dropped)
+    return sh.join(dropped, "sh", "left_anti")
+
+
+def _candidate_docs(cand: DataFrame) -> DataFrame:
+    """(doc_id) of every doc in a (doc_a, doc_b) candidate-pair frame."""
+    return (cand.select(F.col("doc_a").alias("doc_id"))
+            .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
+            .distinct())
+
+
+def _exact_jaccard(cand: DataFrame, arrs: DataFrame,
+                   threshold: float) -> DataFrame:
+    """The one exact-Jaccard verify: (doc_a, doc_b, jaccard >= t) for
+    the candidate pairs that share at least one shingle.
+
+    ``arrs`` is (doc_id, shs), each doc's distinct shingle hashes,
+    restricted to the candidate docs (``_candidate_docs``) — so both
+    array joins and the per-pair ``array_intersect`` stay linear in
+    the candidates, never in the corpus, and no shingle row is
+    shuffled. Zero-overlap candidates (an LSH bucket collision of
+    disjoint docs) are dropped whatever the threshold."""
+    return (
+        cand
+        .join(arrs.select(F.col("doc_id").alias("doc_a"),
+                          F.col("shs").alias("shs_a")), "doc_a")
+        .join(arrs.select(F.col("doc_id").alias("doc_b"),
+                          F.col("shs").alias("shs_b")), "doc_b")
+        .select(
+            "doc_a", "doc_b",
+            F.expr("size(array_intersect(shs_a, shs_b))")
+            .alias("n_inter"),
+            F.size("shs_a").alias("n_a"),
+            F.size("shs_b").alias("n_b"))
+        .filter(F.col("n_inter") > 0)
+        .select(
+            "doc_a", "doc_b",
+            F.round(
+                F.col("n_inter")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
+            ).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
                         cache: bool = True,
                         max_df: int | None = None) -> DataFrame:
@@ -198,29 +272,31 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
     prefixes instead of every shared shingle — a shingle shared by k
     docs no longer contributes k² join rows unless it lands in k
     prefixes, which df-ascending ordering makes rare. The exact
-    |A∩B| verify then touches only candidate docs' shingles (linear
-    in candidates), the same restriction the near-dup verify uses.
+    verify is ``dedup_corpus``'s (``_exact_jaccard``): it touches only
+    the candidate docs' shingle arrays (linear in candidates).
 
     ``cache`` persists the per-doc array table (feeds the df agg, the
-    prefix build, and the verify) and the prefix rows (both sides of
-    the candidate self-join). At 100 TB persist both to temp tables
-    on disk instead (the array table is ~corpus row count).
+    prefix build, and the verify) and the candidate pairs (referenced
+    by both sides of the verify). At 100 TB persist both to temp
+    tables on disk instead (the array table is ~corpus row count).
 
     ``max_df`` pre-drops shingles appearing in more than max_df docs
     BEFORE everything (None = exact, the oracle-checked default;
     with a cap, jaccard is computed over surviving shingles on both
-    the intersection AND size sides, the standard approximation).
+    the intersection AND size sides, the standard approximation) —
+    the same cap ``dedup_corpus`` applies (``_df_cap``).
     """
     from pyspark.sql.window import Window
+
+    def keep(df: DataFrame, _name: str) -> DataFrame:
+        return persist(df) if cache else df
+
     arrs = shingle_hash_arrays(docs)
     if max_df is not None:
-        sh0 = arrs.select("doc_id", F.explode("shs").alias("sh"))
-        keep = (sh0.groupBy("sh").agg(F.count("*").alias("df"))
-                .filter(F.col("df") <= max_df).select("sh"))
-        arrs = (sh0.join(keep, "sh")
+        arrs = (_df_cap(arrs.select("doc_id", F.explode("shs").alias("sh")),
+                        max_df, keep)
                 .groupBy("doc_id").agg(F.collect_list("sh").alias("shs")))
-    if cache:
-        arrs = persist(arrs)
+    arrs = keep(arrs, "arrs")
 
     # global total order: FULL df-ascending, (df, sh) — the textbook
     # PPJoin choice. Rarest shingles fill prefixes first, so a
@@ -274,39 +350,13 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
         .select(F.col("a.doc_id").alias("doc_a"),
                 F.col("b.doc_id").alias("doc_b"))
         .distinct())
-    if cache:
-        # the verify references cand three times (both cd projections
-        # + the n_inter join); unpersisted, each reference re-ran the
-        # whole prefix self-join — measured 3/4 of the query wall.
-        # The pair set is tiny by construction (prefix-filtered).
-        cand = persist(cand)
-
-    # exact verify: per-candidate-pair array_intersect over the
-    # compact per-doc arrays (linear in candidates, no shingle-row
-    # shuffle); arrs joins in twice, restricted to candidate docs
-    cd = (cand.select(F.col("doc_a").alias("doc_id"))
-          .union(cand.select("doc_b")).distinct())
-    arrc = arrs.join(cd, "doc_id")
-    return (
-        cand
-        .join(arrc.select(F.col("doc_id").alias("doc_a"),
-                          F.col("shs").alias("shs_a")), "doc_a")
-        .join(arrc.select(F.col("doc_id").alias("doc_b"),
-                          F.col("shs").alias("shs_b")), "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.expr("size(array_intersect(shs_a, shs_b))")
-            .alias("n_inter"),
-            F.size("shs_a").alias("n_a"),
-            F.size("shs_b").alias("n_b"))
-        .select(
-            "doc_a", "doc_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-            ).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    # the verify references cand three times (the candidate-doc
+    # projections + both array joins); unpersisted, each reference
+    # re-ran the whole prefix self-join — measured 3/4 of the query
+    # wall. The pair set is tiny by construction (prefix-filtered).
+    cand = keep(cand, "cand")
+    return _exact_jaccard(
+        cand, arrs.join(_candidate_docs(cand), "doc_id"), threshold)
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
@@ -408,17 +458,17 @@ def dedup_corpus(docs: DataFrame, threshold: float = 0.8,
     scale guard DEFAULTED ON (the oracle-exact ops above keep their
     uncapped semantics for the correctness gate):
 
-      1. shingle-hash table computed ONCE, persisted, df-capped:
-         a shingle in k docs contributes k² rows to any self-join, so
+      1. shingle-hash table computed ONCE and df-capped (``_df_cap``):
          ubiquitous boilerplate (df > max_df) is dropped up front — it
          carries no dedup signal and is THE quadratic blowup at corpus
          scale;
-      2. MinHash signatures from the capped table (one pass), persisted
-         and shared by the band join;
+      2. MinHash signatures from the capped table (one pass), kept and
+         shared by the band join;
       3. LSH band join with max_bucket capping (pathological clusters
          can't emit k²/2 pairs);
-      4. candidates verified by EXACT Jaccard over the capped shingle
-         table (join restricted to candidate pairs — never all-pairs);
+      4. candidates verified by EXACT Jaccard (``_exact_jaccard``) over
+         the capped shingle arrays of the candidate docs only — never
+         all-pairs, never the corpus-sized table;
       5. survivors = docs minus the larger id of every verified pair.
 
     Returns {"pairs": verified pairs with jaccard, "keep": surviving
@@ -428,99 +478,51 @@ def dedup_corpus(docs: DataFrame, threshold: float = 0.8,
     replicable 60-bit md5 prefix so the whole capped pipeline can be
     oracle-checked; production keeps the faster xxhash64.
 
-    ``materialize_dir`` switches the big intermediates from
-    ``.persist()`` to parquet-in-a-workdir (signatures, candidates,
-    verified pairs; each skipped on rerun if its _SUCCESS marker
-    exists): lineage restarts at each file, so Spark can GC the
-    upstream shuffles instead of pinning the whole pipeline's working
-    set on local disk — the shape the shingle-table docstring above
-    prescribes for a 10^12-doc corpus, and what the 50M single-node
-    run needs (the cached shingle table alone is ~1.4B rows there).
-    Outputs are identical; callers may delete the dir afterwards
-    (keeping it makes reruns resume)."""
+    Every intermediate (dropped shingles, signatures, candidates,
+    verified pairs) goes through one keep step: ``persist`` by
+    default; with ``materialize_dir``, parquet in that workdir
+    (skipped on rerun if its _SUCCESS marker exists) read back, so
+    lineage restarts at each file and Spark can GC the upstream
+    shuffles instead of pinning the whole pipeline's working set on
+    local disk — what the 50M single-node run needs. The small
+    candidate-doc arrays are persisted in both modes. Outputs are
+    identical; callers may delete the dir afterwards (keeping it makes
+    reruns resume)."""
     spark = docs.sparkSession
 
-    def _mat(df: DataFrame, name: str) -> DataFrame:
+    def keep(df: DataFrame, name: str) -> DataFrame:
+        if materialize_dir is None:
+            return persist(df)
         p = os.path.join(materialize_dir, name)
         if not os.path.exists(os.path.join(p, "_SUCCESS")):
             df.write.mode("overwrite").parquet(p)
         return spark.read.parquet(p)
 
-    raw_sh = shingle_hash_rows(docs, hash_fn=hash_fn)
-    # df cap, inverted: ubiquitous shingles (df > max_df) are FEW by
-    # nature — boilerplate, not content — so broadcast-anti-join the
-    # dropped set instead of inner-joining the (corpus-sized) keep
-    # list: at 50M docs the keep join shuffled two ~1.3B-row sides.
-    # An adversarial corpus where the dropped set itself is huge falls
-    # back to the keyed join (correct at any size, just slower).
-    dropped_sh = (raw_sh.groupBy("sh").agg(F.count("*").alias("df"))
-                  .filter(F.col("df") > max_df).select("sh"))
-    if materialize_dir is not None:
-        dropped_sh = _mat(dropped_sh, "dropped_sh")
-    else:
-        dropped_sh = persist(dropped_sh)
-    bcast_limit = 5_000_000 if hash_fn == "xxhash64" else 1_000_000
-    n_dropped = dropped_sh.count()
-    if n_dropped == 0:
-        sh = raw_sh
-    elif n_dropped <= bcast_limit:
-        sh = raw_sh.join(F.broadcast(dropped_sh), "sh", "left_anti")
-    else:
-        sh = raw_sh.join(dropped_sh, "sh", "left_anti")
-
+    sh = _df_cap(shingle_hash_rows(docs, hash_fn=hash_fn), max_df, keep,
+                 hash_fn)
     if materialize_dir is None:
+        # the one mode difference: the capped shingle table (~28
+        # rows/doc, the largest frame here) is cached for its two
+        # consumers below; the disk-bound mode instead recomputes it
+        # as one narrow scan per consumer, because caching the
+        # corpus-sized table on local disk is what that mode avoids
         sh = persist(sh)
-        sig = persist(minhash_signatures_from_hashes(sh))
-        cand = persist(_lsh_pairs_from_signatures(sig, max_bucket,
-                                                  band_hash=hash_fn))
-    else:
-        # sh stays UNPERSISTED: its two consumers (signatures, the
-        # candidate-restricted verify below) each recompute it as one
-        # narrow scan — trading a second pass over the corpus for not
-        # caching ~28 rows/doc of shingles
-        sig = _mat(minhash_signatures_from_hashes(sh), "sig")
-        cand = _mat(_lsh_pairs_from_signatures(sig, max_bucket,
-                                               band_hash=hash_fn),
-                    "cand")
-
-    # the exact-Jaccard verify only ever needs the CANDIDATE docs'
-    # shingles. Restricting sh up front (semi-join on the candidate id
-    # set — AQE broadcasts it once the band join reveals it is small)
-    # keeps the n_inter join and the sizes aggregate proportional to
-    # |candidates|, not to the corpus: at 50M docs the unrestricted
-    # variant shuffled the full 10^8-row shingle table twice.
-    cand_docs = (cand.select(F.col("doc_a").alias("doc_id"))
-                 .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-                 .distinct())
-    sh_c = sh.join(cand_docs, "doc_id", "semi")
-    if materialize_dir is not None:
-        # small (candidate docs only) and consumed three times below
-        sh_c = persist(sh_c)
-
-    sizes = sh_c.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh_c.select(F.col("doc_id").alias("doc_a"), "sh")
-    b = sh_c.select(F.col("doc_id").alias("doc_b"), "sh")
-    inter = (
-        cand.join(a, "doc_a").join(b, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_inter"))
-    )
-    verified = (
-        inter
-        .join(sizes.select(F.col("doc_id").alias("doc_a"),
-                           F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                           F.col("n_sh").alias("n_b")), "doc_b")
-        .select("doc_a", "doc_b",
-                F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b")
-                                            - F.col("n_inter")), 6)
-                .alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    if materialize_dir is not None:
-        verified = _mat(verified, "pairs")
-    dropped = verified.select(F.col("doc_b").alias("doc_id")).distinct()
-    keep = docs.join(dropped, "doc_id", "left_anti").select("doc_id")
-    return {"pairs": verified, "keep": keep}
+    sig = keep(minhash_signatures_from_hashes(sh), "sig")
+    cand = keep(_lsh_pairs_from_signatures(sig, max_bucket,
+                                           band_hash=hash_fn), "cand")
+    # the verify only ever needs the CANDIDATE docs' shingles: the
+    # semi-join (AQE broadcasts the id set once the band join reveals
+    # it is small) keeps the array build proportional to |candidates|
+    # — at 50M docs an unrestricted verify shuffled the full 10^8-row
+    # shingle table twice
+    arrs = persist(sh.join(_candidate_docs(cand), "doc_id", "semi")
+                   .groupBy("doc_id")
+                   .agg(F.collect_list("sh").alias("shs")))
+    pairs = keep(_exact_jaccard(cand, arrs, threshold), "pairs")
+    dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    return {"pairs": pairs,
+            "keep": docs.join(dropped, "doc_id", "left_anti")
+            .select("doc_id")}
 
 
 def join_candidate_mass(sh: DataFrame):
@@ -829,9 +831,8 @@ def connected_components(pairs: DataFrame, a: str = "doc_a",
     for _ in range(max_iter):
         done, e = e, _small_star(_large_star(e)).localCheckpoint()
         # the eager checkpoint above cut e's lineage, so the previous
-        # round's blocks back nothing: free them now instead of at the
-        # JVM's next garbage collection
-        done._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        # round's blocks back nothing
+        release_checkpoint(done)
         sig = tuple(e.agg(
             F.count("*"),
             # decimal(38,0) sums: overflow-free under ANSI mode at any

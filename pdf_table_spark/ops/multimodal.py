@@ -100,48 +100,15 @@ def decode_media(media: DataFrame) -> DataFrame:
         _media_batches, schema=MEDIA_META_SCHEMA)
 
 
-RESIZE_SCHEMA = ("media_ref string, width int, height int, "
-                 "src_width int, src_height int, format string")
-
-
-def _decode_fit(payload, max_w: int, max_h: int):
-    """Shared per-row decode + aspect-preserving fit: → (fit_w, fit_h,
-    src_w, src_h, fmt, n_bytes). The ONE copy of the fit arithmetic
-    behind ``resize_media`` and ``describe_media`` (pinned equal in
-    test_describe_media_matches_composed_shape)."""
-    data = bytes(payload) if payload is not None else b""
-    sw, sh, fmt, _feat = _decode_image(data)
-    scale = min(max_w / sw, max_h / sh, 1.0)
-    return int(sw * scale), int(sh * scale), sw, sh, fmt, len(data)
-
-
 def resize_media(media: DataFrame, max_w: int = 256,
                  max_h: int = 256) -> DataFrame:
     """Aspect-preserving resize of image payloads into a max_w x max_h
-    box. The pixel resample itself is the stubbed codec step (PIL
-    ``Image.thumbnail`` in production); the decode of source dims, the
-    fit arithmetic, the Arrow batch shape and the output schema are the
-    real, tested plumbing."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("media_ref", "width", "height",
-                                    "src_width", "src_height", "format")}
-            for ref, payload in zip(pdf["media_ref"].values,
-                                    pdf["payload"].values):
-                w, h, sw, sh, fmt, _nb = _decode_fit(
-                    payload, max_w, max_h)
-                rows["media_ref"].append(ref)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["src_width"].append(sw)
-                rows["src_height"].append(sh)
-                rows["format"].append(fmt)
-            yield pd.DataFrame(rows)
-
-    from ..sources.corpus import fan_cpu_bound
-    return fan_cpu_bound(media).mapInPandas(
-        batches, schema=RESIZE_SCHEMA)
+    box: ``describe_media`` without ``n_bytes``. The pixel resample
+    itself is the stubbed codec step (PIL ``Image.thumbnail`` in
+    production); the decode of source dims, the fit arithmetic, the
+    Arrow batch shape and the output schema are the real, tested
+    plumbing."""
+    return describe_media(media, max_w, max_h).drop("n_bytes")
 
 
 DESCRIBE_SCHEMA = ("media_ref string, width int, height int, "
@@ -151,8 +118,10 @@ DESCRIBE_SCHEMA = ("media_ref string, width int, height int, "
 
 def describe_media(media: DataFrame, max_w: int = 256,
                    max_h: int = 256) -> DataFrame:
-    """Metadata + thumbnail fit in ONE decode pass: the columns of
-    ``resize_media`` plus ``n_bytes``, per payload.
+    """Metadata + thumbnail fit in ONE decode pass, per payload:
+    (media_ref, width, height, src_width, src_height, format, n_bytes)
+    where width/height are the source dims fitted aspect-preserving
+    into the max_w x max_h box (never upscaled).
 
     Exists because composing ``decode_media`` + ``resize_media`` +
     a join decodes every payload TWICE and re-scans the source twice —
@@ -161,24 +130,19 @@ def describe_media(media: DataFrame, max_w: int = 256,
     composed shape ran 4 subtree scans + 2 joins ≈ 3.9 s; this single
     stage ≈ 1 s). A real pipeline decodes once and derives everything
     from the pixels in hand."""
+    names = [c.split()[0] for c in DESCRIBE_SCHEMA.split(", ")]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = {k: [] for k in ("media_ref", "width", "height",
-                                    "src_width", "src_height",
-                                    "format", "n_bytes")}
+            rows = []
             for ref, payload in zip(pdf["media_ref"].values,
                                     pdf["payload"].values):
-                w, h, sw, sh, fmt, nb = _decode_fit(
-                    payload, max_w, max_h)
-                rows["media_ref"].append(ref)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["src_width"].append(sw)
-                rows["src_height"].append(sh)
-                rows["format"].append(fmt)
-                rows["n_bytes"].append(nb)
-            yield pd.DataFrame(rows)
+                data = bytes(payload) if payload is not None else b""
+                sw, sh, fmt, _feat = _decode_image(data)
+                scale = min(max_w / sw, max_h / sh, 1.0)
+                rows.append((ref, int(sw * scale), int(sh * scale),
+                             sw, sh, fmt, len(data)))
+            yield pd.DataFrame(rows, columns=names)
 
     from ..sources.corpus import fan_cpu_bound
     return fan_cpu_bound(media).mapInPandas(

@@ -14,10 +14,7 @@ Plan shape (and why it scales):
                                                      file splits balance the
                                                      per-page map too, and
                                                      this shuffle is a full
-                                                     pass of the corpus text;
-                                                     force it via
-                                                     balance_partitions for
-                                                     skew-concentrated layouts
+                                                     pass of the corpus text
       → mapInArrow(extract)                       -- the only Python stage;
                                                      raw Arrow batches, numpy
                                                      inside; trivial kinds
@@ -96,72 +93,54 @@ def reassemble(frags: DataFrame) -> DataFrame:
     )
 
 
-# Kinds whose decode is heavy (page JSON / table HTML); kept for
-# consumers that pre-filter (e.g. the metrics expectations in tests).
-PYTHON_KINDS = ("pdf_page", "html_table")
-
-
-def _prepared_spans(docs: DataFrame,
-                    balance_partitions: int | None) -> DataFrame:
-    """explode + the adaptive pre-stage rebalance (see
-    extract_documents): an explicit width forces the exchange, None
-    inserts it only when the scan under-parallelizes the cluster
-    (fewer splits than cores — width then = the session's shuffle
-    parallelism), 0 skips it always. A scan already yielding >= cores
-    byte-balanced splits keeps the map stage busy without paying a
-    corpus-wide text shuffle."""
+def _prepared_spans(docs: DataFrame) -> DataFrame:
+    """explode + the adaptive pre-stage rebalance: the exchange is
+    inserted only when the scan under-parallelizes the cluster (fewer
+    splits than cores — width then = the session's shuffle
+    parallelism). A scan already yielding >= cores byte-balanced
+    splits keeps the map stage busy without paying a corpus-wide text
+    shuffle: page decode cost tracks payload bytes, and the pre-stage
+    shuffle is a full pass of the corpus text over the network —
+    measured 2.1x the whole pipeline wall at sf0.1/local[32] for zero
+    balance gain."""
     spark = docs.sparkSession
     sp = explode_spans(docs)
-    if balance_partitions:
-        sp = sp.repartition(balance_partitions, "doc_id", "offset")
-    elif balance_partitions is None:
-        if (sp.rdd.getNumPartitions()
-                < spark.sparkContext.defaultParallelism):
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            sp = sp.repartition(n, "doc_id", "offset")
+    if sp.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        sp = sp.repartition(n, "doc_id", "offset")
     return sp
 
 
-def extract_documents(docs: DataFrame,
-                      balance_partitions: int | None = None,
-                      metrics=None, flavor: str = "auto") -> DataFrame:
-    """Full pipeline: documents(doc_id, spans) → (doc_id, out_spans).
-
-    ``balance_partitions``: width of the pre-stage repartition.
-    Default (None) is ADAPTIVE: the exchange is inserted only when
-    the source scan yields fewer partitions than the session's
-    shuffle parallelism (a tiny local file, one row group). When the
-    scan already splits at-or-above the parallelism, its byte-
-    balanced file splits balance the per-page map work too (page
-    decode cost tracks payload bytes), and the pre-stage shuffle is
-    a full pass of the corpus text over the network — measured 2.1x
-    the whole pipeline wall at sf0.1/local[32] for zero balance
-    gain. Pass an explicit width to force the rebalance for corpora
-    whose layout concentrates expensive docs into few splits (the
-    one-giant-doc-per-split shape), or 0 to skip it always.
-    ``metrics``: optional ``stages.ExtractionMetrics`` — executor-side
-    span/fragment/error/wall counters, readable after any action.
-    ``flavor``: pdf_page table decoder — 'auto' | 'lattice' | 'stream'
-    (the reference's read_pdf flavor kwarg).
-    """
+def _fragments(docs: DataFrame, metrics, flavor: str) -> DataFrame:
+    """The fragment stream of both entry points below: explode, the
+    adaptive rebalance, then the Arrow extraction stage."""
     from ..core.page import FLAVORS
     if flavor not in FLAVORS:
         # validate on the DRIVER: inside the Arrow stage a bad flavor
         # would be swallowed by per-span poison containment, silently
         # quarantining the entire corpus as 'error' rows
         raise ValueError(f"unknown flavor {flavor!r}; one of {FLAVORS}")
-    frags = run_extract_stage(
-        _prepared_spans(docs, balance_partitions), metrics, flavor)
+    return run_extract_stage(_prepared_spans(docs), metrics, flavor)
+
+
+def extract_documents(docs: DataFrame, metrics=None,
+                      flavor: str = "auto") -> DataFrame:
+    """Full pipeline: documents(doc_id, spans) → (doc_id, out_spans).
+
+    ``metrics``: optional ``stages.ExtractionMetrics`` — executor-side
+    span/fragment/error/wall counters, readable after any action.
+    ``flavor``: pdf_page table decoder — 'auto' | 'lattice' | 'stream'
+    (the reference's read_pdf flavor kwarg).
+    """
     # Every doc survives reassembly: both routes emit a sentinel
     # fragment for fragment-less spans (and explode_outer emits a null
     # span for zero-span docs), so no join back to the doc_id universe
     # is needed — at 10^12 docs that join would be the bottleneck.
-    return reassemble(frags)
+    return reassemble(_fragments(docs, metrics, flavor))
 
 
-def extract_fragments(docs: DataFrame,
-                      balance_partitions: int | None = None,
-                      metrics=None, flavor: str = "auto") -> DataFrame:
+def extract_fragments(docs: DataFrame, metrics=None,
+                      flavor: str = "auto") -> DataFrame:
     """The pre-reassembly fragment stream, sentinels dropped:
     (doc_id, offset, frag_idx, kind, text, media_ref, accuracy,
     whitespace) where ``offset`` is the SOURCE span offset.
@@ -174,12 +153,8 @@ def extract_fragments(docs: DataFrame,
     this instead and skip the reassembly shuffle + per-doc array
     build entirely — at any scale that is one full pass of the output
     strings over the network saved."""
-    from ..core.page import FLAVORS
-    if flavor not in FLAVORS:
-        raise ValueError(f"unknown flavor {flavor!r}; one of {FLAVORS}")
-    frags = run_extract_stage(
-        _prepared_spans(docs, balance_partitions), metrics, flavor)
-    return frags.filter(F.col("kind") != "__empty__")
+    return (_fragments(docs, metrics, flavor)
+            .filter(F.col("kind") != "__empty__"))
 
 
 def flatten_output(out: DataFrame) -> DataFrame:

@@ -19,12 +19,17 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..core.page import extract_span
 
-FRAG_SCHEMA = ("doc_id string, offset int, frag_idx int, "
-               "kind string, text string, media_ref string, "
-               "accuracy double, whitespace double")
+ARROW_SCHEMA = pa.schema([
+    ("doc_id", pa.string()), ("offset", pa.int32()),
+    ("frag_idx", pa.int32()), ("kind", pa.string()),
+    ("text", pa.string()), ("media_ref", pa.string()),
+    ("accuracy", pa.float64()), ("whitespace", pa.float64())])
+
+FRAG_SCHEMA = from_arrow_schema(ARROW_SCHEMA)
 
 
 @dataclass
@@ -53,12 +58,6 @@ class ExtractionMetrics:
             "decode_ms": round(self.decode_ms.value, 1),
         }
 
-
-ARROW_SCHEMA = pa.schema([
-    ("doc_id", pa.string()), ("offset", pa.int32()),
-    ("frag_idx", pa.int32()), ("kind", pa.string()),
-    ("text", pa.string()), ("media_ref", pa.string()),
-    ("accuracy", pa.float64()), ("whitespace", pa.float64())])
 
 EMPTY_SENTINEL = "__empty__"
 
@@ -110,15 +109,9 @@ def _process_batch(batch: pa.RecordBatch,
             refs.append(r)
             accs.append(acc)
             wss.append(ws)
+    out = (doc_ids, offsets, frag_idxs, kinds, texts, refs, accs, wss)
     return pa.RecordBatch.from_arrays(
-        [pa.array(doc_ids, pa.string()),
-         pa.array(offsets, pa.int32()),
-         pa.array(frag_idxs, pa.int32()),
-         pa.array(kinds, pa.string()),
-         pa.array(texts, pa.string()),
-         pa.array(refs, pa.string()),
-         pa.array(accs, pa.float64()),
-         pa.array(wss, pa.float64())],
+        [pa.array(c, f.type) for c, f in zip(out, ARROW_SCHEMA)],
         schema=ARROW_SCHEMA)
 
 

@@ -50,7 +50,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ops.dedup import N_PERM, band_table, minhash_signatures
+from ..ops.dedup import (N_PERM, _lsh_pairs_from_signatures, band_table,
+                         minhash_signatures, release_checkpoint)
 
 DOCS_SCHEMA = "doc_id string, text string"
 
@@ -80,7 +81,6 @@ def neardup_gate_batch(batch_docs: DataFrame, batch_id: int,
     sigs_dir = os.path.join(index_dir, "sigs")
 
     sig = minhash_signatures(batch_docs).localCheckpoint()
-    bands = band_table(sig, band_hash="xxhash64")
 
     dup_ids = None
     if os.path.isdir(bands_dir):
@@ -95,7 +95,7 @@ def neardup_gate_batch(batch_docs: DataFrame, batch_id: int,
               .agg(F.count("*").alias("n"))
               .filter(F.col("n") <= max_bucket)
               .select("band", "bh"))
-        cand = (bands.alias("n")
+        cand = (band_table(sig, band_hash="xxhash64").alias("n")
                 .join(idx_bands.join(ok, ["band", "bh"]).alias("o"),
                       ["band", "bh"])
                 .select(F.col("n.doc_id").alias("new_id"),
@@ -113,15 +113,8 @@ def neardup_gate_batch(batch_docs: DataFrame, batch_id: int,
     # within-batch near-dups: same verify, smaller doc_id survives
     # (the smaller side may itself fall to the index — then both drop,
     # matching "its canonical is already in the corpus")
-    x = bands.alias("bx")
-    y = bands.alias("by")
-    batch_pairs = (
-        x.join(y, (F.col("bx.band") == F.col("by.band"))
-               & (F.col("bx.bh") == F.col("by.bh"))
-               & (F.col("bx.doc_id") < F.col("by.doc_id")))
-        .select(F.col("bx.doc_id").alias("doc_a"),
-                F.col("by.doc_id").alias("doc_b"))
-        .distinct())
+    batch_pairs = _lsh_pairs_from_signatures(sig, None,
+                                             band_hash="xxhash64")
     batch_dups = (batch_pairs
                   .join(sig.alias("x"),
                         F.col("doc_a") == F.col("x.doc_id"))
@@ -146,6 +139,9 @@ def neardup_gate_batch(batch_docs: DataFrame, batch_id: int,
     (sig.join(keep, "doc_id")
      .withColumn("batch_id", F.lit(batch_id))
      .write.mode("overwrite").partitionBy("batch_id").parquet(sigs_dir))
+    # the batch's two checkpoints back nothing once its writes are done
+    release_checkpoint(sig)
+    release_checkpoint(survivors)
 
 
 def run_neardup_stream(spark: SparkSession, input_dir: str,

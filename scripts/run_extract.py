@@ -75,7 +75,7 @@ def main(argv=None):
     # spawn every Python worker before the timed run (steady-state
     # throughput; worker fork cost amortizes to zero on a long job)
     warm = docs.limit(8 * cores).repartition(2 * cores)
-    flatten_output(extract_documents(warm, balance_partitions=2 * cores)) \
+    flatten_output(extract_documents(warm)) \
         .write.format("noop").mode("overwrite").save()
 
     t0 = time.perf_counter()

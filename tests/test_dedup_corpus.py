@@ -105,6 +105,40 @@ def test_materialize_dir_matches_persisted(boiler_docs, tmp_path):
     dedup.release_caches()
 
 
+def test_verified_jaccard_matches_ngram_jaccard(spark, boiler_docs,
+                                               tmp_path):
+    """Both dedup_corpus modes verify with the same exact Jaccard as
+    ngram_jaccard_pairs under the same df cap — including threshold 0,
+    where an LSH candidate sharing no shingle must not be emitted."""
+    from pdf_table_spark.ops import dedup
+
+    # one-token docs whose xxhash64 shingle hashes differ but agree
+    # mod P: identical MinHash signatures (an LSH candidate in every
+    # band) with zero shingle overlap
+    zero = spark.createDataFrame([(5000, "z11575"), (5001, "z35784")],
+                                 boiler_docs.schema)
+    zsh = dedup.shingle_hash_rows(zero)
+    assert zsh.select("sh").distinct().count() == 2
+    sigs = dedup.minhash_signatures_from_hashes(zsh).drop("doc_id")
+    assert sigs.distinct().count() == 1
+    docs = boiler_docs.unionByName(zero)
+
+    kw = dict(threshold=0.0, max_df=20, max_bucket=50)
+    want = {(r.doc_a, r.doc_b): r.jaccard for r in
+            dedup.ngram_jaccard_pairs(docs, 0.0, cache=False,
+                                      max_df=20).collect()}
+    assert (5000, 5001) not in want
+    for wd in (None, str(tmp_path / "nd")):
+        out = dedup.dedup_corpus(docs, materialize_dir=wd, **kw)
+        got = {(r.doc_a, r.doc_b): r.jaccard
+               for r in out["pairs"].collect()}
+        assert {(i, 1000 + i) for i in range(10)} <= set(got)
+        assert all(want.get(p) == j for p, j in got.items()), \
+            {p: (j, want.get(p)) for p, j in got.items()
+             if want.get(p) != j}
+        dedup.release_caches()
+
+
 def test_cache_scope_releases_all_persisted(spark, boiler_docs):
     """`with cache_scope():` owns every RDD persisted inside it —
     after exit the JVM block manager holds no cached RDDs, so a

@@ -10,6 +10,9 @@ import os
 
 from pdf_table_spark.spark.pipeline import extract_documents, flatten_output
 
+# kinds whose decode is heavy (page JSON / table HTML)
+PYTHON_KINDS = ("pdf_page", "html_table")
+
 
 def _golden(fixture_root, sf):
     import pyarrow.parquet as pq
@@ -33,13 +36,15 @@ def test_e2e_sf0001_matches_golden(spark, fixture_root):
 
 
 def test_e2e_no_rebalance_same_result(spark, fixture_root):
-    """Partitioning must not affect results (order determinism)."""
+    """Partitioning must not affect results (order determinism): a
+    wide input skips the adaptive pre-stage rebalance, a one-split
+    input takes it."""
     docs = spark.read.parquet(
         os.path.join(fixture_root, "sf0.001", "documents_spans.parquet"))
     a = sorted(map(tuple, flatten_output(
-        extract_documents(docs, balance_partitions=0)).collect()))
+        extract_documents(docs.repartition(16))).collect()))
     b = sorted(map(tuple, flatten_output(
-        extract_documents(docs, balance_partitions=16)).collect()))
+        extract_documents(docs.coalesce(1))).collect()))
     assert a == b
 
 
@@ -49,7 +54,7 @@ def test_skew_doc_pages_spread_across_partitions(spark):
     from pyspark.sql import functions as F
 
     from pdf_table_spark.fixtures.generator import gen_doc
-    from pdf_table_spark.spark.pipeline import PYTHON_KINDS, explode_spans
+    from pdf_table_spark.spark.pipeline import explode_spans
 
     # force a skew doc (family F-G draws 200-500 pages)
     for i in range(3000):

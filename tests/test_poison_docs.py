@@ -22,7 +22,7 @@ def test_malformed_pages_quarantine_not_crash(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
 
-    flat = flatten_output(extract_documents(docs, balance_partitions=4))
+    flat = flatten_output(extract_documents(docs))
     by_doc = {}
     for r in flat.collect():
         by_doc.setdefault(r.doc_id, []).append(r)

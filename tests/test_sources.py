@@ -20,9 +20,9 @@ def test_jsonl_roundtrip_equals_parquet(spark, fixture_root, tmp_path):
 
     assert docs_jl.schema == docs_pq.schema
     a = sorted(map(tuple, flatten_output(
-        extract_documents(docs_pq, balance_partitions=0)).collect()))
+        extract_documents(docs_pq)).collect()))
     b = sorted(map(tuple, flatten_output(
-        extract_documents(docs_jl, balance_partitions=0)).collect()))
+        extract_documents(docs_jl)).collect()))
     assert a == b
 
 

@@ -93,3 +93,22 @@ def test_neardup_gate_batch_replay_is_idempotent(spark, dirs):
     assert bands.count() == 3 * 16  # no duplicated index rows
     sigs = spark.read.parquet(os.path.join(dirs["index"], "sigs"))
     assert sigs.count() == 3
+
+
+def test_gate_batch_releases_its_checkpoints(spark, dirs):
+    """Each micro-batch frees its local checkpoints once its writes are
+    done, so a long-running stream does not accumulate one pair of
+    persisted RDDs per batch."""
+    from pdf_table_spark.streaming.neardup import neardup_gate_batch
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    for bid in range(3):
+        docs = spark.createDataFrame(
+            [(f"d{bid}", _texts([f"q{bid}"])), (f"e{bid}", _texts(["ma"]))],
+            "doc_id string, text string")
+        before = persistent()
+        neardup_gate_batch(docs, bid, dirs["out"], dirs["index"])
+        assert persistent() - before == set(), bid
+    assert _out_ids(dirs["out"]) == ["d0", "d1", "d2", "e0"]
