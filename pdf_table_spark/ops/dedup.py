@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import grams
+
 P = 2_147_483_647  # 2^31 - 1, Mersenne prime for universal hashing
 N_PERM = 64
 BANDS = 16
@@ -124,17 +126,8 @@ class cache_scope:
         self.released = len(tail)
         return False
 
-# shared 60-bit hash both Spark and DuckDB can compute identically:
-#   spark:  cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)
-#   duckdb: cast('0x' || substr(md5(s), 1, 15) as bigint)
-H60_SPARK = "cast(conv(substring(md5({s}), 1, 15), 16, 10) as bigint)"
-
-TOKENS = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
-SHINGLES = (
-    f"array_distinct(transform("
-    f"  sequence(1, greatest(size({TOKENS}) - {SHINGLE_K - 1}, 1)),"
-    f"  i -> array_join(slice({TOKENS}, i, {SHINGLE_K}), ' ')))"
-)
+# the 60-bit md5 prefix the DuckDB twins reproduce (``grams.H60``)
+H60_SPARK = grams.H60
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -151,18 +144,19 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 def shingle_hash_rows(docs: DataFrame,
                       hash_fn: str = "xxhash64") -> DataFrame:
-    """(doc_id, sh) with sh = hash(shingle): the split/lower runs
-    exactly once per doc (a `toks` column, not re-derived inside every
-    lambda) and downstream shuffles move 8-byte hashes instead of
-    shingle strings. 64-bit collisions are ~1e-8 at 1M shingles —
-    negligible vs the exactness the oracle checks.
+    """(doc_id, sh) with sh = hash(shingle), one row per distinct
+    shingle of each doc: the split/lower runs once per doc and
+    downstream shuffles move 8-byte hashes instead of shingle strings.
+    64-bit collisions are ~1e-8 at 1M shingles — negligible vs the
+    exactness the oracle checks.
 
     ``hash_fn``: 'xxhash64' (default, fastest — the production path)
     or 'md5' (the 60-bit md5-prefix hash DuckDB can reproduce
     bit-for-bit — the oracle-comparability contract, same pattern as
     ``ops.text.winnow_fingerprint_rows``)."""
-    return (shingle_hash_arrays(docs, hash_fn)
-            .select("doc_id", F.explode("shs").alias("sh")))
+    return grams.gram_rows(grams.tokenized(docs), "tk", SHINGLE_K,
+                           hash_fn, whole_doc=True, distinct=True,
+                           out="sh")
 
 
 def shingle_hash_arrays(docs: DataFrame,
@@ -170,23 +164,11 @@ def shingle_hash_arrays(docs: DataFrame,
     """(doc_id, shs: array<bigint>) — the pre-explode form of
     ``shingle_hash_rows`` (distinct shingle hashes per doc), for
     operators that want per-doc array math before any shuffle."""
-    if hash_fn == "xxhash64":
-        h = f"xxhash64(array_join(slice(toks, i, {SHINGLE_K}), ' '))"
-    elif hash_fn == "md5":
-        h = H60_SPARK.format(
-            s=f"array_join(slice(toks, i, {SHINGLE_K}), ' ')")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}; "
-                         "one of 'xxhash64', 'md5'")
-    toks = F.expr(f"filter(split(lower(text), '\\\\s+'), t -> t <> '')")
-    return (
-        docs.select("doc_id", toks.alias("toks"))
-        .select("doc_id", F.expr(
-            f"array_distinct(transform("
-            f"  sequence(1, greatest(size(toks) - {SHINGLE_K - 1}, 1)),"
-            f"  i -> {h}"
-            f"))").alias("shs"))
-    )
+    shs = grams.windows("tk", SHINGLE_K, whole_doc=True,
+                        fn=grams.hash_sql(hash_fn))
+    return (grams.tokenized(docs)
+            .select("doc_id", F.expr(f"array_distinct({shs})")
+                    .alias("shs")))
 
 
 def _df_cap(sh: DataFrame, max_df: int, keep,
@@ -410,15 +392,16 @@ def band_table(sig: DataFrame, band_hash: str = "md5") -> DataFrame:
     production uses 8-byte xxhash64 keys — the band table is
     n_docs x BANDS rows, and 32-char md5 strings sextuple its shuffle
     width. 'md5' is kept as the DuckDB-replicable oracle contract.
-    Shared by the batch pair join below and the streaming incremental
-    index (``streaming.neardup``)."""
-    hash_fn = "xxhash64" if band_hash == "xxhash64" else "md5"
-    band_structs = ", ".join(
-        "struct({b} as band, {h}(concat_ws(',', {cols})) as bh)".format(
-            b=bidx, h=hash_fn,
-            cols=", ".join(f"s{bidx * ROWS_PER_BAND + j}"
-                           for j in range(ROWS_PER_BAND)))
-        for bidx in range(BANDS))
+    Any other value raises ``ValueError``. Shared by the batch pair
+    join below and the streaming incremental index
+    (``streaming.neardup``)."""
+    def key(b: int) -> str:
+        cols = ", ".join(f"s{b * ROWS_PER_BAND + j}"
+                         for j in range(ROWS_PER_BAND))
+        return grams.hash_sql(band_hash, f"concat_ws(',', {cols})", "hex")
+
+    band_structs = ", ".join(f"struct({b} as band, {key(b)} as bh)"
+                             for b in range(BANDS))
     return sig.select(
         "doc_id", F.explode(F.expr(f"array({band_structs})")).alias("b")
     ).select("doc_id", F.col("b.band").alias("band"),
@@ -541,9 +524,10 @@ def simhash(docs: DataFrame, n_bits: int = 60) -> DataFrame:
     sums → bit assembly."""
     toks = docs.select(
         "doc_id",
-        F.explode(F.expr(f"array_distinct({TOKENS})")).alias("tok"))
+        F.explode(F.expr(f"array_distinct({grams.tokens()})"))
+        .alias("tok"))
     h = toks.select(
-        "doc_id", F.expr(H60_SPARK.format(s="tok")).alias("h"))
+        "doc_id", F.expr(grams.hash_sql("md5", "tok")).alias("h"))
     votes = [
         F.expr(f"sum(if((h div {1 << b}) % 2 = 1, 1, -1)) as v{b}")
         for b in range(n_bits)
@@ -620,13 +604,6 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
         simhash(docs, n_bits), max_hamming, n_bits, max_bucket)
 
 
-# Per-row window-build dispatch threshold for exact_substring_dedup:
-# below it the O(n_tokens²)-worst-case lambda build is cheaper in
-# practice (bounded at 512² token touches per doc); at or above it
-# the strictly-linear arrays_zip build takes over.
-_ESD_LONG_DOC = 512
-
-
 def exact_substring_dedup(docs: DataFrame, n: int = 50,
                           hash_fn: str = "md5") -> DataFrame:
     """ExactSubstr dedup (Lee et al. 2022, "Deduplicating Training
@@ -659,58 +636,15 @@ def exact_substring_dedup(docs: DataFrame, n: int = 50,
     cut, i)`` per token — a linear scan per probe, O(n_tokens x
     |cut|): a heavily-duplicated 100k-token doc was ~1e10 comparisons
     inside ONE task; the gap-slice sweep is bounded on exactly that
-    pathological fixture — see tests/test_ops.py.) The distributed
+    pathological fixture — see tests/test_ops.py.) The window build
+    is one slice per window, exploded where it is built
+    (``grams.gram_rows``): O(n x n_tokens) per doc. The distributed
     spans/groupBy stages are corpus-linear and proved at 50M docs /
     895M tokens (BASELINE.md).
     """
-    window_cols = ", ".join(f"w.`{k}`" for k in range(n))
-    if hash_fn == "md5":
-        h_zip = f"md5(concat_ws(' ', {window_cols}))"
-        h_lam = f"md5(array_join(slice(tk, i + 1, {n}), ' '))"
-        empty = "cast(array() as array<struct<start: int, h: string>>)"
-    elif hash_fn == "xxhash64":
-        h_zip = f"xxhash64(concat_ws(' ', {window_cols}))"
-        h_lam = f"xxhash64(array_join(slice(tk, i + 1, {n}), ' '))"
-        empty = "cast(array() as array<struct<start: int, h: bigint>>)"
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}; "
-                         "one of 'md5', 'xxhash64'")
-    tk = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), '\\\\s+'), t -> t <> '')")
-        .alias("tk"))
-    # Window build, dispatched PER ROW on doc length (both branches
-    # hash the identical space-joined window, so the groupBy sees one
-    # key space):
-    #   * short docs (< _ESD_LONG_DOC tokens — virtually the whole
-    #     corpus) slice inside the transform lambda. This carries the
-    #     HOF-inlining trap — CollapseProject substitutes the token-
-    #     split alias into the lambda, re-evaluating it per element,
-    #     O(n_tokens²) per doc — but bounded by the threshold it is
-    #     the FASTER formulation: the arrays_zip build below costs
-    #     ~40 % more wall at 50M docs (1,668 s vs 1,201 s measured
-    #     same-box A/B, BASELINE.md round 5) because it materializes
-    #     n shifted slice arrays + a struct per window before
-    #     hashing.
-    #   * long docs take the arrays_zip-of-shifted-slices build:
-    #     every tk reference sits in ARGUMENT position, evaluated
-    #     once per row however the optimizer rewrites it — strictly
-    #     O(n · n_tokens) (a 100k-token doc ≈ 7 s; the lambda
-    #     formulation did not finish on it).
-    zips = ", ".join(f"slice(tk, {k + 1}, size(tk) - {n - 1})"
-                     for k in range(n))
-    spans = (
-        tk.select("doc_id", F.expr(
-            f"if(size(tk) < {n}, {empty}, "
-            f"if(size(tk) < {_ESD_LONG_DOC}, "
-            f"transform(sequence(0, size(tk) - {n}), "
-            f"i -> struct(i as start, {h_lam} as h)), "
-            f"transform(arrays_zip({zips}), "
-            f"(w, i) -> struct(i as start, {h_zip} as h))))")
-            .alias("ws"))
-        .select("doc_id", F.explode("ws").alias("w"))
-        .select("doc_id", F.col("w.start").alias("start"),
-                F.col("w.h").alias("h")))
+    tk = grams.tokenized(docs)
+    spans = grams.gram_rows(tk, "tk", n, hash_fn, form="hex", start=True,
+                            out="h")
     noncanon = (
         spans.groupBy("h").agg(
             F.count("*").alias("cnt"),

@@ -54,56 +54,28 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import grams
+
 _TWO60 = float(1 << 60)
-
-
-def _tokens_expr(text_col: str) -> str:
-    """Lower/whitespace token array (the repo-wide token convention)."""
-    return f"filter(split(lower({text_col}), '\\\\s+'), x -> x <> '')"
-
-
-def _gram_hash(hash_fn: str) -> str:
-    """Per-gram 60-bit non-negative hash expression (gram bound as
-    ``g``). md5 is the oracle contract (DuckDB twin:
-    ``cast('0x' || substr(md5(g), 1, 15) as bigint)``); xxhash64 is
-    the production default (one JVM hash vs md5's hex round-trip)."""
-    if hash_fn == "md5":
-        return ("cast(conv(substring(md5(g), 1, 15), 16, 10) "
-                "as bigint)")
-    if hash_fn == "xxhash64":
-        # shift into [0, 2^60) so % keeps buckets non-negative
-        return "abs(xxhash64(g) % 1152921504606846976)"
-    raise ValueError(f"unknown hash_fn {hash_fn!r}; md5 | xxhash64")
-
-
-def _buckets_expr(tokens_col: str, n_buckets: int, hash_fn: str) -> str:
-    """array<bigint> of hashed unigram+bigram bucket ids over a
-    pre-computed token-array column (duplicates kept — counts
-    matter)."""
-    t = tokens_col
-    # sequence(1, 0) runs DESCENDING — guard docs with < 2 tokens
-    bigrams = (f"if(size({t}) < 2, array(), "
-               f"transform(sequence(1, size({t}) - 1), "
-               f"i -> concat(element_at({t}, i), ' ', "
-               f"element_at({t}, i + 1))))")
-    return (f"transform(concat({t}, {bigrams}), "
-            f"g -> {_gram_hash(hash_fn)} % {int(n_buckets)})")
 
 
 def _with_buckets(df: DataFrame, text_col: str, n_buckets: int,
                   hash_fn: str, keep: list[str] | None = None,
-                  out: str = "_bks") -> DataFrame:
-    """select-CHAIN shape, deliberately: ``withColumn`` + ``drop``
-    around a multiply-referenced alias lets CollapseProject inline
-    the token split 5× into the gram expression (measured 4× slower
-    at sf0.1); a select chain keeps each stage evaluated once."""
+                  explode: bool = False) -> DataFrame:
+    """``keep`` columns (default all) plus the hashed bucket ids of
+    ``text_col``'s unigrams and bigrams (duplicates kept — counts
+    matter): an array ``_bks``, or with ``explode`` one ``bk`` row per
+    gram, exploded where it is built (see ``grams.gram_rows``). The
+    hash is ``grams.hash_sql``'s non-negative 60-bit form, whose md5
+    spelling the DuckDB twin reproduces."""
     keep = keep if keep is not None else df.columns
+    h = grams.hash_sql(hash_fn, "g", "pos60")
+    bks = F.expr(f"transform(concat(_toks, {grams.windows('_toks', 2)}), "
+                 f"g -> {h} % {int(n_buckets)})")
     return (df
-            .select(*keep, F.expr(_tokens_expr(text_col))
-                    .alias("_toks"))
-            .select(*keep, F.expr(
-                _buckets_expr("_toks", n_buckets, hash_fn))
-                .alias(out)))
+            .select(*keep, F.expr(grams.tokens(text_col)).alias("_toks"))
+            .select(*keep, F.explode(bks).alias("bk") if explode
+                    else bks.alias("_bks")))
 
 
 def bucket_counts(df: DataFrame, text_col: str = "text",
@@ -114,12 +86,8 @@ def bucket_counts(df: DataFrame, text_col: str = "text",
     if not 2 <= n_buckets <= 65536:
         raise ValueError("n_buckets must be in [2, 65536] — the fit "
                          "is a driver-side collect of that many rows")
-    # explode_outer: plain explode makes the optimizer insert a
-    # size()>0 pre-filter that re-evaluates the whole gram expression
-    # per row (measured ~2× the job)
-    rows = (_with_buckets(df, text_col, n_buckets, hash_fn, keep=[])
-            .select(F.explode_outer("_bks").alias("bk"))
-            .filter(F.col("bk").isNotNull())
+    rows = (_with_buckets(df, text_col, n_buckets, hash_fn, keep=[],
+                          explode=True)
             .groupBy("bk").count().collect())
     counts = [0] * n_buckets
     total = 0
@@ -149,9 +117,7 @@ def bucket_counts_tagged(docs: DataFrame, target_expr: str,
     tagged = docs.select(F.expr(target_expr).alias("_tgt"),
                          F.col(text_col))
     rows = (_with_buckets(tagged, text_col, n_buckets, hash_fn,
-                          keep=["_tgt"])
-            .select("_tgt", F.explode_outer("_bks").alias("bk"))
-            .filter(F.col("bk").isNotNull())
+                          keep=["_tgt"], explode=True)
             .groupBy("_tgt", "bk").count().collect())
     t, r = [0] * n_buckets, [0] * n_buckets
     tt = rr = 0
@@ -222,7 +188,7 @@ def score_e6(docs: DataFrame, lr_e6: list[int],
     lut = "array(" + ",".join(f"{int(v)}L" for v in lr_e6) + ")"
     cols = docs.columns
     nonempty = docs.filter(
-        F.expr(f"size({_tokens_expr(text_col)}) > 0"))
+        F.expr(f"size({grams.tokens(text_col)}) > 0"))
     return (_with_buckets(nonempty, text_col, len(lr_e6), hash_fn,
                           keep=cols)
             .select(*cols, F.col("_bks"), F.expr(lut).alias("_lut"))
@@ -251,7 +217,7 @@ def score_np(docs: DataFrame, lr_e6: list[int],
 
     lut_vals = lr_e6  # closure-captured; ~0.5 MiB at B=65536
     nonempty = docs.filter(
-        F.expr(f"size({_tokens_expr(text_col)}) > 0"))
+        F.expr(f"size({grams.tokens(text_col)}) > 0"))
     bks = _with_buckets(nonempty, text_col, len(lr_e6), hash_fn,
                         keep=["doc_id"])
 
@@ -282,8 +248,7 @@ def gumbel_e6_expr(seed: str = "dsir-v1", key: str = "doc_id") -> str:
     floor(−ln(−ln(u))·1e6 + 0.5). Same-libm/quantized like the log
     ratios, so Spark and DuckDB agree bit-for-bit; reruns and retries
     redraw the identical noise."""
-    h = (f"cast(conv(substring(md5(concat(cast(`{key}` as string), "
-         f"'{seed}')), 1, 15), 16, 10) as bigint)")
+    h = grams.H60.format(s=f"concat(cast(`{key}` as string), '{seed}')")
     return (f"cast(floor(-ln(-ln(({h} + 0.5d) / {_TWO60!r}d)) * 1e6 "
             f"+ 0.5) as bigint)")
 

@@ -16,7 +16,9 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_TOKENS = "size(filter(split(lower(text), '\\\\s+'), t -> t <> ''))"
+from . import grams
+
+_TOKENS = f"size({grams.tokens()})"
 
 
 def dataset_card(provenance: DataFrame, assembled: DataFrame,

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import dedup
+from . import dedup, grams
 
 # 60-bit doc hash → uniform bucket in [0, 10_000)
 _BUCKETS = 10_000
@@ -29,8 +29,7 @@ release_caches = dedup.release_caches
 def _hash_expr(seed: str, key: str = "doc_id") -> str:
     """Raw 60-bit md5-prefix hash of (key, seed) — uniform in
     [0, 2^60)."""
-    return (f"cast(conv(substring(md5(concat(cast(`{key}` as string), "
-            f"'{seed}')), 1, 15), 16, 10) as bigint)")
+    return grams.H60.format(s=f"concat(cast(`{key}` as string), '{seed}')")
 
 
 def _bucket_expr(seed: str, key: str = "doc_id") -> str:
@@ -116,7 +115,7 @@ def pack_chunks(docs: DataFrame, ctx_len: int = 512,
     floor((off+n-1)/C) (empty docs to none), and one groupBy(chunk)
     finishes. Two shuffles + one broadcast, no global sort.
     """
-    toks = "size(filter(split(lower(text), '\\\\s+'), t -> t <> ''))"
+    toks = f"size({grams.tokens()})"
     # persisted: the id-span agg, bucket totals, and the offset join
     # each read this frame — without the cache the tokenizer (the
     # expensive narrow stage) runs three times over the corpus
@@ -259,7 +258,7 @@ def select_token_budget(docs: DataFrame, budget: int,
 
     Returns (doc_id, score, n_tok, cum_before) for the selected docs.
     """
-    toks = "size(filter(split(lower(text), '\\\\s+'), t -> t <> ''))"
+    toks = f"size({grams.tokens()})"
     # persisted: approxQuantile + the main query both read it. NULL
     # scores have no place in a score ordering and would otherwise
     # land in the TOP bucket (b > score is null for every bound, the

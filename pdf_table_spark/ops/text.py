@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import grams
+
 # language-ID profiles as DATA: per-language stopword lists (78
 # whitespace-tokenized languages) and ranked ASCII letter-trigram
 # profiles (40 Latin-script languages) live in lang_profiles.json —
@@ -31,7 +33,7 @@ with open(_os.path.join(_os.path.dirname(_os.path.abspath(__file__)),
 LANG_STOPWORDS = _PROFILES["stopwords"]
 LANG_TRIGRAM_PROFILES = _PROFILES["trigrams"]
 
-_TOKENS = "filter(split(text, '\\\\s+'), t -> t <> '')"
+_TOKENS = grams.tokens(lower=False)
 
 # CJK script ranges for the lang_id script tier (ch / chinese_cht /
 # japan / korean are not whitespace-tokenized, so stopword lists can't
@@ -146,7 +148,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
     script tier won). Schema is profile-count-independent. Narrow
     map — five character-class counts plus one constant-map token
     pass per doc."""
-    toks = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
+    toks = grams.tokens()
     langs = sorted(LANG_STOPWORDS)
     # ONE interpreted pass per doc, not one per language: a constant
     # token -> matched-language-index array map (compact — stopword
@@ -227,10 +229,10 @@ def lang_id(docs: DataFrame) -> DataFrame:
 def fingerprint(docs: DataFrame) -> DataFrame:
     """Deterministic document fingerprint: md5 over the space-joined
     lowercase token stream (normalization-stable content hash)."""
-    toks = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
     return docs.select(
         "doc_id",
-        F.expr(f"md5(array_join({toks}, ' '))").alias("fingerprint"),
+        F.expr(f"md5(array_join({grams.tokens()}, ' '))")
+        .alias("fingerprint"),
     )
 
 
@@ -273,13 +275,7 @@ def winnow_fingerprint_rows(docs: DataFrame, k: int = 8,
     is per-gram CPU only; the plan is identical.
     """
     norm = "regexp_replace(lower(text), '\\\\s+', ' ')"
-    if hash_fn == "xxhash64":
-        h = "xxhash64(substring(t, i, {k}))".format(k=k)
-    elif hash_fn == "md5":
-        h = ("cast(conv(substring(md5(substring(t, i, {k})), 1, 15), "
-             "16, 10) as bigint)").format(k=k)
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    h = grams.hash_sql(hash_fn, f"substring(t, i, {k})")
     expr = f"""
         array_distinct(transform(
           sequence(1, greatest(size(hs) - {w - 1}, 1)),
@@ -429,15 +425,8 @@ def top_ngrams(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     sort). Ties break on the gram string so the result is total-
     ordered and rerun-stable.
     """
-    toks = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
-    grams = (docs
-             .select("doc_id", F.expr(toks).alias("tk"))
-             .select("doc_id", F.explode(F.expr(
-                 f"if(size(tk) < {n}, cast(array() as array<string>), "
-                 f"transform(sequence(1, size(tk) - {n - 1}), "
-                 f"i -> array_join(slice(tk, i, {n}), ' ')))"
-             )).alias("gram")))
-    return (grams.groupBy("gram")
+    return (grams.gram_rows(grams.tokenized(docs), "tk", n, out="gram")
+            .groupBy("gram")
             .agg(F.count("*").alias("occurrences"),
                  F.countDistinct("doc_id").alias("n_docs"))
             .orderBy(F.desc("occurrences"), F.asc("gram"))

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import grams
+
 __all__ = [
     "repetition_signals",
     "gopher_quality",
@@ -54,8 +56,7 @@ PII_PATTERNS = {
     "phone": r"\+?\d[\d() -]{6,}\d",
 }
 
-_WORDS = "filter(split(text, '\\\\s+'), t -> t <> '')"
-_WORDS_LOWER = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
+_WORDS = grams.tokens(lower=False)
 
 
 def _lines(line_sep: str) -> str:
@@ -138,11 +139,8 @@ def repetition_signals(docs: DataFrame,
     )
     line_chars = f"aggregate({lines}, 0L, (a, l) -> a + length(l))"
 
-    def grams(n: int) -> str:
-        return (
-            f"transform(sequence(1, greatest(size(ws) - {n - 1}, 1)),"
-            f" i -> array_join(slice(ws, i, {n}), ' '))"
-        )
+    def ngrams(n: int) -> str:
+        return grams.windows("ws", n, whole_doc=True)
 
     # (count, gram) struct max = max count, ties to lexicographically
     # greatest gram — deterministic in both engines
@@ -177,7 +175,7 @@ def repetition_signals(docs: DataFrame,
         staged = (
             docs.select("doc_id", "text", F.expr(_WORDS).alias("ws"))
             .select("doc_id", "text", "ws",
-                    *[F.expr(grams(n)).alias(f"g{n}")
+                    *[F.expr(ngrams(n)).alias(f"g{n}")
                       for n in (*_TOP_NS, *_DUP_NS)])
             .select("doc_id", "text", "ws",
                     *[F.col(f"g{n}") for n in _DUP_NS],
@@ -208,7 +206,7 @@ def repetition_signals(docs: DataFrame,
         F.length("text").alias("text_len"),
     )
     tagged_arr = "concat(" + ", ".join(
-        f"transform({grams(n)}, g -> struct({n} as k, g as g))"
+        f"transform({ngrams(n)}, g -> struct({n} as k, g as g))"
         for n in (*_TOP_NS, *_DUP_NS)) + ")"
     tagged = (
         docs.select("doc_id", F.expr(_WORDS).alias("ws"))
@@ -282,7 +280,7 @@ def _with_gopher(df: DataFrame,
     alpha_words = f"size(filter({_WORDS}, w -> w rlike '[A-Za-z]'))"
     stop_arr = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
     stop_hits = (
-        f"size(array_intersect(array_distinct({_WORDS_LOWER}),"
+        f"size(array_intersect(array_distinct({grams.tokens()}),"
         f" array({stop_arr})))"
     )
     df = df.withColumns({
@@ -555,21 +553,8 @@ def c4_span_dedup(docs: DataFrame, window: int = 3) -> DataFrame:
         F.expr(
             "filter(transform(split(text, '[.!?]'), s -> trim(s)),"
             " s -> s <> '')").alias("ss"))
-    spans = (
-        ss.select("doc_id", F.expr(
-            # sequence(0, n) runs DESCENDING when n < 0 (docs with
-            # fewer than `window` sentences), hence the explicit guard:
-            # such docs contribute no spans
-            f"if(size(ss) < {window}, "
-            f"cast(array() as array<struct<start: int, h: string>>), "
-            f"transform(sequence(0, size(ss) - {window}), i -> "
-            f"struct(i as start, md5(array_join(slice(ss, i + 1, "
-            f"{window}), ' ')) as h)))"
-        ).alias("ws"))
-        .select("doc_id", F.explode("ws").alias("w"))
-        .select("doc_id", F.col("w.start").alias("start"),
-                F.col("w.h").alias("h"))
-    )
+    spans = grams.gram_rows(ss, "ss", window, "md5", form="hex",
+                            start=True, out="h")
     dup_occurrences = (
         spans.groupBy("h").agg(
             F.count("*").alias("n"),
@@ -616,7 +601,7 @@ def _ngram_hash_rows(docs: DataFrame, n: int,
                      hash_fn: str = "md5") -> DataFrame:
     """Distinct hashes of every lowercase whitespace-token n-gram per
     doc (one row per (doc_id, gram); docs shorter than n tokens
-    contribute none — explicit guard, sequence(1, 0) runs DESCENDING).
+    contribute none).
 
     ``hash_fn``: 'md5' (32-char string, DuckDB-replicable — the oracle
     contract) or 'xxhash64' (8-byte bigint — the production path: the
@@ -624,23 +609,8 @@ def _ngram_hash_rows(docs: DataFrame, n: int,
     shrinks both the shuffle and the broadcast set ~6x). Contamination
     is an equality test on grams, so any injective-enough hash yields
     the same flagged set."""
-    if hash_fn == "xxhash64":
-        h = "xxhash64(array_join(slice(tk, i, {n}), ' '))".format(n=n)
-        empty = "cast(array() as array<bigint>)"
-    elif hash_fn == "md5":
-        h = "md5(array_join(slice(tk, i, {n}), ' '))".format(n=n)
-        empty = "cast(array() as array<string>)"
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}; "
-                         "one of 'xxhash64', 'md5'")
-    toks = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
-    return (docs
-            .select("doc_id", F.expr(toks).alias("tk"))
-            .select("doc_id", F.explode(F.expr(
-                f"if(size(tk) < {n}, {empty}, "
-                f"array_distinct(transform(sequence(1, size(tk) - {n - 1}), "
-                f"i -> {h})))"
-            )).alias("g")))
+    return grams.gram_rows(grams.tokenized(docs), "tk", n, hash_fn,
+                           form="hex", distinct=True)
 
 
 def decontaminate(corpus: DataFrame, benchmark: DataFrame,

@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ops import grams
 from ..ops.textfilters import _redact_col, _with_c4, _with_gopher
 
 DOCS_SCHEMA = "doc_id string, text string, ingest_ts timestamp"
@@ -89,21 +90,14 @@ def clean_docs_stream(docs: DataFrame,
                 lambda arr: arr is not None
                 and any(g in s for g in arr))
 
-        # materialize the token array ONCE: inlining the split inside
-        # the transform lambda re-tokenizes the doc at every n-gram
-        # position (O(n_tokens^2) on the streaming hot path)
-        toks = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
-        grams = (f"array_distinct(transform(sequence(1, "
-                 f"size(_tk) - {ngram_n - 1}), "
-                 f"i -> md5(array_join(slice(_tk, i, {ngram_n}), "
-                 f"' '))))")
+        # the token array is its own column: inlined into the window
+        # lambda it would be re-split at every n-gram position
+        ngrams = grams.windows("_tk", ngram_n,
+                               fn=grams.hash_sql("md5", form="hex"))
         staged = (staged
-                  .withColumn("_tk", F.expr(toks))
-                  .withColumn(
-                      "contaminated",
-                      _leaks(F.expr(
-                          f"if(size(_tk) < {ngram_n}, "
-                          f"cast(array() as array<string>), {grams})")))
+                  .withColumn("_tk", F.expr(grams.tokens()))
+                  .withColumn("contaminated",
+                              _leaks(F.expr(f"array_distinct({ngrams})")))
                   .drop("_tk"))
     else:
         staged = staged.withColumn("contaminated", F.lit(False))

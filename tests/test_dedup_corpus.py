@@ -77,6 +77,18 @@ def test_hash_fn_paths_agree(boiler_docs):
     dedup.release_caches()
 
 
+def test_band_table_rejects_unknown_band_hash(spark):
+    """The band key goes through the one hash switch: a value other
+    than 'md5' or 'xxhash64' raises instead of silently bucketing by
+    md5."""
+    from pdf_table_spark.ops import dedup
+
+    sig = dedup.minhash_signatures(spark.createDataFrame(
+        [(1, "a b c d")], "doc_id int, text string"))
+    with pytest.raises(ValueError, match="hash_fn"):
+        dedup.band_table(sig, band_hash="sha1")
+
+
 def test_materialize_dir_matches_persisted(boiler_docs, tmp_path):
     """materialize_dir (parquet stage boundaries, no persisted shingle
     table) returns the identical pairs/keep sets as the cached

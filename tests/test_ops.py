@@ -564,19 +564,16 @@ def test_exact_substring_dedup_pathological_long_doc(spark):
 
 
 def test_exact_substring_dedup_cross_branch_collision(spark):
-    """The round-5 per-row window-build dispatch (_ESD_LONG_DOC):
-    short docs hash windows via the lambda build, long docs via the
-    arrays_zip build. Both must produce the IDENTICAL hash for the
-    same window — a span duplicated between a short and a long doc
-    has to collide across branches or cross-length dedup silently
-    stops working."""
-    from pdf_table_spark.ops.dedup import (_ESD_LONG_DOC,
-                                           exact_substring_dedup)
+    """A span duplicated between a short doc and a long doc must
+    collide: both docs' windows hash the identical space-joined tokens
+    into one key space, or cross-length dedup silently stops
+    working."""
+    from pdf_table_spark.ops.dedup import exact_substring_dedup
 
     span = " ".join(f"tok{i}" for i in range(20))
     short_doc = " ".join(f"s{i}" for i in range(200)) + " " + span
     long_doc = " ".join(
-        f"l{i}" for i in range(2 * _ESD_LONG_DOC)) + " " + span
+        f"l{i}" for i in range(1024)) + " " + span
     docs = spark.createDataFrame(
         [("a", short_doc), ("b", long_doc)],
         "doc_id string, text string")
@@ -585,4 +582,4 @@ def test_exact_substring_dedup_cross_branch_collision(spark):
                exact_substring_dedup(docs, n=20,
                                      hash_fn=hash_fn).collect()}
         assert out["a"] == (220, 0), (hash_fn, out)
-        assert out["b"] == (2 * _ESD_LONG_DOC + 20, 20), (hash_fn, out)
+        assert out["b"] == (1024 + 20, 20), (hash_fn, out)

@@ -196,6 +196,41 @@ class TestPlans:
         assert "ArrowEvalPython" not in static
         assert "Union" not in static
 
+    @pytest.mark.parametrize("op", [
+        "shingle_hash_rows/xxhash64", "shingle_hash_rows/md5",
+        "minhash_signatures", "exact_substring_dedup", "c4_span_dedup",
+        "_ngram_hash_rows", "top_ngrams", "decontaminate"])
+    def test_gram_windows_not_rebuilt_by_inferred_filters(self, spark,
+                                                          op):
+        """Every gram builder explodes its windows in the projection
+        that builds them. Exploding a built array COLUMN makes Spark
+        infer a ``size(col) > 0`` filter and push it, with the whole
+        window build substituted, below that projection, so each row
+        built its windows twice. No Filter in the optimized plan may
+        hold a window slice."""
+        from pdf_table_spark.ops import dedup, text, textfilters
+        docs = _tbl(spark, "documents").select("doc_id", "text")
+        build = {
+            "shingle_hash_rows/xxhash64":
+                lambda: dedup.shingle_hash_rows(docs),
+            "shingle_hash_rows/md5":
+                lambda: dedup.shingle_hash_rows(docs, "md5"),
+            "minhash_signatures": lambda: dedup.minhash_signatures(docs),
+            "exact_substring_dedup":
+                lambda: dedup.exact_substring_dedup(docs),
+            "c4_span_dedup": lambda: textfilters.c4_span_dedup(docs),
+            "_ngram_hash_rows":
+                lambda: textfilters._ngram_hash_rows(docs, 13),
+            "top_ngrams": lambda: text.top_ngrams(docs),
+            "decontaminate": lambda: textfilters.decontaminate(
+                docs, docs.filter("doc_id < 5"),
+                broadcast_bench=True)["contaminated"],
+        }[op]
+        plan = build()._jdf.queryExecution().optimizedPlan().toString()
+        rebuilt = [ln for ln in plan.splitlines()
+                   if re.match(r"^[\s:+|-]*Filter ", ln) and "slice(" in ln]
+        assert not rebuilt, rebuilt
+
     def test_ann_ivf_narrow_assignment_and_broadcast_probes(
             self, spark, queries):
         """IVF-Flat: cell assignment must be a narrow projection (no
