@@ -795,15 +795,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_minhash_lsh(spark, sf_dir):
         # signatures + band-join candidate pairs + pairwise survivors.
-        # The signature table feeds all three arms (sig rows, the band
-        # join, and keep's anti-join side) and the pair table feeds
-        # two; without a persist each reference re-runs the full
-        # shingle explode + 64-perm aggregation (measured: signatures
-        # computed 3x per run). Persisted within the query (released
-        # by dedup.release_caches()) — plan digest: three
-        # shingle-scan subtrees → one InMemoryTableScan.
+        # The signature table feeds every arm (sig rows, and the band
+        # join behind the pair rows and keep's anti-join side); without
+        # a persist each reference re-runs the full shingle explode +
+        # 64-perm aggregation. Persisted within the query (released by
+        # dedup.release_caches()), so the executed plan reads it
+        # through InMemoryTableScans instead of re-scanning shingles.
         d = _t(spark, sf_dir, "documents")
-        sig_full = dedup.minhash_signatures(d)
+        sig_full = dedup.persist(dedup.minhash_signatures(d))
         sig = sig_full.select(
             F.lit("sig").alias("part"), F.col("doc_id").alias("a"),
             F.lit(None).cast("bigint").alias("b"),

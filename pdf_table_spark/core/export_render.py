@@ -23,11 +23,13 @@ def grid_matrix(cells):
         return []
     nr = max(c.row + c.row_span for c in cells)
     nc = max(c.col + c.col_span for c in cells)
-    m = [["" for _ in range(nc)] for _ in range(nr)]
+    m = [[""] * nc for _ in range(nr)]
     for c in cells:
+        text = c.text
         for r in range(c.row, c.row + c.row_span):
+            row = m[r]
             for cc in range(c.col, c.col + c.col_span):
-                m[r][cc] = c.text
+                row[cc] = text
     return m
 
 

@@ -13,6 +13,7 @@ A *segment* is ``(x0, y0, x1, y1)`` with x0<=x1, y0<=y1.
 
 from __future__ import annotations
 
+import bisect
 import math
 
 # Tolerances mirroring the reference defaults
@@ -64,51 +65,49 @@ def dedup_overlapping_boxes(text_lines) -> list:
     least as wide, A is the duplicate and is dropped. Stable order of
     survivors (input order).
 
-    The O(n²) pair predicate is one numpy broadcast (this function runs
-    on every page; the python pair loop was ~37% of extraction CPU);
-    only the tiny witness-must-survive sweep stays sequential — a
-    dropped box cannot drop others, so identical twins keep exactly one
-    member, like the reference's rest-set iteration.
+    ``inter > 0.8 * area_A`` forces both axis overlaps above 0.8 of A's
+    extent, which puts A's centre inside B's box. So the full predicate
+    runs only on the boxes containing A's centre, found by a sweep over
+    the boxes sorted by bottom edge with a running max of their tops
+    (on a page of text lines, usually none but A itself). The boxes
+    are visited in input order and a dropped box is no witness, so
+    identical twins keep exactly one member, like the reference's
+    rest-set iteration.
     """
     n = len(text_lines)
     if n < 2:
         return list(text_lines)
-    import numpy as np
-
-    x0 = np.fromiter((t["x0"] for t in text_lines), np.float64, n)
-    y0 = np.fromiter((t["y0"] for t in text_lines), np.float64, n)
-    x1 = np.fromiter((t["x1"] for t in text_lines), np.float64, n)
-    y1 = np.fromiter((t["y1"] for t in text_lines), np.float64, n)
-    iw = np.minimum.outer(x1, x1) - np.maximum.outer(x0, x0)
-    ih = np.minimum.outer(y1, y1) - np.maximum.outer(y0, y0)
-    inter = np.clip(iw, 0.0, None) * np.clip(ih, 0.0, None)
-    area = (x1 - x0) * (y1 - y0)
-    w = x1 - x0
-    with np.errstate(divide="ignore", invalid="ignore"):
-        # cond[i, j]: j is a witness that i is a duplicate
-        cond = (inter > 0.8 * area[:, None]) & (w[None, :] >= w[:, None])
-    np.fill_diagonal(cond, False)
-    cond[area <= 0, :] = False
+    boxes = [(float(t["x0"]), float(t["y0"]), float(t["x1"]), float(t["y1"]))
+             for t in text_lines]
+    # a box with a NaN bottom contains no point; leave it out of the sort
+    order = sorted((b[1], k) for k, b in enumerate(boxes) if b[1] == b[1])
+    bottoms = [y0 for y0, _ in order]
+    reach, top = [], -math.inf   # reach[p]: max top over order[:p + 1]
+    for _, k in order:
+        if boxes[k][3] > top:
+            top = boxes[k][3]
+        reach.append(top)
 
     drop: set[int] = set()
-    for i in np.nonzero(cond.any(axis=1))[0]:
-        for j in np.nonzero(cond[i])[0]:
-            if j not in drop:
-                drop.add(int(i))
-                break
+    for i, (ax0, ay0, ax1, ay1) in enumerate(boxes):
+        w = ax1 - ax0
+        area = w * (ay1 - ay0)
+        if not area > 0:
+            continue
+        cx, cy = ax0 + w * 0.5, ay0 + (ay1 - ay0) * 0.5
+        p = bisect.bisect_right(bottoms, cy) - 1
+        while p >= 0 and reach[p] >= cy:
+            j = order[p][1]
+            p -= 1
+            bx0, by0, bx1, by1 = boxes[j]
+            if by1 >= cy and bx0 <= cx <= bx1 and j != i and j not in drop:
+                iw = min(ax1, bx1) - max(ax0, bx0)
+                ih = min(ay1, by1) - max(ay0, by0)
+                if bx1 - bx0 >= w and (iw if iw > 0 else 0.0) \
+                        * (ih if ih > 0 else 0.0) > 0.8 * area:
+                    drop.add(i)
+                    break
     return [t for i, t in enumerate(text_lines) if i not in drop]
-
-
-def isclose(a: float, b: float, tol: float = JOINT_TOL) -> bool:
-    return abs(a - b) <= tol
-
-
-def seg_is_horizontal(x0, y0, x1, y1, thickness_tol: float = LINE_TOL) -> bool:
-    return (y1 - y0) <= thickness_tol and (x1 - x0) > (y1 - y0)
-
-
-def seg_is_vertical(x0, y0, x1, y1, thickness_tol: float = LINE_TOL) -> bool:
-    return (x1 - x0) <= thickness_tol and (y1 - y0) > (x1 - x0)
 
 
 def rects_to_segments(rects, thickness_tol: float = LINE_TOL):
@@ -127,10 +126,11 @@ def rects_to_segments(rects, thickness_tol: float = LINE_TOL):
             x0, x1 = x1, x0
         if y1 < y0:
             y0, y1 = y1, y0
-        if seg_is_horizontal(x0, y0, x1, y1, thickness_tol):
+        w, h = x1 - x0, y1 - y0
+        if h <= thickness_tol and w > h:      # thin and wide
             yc = (y0 + y1) / 2.0
             horizontal.append((x0, yc, x1, yc))
-        elif seg_is_vertical(x0, y0, x1, y1, thickness_tol):
+        elif w <= thickness_tol and h > w:    # thin and tall
             xc = (x0 + x1) / 2.0
             vertical.append((xc, y0, xc, y1))
         else:  # a filled box: its outline is four ruling lines
@@ -216,20 +216,23 @@ def merge_intervals(intervals, gap: float = 0.0):
 def connected_components(n: int, edges) -> list[int]:
     """Union-find: component id per node (used to group ruling segments
     into table regions). Deterministic: component id = smallest member.
+    The finds are inlined (path halving): a dense grid page unions
+    hundreds of thousands of joint edges.
     """
     parent = list(range(n))
-
-    def find(i):
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
     for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    return [find(i) for i in range(n)]
+        while parent[a] != a:
+            parent[a] = a = parent[parent[a]]
+        while parent[b] != b:
+            parent[b] = b = parent[parent[b]]
+        if a < b:
+            parent[b] = a
+        elif b < a:
+            parent[a] = b
+    out = []
+    for i in range(n):
+        r = parent[i]
+        while parent[r] != r:
+            r = parent[r]
+        out.append(r)
+    return out

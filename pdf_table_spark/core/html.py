@@ -17,8 +17,11 @@ serializer.
 from __future__ import annotations
 
 import re
+from operator import attrgetter
 
 from .lattice import LogicalCell
+
+_COL = attrgetter("col")
 
 
 def cells_to_html(cells, table_width: float | None = None) -> str:
@@ -31,6 +34,7 @@ def cells_to_html(cells, table_width: float | None = None) -> str:
     for c in cells:
         by_row.setdefault(c.row, []).append(c)
     n_rows = max((c.row + c.row_span for c in cells), default=0)
+    with_width = bool(table_width and table_width > 0)
     # rows collapsed by the all-rowspan-equal fix: their covering spans
     # are erased, so the rows must stay omitted; every OTHER anchor-less
     # covered row needs an explicit empty <tr> or the rendered grid
@@ -38,7 +42,7 @@ def cells_to_html(cells, table_width: float | None = None) -> str:
     collapsed: set[int] = set()
     parts = ['<table border="1">', "<tbody>"]
     for row_idx in range(n_rows):
-        cols = sorted(by_row.get(row_idx, ()), key=lambda c: c.col)
+        cols = sorted(by_row.get(row_idx, ()), key=_COL)
         if not cols and row_idx in collapsed:
             continue
         spans = [c.row_span for c in cols if c.row_span > 1]
@@ -50,17 +54,18 @@ def cells_to_html(cells, table_width: float | None = None) -> str:
             collapsed.update(range(row_idx + 1, row_idx + spans[0]))
         parts.append("<tr>")
         for c in cols:
-            colspan = f' colspan="{int(c.col_span)}"' if c.col_span > 1 else ""
-            rowspan = f' rowspan="{int(c.row_span)}"' if c.row_span > 1 else ""
-            if fix_row_span_same:
-                rowspan = ""
-            width = ""
-            if table_width and table_width > 0 and c.x1 > c.x0:
-                width = f' width="{round((c.x1 - c.x0) / table_width * 100)}%"'
-            text = (c.text.replace("&", "&amp;")
-                    .replace("<", "&lt;").replace(">", "&gt;")
-                    .replace("\n", "<br/>"))
-            parts.append(f"<td{colspan}{rowspan}{width}>{text}</td>")
+            td = "<td"
+            if c.col_span > 1:
+                td += f' colspan="{int(c.col_span)}"'
+            if c.row_span > 1 and not fix_row_span_same:
+                td += f' rowspan="{int(c.row_span)}"'
+            if with_width and c.x1 > c.x0:
+                td += f' width="{round((c.x1 - c.x0) / table_width * 100)}%"'
+            text = c.text
+            if "&" in text or "<" in text or ">" in text or "\n" in text:
+                text = (text.replace("&", "&amp;").replace("<", "&lt;")
+                        .replace(">", "&gt;").replace("\n", "<br/>"))
+            parts.append(f"{td}>{text}</td>")
         parts.append("</tr>")
     parts.append("</tbody>")
     parts.append("</table>")

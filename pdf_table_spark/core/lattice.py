@@ -29,7 +29,7 @@ from .quality import (compute_accuracy, compute_whitespace,
 MIN_JOINTS = 4  # a table needs at least a 2x2 joint grid (contour gate F8)
 
 
-@dataclass
+@dataclass(slots=True)
 class LogicalCell:
     row: int
     col: int
@@ -68,56 +68,68 @@ def find_table_regions(horizontal, vertical, tol: float = G.JOINT_TOL):
     left-right (reading order, reference O3).
 
     The H×V joint test is one numpy broadcast (same comparisons as
-    ``G.segment_intersection``, extended-by-tol tips) — the pairwise
-    Python loop was ~half the whole pipeline's CPU on dense pages.
+    ``G.segment_intersection``, extended-by-tol tips); the hits come
+    back as Python ints and everything after it is plain Python over
+    the segment tuples, which beats numpy scalars on pages of ~20
+    rulings and on dense grids alike (measured).
     """
-    import numpy as np
-
-    segs = [("h", s) for s in horizontal] + [("v", s) for s in vertical]
-    edges: list[tuple[int, int]] = []
-    joints_all = []
+    n_h = len(horizontal)
+    segs = horizontal + vertical
+    hs: list[int] = []
+    vs: list[int] = []
     if horizontal and vertical:
+        import numpy as np
+
         ha = np.asarray(horizontal, dtype=np.float64)  # (x0, y, x1, y)
         va = np.asarray(vertical, dtype=np.float64)    # (x, y0, x, y1)
         hx0, hy, hx1 = ha[:, 0:1], ha[:, 1:2], ha[:, 2:3]
         vx, vy0, vy1 = va[:, 0], va[:, 1], va[:, 3]
         hit = ((hx0 - tol <= vx) & (vx <= hx1 + tol)
                & (vy0 - tol <= hy) & (hy <= vy1 + tol))
-        n_h = len(horizontal)
-        for i, j in np.argwhere(hit):          # row-major: same order
-            edges.append((int(i), n_h + int(j)))  # as the old loop
-            joints_all.append(
-                (int(i), n_h + int(j), (float(vx[j]), float(hy[i, 0]))))
-    comp = G.connected_components(len(segs), edges)
+        hi, vi = np.nonzero(hit)   # row-major, like the pairwise loop
+        hs, vs = hi.tolist(), (vi + n_h).tolist()
+    comp = G.connected_components(len(segs), zip(hs, vs))
 
-    groups: dict[int, dict] = {}
-    for idx, (d, s) in enumerate(segs):
-        c = comp[idx]
-        g = groups.setdefault(c, {"h": [], "v": [], "joints": []})
-        g[d].append(s)
-    for i, j, pt in joints_all:
-        groups[comp[i]]["joints"].append(pt)
+    members: dict[int, list] = {}
+    for k, c in enumerate(comp):
+        m = members.get(c)
+        if m is None:
+            members[c] = [k]
+        else:
+            m.append(k)
+    # each component's distinct joints; a grid point is hit by up to
+    # four ruling pieces
+    points: dict[int, dict] = {}
+    for i, j in zip(hs, vs):
+        p = (segs[j][0], segs[i][1])
+        d = points.get(comp[i])
+        if d is None:
+            points[comp[i]] = {p: None}
+        else:
+            d[p] = None
 
     regions = []
-    for g in groups.values():
-        if not g["h"] or not g["v"]:
+    for c, ks in members.items():
+        if c not in points:   # a lone segment, or rulings of one axis
             continue
         # dedup joints on rounded key (reference A8 joint normalization)
         # BEFORE the joint-count gate: double-drawn strokes would
         # otherwise double-count joints and let degenerate 1-row
         # "tables" through, swallowing page prose
         seen, joints = set(), []
-        for x, y in sorted(g["joints"]):
+        for x, y in sorted(points[c]):
             k = (round(x), round(y))
             if k not in seen:
                 seen.add(k)
                 joints.append((x, y))
         if len(joints) < MIN_JOINTS:
             continue
-        xs = [s[0] for s in g["h"]] + [s[2] for s in g["h"]] + [s[0] for s in g["v"]]
-        ys = [s[1] for s in g["v"]] + [s[3] for s in g["v"]] + [s[1] for s in g["h"]]
+        h = [segs[k] for k in ks if k < n_h]
+        v = [segs[k] for k in ks if k >= n_h]
+        xs = [s[0] for s in h] + [s[2] for s in h] + [s[0] for s in v]
+        ys = [s[1] for s in v] + [s[3] for s in v] + [s[1] for s in h]
         bbox = (min(xs), min(ys), max(xs), max(ys))
-        regions.append((bbox, sorted(g["h"]), sorted(g["v"]), joints))
+        regions.append((bbox, sorted(h), sorted(v), joints))
     # reading order: top of page first (PDF y grows up), then left
     regions.sort(key=lambda r: (-r[0][3], r[0][0]))
     return regions
@@ -179,6 +191,16 @@ def build_grid(bbox, joints, line_tol: float = G.LINE_TOL):
     return cols, rows
 
 
+def _first_close(axis, values, tol):
+    """``{v: index of the first axis value c with abs(v - c) <= tol,
+    or None}`` for each distinct ``v``: a grid's ruling pieces share a
+    handful of coordinates (per table ~17 vertical pieces on ~4
+    distinct x), so each is looked up once."""
+    return {v: next((k for k, c in enumerate(axis) if abs(v - c) <= tol),
+                    None)
+            for v in set(values)}
+
+
 def mark_edges(cols, rows, v_segs, h_segs, joint_tol: float = G.JOINT_TOL):
     """Edge booleans per base cell: (left, right, top, bottom) arrays.
 
@@ -192,62 +214,61 @@ def mark_edges(cols, rows, v_segs, h_segs, joint_tol: float = G.JOINT_TOL):
     right = [[False] * nc for _ in range(nr)]
     top = [[False] * nc for _ in range(nr)]
     bottom = [[False] * nc for _ in range(nr)]
-
-    # plain python sweeps on purpose: axes have <= ~25 entries, where a
-    # listcomp beats a numpy round trip per segment (measured)
     tol = joint_tol
+    col_at = _first_close(
+        [c[0] for c in cols],
+        [s[0] for s in v_segs] + [s[0] for s in h_segs]
+        + [s[2] for s in h_segs], tol)
+    row_at = _first_close(
+        [r[0] for r in rows],
+        [s[1] for s in h_segs] + [s[1] for s in v_segs]
+        + [s[3] for s in v_segs], tol)
+    x_last, y_last = cols[-1][1], rows[-1][1]
 
-    def first_close(pairs, val):
-        for idx, c in pairs:
-            if abs(val - c) <= tol:
-                return idx
-        return None
-
-    col_pairs = [(i, c[0]) for i, c in enumerate(cols)]
-    row_pairs = [(r, rv[0]) for r, rv in enumerate(rows)]
-
+    # row r has y-interval (top=rows[r][0], bottom=rows[r][1])
     for x, y0, _, y1 in v_segs:
-        ci = first_close(col_pairs, x)
-        at_right_border = G.isclose(x, cols[-1][1], joint_tol)
-        # rows covered: row r has y-interval (top=rows[r][0], bottom=rows[r][1])
-        J = first_close(row_pairs, y1)
+        J = row_at[y1]
         if J is None:
             continue
-        k = first_close(row_pairs, y0)
-        K = k if k is not None else nr
-        while J < K:
-            if ci is not None:
-                left[J][ci] = True
-                if ci > 0:
-                    right[J][ci - 1] = True
-            elif at_right_border:
-                right[J][nc - 1] = True
-            J += 1
+        K = row_at[y0]
+        covered = range(J, nr if K is None else K)
+        ci = col_at[x]
+        if ci is not None:
+            for r in covered:
+                left[r][ci] = True
+            if ci > 0:
+                for r in covered:
+                    right[r][ci - 1] = True
+        elif abs(x - x_last) <= tol:
+            for r in covered:
+                right[r][nc - 1] = True
 
     for x0, y, x1, _ in h_segs:
-        ri = first_close(row_pairs, y)
-        at_bottom_border = G.isclose(y, rows[-1][1], joint_tol)
-        J = first_close(col_pairs, x0)
+        J = col_at[x0]
         if J is None:
             continue
-        k = first_close(col_pairs, x1)
-        K = k if k is not None else nc
-        while J < K:
-            if ri is not None:
-                top[ri][J] = True
-                if ri > 0:
-                    bottom[ri - 1][J] = True
-            elif at_bottom_border:
-                bottom[nr - 1][J] = True
-            J += 1
+        K = col_at[x1]
+        covered = range(J, nc if K is None else K)
+        ri = row_at[y]
+        if ri is not None:
+            row = top[ri]
+            for c in covered:
+                row[c] = True
+            if ri > 0:
+                row = bottom[ri - 1]
+                for c in covered:
+                    row[c] = True
+        elif abs(y - y_last) <= tol:
+            row = bottom[nr - 1]
+            for c in covered:
+                row[c] = True
 
     # set_border
     for r in range(nr):
         left[r][0] = True
         right[r][nc - 1] = True
-    for c in range(nc):
-        top[0][c] = True
-        bottom[nr - 1][c] = True
+    top[0] = [True] * nc
+    bottom[nr - 1] = [True] * nc
     return left, right, top, bottom
 
 
@@ -263,36 +284,46 @@ def merge_logical_cells(cols, rows, left, right, top, bottom):
     """
     nr, nc = len(rows), len(cols)
     taken = [[False] * nc for _ in range(nr)]
+    # open[r][c]: no ruling between base cells (r, c) and (r, c + 1)
+    open_ = [[not rr[c] and not ll[c + 1] for c in range(nc - 1)]
+             for rr, ll in zip(right, left)]
     cells: list[LogicalCell] = []
     cell_of: dict[tuple, LogicalCell] = {}
     for r in range(nr):
+        taken_r, open_r = taken[r], open_[r]
         for c in range(nc):
-            if taken[r][c]:
+            if taken_r[c]:
                 continue
             # grow right while no ruling between column c2 and c2+1
             c2 = c
-            while c2 + 1 < nc and not right[r][c2] and not left[r][c2 + 1] \
-                    and not taken[r][c2 + 1]:
+            while c2 + 1 < nc and open_r[c2] and not taken_r[c2 + 1]:
                 c2 += 1
             # grow down while every column in [c, c2] lacks a bottom
             # ruling AND the absorbed row has no interior vertical
             # ruling inside [c, c2] (otherwise a visible vertical line
             # would end up inside the merged cell)
             r2 = r
-            while r2 + 1 < nr and all(
-                    not bottom[r2][cc] and not top[r2 + 1][cc]
-                    and not taken[r2 + 1][cc]
-                    for cc in range(c, c2 + 1)) and all(
-                    not right[r2 + 1][cc] and not left[r2 + 1][cc + 1]
-                    for cc in range(c, c2)):
-                r2 += 1
-            cell = LogicalCell(
-                row=r, col=c, row_span=r2 - r + 1, col_span=c2 - c + 1,
-                x0=cols[c][0], y0=rows[r2][1], x1=cols[c2][1], y1=rows[r][0])
-            cells.append(cell)
-            for rr in range(r, r2 + 1):
+            while r2 + 1 < nr:
+                bot, nxt, tk = bottom[r2], top[r2 + 1], taken[r2 + 1]
                 for cc in range(c, c2 + 1):
-                    taken[rr][cc] = True
+                    if bot[cc] or nxt[cc] or tk[cc]:
+                        break
+                else:
+                    if all(open_[r2 + 1][c:c2]):
+                        r2 += 1
+                        continue
+                break
+            # row, col, row_span, col_span, x0, y0, x1, y1
+            cell = LogicalCell(r, c, r2 - r + 1, c2 - c + 1,
+                               cols[c][0], rows[r2][1], cols[c2][1], rows[r][0])
+            cells.append(cell)
+            if r2 == r and c2 == c:   # the scan never looks back
+                cell_of[(r, c)] = cell
+                continue
+            for rr in range(r, r2 + 1):
+                tk = taken[rr]
+                for cc in range(c, c2 + 1):
+                    tk[cc] = True
                     cell_of[(rr, cc)] = cell
     return cells, cell_of
 
@@ -368,11 +399,16 @@ def place_text(table: RuledTable, text_lines,
     spanned area).
     """
     pos_errors: list[float] = []
-    ordered = sorted(text_lines, key=lambda t: (-t["y0"], t["x0"]))
-    for t0 in ordered:
+    rows, cols, cell_of = table.rows, table.cols, table.cell_of
+    # per row: the column cuts between two different logical cells —
+    # never inside a merged cell
+    row_cuts = [[cols[c][0] for c in range(1, len(cols))
+                 if cell_of[(r, c - 1)] is not cell_of[(r, c)]]
+                for r in range(len(rows))]
+    for t0 in sorted(text_lines, key=lambda t: (-t["y0"], t["x0"])):
         yc = (t0["y0"] + t0["y1"]) / 2.0
         r_idx = -1
-        for r, (ytop, ybot) in enumerate(table.rows):
+        for r, (ytop, ybot) in enumerate(rows):
             if ybot < yc < ytop:
                 r_idx = r
                 break
@@ -383,32 +419,26 @@ def place_text(table: RuledTable, text_lines,
             # the text entirely, since the caller already consumed it
             # out of the page remainder
             best_d, best_r = None, 0
-            for r, (ytop, ybot) in enumerate(table.rows):
+            for r, (ytop, ybot) in enumerate(rows):
                 d = max(ybot - yc, yc - ytop, 0.0)
                 if best_d is None or d < best_d:
                     best_d, best_r = d, r
             r_idx = best_r
-        cuts = []
-        for c in range(1, len(table.cols)):
-            cx = table.cols[c][0]
-            if (t0["x0"] + cut_tol < cx < t0["x1"] - cut_tol
-                    and table.cell_of[(r_idx, c - 1)]
-                    is not table.cell_of[(r_idx, c)]):
-                cuts.append(cx)
-        for t in split_text_at_cuts(t0, cuts):
+        lo, hi = t0["x0"] + cut_tol, t0["x1"] - cut_tol
+        cuts = [cx for cx in row_cuts[r_idx] if lo < cx < hi]
+        for t in split_text_at_cuts(t0, cuts) if cuts else (t0,):
+            tx0, tx1 = t["x0"], t["x1"]
             best_c, best_ov = -1, -1.0
-            for c, (cx0, cx1) in enumerate(table.cols):
-                if cx0 <= t["x1"] and cx1 >= t["x0"]:
-                    lo = max(cx0, t["x0"])
-                    hi = min(cx1, t["x1"])
-                    ov = abs(hi - lo) / abs(cx1 - cx0)
-                else:
-                    ov = -1.0
-                if ov > best_ov:
-                    best_ov, best_c = ov, c
+            for c, (cx0, cx1) in enumerate(cols):
+                if cx0 <= tx1 and cx1 >= tx0:
+                    # abs(min(cx1, tx1) - max(cx0, tx0)) / abs(cx1 - cx0)
+                    ov = abs((tx1 if tx1 < cx1 else cx1)
+                             - (tx0 if tx0 > cx0 else cx0)) / abs(cx1 - cx0)
+                    if ov > best_ov:
+                        best_ov, best_c = ov, c
             if best_c == -1:
                 continue
-            cell = table.cell_of[(r_idx, best_c)]
+            cell = cell_of[(r_idx, best_c)]
             pos_errors.append(placement_error(
                 t, (cell.y1, cell.y0), (cell.x0, cell.x1)))
             txt = t["text"].strip("\n").strip()
@@ -441,19 +471,20 @@ def extract_ruled_tables(rects, text_lines, line_tol: float = G.LINE_TOL,
         # char-split, inside piece placed, outside piece released back
         # to the page remainder (reference pdf_utils.py:726-801, diff=2)
         diff = 2.0
+        x_lo, y_lo = bbox[0] - diff, bbox[1] - diff
+        x_hi, y_hi = bbox[2] + diff, bbox[3] + diff
         in_table = []
         for i, t in enumerate(text_lines):
             if i in consumed:
                 continue
             yc = (t["y0"] + t["y1"]) / 2.0
-            if not (bbox[1] - diff <= yc <= bbox[3] + diff):
+            if not (y_lo <= yc <= y_hi):
                 continue
             xc = (t["x0"] + t["x1"]) / 2.0
-            if bbox[0] - diff <= xc <= bbox[2] + diff:
+            if x_lo <= xc <= x_hi:
                 in_table.append((i, t))
-            elif bbox[0] - diff <= t["x0"] <= bbox[2] + diff:
-                inside, outside = split_line_at_x(
-                    t, bbox[0] - diff, bbox[2] + diff)
+            elif x_lo <= t["x0"] <= x_hi:
+                inside, outside = split_line_at_x(t, x_lo, x_hi)
                 if inside is not None and inside["text"].strip():
                     in_table.append((i, inside))
                     if outside is not None and outside["text"].strip():

@@ -53,8 +53,9 @@ The polygon/logi contract decodes via ``core.logicell``.
 
 from __future__ import annotations
 
-import json
 import re
+
+from .page import load_page
 
 ROW_GROUP_TOL = 3.0  # sort_bbox's same-row y threshold (":186-193")
 
@@ -586,7 +587,7 @@ def extract_ocr_page(payload: str):
     accuracy, whitespace) like ``extract_pdf_page``; the OCR path
     carries no A9 metrics (the reference attaches accuracy only in the
     digital flavors), so both are None."""
-    page = json.loads(payload)
+    page = load_page(payload)
     # crop-local geometry merges into page space FIRST (the reference
     # merges before any page-level geometry pass), so the 180° vote
     # below flips everything in one coordinate system

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import json
 
+import orjson
+
 from . import geometry as G
 from . import html as H
 from . import lattice as L
@@ -55,10 +57,12 @@ def rotate_page_90cw(page: dict) -> dict:
         return y, w - x
 
     def box(o):
-        x0a, y0a = pt(o["x0"], o["y0"])
-        x1a, y1a = pt(o["x1"], o["y1"])
-        return {**o, "x0": min(x0a, x1a), "y0": min(y0a, y1a),
-                "x1": max(x0a, x1a), "y1": max(y0a, y1a)}
+        # pt() of both corners, then min/max per axis (spelled as
+        # conditionals: this runs for every object of a rotated page)
+        xa, xb = o["y0"], o["y1"]
+        ya, yb = w - o["x0"], w - o["x1"]
+        return {**o, "x0": xb if xb < xa else xa, "y0": yb if yb < ya else ya,
+                "x1": xb if xb > xa else xa, "y1": yb if yb > ya else ya}
 
     out = {**page, "width": page["height"], "height": w,
            "text_lines": [
@@ -174,6 +178,26 @@ def deskew_page(page: dict) -> dict:
 
 FLAVORS = ("auto", "lattice", "stream")
 
+_DIGITS = bytes.maketrans(b"123456789", b"000000000")
+
+
+def load_page(payload: str):
+    """``json.loads(payload)`` for a page payload (``pdf_page``,
+    ``ocr_page``), parsed by orjson where that gives the same value.
+
+    orjson rejects what json accepts beyond the JSON spec (NaN,
+    Infinity, out-of-range floats, lone surrogates) and reads an
+    integer outside 64 bits as a float. Such a payload (one orjson or
+    UTF-8 refuses, or any with a run of 19 digits) goes to json, which
+    also raises the error a broken payload gets."""
+    try:
+        raw = payload.encode()
+        if b"0" * 19 not in raw.translate(_DIGITS):
+            return orjson.loads(raw)
+    except (UnicodeEncodeError, orjson.JSONDecodeError):
+        pass
+    return json.loads(payload)
+
 
 def extract_pdf_page(page_json: str, media_ref: str,
                      flavor: str = "auto"):
@@ -189,7 +213,7 @@ def extract_pdf_page(page_json: str, media_ref: str,
     """
     if flavor not in FLAVORS:
         raise ValueError(f"unknown flavor {flavor!r}; one of {FLAVORS}")
-    page = json.loads(page_json)
+    page = load_page(page_json)
     if page.get("rotation"):
         page = normalize_rotation(page)
     if page.get("segs"):
@@ -236,7 +260,8 @@ def extract_pdf_page(page_json: str, media_ref: str,
     # J4/F5, reference filter_layout_figure) is a mis-detected figure →
     # drop it and release its text back to the page.
     kept_tables = []
-    img_boxes = [(im["x0"], im["y0"], im["x1"], im["y1"]) for im in images]
+    img_boxes = [(im["x0"], im["y0"], im["x1"], im["y1"])
+                 for im in images] if tables else []
     fig_boxes = [
         (ly["x0"], ly["y0"], ly["x1"], ly["y1"])
         for ly in page.get("layout") or []
@@ -263,7 +288,8 @@ def extract_pdf_page(page_json: str, media_ref: str,
         stream_tables, s_consumed = S.extract_stream_tables(remainder)
     for cells, _bbox, _acc, _ws in stream_tables:
         for c in cells:
-            c.texts = [ocr_post_process(x) for x in c.texts]
+            if c.texts:
+                c.texts = [ocr_post_process(x) for x in c.texts]
     prose_lines = [t for i, t in enumerate(remainder)
                    if i not in s_consumed]
 
@@ -274,7 +300,8 @@ def extract_pdf_page(page_json: str, media_ref: str,
     frags = []
     for t in kept_tables:
         for c in t.cells:
-            c.texts = [ocr_post_process(x) for x in c.texts]
+            if c.texts:
+                c.texts = [ocr_post_process(x) for x in c.texts]
         html = H.cells_to_html(t.cells, table_width=t.bbox[2] - t.bbox[0])
         frags.append((t.bbox[3], t.bbox[0], "table_html", html, "",
                       t.accuracy, t.whitespace))

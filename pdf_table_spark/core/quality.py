@@ -26,12 +26,13 @@ def placement_error(t: dict, row_iv: tuple, col_iv: tuple) -> float:
     """
     y_top, y_bot = row_iv
     x_l, x_r = col_iv
-    y0_off = abs(t["y0"] - y_top) if t["y0"] > y_top else 0.0
-    y1_off = abs(t["y1"] - y_bot) if t["y1"] < y_bot else 0.0
-    x0_off = abs(t["x0"] - x_l) if t["x0"] < x_l else 0.0
-    x1_off = abs(t["x1"] - x_r) if t["x1"] > x_r else 0.0
-    x_ext = abs(t["x0"] - t["x1"]) or 1.0
-    y_ext = abs(t["y0"] - t["y1"]) or 1.0
+    x0, y0, x1, y1 = t["x0"], t["y0"], t["x1"], t["y1"]
+    y0_off = abs(y0 - y_top) if y0 > y_top else 0.0
+    y1_off = abs(y1 - y_bot) if y1 < y_bot else 0.0
+    x0_off = abs(x0 - x_l) if x0 < x_l else 0.0
+    x1_off = abs(x1 - x_r) if x1 > x_r else 0.0
+    x_ext = abs(x0 - x1) or 1.0
+    y_ext = abs(y0 - y1) or 1.0
     return ((x_ext * (y0_off + y1_off)) + (y_ext * (x0_off + x1_off))) \
         / (x_ext * y_ext)
 

@@ -58,25 +58,6 @@ class TextEdge:
         self.intersections = 0
         self.is_valid = False
 
-    def update_coords(self, x, y0, edge_tol=EDGE_TOL):
-        """Extend the edge down to a new textline's y0 when the gap is
-        within edge_tol; x becomes the running mean."""
-        if abs(self.y0 - y0) <= edge_tol:
-            self.x = ((self.intersections * self.x + x)
-                      / float(self.intersections + 1))
-            self.y0 = y0
-            self.intersections += 1
-            if self.intersections > TEXTEDGE_REQUIRED_ELEMENTS:
-                self.is_valid = True
-
-
-def _x_coord(t: dict, align: str) -> float:
-    if align == "left":
-        return t["x0"]
-    if align == "right":
-        return t["x1"]
-    return t["x0"] + (t["x1"] - t["x0"]) / 2.0
-
 
 class TextEdges:
     """left/right/middle edge sets over a page's textlines."""
@@ -93,18 +74,27 @@ class TextEdges:
                 self._update(t)
 
     def _update(self, t: dict):
-        for align in ALIGNS:
-            x = _x_coord(t, align)
-            found = None
-            for te in self._edges[align]:
+        """Join the line's left/right/middle x to the first edge within
+        0.5 of it, or start a new edge there. A joined edge extends down
+        to the line's y0 when the gap is within edge_tol, and its x
+        becomes the running mean."""
+        x0, x1, y0 = t["x0"], t["x1"], t["y0"]
+        edge_tol = self.edge_tol
+        # left, right, middle (ALIGNS order)
+        for align, x in zip(ALIGNS, (x0, x1, x0 + (x1 - x0) / 2.0)):
+            edges = self._edges[align]
+            for te in edges:
                 if abs(te.x - x) <= 0.5:
-                    found = te
+                    if abs(te.y0 - y0) <= edge_tol:
+                        n = te.intersections
+                        te.x = (n * te.x + x) / float(n + 1)
+                        te.y0 = y0
+                        te.intersections = n = n + 1
+                        if n > TEXTEDGE_REQUIRED_ELEMENTS:
+                            te.is_valid = True
                     break
-            if found is None:
-                self._edges[align].append(
-                    TextEdge(x, t["y0"], t["y1"], align))
             else:
-                found.update_coords(x, t["y0"], self.edge_tol)
+                edges.append(TextEdge(x, y0, t["y1"], align))
 
     def get_relevant(self) -> list[TextEdge]:
         sums = {
@@ -136,13 +126,14 @@ class TextEdges:
 
         sum_h = 0.0
         for t in textlines:
-            sum_h += t["y1"] - t["y0"]
+            y0, y1 = t["y0"], t["y1"]
+            sum_h += y1 - y0
             for area in areas:
-                if t["y0"] >= area[1] and t["y1"] <= area[3]:
+                if y0 >= area[1] and y1 <= area[3]:
                     area[0] = min(t["x0"], area[0])
-                    area[1] = min(t["y0"], area[1])
+                    area[1] = min(y0, area[1])
                     area[2] = max(area[2], t["x1"])
-                    area[3] = max(area[3], t["y1"])
+                    area[3] = max(area[3], y1)
                     break
         avg_h = sum_h / float(len(textlines)) if textlines else 0.0
         return [
@@ -311,14 +302,15 @@ def build_area_table(textlines, row_tol: float = ROW_TOL,
             r_idx = min(
                 range(len(rows)),
                 key=lambda r: max(rows[r][1] - yc, yc - rows[r][0], 0.0))
+        tx0, tx1 = t["x0"], t["x1"]
         best_c, best_ov = 0, -1.0
         for c, (cx0, cx1) in enumerate(cols):
-            if cx0 <= t["x1"] and cx1 >= t["x0"]:
-                ov = (min(cx1, t["x1"]) - max(cx0, t["x0"])) / abs(cx1 - cx0)
-            else:
-                ov = -1.0
-            if ov > best_ov:
-                best_ov, best_c = ov, c
+            if cx0 <= tx1 and cx1 >= tx0:
+                # (min(cx1, tx1) - max(cx0, tx0)) / abs(cx1 - cx0)
+                ov = ((tx1 if tx1 < cx1 else cx1)
+                      - (tx0 if tx0 > cx0 else cx0)) / abs(cx1 - cx0)
+                if ov > best_ov:
+                    best_ov, best_c = ov, c
         pos_errors.append(placement_error(t, rows[r_idx], cols[best_c]))
         txt = t["text"].strip("\n").strip()
         if txt:

@@ -52,8 +52,8 @@ def ocr_post_process(text: str) -> str:
     clean = text.replace(" ", "")
     if len(clean) == 1 and _OCR_ZERO_RE.match(clean):
         return "0"
-    if clean and _NUMBERISH_RE.match(clean) and any(ch.isdigit() for ch in clean):
-        if text.count(".") > 1:
-            last = text.rfind(".")
-            return text[:last].replace(".", ",") + text[last:]
+    if text.count(".") > 1 and _NUMBERISH_RE.match(clean) \
+            and any(ch.isdigit() for ch in clean):
+        last = text.rfind(".")
+        return text[:last].replace(".", ",") + text[last:]
     return text

@@ -83,8 +83,8 @@ def _process_batch(batch: pa.RecordBatch,
                    flavor: str = "auto") -> pa.RecordBatch:
     cols = {name: batch.column(i).to_pylist()
             for i, name in enumerate(batch.schema.names)}
-    doc_ids, offsets, frag_idxs = [], [], []
-    kinds, texts, refs, accs, wss = [], [], [], [], []
+    out = ([], [], [], [], [], [], [], [])
+    doc_ids, offsets, frag_idxs, *frag_cols = out
     for doc_id, offset, kind, text, ref in zip(
             cols["doc_id"], cols["offset"], cols["kind"],
             cols["text"], cols["media_ref"]):
@@ -100,16 +100,13 @@ def _process_batch(batch: pa.RecordBatch,
             # alternative (a join back to all doc_ids) which would
             # broadcast/shuffle every doc_id at 10^12 scale.
             frags = [(EMPTY_SENTINEL, "", "", None, None)]
-        for i, (k, t, r, acc, ws) in enumerate(frags):
-            doc_ids.append(doc_id)
-            offsets.append(-1 if offset is None else offset)
-            frag_idxs.append(i)
-            kinds.append(k)
-            texts.append(t)
-            refs.append(r)
-            accs.append(acc)
-            wss.append(ws)
-    out = (doc_ids, offsets, frag_idxs, kinds, texts, refs, accs, wss)
+        n = len(frags)
+        doc_ids += [doc_id] * n
+        offsets += [-1 if offset is None else offset] * n
+        frag_idxs += range(n)
+        # (kind, text, media_ref, accuracy, whitespace) columns
+        for col, vals in zip(frag_cols, zip(*frags)):
+            col += vals
     return pa.RecordBatch.from_arrays(
         [pa.array(c, f.type) for c, f in zip(out, ARROW_SCHEMA)],
         schema=ARROW_SCHEMA)

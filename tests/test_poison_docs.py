@@ -160,3 +160,65 @@ def test_malformed_ocr_page_quarantined():
     assert ("error", "m1") in kinds
     assert ("paragraph", "") in kinds
     assert out[0]["text"].startswith("ocr_page:")
+
+
+_LINES = ('{"x0": 72.0, "y0": 700.0, "x1": 300.0, "y1": 712.0, '
+          '"text": "Alpha beta"}, {"x0": 72.0, "y0": 680.0, "x1": 280.0, '
+          '"y1": 692.0, "text": "gamma delta"}')
+
+
+def _page(extra_line="", extra_field=""):
+    line = f", {extra_line}" if extra_line else ""
+    return (f'{{"width": 612, "height": 792{extra_field}, '
+            f'"text_lines": [{_LINES}{line}]}}')
+
+
+def test_page_payload_parse_keeps_json_semantics():
+    """Page payloads go through orjson, but every payload decodes to
+    what ``json.loads`` gives, including what orjson rejects or reads
+    differently (NaN, Infinity, out-of-range floats, lone surrogates,
+    integers past 64 bits), and extraction gives the fragments pinned
+    from the ``json.loads`` decoder. A broken payload is still a
+    ``JSONDecodeError`` quarantine."""
+    import json
+    import math
+
+    from pdf_table_spark.core.page import extract_span, load_page
+
+    payloads = {
+        "nan_field": _page(extra_field=', "dpi": NaN'),
+        "nan_coord": _page('{"x0": NaN, "y0": 600.0, "x1": 90.0, '
+                           '"y1": 612.0, "text": "nan line"}'),
+        "infinity": _page('{"x0": 72.0, "y0": 500.0, "x1": Infinity, '
+                          '"y1": 512.0, "text": "wide"}',
+                          ', "scale": -Infinity, "far": 1e400'),
+        "lone_surrogate": _page('{"x0": 72.0, "y0": 600.0, "x1": 90.0, '
+                                '"y1": 612.0, "text": "x\\ud800y"}'),
+        "int_2_70": _page(f'{{"x0": 72.0, "y0": 600.0, "x1": {2 ** 70}, '
+                          f'"y1": 612.0, "text": "huge"}}',
+                          f', "lo": -{2 ** 63 + 1}, "hi": {2 ** 64 - 1}'),
+        "plain": _page(),
+    }
+    for name, p in payloads.items():
+        got, want = load_page(p), json.loads(p)
+        assert repr(got) == repr(want), name   # NaN-safe, types included
+    assert load_page(payloads["int_2_70"])["text_lines"][2]["x1"] == 2 ** 70
+    assert math.isinf(load_page(payloads["infinity"])["far"])
+
+    para = [("paragraph", "Alpha betagamma delta", "", None, None)]
+    want = {
+        "nan_field": para,
+        "nan_coord": [("error", "pdf_page:ValueError", "m.png", None, None)],
+        "infinity": [("error", "pdf_page:OverflowError", "m.png",
+                      None, None)],
+        "lone_surrogate": [("paragraph",
+                            "Alpha betagamma deltax\ud800y", "", None, None)],
+        "int_2_70": [("paragraph", "Alpha betagamma deltahuge", "",
+                      None, None)],
+        "plain": para,
+    }
+    for name, p in payloads.items():
+        assert extract_span("pdf_page", p, "m.png") == want[name], name
+    truncated = payloads["plain"][:-3]
+    assert extract_span("pdf_page", truncated, "m.png") == [
+        ("error", "pdf_page:JSONDecodeError", "m.png", None, None)]

@@ -314,3 +314,202 @@ def test_exact_substring_dedup_matches_brute_force(spark, docs):
     assert got == want
     for n_tok, n_rm, clean in got.values():
         assert n_tok - n_rm == (len(clean.split()) if clean else 0)
+
+
+# ---- pdf_page hot-loop primitives against brute-force definitions ----
+
+_half = st.integers(0, 40).map(lambda v: v / 2)     # exact ties likely
+_extent = st.integers(0, 12).map(lambda v: v / 2)   # 0 → zero-area box
+
+
+@st.composite
+def _text_boxes(draw):
+    """Boxes on a half-unit grid plus derived twins, nested boxes and
+    boxes shifted just inside / outside the 80% overlap threshold."""
+    base = draw(st.lists(st.tuples(_half, _half, _extent, _extent),
+                         max_size=10))
+    boxes = list(base)
+    for x, y, w, h in base:
+        kind = draw(st.sampled_from(
+            ["none", "twin", "nested", "shift_in", "shift_out", "wider"]))
+        if kind == "twin":
+            boxes.append((x, y, w, h))
+        elif kind == "nested":
+            boxes.append((x + w / 4, y + h / 4, w / 2, h / 2))
+        elif kind == "shift_in":
+            boxes.append((x + w / 10, y, w, h))
+        elif kind == "shift_out":
+            boxes.append((x + w / 4, y, w, h))
+        elif kind == "wider":
+            boxes.append((x - 1, y, w + 2, h))
+    boxes = draw(st.permutations(boxes))
+    return [{"x0": x, "y0": y, "x1": x + w, "y1": y + h, "text": f"t{i}"}
+            for i, (x, y, w, h) in enumerate(boxes)]
+
+
+def _dedup_brute(lines):
+    """U3 by definition: box i is dropped when some not-yet-dropped box
+    j != i (scanned in input order) covers more than 80% of i's area
+    and is at least as wide."""
+    b = [(t["x0"], t["y0"], t["x1"], t["y1"]) for t in lines]
+    drop = set()
+    for i, (ax0, ay0, ax1, ay1) in enumerate(b):
+        area = (ax1 - ax0) * (ay1 - ay0)
+        for j, (bx0, by0, bx1, by1) in enumerate(b):
+            if j == i or j in drop or not area > 0:
+                continue
+            inter = (max(0.0, min(ax1, bx1) - max(ax0, bx0))
+                     * max(0.0, min(ay1, by1) - max(ay0, by0)))
+            if inter > 0.8 * area and bx1 - bx0 >= ax1 - ax0:
+                drop.add(i)
+                break
+    return [t for i, t in enumerate(lines) if i not in drop]
+
+
+@given(_text_boxes())
+@settings(deadline=None, max_examples=300)
+def test_dedup_overlapping_boxes_matches_definition(lines):
+    from pdf_table_spark.core.geometry import dedup_overlapping_boxes
+    assert dedup_overlapping_boxes(lines) == _dedup_brute(lines)
+
+
+_h_seg = st.tuples(_half, _half, _extent).map(
+    lambda s: (s[0], s[1], s[0] + 2 * s[2], s[1]))
+_v_seg = st.tuples(_half, _half, _extent).map(
+    lambda s: (s[0], s[1], s[0], s[1] + 2 * s[2]))
+
+
+def _regions_brute(horizontal, vertical, tol=2.0):
+    """Table regions by definition: pairwise ``segment_intersection``
+    joints, union-find over the joined segments, per component the
+    sorted joints deduped on rounded keys, at least 4 of them."""
+    from pdf_table_spark.core.geometry import segment_intersection
+    from pdf_table_spark.core.lattice import MIN_JOINTS
+    segs = list(horizontal) + list(vertical)
+    parent = list(range(len(segs)))
+
+    def find(a):
+        while parent[a] != a:
+            a = parent[a]
+        return a
+
+    hits = []
+    for i, h in enumerate(horizontal):
+        for j, v in enumerate(vertical):
+            pt = segment_intersection(h, v, tol)
+            if pt is not None:
+                a, b = find(i), find(len(horizontal) + j)
+                parent[max(a, b)] = min(a, b)
+                hits.append((i, pt))
+    regions = []
+    for root in sorted({find(k) for k in range(len(segs))}):
+        ks = [k for k in range(len(segs)) if find(k) == root]
+        h = [segs[k] for k in ks if k < len(horizontal)]
+        v = [segs[k] for k in ks if k >= len(horizontal)]
+        seen, joints = set(), []
+        for x, y in sorted(pt for i, pt in hits if find(i) == root):
+            if (round(x), round(y)) not in seen:
+                seen.add((round(x), round(y)))
+                joints.append((x, y))
+        if not h or not v or len(joints) < MIN_JOINTS:
+            continue
+        xs = [s[0] for s in h] + [s[2] for s in h] + [s[0] for s in v]
+        ys = [s[1] for s in v] + [s[3] for s in v] + [s[1] for s in h]
+        regions.append(((min(xs), min(ys), max(xs), max(ys)),
+                        sorted(h), sorted(v), joints))
+    regions.sort(key=lambda r: (-r[0][3], r[0][0]))
+    return regions
+
+
+@given(st.lists(_h_seg, max_size=10), st.lists(_v_seg, max_size=10))
+@settings(deadline=None, max_examples=300)
+def test_find_table_regions_matches_pairwise_union_find(horizontal,
+                                                         vertical):
+    from pdf_table_spark.core.lattice import find_table_regions
+    assert find_table_regions(horizontal, vertical) == \
+        _regions_brute(horizontal, vertical)
+
+
+def _mark_edges_brute(cols, rows, v_segs, h_segs, tol):
+    """Table.set_edges + set_border by definition: each axis lookup is
+    the first axis value within ``abs(v - c) <= tol``."""
+    nr, nc = len(rows), len(cols)
+    edges = [[[False] * nc for _ in range(nr)] for _ in range(4)]
+    left, right, top, bottom = edges
+
+    def first_close(axis, v):
+        return next((k for k, c in enumerate(axis) if abs(v - c) <= tol),
+                    None)
+
+    col_axis, row_axis = [c[0] for c in cols], [r[0] for r in rows]
+    for x, y0, _, y1 in v_segs:
+        J, K = first_close(row_axis, y1), first_close(row_axis, y0)
+        if J is None:
+            continue
+        ci = first_close(col_axis, x)
+        for r in range(J, nr if K is None else K):
+            if ci is not None:
+                left[r][ci] = True
+                if ci > 0:
+                    right[r][ci - 1] = True
+            elif abs(x - cols[-1][1]) <= tol:
+                right[r][nc - 1] = True
+    for x0, y, x1, _ in h_segs:
+        J, K = first_close(col_axis, x0), first_close(col_axis, x1)
+        if J is None:
+            continue
+        ri = first_close(row_axis, y)
+        for c in range(J, nc if K is None else K):
+            if ri is not None:
+                top[ri][c] = True
+                if ri > 0:
+                    bottom[ri - 1][c] = True
+            elif abs(y - rows[-1][1]) <= tol:
+                bottom[nr - 1][c] = True
+    for r in range(nr):
+        left[r][0] = right[r][nc - 1] = True
+    for c in range(nc):
+        top[0][c] = bottom[nr - 1][c] = True
+    return left, right, top, bottom
+
+
+@st.composite
+def _ruled_grid(draw, tol=2.0):
+    """Column / row axes with gaps from 1 to 6 (two axis values may both
+    lie within tol of a ruling), and rulings placed exactly tol, just
+    inside or just outside tol, or anywhere, from an axis value."""
+    def axis():
+        steps = draw(st.lists(st.integers(2, 12), min_size=2, max_size=6))
+        vals = [10.0]
+        for s in steps:
+            vals.append(vals[-1] + s / 2)
+        return vals
+
+    xs, ys = axis(), axis()[::-1]
+    cols = list(zip(xs, xs[1:]))
+    rows = list(zip(ys, ys[1:]))
+    off = st.sampled_from([0.0, tol, -tol, tol + 0.25, -tol - 0.25,
+                           tol - 0.25, 0.5])
+
+    def near(vals):
+        return draw(st.one_of(
+            st.builds(lambda v, o: v + o, st.sampled_from(vals), off),
+            st.integers(0, 120).map(lambda v: v / 2)))
+
+    v_segs, h_segs = [], []
+    for _ in range(draw(st.integers(0, 12))):
+        x, a, b = near(xs), near(ys), near(ys)
+        v_segs.append((x, min(a, b), x, max(a, b)))
+    for _ in range(draw(st.integers(0, 12))):
+        y, a, b = near(ys), near(xs), near(xs)
+        h_segs.append((min(a, b), y, max(a, b), y))
+    return cols, rows, v_segs, h_segs
+
+
+@given(_ruled_grid())
+@settings(deadline=None, max_examples=300)
+def test_mark_edges_matches_first_close_definition(grid):
+    from pdf_table_spark.core.lattice import mark_edges
+    cols, rows, v_segs, h_segs = grid
+    assert mark_edges(cols, rows, v_segs, h_segs, 2.0) == \
+        _mark_edges_brute(cols, rows, v_segs, h_segs, 2.0)
