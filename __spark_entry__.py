@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,6 +125,17 @@ DK_SHINGLES = (
 DK_H60 = "cast('0x' || substr(md5({s}), 1, 15) as bigint)"
 
 P = 2_147_483_647
+
+
+def _overlap(*builders: Callable[[], object]) -> list:
+    """Run independent arm builders from driver threads and return
+    their results in argument order. Their eager driver work (collects,
+    broadcasts, large expression parses) overlaps (guide §2.6): py4j
+    serves each Python thread on its own connection, and job
+    descriptions/FIFO scheduling keep the jobs apart."""
+    from concurrent.futures import ThreadPoolExecutor
+    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+        return [f.result() for f in [pool.submit(b) for b in builders]]
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -432,29 +444,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # approxQuantile, the DSIR fit's tagged bucket collect) are
         # independent — submit them from two driver threads so the
         # jobs overlap instead of running back-to-back (guide §2.6);
-        # job descriptions/FIFO scheduling make this safe
-        from concurrent.futures import ThreadPoolExecutor
+        # job descriptions/FIFO scheduling make this safe. The DSIR
+        # fit is the one-scan tagged fit (identical integers to the
+        # two-frame fit) + a shared persisted scored frame so the
+        # topk and gumbel arms rank the same scoring pass instead of
+        # re-hashing every gram per arm (released by
+        # dedup.release_caches())
         d = _t(spark, sf_dir, "documents")
-
-        def _budget():
-            return (sampling.select_token_budget(
+        budget, lr = _overlap(
+            lambda: sampling.select_token_budget(
                 _t(spark, sf_dir, "documents", fan=False), 10_000,
                 score_col="n_chars")
-                .select(F.lit("budget").alias("arm"), "doc_id",
-                        "score", F.col("n_tok").alias("aux"),
-                        F.col("cum_before").alias("aux2")))
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_budget = pool.submit(_budget)
-            # one-scan tagged fit (identical integers to the
-            # two-frame fit) + a shared persisted scored frame so the
-            # topk and gumbel arms rank the same scoring pass instead
-            # of re-hashing every gram per arm (released by
-            # dedup.release_caches())
-            f_lr = pool.submit(dsir.fit_logratio_e6_tagged,
-                               d, "source = 'src1'")
-            budget = f_budget.result()
-            lr = f_lr.result()
+            .select(F.lit("budget").alias("arm"), "doc_id", "score",
+                    F.col("n_tok").alias("aux"),
+                    F.col("cum_before").alias("aux2")),
+            lambda: dsir.fit_logratio_e6_tagged(d, "source = 'src1'"))
         raw = d.filter("source <> 'src1'")
         scored = dedup.persist(
             dsir.score_e6(raw, lr).select("doc_id", "score_e6"))
@@ -705,22 +709,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # are independent, so they run from two driver threads
         # (guide §2.6 — py4j serves each Python thread on its own
         # connection, so the parses overlap)
-        from concurrent.futures import ThreadPoolExecutor
         d = _t(spark, sf_dir, "documents")
         cols = ["pred_lang", "top_score", "margin"]
-
-        def b_sw():
-            return text.lang_id(d).select(
-                "doc_id", F.lit("stopword").alias("method"), *cols)
-
-        def b_ng():
-            return text.lang_id_ngram(d).select(
-                "doc_id", F.lit("trigram").alias("method"), *cols)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_sw, f_ng = pool.submit(b_sw), pool.submit(b_ng)
-            sw, ng = f_sw.result(), f_ng.result()
-        return sw.unionByName(ng)
+        return reduce(DataFrame.unionByName, _overlap(
+            lambda: text.lang_id(d).select(
+                "doc_id", F.lit("stopword").alias("method"), *cols),
+            lambda: text.lang_id_ngram(d).select(
+                "doc_id", F.lit("trigram").alias("method"), *cols)))
 
     def q_fingerprint_both(spark, sf_dir):
         # md5 content fingerprint + winnowing fingerprint summary
@@ -849,32 +844,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # two large centroid-literal expressions, the brute/LSH arms
         # are pure expression construction — so they run from a small
         # thread pool (guide §2.6) instead of back-to-back; the union
-        # order is fixed by the result list
-        from concurrent.futures import ThreadPoolExecutor
+        # order is fixed by the argument order
         emb = _t(spark, sf_dir, "embeddings")
 
-        def b_brute():
-            return similarity.cosine_topk(emb, k=5).select(
-                F.lit("brute").alias("method"), "query_id",
+        def arm(method, topk):
+            return lambda: topk(emb, k=5).select(
+                F.lit(method).alias("method"), "query_id",
                 "neighbor_id", "cosine", "rank")
 
-        def b_lsh():
-            return similarity.ann_topk_lsh(emb, k=5).select(
-                F.lit("lsh").alias("method"), "query_id",
-                "neighbor_id", "cosine", "rank")
-
-        def b_ivf():
-            return similarity.ann_topk_ivf(emb, k=5).select(
-                F.lit("ivf").alias("method"), "query_id",
-                "neighbor_id", "cosine", "rank")
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            parts = [f.result() for f in
-                     [pool.submit(b) for b in (b_brute, b_lsh, b_ivf)]]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, _overlap(
+            arm("brute", similarity.cosine_topk),
+            arm("lsh", similarity.ann_topk_lsh),
+            arm("ivf", similarity.ann_topk_ivf)))
 
     def q_media_sampling(spark, sf_dir):
         # audio 30s chunk windows + every-5th video frames, tagged.
@@ -918,10 +899,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_model_scores(spark, sf_dir):
         # all three broadcast-weights heads: page layout + doc quality
         # + page orientation (M1/M4's PULC classifier half)
-        from concurrent.futures import ThreadPoolExecutor
-
         from pdf_table_spark.spark.model_stage import (
-            score_doc_quality, score_page_layout, score_page_orientation)
+            score_doc_quality, score_layout_cnn, score_orient_cnn,
+            score_page_layout, score_page_orientation)
         # selectExpr strings: each arm's ~9-column Column-object select
         # cost ~20 py4j round trips of driver chatter per build —
         # ONE parsed string per arm is plan-identical. The five arm
@@ -929,77 +909,60 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # thread pool so their eager driver work overlaps (guide §2.6).
         sp_df = _spans_df(spark, sf_dir)
         docs_df = _t(spark, sf_dir, "documents")
+        fx = _fixture_dir(sf_dir)
+        cnn_npz = os.path.join(fx, "ocr_cnn.npz")
 
-        def b_lay():
-            return score_page_layout(sp_df).selectExpr(
+        def scans(name):
+            return _read_pq(spark, os.path.join(fx, name))
+
+        return reduce(DataFrame.unionByName, _overlap(
+            lambda: score_page_layout(sp_df).selectExpr(
                 "'layout' as head", "doc_id", "offset",
                 "score_table as score_a", "score_text as score_b",
                 "score_figure as score_c",
                 "cast(null as double) as score_d",
-                "layout_class as label")
-
-        def b_qu():
-            return score_doc_quality(docs_df).selectExpr(
+                "layout_class as label"),
+            lambda: score_doc_quality(docs_df).selectExpr(
                 "'quality' as head",
                 "cast(doc_id as string) as doc_id",
                 "cast(-1 as int) as offset",
                 "score_keep as score_a", "score_drop as score_b",
                 "cast(null as double) as score_c",
                 "cast(null as double) as score_d",
-                "pred as label")
-
-        def b_ori():
-            return score_page_orientation(sp_df).selectExpr(
+                "pred as label"),
+            lambda: score_page_orientation(sp_df).selectExpr(
                 "'orient' as head", "doc_id", "offset",
                 "score_rot0 as score_a", "score_rot90 as score_b",
                 "score_rot180 as score_c", "score_rot270 as score_d",
-                "concat_ws(':', pred_rot, declared_rot) as label")
-        # orient-CNN arm (round 5c): REAL image-based vote — rotate
-        # the scan 4 ways, det+rec forward each, argmax of decoded
-        # confidence mass. The oracle's pred_rot column is the PLANTED
-        # angle (encode-side), so a wrong distributed prediction fails
-        # the hash gate; vote scores are the same-artifact
-        # single-process twin.
-        from pdf_table_spark.spark.model_stage import (score_layout_cnn,
-                                                       score_orient_cnn)
-        fx = _fixture_dir(sf_dir)
-
-        def b_ocnn():
-            oscans = _read_pq(
-                spark, os.path.join(fx, "orient_scan_pages.parquet"))
-            return score_orient_cnn(
-                oscans, weights_path=os.path.join(fx, "ocr_cnn.npz")
+                "concat_ws(':', pred_rot, declared_rot) as label"),
+            # orient-CNN arm (round 5c): REAL image-based vote —
+            # rotate the scan 4 ways, det+rec forward each, argmax of
+            # decoded confidence mass. The oracle's pred_rot column is
+            # the PLANTED angle (encode-side), so a wrong distributed
+            # prediction fails the hash gate; vote scores are the
+            # same-artifact single-process twin.
+            lambda: score_orient_cnn(
+                scans("orient_scan_pages.parquet"), weights_path=cnn_npz
             ).selectExpr(
                 "'orient_cnn' as head", "media_ref as doc_id",
                 "cast(-1 as int) as offset",
                 "score_rot0 as score_a", "score_rot90 as score_b",
                 "score_rot180 as score_c", "score_rot270 as score_d",
-                "cast(pred_rot as string) as label")
-
-        # layout-CNN arm (round 5c): REAL image-based layout analysis
-        # — coarse-ink region proposals classified table/text/figure
-        # from conv-derived features via a broadcast linear head. The
-        # oracle's label column (class + tight bbox) is the PLANTED
-        # truth; scores are the single-process same-artifact twin.
-        def b_lcnn():
-            lscans = _read_pq(
-                spark, os.path.join(fx, "layout_scan_pages.parquet"))
-            return score_layout_cnn(
-                lscans, weights_path=os.path.join(fx, "ocr_cnn.npz")
+                "cast(pred_rot as string) as label"),
+            # layout-CNN arm (round 5c): REAL image-based layout
+            # analysis — coarse-ink region proposals classified
+            # table/text/figure from conv-derived features via a
+            # broadcast linear head. The oracle's label column (class
+            # + tight bbox) is the PLANTED truth; scores are the
+            # single-process same-artifact twin.
+            lambda: score_layout_cnn(
+                scans("layout_scan_pages.parquet"), weights_path=cnn_npz
             ).selectExpr(
                 "'layout_cnn' as head", "media_ref as doc_id",
                 "offset",
                 "score_table as score_a", "score_text as score_b",
                 "score_figure as score_c",
-                "cast(null as double) as score_d", "label")
-
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            lay, qu, ori, ocnn, lcnn = [
-                f.result() for f in [pool.submit(b) for b in
-                                     (b_lay, b_qu, b_ori, b_ocnn,
-                                      b_lcnn)]]
-        return (lay.unionByName(qu).unionByName(ori)
-                .unionByName(ocnn).unionByName(lcnn))
+                "cast(null as double) as score_d", "label")))
 
     def q_exports(spark, sf_dir):
         # S7 fan-out melted long (fmt, payload) + merged doc HTML.
@@ -1076,8 +1039,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #    shape/cells/HTML + free lines. The oracle twin is the
         #    PLANTED truth (encode-side, media_gen.ocr_scan_truth) —
         #    an independent inverse, not a same-code golden.
-        from concurrent.futures import ThreadPoolExecutor
-
         from pdf_table_spark.spark.model_stage import (
             score_det_cnn, score_det_contours, score_neural_decoders,
             score_ocr_cnn, score_table_structure)
@@ -1088,41 +1049,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and parquet footer reads overlap (guide §2.6)
         sp_df = _spans_df(spark, sf_dir)
 
-        def b_tsr():
-            return score_table_structure(
-                sp_df, weights_path=os.path.join(fx, "tsr_head.npz"))
+        def fxp(name):
+            return os.path.join(fx, name)
 
-        def b_det():
-            return score_det_contours(
-                sp_df, weights_path=os.path.join(fx, "det_head.npz"))
-
-        def b_neu():
-            return score_neural_decoders(
-                sp_df, weights_path=os.path.join(fx, "neural_head.npz"))
-
-        def b_cnn():
-            scans = _read_pq(
-                spark, os.path.join(fx, "scan_pages.parquet"))
-            return score_det_cnn(
-                scans, weights_path=os.path.join(fx, "det_cnn.npz")
+        return reduce(DataFrame.unionByName, _overlap(
+            lambda: score_table_structure(
+                sp_df, weights_path=fxp("tsr_head.npz")),
+            lambda: score_det_contours(
+                sp_df, weights_path=fxp("det_head.npz")),
+            lambda: score_neural_decoders(
+                sp_df, weights_path=fxp("neural_head.npz")),
+            lambda: score_det_cnn(
+                _read_pq(spark, fxp("scan_pages.parquet")),
+                weights_path=fxp("det_cnn.npz")
             ).select(F.col("media_ref").alias("doc_id"),
-                     F.col("box_idx").alias("offset"), "kind", "text")
-
-        def b_ocr():
-            ocr_scans = _read_pq(
-                spark, os.path.join(fx, "ocr_scan_pages.parquet"))
-            return score_ocr_cnn(
-                ocr_scans, weights_path=os.path.join(fx, "ocr_cnn.npz")
+                     F.col("box_idx").alias("offset"), "kind", "text"),
+            lambda: score_ocr_cnn(
+                _read_pq(spark, fxp("ocr_scan_pages.parquet")),
+                weights_path=fxp("ocr_cnn.npz")
             ).select(F.col("media_ref").alias("doc_id"), "offset",
-                     "kind", "text")
-
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            tsr, det, neu, cnn, ocr = [
-                f.result() for f in [pool.submit(b) for b in
-                                     (b_tsr, b_det, b_neu, b_cnn,
-                                      b_ocr)]]
-        return (tsr.unionByName(det).unionByName(neu)
-                .unionByName(cnn).unionByName(ocr))
+                     "kind", "text")))
 
     return {
         "extract_spans": q_extract_spans,

@@ -53,22 +53,13 @@ import math
 
 import numpy as np
 
-from .nn import maxpool2d
+from .nn import maxpool2d, sigmoid
 
 # processer_centernet.py:166-167 + group_bbox_by_gbox defaults
 CN_PARAMS = {"K": 1000, "MK": 4000, "score_thresh": 0.3,
              "v2c_dist_thred": 2.0, "c2v_dist_thred": 0.5}
 
 CN_VERSION = "centernet-postprocess-v1"
-
-
-def sigmoid(x: np.ndarray) -> np.ndarray:
-    out = np.empty_like(x, dtype=np.float64)
-    pos = x >= 0
-    out[pos] = 1.0 / (1.0 + np.exp(-x[pos]))
-    e = np.exp(x[~pos])
-    out[~pos] = e / (1.0 + e)
-    return out
 
 
 def peak_keep(heat: np.ndarray, kernel: int = 3) -> np.ndarray:

@@ -3,9 +3,9 @@
 The reference decodes embedded media with PIL / cv2 / ffmpeg
 (``src/pdftable/utils/image_utils.py``, ``model/ocr_pdf`` raster
 inputs); none of those libraries exist in this sandbox, so until this
-module the S4 decode step was a documented deterministic stub
-(``ops/multimodal.FAKE_DECODE``). This module makes the decode REAL
-for every format a pure-Python + numpy implementation can cover:
+module the S4 decode step was a documented deterministic stub. This
+module makes the decode REAL for every format a pure-Python + numpy
+implementation can cover:
 
   * PNG  — full zlib inflate (stdlib) + per-row unfiltering (all five
            filter types: none/sub/up/average/paeth) in numpy; color

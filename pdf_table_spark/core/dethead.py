@@ -31,17 +31,13 @@ planted-interval twin in SQL (same-extent dets merged by x-gap).
 
 from __future__ import annotations
 
+from statistics import median
+
 # 3x1 parameter head: (overlap_f, space_f, split_f) — the y-overlap
 # ratio gate and two multiples of the page's median glyph width.
 DET_WEIGHTS = [[0.5], [0.5], [2.0]]
 
 DET_VERSION = "det-rec-linear-v1"
-
-
-def _median(vals: list[float]) -> float:
-    s = sorted(vals)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
 
 
 def detect_lines(page: dict, weights=None) -> list[dict]:
@@ -53,7 +49,7 @@ def detect_lines(page: dict, weights=None) -> list[dict]:
     glyphs = page.get("glyphs") or []
     if not glyphs:
         return []
-    mw = _median([g["x1"] - g["x0"] for g in glyphs])
+    mw = median([g["x1"] - g["x0"] for g in glyphs])
     space_gap = space_f * mw
     split_gap = split_f * mw
 
@@ -122,7 +118,7 @@ def contour_blobs(lines: list[dict], tol_f: float = 1.5,
     (y0, x0)."""
     if not lines:
         return []
-    mh = _median([ln["y1"] - ln["y0"] for ln in lines])
+    mh = median([ln["y1"] - ln["y0"] for ln in lines])
     tol = tol_f * mh
     ordered = sorted(lines, key=lambda d: (d["y0"], d["x0"]))
     blobs: list[list[dict]] = [[ordered[0]]]

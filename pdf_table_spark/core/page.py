@@ -26,6 +26,7 @@ Pipeline stage mapping (reference lifecycle ocr_system_task.py:549-734):
 from __future__ import annotations
 
 import json
+from statistics import median
 
 import orjson
 
@@ -118,9 +119,7 @@ def estimate_skew_deg(segs, max_abs_deg: float = 10.0) -> float:
             devs.append(dev)
     if not devs:
         return 0.0
-    devs.sort()
-    n = len(devs)
-    return devs[n // 2] if n % 2 else (devs[n // 2 - 1] + devs[n // 2]) / 2.0
+    return median(devs)
 
 
 def deskew_page(page: dict) -> dict:

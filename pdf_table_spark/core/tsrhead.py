@@ -29,6 +29,8 @@ hand-check (tests pin a worked example).
 
 from __future__ import annotations
 
+from statistics import median
+
 # default 3x4 head: rows = (col_idx, row_idx, bias); cols =
 # (left, right, top, bottom) float logical axes. The .5 bias row is
 # deliberate: exact .5 must round DOWN through round_logi.
@@ -67,12 +69,6 @@ def _nearest(reps: list[float], v: float) -> int:
     return best
 
 
-def _median(vals: list[float]) -> float:
-    s = sorted(vals)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
-
-
 def grid_assign(det_cells: list[dict]) -> list[tuple[int, int]]:
     """Cluster det-box centers into a (row, col) grid. Tolerance is
     half the median box height (rows) / width (cols) — boxes in the
@@ -82,8 +78,8 @@ def grid_assign(det_cells: list[dict]) -> list[tuple[int, int]]:
         return []
     cy = [(d["y0"] + d["y1"]) / 2.0 for d in det_cells]
     cx = [(d["x0"] + d["x1"]) / 2.0 for d in det_cells]
-    row_tol = _median([d["y1"] - d["y0"] for d in det_cells]) / 2.0
-    col_tol = _median([d["x1"] - d["x0"] for d in det_cells]) / 2.0
+    row_tol = median([d["y1"] - d["y0"] for d in det_cells]) / 2.0
+    col_tol = median([d["x1"] - d["x0"] for d in det_cells]) / 2.0
     rows = _cluster_1d(cy, row_tol)
     cols = _cluster_1d(cx, col_tol)
     return [(_nearest(rows, y), _nearest(cols, x))

@@ -5,53 +5,27 @@ transforms: parse the emitted table HTML back to a cell grid
 (``core.html.parse_table_html``) and render CSV / Markdown / JSON-rows
 strings, one row per extracted table.
 
-Runs as one Arrow stage over the (doc_id, offset, text) rows of
-``kind='table_html'`` spans — the grid walk is pure python on strings
-already shuffled once; no extra shuffle.
+Runs as one Arrow row stage (``spark.stages.map_rows``) over the
+(doc_id, offset, text) rows of ``kind='table_html'`` spans — the grid
+walk is pure python on strings already shuffled once; no extra
+shuffle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.export_render import render_table_html as _render
-
-EXPORT_COLS = ("doc_id", "offset", "n_rows", "n_cols", "csv",
-               "markdown", "json_rows", "sqlite_sql", "excel_xml",
-               "html_db")
+from ..spark.stages import map_rows
 
 EXPORT_SCHEMA = ("doc_id string, offset int, n_rows int, n_cols int, "
                  "csv string, markdown string, json_rows string, "
                  "sqlite_sql string, excel_xml string, html_db string")
 
-_ARROW_SCHEMA = pa.schema([
-    ("doc_id", pa.string()), ("offset", pa.int32()),
-    ("n_rows", pa.int32()), ("n_cols", pa.int32()),
-    ("csv", pa.string()), ("markdown", pa.string()),
-    ("json_rows", pa.string()), ("sqlite_sql", pa.string()),
-    ("excel_xml", pa.string()), ("html_db", pa.string())])
 
-
-def _export_batches(
-        batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        cols = {n: batch.column(i).to_pylist()
-                for i, n in enumerate(batch.schema.names)}
-        out = {k: [] for k in EXPORT_COLS}
-        for doc_id, offset, html in zip(
-                cols["doc_id"], cols["offset"], cols["text"]):
-            rendered = _render(html or "")
-            out["doc_id"].append(doc_id)
-            out["offset"].append(offset)
-            for name, val in zip(EXPORT_COLS[2:], rendered):
-                out[name].append(val)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(out[f.name], f.type) for f in _ARROW_SCHEMA],
-            schema=_ARROW_SCHEMA)
+def _export_row(doc_id, offset, html):
+    return [(doc_id, offset, *_render(html or ""))]
 
 
 def export_tables(flat_out: DataFrame) -> DataFrame:
@@ -59,4 +33,4 @@ def export_tables(flat_out: DataFrame) -> DataFrame:
     one row per table with csv/markdown/json renderings."""
     tables = flat_out.filter(F.col("kind") == "table_html") \
         .select("doc_id", "offset", "text")
-    return tables.mapInArrow(_export_batches, schema=EXPORT_SCHEMA)
+    return map_rows(tables, _export_row, EXPORT_SCHEMA)

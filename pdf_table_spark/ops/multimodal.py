@@ -2,7 +2,8 @@
 
 Images/audio/video are ``binary`` columns (or ``media_ref`` pointers)
 with struct metadata; decode / feature-extract / frame-sample run as
-Arrow stages over ``mapInPandas``.
+per-payload Python functions inside one Arrow row stage each
+(``spark.stages.map_rows``: Arrow batches in and out, no pandas).
 
 The decode step is REAL for PNG / BMP / PGM / PPM images and WAV audio
 (``core.codecs`` — pure stdlib zlib/struct/wave + numpy, no external
@@ -11,26 +12,24 @@ pixel-decoded, feature vectors are 4x4 luma-grid means over the real
 pixels, and ``thumbnail_media`` runs a full distributed decode →
 box-mean resize → PNG re-encode. Formats without a pure-Python decoder
 here (JPEG/WebP/GIF — entropy-coded codecs out of sandbox scope) and
-non-media payloads fall back to ``FAKE_DECODE``: a deterministic
-pseudo-decode that hashes the payload into plausible dims + a unit-norm
-feature so the Spark plumbing stays exercised with stable, oracle-
-checkable values; swap the fallback for PIL/cv2/ffmpeg in production.
+non-media payloads take a deterministic pseudo-decode that hashes the
+payload into plausible dims + a unit-norm feature so the Spark plumbing
+stays exercised with stable, oracle-checkable values; swap the fallback
+for PIL/cv2/ffmpeg in production.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import codecs
-
-FAKE_DECODE = True  # fall back to pseudo-decode for jpeg/webp/unknown
+from ..sources.corpus import fan_cpu_bound
+from ..spark.stages import map_rows
 
 REAL_FORMATS = ("png", "bmp", "pgm", "ppm")
 
@@ -59,8 +58,6 @@ def _decode_image(payload: bytes):
         except (ValueError, struct.error):
             pass  # magic-prefix collision (e.g. a ref text starting
             # "BM" / "P6") or corrupt media → pseudo-decode fallback
-    if not FAKE_DECODE:  # pragma: no cover - production path
-        raise NotImplementedError("image codec not available in this env")
     digest = hashlib.md5(payload).digest()
     width = 64 + digest[0] * 8
     height = 64 + digest[1] * 8
@@ -72,21 +69,9 @@ def _decode_image(payload: bytes):
     return width, height, fmt, (rng / norm).tolist()
 
 
-def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {"media_ref": [], "n_bytes": [], "width": [], "height": [],
-                "format": [], "feature": []}
-        for ref, payload in zip(pdf["media_ref"].values,
-                                pdf["payload"].values):
-            data = bytes(payload) if payload is not None else b""
-            w, h, fmt, feat = _decode_image(data)
-            rows["media_ref"].append(ref)
-            rows["n_bytes"].append(len(data))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["format"].append(fmt)
-            rows["feature"].append(feat)
-        yield pd.DataFrame(rows)
+def _media_meta(ref, payload):
+    data = payload or b""
+    return [(ref, len(data), *_decode_image(data))]
 
 
 def decode_media(media: DataFrame) -> DataFrame:
@@ -95,9 +80,8 @@ def decode_media(media: DataFrame) -> DataFrame:
     Codec decode is CPU-per-row, so small single-split inputs are
     widened first (``sources.corpus.fan_cpu_bound`` — no-op at
     scale)."""
-    from ..sources.corpus import fan_cpu_bound
-    return fan_cpu_bound(media).mapInPandas(
-        _media_batches, schema=MEDIA_META_SCHEMA)
+    return map_rows(fan_cpu_bound(media.select("media_ref", "payload")),
+                    _media_meta, MEDIA_META_SCHEMA)
 
 
 def resize_media(media: DataFrame, max_w: int = 256,
@@ -130,23 +114,15 @@ def describe_media(media: DataFrame, max_w: int = 256,
     composed shape ran 4 subtree scans + 2 joins ≈ 3.9 s; this single
     stage ≈ 1 s). A real pipeline decodes once and derives everything
     from the pixels in hand."""
-    names = [c.split()[0] for c in DESCRIBE_SCHEMA.split(", ")]
+    def describe(ref, payload):
+        data = payload or b""
+        sw, sh, fmt, _feat = _decode_image(data)
+        scale = min(max_w / sw, max_h / sh, 1.0)
+        return [(ref, int(sw * scale), int(sh * scale), sw, sh, fmt,
+                 len(data))]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"].values,
-                                    pdf["payload"].values):
-                data = bytes(payload) if payload is not None else b""
-                sw, sh, fmt, _feat = _decode_image(data)
-                scale = min(max_w / sw, max_h / sh, 1.0)
-                rows.append((ref, int(sw * scale), int(sh * scale),
-                             sw, sh, fmt, len(data)))
-            yield pd.DataFrame(rows, columns=names)
-
-    from ..sources.corpus import fan_cpu_bound
-    return fan_cpu_bound(media).mapInPandas(
-        batches, schema=DESCRIBE_SCHEMA)
+    return map_rows(fan_cpu_bound(media.select("media_ref", "payload")),
+                    describe, DESCRIBE_SCHEMA)
 
 
 FRAME_SCHEMA = ("media_ref string, frame_idx int, ts_sec double, "
@@ -168,26 +144,15 @@ def sample_frames(videos: DataFrame, every_n: int = 5) -> DataFrame:
             f"sequence(0, cast(n_frames as int) - 1, {every_n})"
         )).alias("frame_idx"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_ref": [], "frame_idx": [], "ts_sec": [],
-                    "frame_feature": []}
-            for ref, fps, idx in zip(pdf["media_ref"].values,
-                                     pdf["fps"].values,
-                                     pdf["frame_idx"].values):
-                key = f"{ref}#frame{int(idx)}".encode()
-                _w, _h, _fmt, feat = _decode_image(key)
-                rows["media_ref"].append(ref)
-                rows["frame_idx"].append(int(idx))
-                # NaN-aware fallback: a null double through Arrow→pandas
-                # arrives as NaN, which is truthy — `fps or 1.0` keeps it
-                f = float(fps) if fps is not None and fps == fps \
-                    and fps != 0 else 1.0
-                rows["ts_sec"].append(float(idx) / f)
-                rows["frame_feature"].append(feat)
-            yield pd.DataFrame(rows)
+    def frame(ref, fps, idx):
+        _w, _h, _fmt, feat = _decode_image(f"{ref}#frame{idx}".encode())
+        # a null fps arrives as None; a NaN or zero fps falls back to
+        # 1.0 too (NaN is truthy, so `fps or 1.0` would keep it)
+        f = float(fps) if fps is not None and fps == fps \
+            and fps != 0 else 1.0
+        return [(ref, idx, float(idx) / f, feat)]
 
-    return frames.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return map_rows(frames, frame, FRAME_SCHEMA)
 
 
 CHUNK_SCHEMA = ("media_ref string, chunk_idx int, start_sec double, "
@@ -210,34 +175,22 @@ def chunk_audio(audio: DataFrame, window_sec: float = 30.0,
         (F.coalesce(F.col("n_samples"), F.lit(0)) > 0)
         & (F.coalesce(F.col("sample_rate"), F.lit(0)) > 0)
     ).select(
-        "media_ref", "sample_rate",
+        "media_ref",
         F.explode(F.expr(
             f"sequence(0, greatest(cast(ceil((n_samples / sample_rate "
             f"- {window_sec}) / {hop_sec}) as int), 0), 1)"
         )).alias("chunk_idx"),
         (F.col("n_samples") / F.col("sample_rate")).alias("dur_sec"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_ref": [], "chunk_idx": [], "start_sec": [],
-                    "end_sec": [], "chunk_feature": []}
-            for ref, idx, dur in zip(pdf["media_ref"].values,
-                                     pdf["chunk_idx"].values,
-                                     pdf["dur_sec"].values):
-                start = float(idx) * hop_sec
-                if start >= float(dur):
-                    continue  # guard the ceil edge on exact multiples
-                key = f"{ref}#chunk{int(idx)}".encode()
-                _w, _h, _fmt, feat = _decode_image(key)
-                rows["media_ref"].append(ref)
-                rows["chunk_idx"].append(int(idx))
-                rows["start_sec"].append(start)
-                rows["end_sec"].append(min(start + window_sec,
-                                           float(dur)))
-                rows["chunk_feature"].append(feat)
-            yield pd.DataFrame(rows)
+    def chunk(ref, idx, dur):
+        start = float(idx) * hop_sec
+        if start >= float(dur):
+            return ()  # guard the ceil edge on exact multiples
+        _w, _h, _fmt, feat = _decode_image(f"{ref}#chunk{idx}".encode())
+        return [(ref, idx, start, min(start + window_sec, float(dur)),
+                 feat)]
 
-    return chunks.mapInPandas(batches, schema=CHUNK_SCHEMA)
+    return map_rows(chunks, chunk, CHUNK_SCHEMA)
 
 
 THUMB_SCHEMA = ("media_ref string, width int, height int, "
@@ -251,34 +204,25 @@ def thumbnail_media(media: DataFrame, max_w: int = 256,
     box-mean resize into a max_w x max_h fit → re-encode as PNG. Rows
     whose payload has no pure-python decoder are dropped (this is the
     production-image path; the metadata-only path for those is
-    ``decode_media``'s fallback). Arrow-batched mapInPandas; output
-    ``thumb`` is a ready-to-store PNG."""
+    ``decode_media``'s fallback). Output ``thumb`` is a ready-to-store
+    PNG."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("media_ref", "width", "height",
-                                    "format", "thumb")}
-            for ref, payload in zip(pdf["media_ref"].values,
-                                    pdf["payload"].values):
-                data = bytes(payload) if payload is not None else b""
-                if codecs.sniff(data) not in REAL_FORMATS:
-                    continue
-                try:
-                    arr, fmt = codecs.decode_image(data)
-                except (ValueError, struct.error):
-                    continue
-                sh, sw = arr.shape[:2]
-                scale = min(max_w / sw, max_h / sh, 1.0)
-                ow, oh = max(1, int(sw * scale)), max(1, int(sh * scale))
-                thumb = codecs.resize_box(arr, ow, oh)
-                rows["media_ref"].append(ref)
-                rows["width"].append(ow)
-                rows["height"].append(oh)
-                rows["format"].append(fmt)
-                rows["thumb"].append(codecs.png_encode(thumb))
-            yield pd.DataFrame(rows)
+    def thumb(ref, payload):
+        data = payload or b""
+        if codecs.sniff(data) not in REAL_FORMATS:
+            return ()
+        try:
+            arr, fmt = codecs.decode_image(data)
+        except (ValueError, struct.error):
+            return ()
+        sh, sw = arr.shape[:2]
+        scale = min(max_w / sw, max_h / sh, 1.0)
+        ow, oh = max(1, int(sw * scale)), max(1, int(sh * scale))
+        return [(ref, ow, oh, fmt,
+                 codecs.png_encode(codecs.resize_box(arr, ow, oh)))]
 
-    return media.mapInPandas(batches, schema=THUMB_SCHEMA)
+    return map_rows(media.select("media_ref", "payload"), thumb,
+                    THUMB_SCHEMA)
 
 
 AUDIO_META_SCHEMA = ("media_ref string, sample_rate int, "
@@ -286,38 +230,26 @@ AUDIO_META_SCHEMA = ("media_ref string, sample_rate int, "
                      "duration_ms long, peak int")
 
 
+def _audio_meta(ref, payload):
+    data = payload or b""
+    if codecs.sniff(data) != "wav":
+        return ()
+    try:
+        samples, rate = codecs.wav_decode(data)
+    except (ValueError, EOFError, struct.error):
+        return ()
+    n, rate = samples.shape[0], int(rate)
+    peak = int(np.abs(samples.astype(np.int32)).max()) if samples.size else 0
+    return [(ref, rate, samples.shape[1], n, n * 1000 // rate, peak)]
+
+
 def decode_audio(media: DataFrame) -> DataFrame:
     """Real WAV decode over (media_ref, payload) rows: stdlib ``wave``
     → 16-bit PCM sample matrix; emits rate/channels/frames, integer
     millisecond duration (floor — engine-independent), and the peak
-    absolute sample. Non-WAV payloads are dropped. Arrow-batched."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("media_ref", "sample_rate",
-                                    "n_channels", "n_frames",
-                                    "duration_ms", "peak")}
-            for ref, payload in zip(pdf["media_ref"].values,
-                                    pdf["payload"].values):
-                data = bytes(payload) if payload is not None else b""
-                if codecs.sniff(data) != "wav":
-                    continue
-                try:
-                    samples, rate = codecs.wav_decode(data)
-                except (ValueError, EOFError, struct.error):
-                    continue
-                rows["media_ref"].append(ref)
-                rows["sample_rate"].append(int(rate))
-                rows["n_channels"].append(int(samples.shape[1]))
-                rows["n_frames"].append(int(samples.shape[0]))
-                rows["duration_ms"].append(
-                    samples.shape[0] * 1000 // int(rate))
-                rows["peak"].append(
-                    int(np.abs(samples.astype(np.int32)).max())
-                    if samples.size else 0)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    absolute sample. Non-WAV payloads are dropped."""
+    return map_rows(media.select("media_ref", "payload"), _audio_meta,
+                    AUDIO_META_SCHEMA)
 
 
 def media_refs_with_payloads(docs_spans: DataFrame) -> DataFrame:

@@ -21,7 +21,9 @@ to), ``materialise(tensors) → model``, the input projection it reads,
     model on every task, and a version-only key would hand one head
     another head's model when two artifacts share a version string;
   * ONE ``mapInArrow`` per head: a narrow plan with a single Python
-    boundary; the linear heads run one matmul per Arrow batch.
+    boundary; the linear heads run one matmul per Arrow batch. The
+    output schema parse and the row-tuple batch build are
+    ``spark.stages``' (the ones ``map_rows`` uses).
 
 The heads are deterministic stand-ins (linear heads over page-geometry
 or text features, parameter vectors for the glyph and postprocess
@@ -49,6 +51,7 @@ from ..core.dethead import DET_VERSION, DET_WEIGHTS
 from ..core.nn import (DET_CNN, DETCNN_VERSION, OCR_DET_CNN, OCRCNN_VERSION,
                        REC_CNN)
 from ..core.tsrhead import TSR_VERSION, TSR_WEIGHTS
+from .stages import batch_from_rows, parse_schema
 
 
 @dataclass(frozen=True)
@@ -115,8 +118,6 @@ def run_head(df: DataFrame, head: Head, weights_path: str | None = None,
     artifacts coexist in one long-lived worker without re-materialising
     either; omitted → the head's literal tensors and version (what the
     DuckDB oracle embeds)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
     if weights_path is not None:
         tensors, version = load_artifact(weights_path)
     else:
@@ -127,8 +128,7 @@ def run_head(df: DataFrame, head: Head, weights_path: str | None = None,
     schema = head.schema
     if "{" in schema:
         schema = schema.format(**dict(rows.dtypes))
-    struct = _parse_datatype_string(schema)
-    arrow_schema = to_arrow_schema(struct)
+    struct, arrow_schema = parse_schema(schema)
     key = (head.name, version)
     materialise, decode = head.materialise, head.decode_batch
 
@@ -136,10 +136,10 @@ def run_head(df: DataFrame, head: Head, weights_path: str | None = None,
         model = _model(key, tensors_bc, materialise, _mat_counter)
         for batch in batches:
             out = decode(model, batch)
-            if isinstance(out, list):  # row tuples → columns
-                out = {f.name: [r[i] for r in out]
-                       for i, f in enumerate(arrow_schema)}
-            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
+            if isinstance(out, list):  # row tuples
+                yield batch_from_rows(out, arrow_schema)
+            else:
+                yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
 
     return rows.mapInArrow(stage, schema=struct)
 

@@ -166,8 +166,9 @@ def test_sample_frames_enumeration_and_determinism(spark):
 
 
 def test_sample_frames_null_fps_falls_back(spark):
-    """NULL fps arrives in pandas as NaN (truthy!) — ts must fall back
-    to 1.0 fps, not become NaN."""
+    """NULL fps arrives in the Arrow row stage as None, and a NaN fps
+    is truthy (so ``fps or 1.0`` would keep it) — either way ts must
+    fall back to 1.0 fps, not become NaN."""
     import math
 
     from pdf_table_spark.ops.multimodal import sample_frames

@@ -51,6 +51,45 @@ def _tbl(spark, name):
     return spark.read.parquet(os.path.join(SF_DIR, f"{name}.parquet"))
 
 
+PER_ROW_OPS = ("extract_documents", "export_tables", "decode_media",
+               "describe_media", "thumbnail_media", "decode_audio",
+               "sample_frames", "chunk_audio")
+
+
+def _per_row_op(spark, name):
+    """``name`` applied to a one-row frame of its input shape."""
+    from pdf_table_spark.ops import multimodal
+    from pdf_table_spark.ops.export import export_tables
+    from pdf_table_spark.spark.pipeline import SPAN_STRUCT, extract_documents
+    if name == "extract_documents":
+        return extract_documents(spark.createDataFrame(
+            [("d0", [("text", "hi", "", 0)])],
+            f"doc_id string, spans array<{SPAN_STRUCT}>"))
+    if name == "export_tables":
+        return export_tables(spark.createDataFrame(
+            [("d0", 0, "table_html", "<table></table>", "")],
+            "doc_id string, offset int, kind string, text string, "
+            "media_ref string"))
+    if name == "sample_frames":
+        return multimodal.sample_frames(spark.createDataFrame(
+            [("v0", 6, 2.0)], "media_ref string, n_frames int, fps double"))
+    if name == "chunk_audio":
+        return multimodal.chunk_audio(spark.createDataFrame(
+            [("a0", 48000, 16000)],
+            "media_ref string, n_samples long, sample_rate int"))
+    return getattr(multimodal, name)(spark.createDataFrame(
+        [("m0", b"P5 1 1 255 x")], "media_ref string, payload binary"))
+
+
+@pytest.mark.parametrize("name", PER_ROW_OPS)
+def test_per_row_operator_plans_one_arrow_stage(spark, name):
+    """Every per-row Python operator crosses the Python boundary once,
+    through ``spark.stages.map_rows``: one MapInArrow, no pandas."""
+    plan = plan_of(_per_row_op(spark, name))
+    assert n_nodes(plan, "MapInArrow") == 1
+    assert "MapInPandas" not in plan
+
+
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata absent")
 class TestPlans:
     def test_pricing_summary_pushdown_and_partial_agg(self, spark, queries):
@@ -265,10 +304,10 @@ class TestPlans:
                    "* 16000").alias("n_samples"),
             F.lit(16000).alias("sample_rate"))
         plan = plan_of(chunk_audio(audio, 30.0, 30.0))
-        assert n_nodes(plan, "MapInPandas") == 1
+        assert n_nodes(plan, "MapInArrow") == 1
         assert "BatchEvalPython" not in plan
         gen = plan.index("Generate")        # explode(sequence(...))
-        py = plan.index("MapInPandas")
+        py = plan.index("MapInArrow")
         assert gen > py  # formatted plan prints leaves LAST: the
         # Generate node sits BELOW (executes before) the Python stage
 
@@ -291,9 +330,9 @@ class TestPlans:
             F.expr(f"cast(({h} % 240) + 1 as int)").alias("n_frames"),
             F.expr(f"cast(({hf} % 30) + 1 as double)").alias("fps"))
         plan = plan_of(sample_frames(videos, every_n=5))
-        assert n_nodes(plan, "MapInPandas") == 1
+        assert n_nodes(plan, "MapInArrow") == 1
         assert "BatchEvalPython" not in plan
-        assert plan.index("Generate") > plan.index("MapInPandas")
+        assert plan.index("Generate") > plan.index("MapInArrow")
 
     def test_simhash_pairs_banded_equijoin(self, spark, queries):
         from pdf_table_spark.ops.dedup import simhash_pairs

@@ -170,7 +170,8 @@ def test_ann_ivf_np_kmeans_recall(spark, planted):
     6 probes — the planted base vectors are near-uniform random, the
     worst case for a coarse quantizer, so the cell-shrink factor is
     modest here; the clustered-data regime where IVF earns its keep is
-    measured at 10^6 vectors in scripts/bench_ann_scale.py)."""
+    measured at 10^6 vectors by scripts/bench_ann_scale.py, last in
+    commit 0232b5d; the result is BENCH_ann.json)."""
     from pdf_table_spark.ops.similarity import (ann_topk_ivf_np,
                                                 cosine_topk_np,
                                                 ivf_centroids_kmeans)
