@@ -4,13 +4,17 @@
                      corpus (interleaved spans → ordered output spans).
 ``queries()``      — one entry per implemented operator family
                      (SURVEY.md §2 + the training-data ops).
-``oracle_sql()``   — DuckDB twins. Extraction queries are checked
-                     against the committed golden parquet (computed by
-                     the single-process reference implementation of the
+``oracle_sql()``   — DuckDB twins, keyed and ordered as ``queries()``.
+                     Extraction queries are checked against the
+                     committed golden parquet (computed by the
+                     single-process reference implementation of the
                      same decoders — the span-sequence-equality gate);
                      ops queries are re-derived in pure SQL from the
                      same md5-based hash formulas so values match
                      bit-for-bit.
+
+Both dicts are built from the one ordered registry,
+``pdf_table_spark.queries.records()``; this module only adapts it.
 """
 
 from __future__ import annotations
@@ -18,3450 +22,33 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 if REPO not in sys.path:  # the package imports below resolve from here
     sys.path.insert(0, REPO)
-FIXTURE_ROOT = os.path.join(REPO, "fixtures")
 
-# --------------------------------------------------------------------
-# helpers
-# --------------------------------------------------------------------
-
-
-def _fixture_dir(sf_dir: str) -> str:
-    """Map the driver's testdata dir (…/sf0.01) to our interleaved
-    fixture corpus of the same scale, generating it if absent."""
-    sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
-    from pdf_table_spark.fixtures.build import ensure_fixtures
-    ensure_fixtures(FIXTURE_ROOT, (sf,))
-    return os.path.join(FIXTURE_ROOT, f"sf{sf}")
-
-
-# DataFrame handles of the live session, keyed by (path, fan).
-# ``spark.read.parquet`` on a bare path re-lists the directory and
-# re-reads a footer for schema inference on EVERY call (~70 ms on a
-# local disk); unlike catalog tables, bare paths get no metadata
-# caching from Spark, and one full query-build pass makes 44 such
-# reads over ~10 distinct paths. Only unexecuted DataFrame definitions
-# are kept: every action still computes from the parquet files. The
-# fixture directories are immutable within a session, so the file
-# listing a handle took at its first read stays valid. A new
-# applicationId clears the memo, so a stopped session's handles are
-# released, never reused. Arm builders read from worker threads;
-# ``setdefault`` hands every racing reader of one key the first
-# stored handle.
-_MEMO: dict[tuple[str, bool], DataFrame] = {}
-_memo_app: str | None = None
-
-
-def _read_pq(spark: SparkSession, path: str,
-             fan: bool = False) -> DataFrame:
-    """The session's handle on ``path``; ``fan=True`` widens a small
-    scan to the session parallelism (``sources.corpus.fan_small_scan``)
-    on top of the plain handle."""
-    global _memo_app
-    app = spark.sparkContext.applicationId
-    if app != _memo_app:
-        _MEMO.clear()
-        _memo_app = app
-    df = _MEMO.get((path, fan))
-    if df is None:
-        if fan:
-            from pdf_table_spark.sources.corpus import fan_small_scan
-            df = fan_small_scan(spark, _read_pq(spark, path), path)
-        else:
-            df = spark.read.parquet(path)
-        df = _MEMO.setdefault((path, fan), df)
-    return df
-
-
-def _spans_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _read_pq(
-        spark,
-        os.path.join(_fixture_dir(sf_dir), "documents_spans.parquet"))
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       fan: bool = True) -> DataFrame:
-    # small single-row-group corpus tables scan as ONE task; fan them
-    # to the session parallelism so interpreted per-row map work
-    # (lang ID, quality gates, fingerprinting) uses every core — a
-    # no-op at web scale (sources.corpus.fan_small_scan). Queries pass
-    # fan=False when the A/B measured the exchange as a net loss:
-    # shuffle-bound plans whose first stage is a cheap hash/projection
-    # straight into a keyed shuffle (fanning splinters the map-side
-    # combine), and trivial projections where 32 tasks of scheduler
-    # overhead exceed the map work. Relational tables are never
-    # fanned: vectorized JVM scan+agg is already cheap single-task,
-    # and their un-rounded double sums (pricing_summary) are
-    # float-association-sensitive to row order, so reordering would
-    # shift the last ulps vs the oracle.
-    return _read_pq(spark, os.path.join(sf_dir, f"{name}.parquet"),
-                    fan and name in ("documents", "embeddings"))
-
-
-def _extract_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_table_spark.spark.pipeline import extract_documents, flatten_output
-    return flatten_output(extract_documents(_spans_df(spark, sf_dir)))
-
-
-GOLDEN_001 = os.path.join(FIXTURE_ROOT, "sf0.01", "golden_flat.parquet")
-SPANS_001 = os.path.join(FIXTURE_ROOT, "sf0.01", "documents_spans.parquet")
-EXPORTS_001 = os.path.join(FIXTURE_ROOT, "sf0.01", "golden_exports.parquet")
-
-# DuckDB-side shared formulas (must mirror pdf_table_spark.ops exactly)
-DK_TOKENS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
-DK_TOKENS_CASED = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
-DK_SHINGLES = (
-    "list_distinct(list_transform("
-    "generate_series(1, greatest(len(toks) - 2, 1)),"
-    " i -> array_to_string(list_slice(toks, i, i + 2), ' ')))"
-)
-DK_H60 = "cast('0x' || substr(md5({s}), 1, 15) as bigint)"
-
-P = 2_147_483_647
-
-
-def _overlap(*builders: Callable[[], object]) -> list:
-    """Run independent arm builders from driver threads and return
-    their results in argument order. Their eager driver work (collects,
-    broadcasts, large expression parses) overlaps (guide §2.6): py4j
-    serves each Python thread on its own connection, and job
-    descriptions/FIFO scheduling keep the jobs apart."""
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        return [f.result() for f in [pool.submit(b) for b in builders]]
+# _fixture_dir, _read_pq and _spans_df are re-exported for bench.py and
+# the tests
+from pdf_table_spark.queries.common import (  # noqa: E402,F401
+    _extract_flat, _fixture_dir, _read_pq, _spans_df)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline on the sf0.001 fixtures."""
-    return _extract_flat(spark, "/root/testdata/sf0.001")
-
-
-# --------------------------------------------------------------------
-# queries
-# --------------------------------------------------------------------
+    return _extract_flat(spark, "sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from pdf_table_spark.ops import (dedup, dsir, sampling, similarity,
-                                     text, textfilters)
-
-    def q_extract_spans(spark, sf_dir):
-        return _extract_flat(spark, sf_dir)
-
-    def q_table_quality(spark, sf_dir):
-        # A9 quality metrics ride every table fragment. The dense
-        # output offset is the fragment's rank in the doc's
-        # (src_offset, frag_idx) order — identical to reassembly's
-        # array_sort index — so it is computed by a window over the
-        # fragment stream with the text column PROJECTED AWAY before
-        # the exchange: the one shuffle here moves six narrow columns
-        # instead of every output string (guide §2.3, project before
-        # the exchange), and no per-doc array is built.
-        from pdf_table_spark.spark.pipeline import extract_fragments
-        from pyspark.sql.window import Window
-        frags = extract_fragments(_spans_df(spark, sf_dir)).select(
-            "doc_id", "offset", "frag_idx", "kind",
-            "accuracy", "whitespace")
-        w = Window.partitionBy("doc_id").orderBy("offset", "frag_idx")
-        return (
-            frags
-            .withColumn("dense",
-                        (F.row_number().over(w) - 1).cast("int"))
-            .filter(F.col("kind") == "table_html")
-            .select("doc_id", F.col("dense").alias("offset"),
-                    "accuracy", "whitespace")
-        )
-
-    def q_extract_spans_lattice(spark, sf_dir):
-        # the read_pdf(flavor='lattice') surface: ruled decoder only
-        from pdf_table_spark.api import read_documents_flat
-        return read_documents_flat(
-            spark, os.path.join(_fixture_dir(sf_dir),
-                                "documents_spans.parquet"),
-            flavor="lattice")
-
-    def q_extract_spans_stream(spark, sf_dir):
-        # the read_pdf(flavor='stream') surface: whitespace decoder only
-        from pdf_table_spark.api import read_documents_flat
-        return read_documents_flat(
-            spark, os.path.join(_fixture_dir(sf_dir),
-                                "documents_spans.parquet"),
-            flavor="stream")
-
-    def _extract_flat_docs(spark, sf_dir, doc_pred: str) -> DataFrame:
-        # doc-subset extraction: the predicate is per-DOCUMENT (an
-        # exists() over the input spans), and the pipeline is
-        # per-document independent (explode → per-span map → groupBy
-        # doc_id), so filtering the documents BEFORE extraction yields
-        # bit-identical rows for the surviving docs while skipping the
-        # Python decode of every other doc — the "don't compute things
-        # you throw away" rule (optimization guide §1.2), replacing
-        # the old extract-everything-then-broadcast-join shape.
-        from pdf_table_spark.spark.pipeline import (extract_documents,
-                                                    flatten_output)
-        docs = _spans_df(spark, sf_dir).filter(F.expr(doc_pred))
-        return flatten_output(extract_documents(docs))
-
-    def q_ocr_table_match(spark, sf_dir):
-        # the imaged-document path: docs whose spans carry ocr_page
-        # payloads (det/rec/TSR stand-in outputs) extract via the J3
-        # 3-tier match + X10 token splice (core.ocrmatch)
-        return _extract_flat_docs(
-            spark, sf_dir, "exists(spans, s -> s.kind = 'ocr_page')"
-        ).select("doc_id", "offset", "kind", "text")
-
-    def q_ocr_table_logi(spark, sf_dir):
-        # the polygon + logical-axis TSR contract (LORE / CenterNet /
-        # LGPMA family): docs whose ocr_page payloads carry "logi"
-        # axes decode via core.logicell (process_logic_output rounding
-        # -> is_priori sort -> build_table_cell_from_axis grid ->
-        # cell-grid text match)
-        return _extract_flat_docs(
-            spark, sf_dir,
-            "exists(spans, s -> s.kind = 'ocr_page' "
-            "and s.text like '%\"logi\"%')"
-        ).select("doc_id", "offset", "kind", "text")
-
-    def q_ocr_table_lgpma(spark, sf_dir):
-        # the LGPMA aligned-bbox contract (M9): docs whose ocr_page
-        # payloads carry per-class scored cell boxes decode via
-        # core.lgpma (cross-class NMS -> bbox2adj adjacency -> maximal
-        # -clique rows/cols -> empty-cell fill -> IoU>=0.75 OCR match)
-        return _extract_flat_docs(
-            spark, sf_dir,
-            "exists(spans, s -> s.kind = 'ocr_page' "
-            "and s.text like '%\"lgpma\"%')"
-        ).select("doc_id", "offset", "kind", "text")
-
-    def q_html_main_content(spark, sf_dir):
-        # the web-document path: docs whose spans are full HTML pages
-        # extract via boilerplate strip + DOM heuristics
-        # (core.htmlpage — the north rule's first clause)
-        return _extract_flat_docs(
-            spark, sf_dir, "exists(spans, s -> s.kind = 'html_page')"
-        ).select("doc_id", "offset", "kind", "text", "media_ref")
-
-    def _extract_frags(spark, sf_dir):
-        # pre-reassembly fragment stream: same rows as _extract_flat
-        # on every column except the dense offset — consumers that
-        # aggregate per kind/doc skip the reassembly shuffle
-        from pdf_table_spark.spark.pipeline import extract_fragments
-        return extract_fragments(_spans_df(spark, sf_dir))
-
-    def q_extract_kind_stats(spark, sf_dir):
-        # per-kind counts/char totals are dense-offset-free: computed
-        # on the fragment stream (one shuffle instead of two)
-        return (
-            _extract_frags(spark, sf_dir)
-            .groupBy("kind").agg(
-                F.count("*").alias("n_spans"),
-                F.sum(F.length("text")).alias("total_chars"))
-        )
-
-    def q_extract_tables_per_doc(spark, sf_dir):
-        return (
-            _extract_flat(spark, sf_dir)
-            .filter(F.col("kind") == "table_html")
-            .groupBy("doc_id").agg(F.count("*").alias("n_tables"))
-        )
-
-    def q_imaged_doc_classifier(spark, sf_dir):
-        # S6: any-media-and-no-text predicate, pure array aggregates
-        return _spans_df(spark, sf_dir).select(
-            "doc_id",
-            F.expr("exists(spans, s -> s.kind = 'image')").alias("has_media"),
-            F.expr(
-                "exists(spans, s -> s.kind in ('text', 'pdf_page'))"
-            ).alias("has_text"),
-            F.expr(
-                "exists(spans, s -> s.kind = 'image') and "
-                "not exists(spans, s -> s.kind in ('text', 'pdf_page'))"
-            ).alias("is_imaged"),
-        )
-
-    def q_span_inventory(spark, sf_dir):
-        # input-side scan sanity: spans per kind (S2 explode semantics)
-        return (
-            _spans_df(spark, sf_dir)
-            .select(F.explode("spans").alias("s"))
-            .groupBy(F.col("s.kind").alias("kind"))
-            .agg(F.count("*").alias("n"),
-                 F.max(F.col("s.offset")).alias("max_offset"))
-        )
-
-    # ---- training-data ops ----
-    # NOTE on merged queries: the driver's correctness gate checks at
-    # most the first 50 ``queries()`` entries (r03 checked exactly the
-    # first 50 of 69, r01/r02 checked all of their <=50), so sibling
-    # queries are consolidated — union-with-tag for same-shape pairs,
-    # doc_id joins for per-doc stat families — keeping every operator
-    # oracle-checked each round while staying under the cap.
-    def q_corpus_stats(spark, sf_dir):
-        # one-row dataset-card rollup (totals + exact token-count
-        # percentiles)
-        return text.corpus_stats(_t(spark, sf_dir, "documents", fan=False))
-
-    def q_exact_dedup(spark, sf_dir):
-        return dedup.exact_dedup(_t(spark, sf_dir, "documents", fan=False))
-
-    # ---- corpus filter gates (Gopher / C4 / PII / composed) ----
-    # the corpus text is single-line word salad, so the line-based
-    # signals get a deterministic line synthesis (every 'table ' ends
-    # a sentence) mirrored verbatim in the oracle SQL
-    _LINED = "replace(text, 'table ', 'table.' || chr(10))"
-
-    def _lined_docs(spark, sf_dir, fan=True):
-        return _t(spark, sf_dir, "documents", fan=fan).select(
-            "doc_id", F.expr(_LINED).alias("text"))
-
-    def q_c4_filters(spark, sf_dir):
-        return textfilters.c4_line_filter(_lined_docs(spark, sf_dir))
-
-    def q_pii_redact(spark, sf_dir):
-        # deterministic PII injection so the redaction logic is
-        # actually exercised by the oracle compare
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.expr(
-                "text || ' contact ' || doc_id || '@example.com "
-                "tel +44 20 7946 0958 at 192.168.1.77.'").alias("text"))
-        return textfilters.pii_redact(docs)
-
-    def _lined_with_dups(spark, sf_dir, fan=True):
-        # 20 injected exact duplicates so the 'dup' stage is
-        # oracle-visible (the synthetic corpus has no exact dups)
-        base = _lined_docs(spark, sf_dir, fan=fan)
-        dups = (base.orderBy("doc_id").limit(20)
-                .select(F.concat(F.lit("dup_"),
-                                 F.col("doc_id").cast("string"))
-                        .alias("doc_id"), "text"))
-        return base.select(F.col("doc_id").cast("string")
-                           .alias("doc_id"), "text").unionByName(dups)
-
-    def q_corpus_clean(spark, sf_dir):
-        return textfilters.corpus_clean(
-            _lined_with_dups(spark, sf_dir, fan=False),
-            min_words=10, min_stopword_hits=1)
-
-    def q_prepare_corpus(spark, sf_dir):
-        # the END-TO-END ingest program: clean gates -> capped
-        # near-dedup among survivors -> model gate, one provenance row
-        # per doc; every knob scaled so each stage fires at sf0.01
-        from pdf_table_spark.ops.prepare import prepare_corpus
-        dedup.release_caches()   # bound cache growth across reruns
-        return prepare_corpus(
-            _lined_with_dups(spark, sf_dir, fan=False),
-            min_words=10, min_stopword_hits=1,
-            neardup_threshold=0.5, max_df=20, max_bucket=10,
-            hash_fn="md5")
-
-    def q_span_dedup(spark, sf_dir):
-        # cross-document span dedup, both granularities union-tagged:
-        # C4's three-sentence spans AND Lee-et-al. ExactSubstr 20-token
-        # spans, over the lined corpus with the 20 injected full-copy
-        # docs as the planted duplicates (every span resolves to its
-        # original as the canonical occurrence). Persisted: the union's
-        # arms reference this frame five times, and its orderBy+limit
-        # dup-injection subtree would re-execute per reference
-        docs = dedup.persist(_lined_with_dups(spark, sf_dir))
-        c4 = (textfilters.c4_span_dedup(docs)
-              .select("doc_id", F.lit("c4_sent3").alias("method"),
-                      F.col("n_sentences").alias("n_units"),
-                      "n_dropped", "clean_text"))
-        # xxhash64 internally: the oracle compares OUTPUT rows, and the
-        # hash only decides the duplicate set (md5==xxhash64 pinned by
-        # the parity test), so the narrow production key is safe here
-        ex = (dedup.exact_substring_dedup(docs, n=20,
-                                          hash_fn="xxhash64")
-              .select("doc_id", F.lit("exact_substr20").alias("method"),
-                      F.col("n_tokens").alias("n_units"),
-                      F.col("n_removed").alias("n_dropped"),
-                      "clean_text"))
-        return c4.unionByName(ex)
-
-    def q_ngram_jaccard(spark, sf_dir):
-        return dedup.ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents", fan=False), 0.5)
-
-    def _assemble(spark, sf_dir):
-        # the full assembly program on the raw (non-benchmark) corpus
-        # with 20 injected exact dups; src0 plays the eval suite.
-        # C4 off (min_sentences=0): the word-salad corpus has no
-        # sentence structure, and the C4 gate is oracled elsewhere.
-        # fan=False: the assembly program references this frame many
-        # times and each reference would re-plan the fan exchange;
-        # composed programs materialize stage boundaries instead
-        d = _t(spark, sf_dir, "documents", fan=False)
-        base = d.filter("source <> 'src0'").select(
-            "doc_id", "text", "source")
-        dups = (base.orderBy("doc_id").limit(20)
-                .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                        "text", "source"))
-        dedup.release_caches()
-        from pdf_table_spark.ops.prepare import assemble_training_set
-        return assemble_training_set(
-            base.unionByName(dups),
-            benchmark=d.filter("source = 'src0'"),
-            mixture={"src1": 2.0, "src2": 0.5},
-            min_words=10, min_stopword_hits=1, min_sentences=0,
-            neardup_threshold=0.5, max_df=20, max_bucket=10,
-            hash_fn="md5")
-
-    def q_resample_mixture(spark, sf_dir):
-        # epoch-weighted mixture: 2.4 copies of src1, a quarter of
-        # src2, src3 dropped, everything else 1 epoch
-        return sampling.resample_mixture(
-            _t(spark, sf_dir, "documents", fan=False),
-            {"src1": 2.4, "src2": 0.25, "src3": 0.0}
-        ).select("doc_id", "source", "copy")
-
-    def _semdedup(spark, sf_dir):
-        # 0.45: the synthetic embeddings' top pairs sit at cosine
-        # ~0.45-0.51 (no planted 0.95 dups), so this exercises the
-        # cluster path; the oracle mirrors the same OR-of-bands
-        # computation, so the pair set matches exactly either way
-        return similarity.semdedup(_t(spark, sf_dir, "embeddings"),
-                                   threshold=0.45)
-
-    def q_data_selection(spark, sf_dir):
-        # merged selection family, union-with-tag (arm, doc_id,
-        # score, aux, aux2):
-        #   budget      — best docs (by n_chars) until a 10k-token
-        #                 budget (aux = n_tok, aux2 = cum_before)
-        #   dsir        — DSIR top-50 by hashed-ngram importance
-        #                 weight, target = src1 (aux = score_e6,
-        #                 aux2 = ranking key)
-        #   dsir_gumbel — DSIR Gumbel-resampled top-50 (the paper's
-        #                 softmax draw, hash-deterministic noise)
-        # the two arms' eager driver-side jobs (the budget arm's
-        # approxQuantile, the DSIR fit's tagged bucket collect) are
-        # independent — submit them from two driver threads so the
-        # jobs overlap instead of running back-to-back (guide §2.6);
-        # job descriptions/FIFO scheduling make this safe. The DSIR
-        # fit is the one-scan tagged fit (identical integers to the
-        # two-frame fit) + a shared persisted scored frame so the
-        # topk and gumbel arms rank the same scoring pass instead of
-        # re-hashing every gram per arm (released by
-        # dedup.release_caches())
-        d = _t(spark, sf_dir, "documents")
-        budget, lr = _overlap(
-            lambda: sampling.select_token_budget(
-                _t(spark, sf_dir, "documents", fan=False), 10_000,
-                score_col="n_chars")
-            .select(F.lit("budget").alias("arm"), "doc_id", "score",
-                    F.col("n_tok").alias("aux"),
-                    F.col("cum_before").alias("aux2")),
-            lambda: dsir.fit_logratio_e6_tagged(d, "source = 'src1'"))
-        raw = d.filter("source <> 'src1'")
-        scored = dedup.persist(
-            dsir.score_e6(raw, lr).select("doc_id", "score_e6"))
-
-        def dsir_arm(mode, name):
-            return (dsir.dsir_select(raw, lr, 50, mode=mode,
-                                     scored=scored)
-                    .select(F.lit(name).alias("arm"), "doc_id",
-                            (F.col("score_e6").cast("double")
-                             / F.lit(1e6)).alias("score"),
-                            F.col("score_e6").alias("aux"),
-                            F.col("key_e6").alias("aux2")))
-        return (budget
-                .unionByName(dsir_arm("topk", "dsir"))
-                .unionByName(dsir_arm("gumbel", "dsir_gumbel")))
-
-    def q_corpus_diff(spark, sf_dir):
-        # old = the corpus; new = drop doc_id%50==0, perturb %50==1
-        d = _t(spark, sf_dir, "documents", fan=False)
-        new = (d.filter("doc_id % 50 != 0")
-               .selectExpr("doc_id",
-                           "if(doc_id % 50 = 1, concat(text, ' v2'), "
-                           "text) as text"))
-        return text.corpus_diff(d, new)
-
-    def q_top_ngrams(spark, sf_dir):
-        return text.top_ngrams(_t(spark, sf_dir, "documents"), 2, 20)
-
-    def q_corpus_split(spark, sf_dir):
-        return sampling.split_corpus(
-            _t(spark, sf_dir, "documents", fan=False))
-
-    def q_stratified_sample(spark, sf_dir):
-        return sampling.sample_stratified(
-            _t(spark, sf_dir, "documents", fan=False),
-            {"en": 0.5, "de": 1.0}, default=0.1).select("doc_id", "lang")
-
-    def q_pack_chunks(spark, sf_dir):
-        return sampling.pack_chunks(
-            _t(spark, sf_dir, "documents", fan=False), 512)
-
-    def q_decontaminate(spark, sf_dir):
-        # src0 plays the benchmark/eval suite; every other source is
-        # the training corpus. Flag train docs sharing any 13-gram.
-        # broadcast_bench=True: the eval side is an eval suite (small
-        # by construction), so the auto-decide's eager count job is
-        # skipped. xxhash64 internally: the oracle compares OUTPUT
-        # rows, and the gram hash only decides equality (n_hits is
-        # hash-independent — the same narrow-production-key argument
-        # as span_dedup's ExactSubstr arm).
-        docs = _t(spark, sf_dir, "documents", fan=False)
-        return textfilters.decontaminate(
-            docs.filter("source <> 'src0'"),
-            docs.filter("source = 'src0'"),
-            broadcast_bench=True, hash_fn="xxhash64")["contaminated"]
-
-    # ---- the capped production dedup pipeline, oracle-checked ----
-    # hash_fn='md5' swaps the shingle hash for the DuckDB-replicable
-    # 60-bit md5 prefix; max_df=20 genuinely bites on the word-salad
-    # corpus (common shingles are dropped before any join), max_bucket
-    # caps band buckets. The oracle mirrors every cap.
-    _DC = dict(threshold=0.5, max_df=20, max_bucket=10, hash_fn="md5")
-
-    def q_audio_chunks(refs: DataFrame):
-        # audio modality: windowed 30s chunk enumeration (JVM-side
-        # sequence/explode; only kept windows would reach a decoder).
-        # Audio metadata is hash-derived from media refs (no audio
-        # table in the corpus): duration 1-90s at 16 kHz.
-        from pdf_table_spark.ops.dedup import H60_SPARK
-        from pdf_table_spark.ops.multimodal import chunk_audio
-        audio = refs.select(
-            "media_ref",
-            F.expr(f"(({H60_SPARK.format(s='media_ref')} % 90) + 1) "
-                   "* 16000").alias("n_samples"),
-            F.lit(16000).alias("sample_rate"))
-        return chunk_audio(audio, window_sec=30.0, hop_sec=30.0).select(
-            "media_ref", "chunk_idx", "start_sec", "end_sec")
-
-    def q_video_frames(refs: DataFrame):
-        # video modality: every-5th-frame sampling enumeration
-        # (JVM-side sequence/explode; only sampled frames would reach
-        # a decoder). Video metadata is hash-derived from media refs:
-        # 1-240 frames at 1-30 fps.
-        from pdf_table_spark.ops.dedup import H60_SPARK
-        from pdf_table_spark.ops.multimodal import sample_frames
-        h = H60_SPARK.format(s="media_ref")
-        hf = H60_SPARK.format(s="media_ref || 'f'")
-        videos = refs.select(
-            "media_ref",
-            F.expr(f"cast(({h} % 240) + 1 as int)").alias("n_frames"),
-            F.expr(f"cast(({hf} % 30) + 1 as double)").alias("fps"))
-        return sample_frames(videos, every_n=5).select(
-            "media_ref", "frame_idx", "ts_sec")
-
-    def q_embedding_neardup(spark, sf_dir):
-        return similarity.embedding_neardup_pairs(
-            _t(spark, sf_dir, "embeddings"), threshold=0.95)
-
-    # ---- §2 operator families exposed on the extraction output ----
-    def q_doc_metrics(spark, sf_dir):
-        # A9/A10 metrics rollup over the pipeline output — every agg
-        # is an order-independent count/sum per doc, so it runs on the
-        # fragment stream (one shuffle instead of two)
-        from pdf_table_spark.spark.metrics import doc_metrics
-        return doc_metrics(_extract_frags(spark, sf_dir))
-
-    def q_paragraph_rank(spark, sf_dir):
-        # W-family window: rank paragraphs by length within a doc
-        from pyspark.sql.window import Window
-        flat = _extract_flat(spark, sf_dir).filter(
-            F.col("kind") == "paragraph")
-        w = Window.partitionBy("doc_id").orderBy(
-            F.length("text").desc(), F.col("offset").asc())
-        return flat.select(
-            "doc_id", "offset", F.length("text").alias("n_chars"),
-            F.row_number().over(w).cast("int").alias("para_rank"))
-
-    def q_text_normalize(spark, sf_dir):
-        # X1/X2 scalar family: punct strip + numberish/OCR-zero token
-        # classification, all JVM-side regexes
-        toks = "filter(split(text, '\\\\s+'), t -> t <> '')"
-        return _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.length(F.regexp_replace("text", "[!-/:-@\\[-`{-~]", ""))
-            .alias("n_chars_no_punct"),
-            F.expr(
-                f"size(filter({toks}, t -> t rlike '^[0-9.,%+-]+$' "
-                f"and t rlike '[0-9]'))").alias("n_numberish_tokens"),
-            F.expr(
-                f"size(filter({toks}, t -> t in ('O', 'o')))"
-            ).alias("n_ocr_zero_tokens"),
-        )
-
-    def q_page_select(spark, sf_dir):
-        # S2 page-range predicate: keep pages 2..end per doc (flattened
-        # to counts so the compare is nesting-free)
-        from pdf_table_spark.ops.pages import select_pages
-        out = select_pages(_spans_df(spark, sf_dir), "2-end")
-        return out.select(
-            "doc_id",
-            F.expr("size(filter(spans, s -> s.kind = 'pdf_page'))")
-            .alias("n_pages_kept"),
-            F.size("spans").alias("n_spans_kept"))
-
-    def q_doc_html(flat: DataFrame):
-        # S7 merged multi-page HTML: per doc, spans in offset order
-        # rendered and concatenated, source spans (pages) joined with
-        # the reference CLI's '@@@@@@' merge separator
-        # (``api.doc_html_sql``). ``flat`` is the extraction frame
-        # q_exports shares.
-        from pdf_table_spark.api import PAGE_SEP, doc_html_sql
-        return (
-            flat.groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list(F.struct(
-                "offset", "kind", "text", "media_ref",
-                "src_offset"))).alias("a"))
-            .select("doc_id", F.expr(
-                doc_html_sql("a", PAGE_SEP + "\\n")).alias("html"))
-        )
-
-    # ---- relational / window coverage on the star schema ----
-    def q_pricing_summary(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        return (
-            li.filter(F.col("l_shipdate") <= "1998-09-02")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum("l_quantity").alias("sum_qty"),
-                F.sum("l_extendedprice").alias("sum_base_price"),
-                F.sum(F.col("l_extendedprice")
-                      * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-                F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-                F.count("*").alias("count_order"))
-        )
-
-    def q_top_revenue_orders(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        od = _t(spark, sf_dir, "orders")
-        cu = _t(spark, sf_dir, "customer")
-        rev = (
-            li.groupBy("l_orderkey")
-            .agg(F.round(F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))), 6)
-                .alias("revenue"))
-        )
-        return (
-            od.join(F.broadcast(cu.filter(F.col("c_mktsegment") == "BUILDING")),
-                    od.o_custkey == F.col("c_custkey"))
-            .join(rev, od.o_orderkey == rev.l_orderkey)
-            .select("o_orderkey", "revenue", "o_orderdate")
-            .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-            .limit(10)
-        )
-
-    def q_salted_priority_revenue(spark, sf_dir):
-        # the skew-handling salted join, hash-checked against a PLAIN
-        # SQL join: salting must be invisible in the result
-        from pdf_table_spark.ops.skew import salted_join
-        li = _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount")
-        od = _t(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority")
-        j = salted_join(li, od, "l_orderkey", salt=8)
-        # whole-unit revenue: double summation order differs between
-        # engines at the 1e-3 level on 1e8 magnitudes, so the compared
-        # value is discretized (margin 0.5 vs drift ~1e-3)
-        return j.groupBy("o_orderpriority").agg(
-            F.round(F.sum(F.col("l_extendedprice")
-                          * (1 - F.col("l_discount"))))
-            .cast("bigint").alias("revenue"),
-            F.count("*").alias("n_items"))
-
-    def q_event_sessions(spark, sf_dir):
-        # W1's SQL analogue on a real event stream: 30-min-gap
-        # sessionization via lag + running sum of boundary flags.
-        ev = _t(spark, sf_dir, "events")
-        from pyspark.sql.window import Window
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        epoch = F.col("ts").cast("timestamp").cast("double")
-        flagged = ev.withColumn(
-            "new_session",
-            F.when(
-                epoch - F.lag(epoch, 1).over(w) > 1800, 1).otherwise(0))
-        sess = flagged.withColumn(
-            "session_id", F.sum("new_session").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)))
-        return (
-            sess.groupBy("user_id")
-            .agg((F.max("session_id") + 1).alias("n_sessions"),
-                 F.count("*").alias("n_events"))
-        )
-
-    # ---- merged queries (see the 50-entry-cap note above) ----
-    def q_doc_text_stats(spark, sf_dir):
-        # token_stats + quality_score + text_normalize, one row per doc
-        d = _t(spark, sf_dir, "documents")
-        t = text.token_stats(d)
-        q = text.quality_score(d).drop("n_tokens")
-        n = q_text_normalize(spark, sf_dir)
-        return t.join(q, "doc_id").join(n, "doc_id")
-
-    def q_lang_id_both(spark, sf_dir):
-        # stopword-hit and char-trigram language ID over the 40
-        # data-file profiles, tagged by method; each row carries the
-        # winner's score and the confidence margin vs the runner-up.
-        # Each arm's build is dominated by the JVM parse of its large
-        # constant-profile expression (~0.3 s each); the two parses
-        # are independent, so they run from two driver threads
-        # (guide §2.6 — py4j serves each Python thread on its own
-        # connection, so the parses overlap)
-        d = _t(spark, sf_dir, "documents")
-        cols = ["pred_lang", "top_score", "margin"]
-        return reduce(DataFrame.unionByName, _overlap(
-            lambda: text.lang_id(d).select(
-                "doc_id", F.lit("stopword").alias("method"), *cols),
-            lambda: text.lang_id_ngram(d).select(
-                "doc_id", F.lit("trigram").alias("method"), *cols)))
-
-    def q_fingerprint_both(spark, sf_dir):
-        # md5 content fingerprint + winnowing fingerprint summary
-        d = _t(spark, sf_dir, "documents")
-        md = text.fingerprint(d).select(
-            "doc_id", F.lit("md5").alias("method"),
-            F.col("fingerprint").alias("fp"))
-        wn = text.winnow_fingerprints(d).select(
-            "doc_id", F.lit("winnow").alias("method"),
-            F.concat_ws(
-                ":", F.col("n_fps").cast("string"),
-                F.col("min_fp").cast("string"),
-                F.col("max_fp").cast("string"),
-                F.col("xor_fp").cast("string")).alias("fp"))
-        return md.unionByName(wn)
-
-    def q_gopher_quality_full(spark, sf_dir):
-        # the 7 Gopher gates + the full repetition rule family
-        lined = _lined_docs(spark, sf_dir)
-        gop = textfilters.gopher_quality(
-            lined, min_words=10, min_stopword_hits=1)
-        rep = textfilters.repetition_signals(lined)
-        return gop.join(rep, "doc_id")
-
-    def q_c4_pii(spark, sf_dir):
-        # C4 line gate + PII redaction, one row per doc
-        return q_c4_filters(spark, sf_dir).join(
-            q_pii_redact(spark, sf_dir), "doc_id")
-
-    def q_assemble(spark, sf_dir):
-        # provenance + the assembled rows rolled up per doc
-        a = _assemble(spark, sf_dir)
-        agg = (a["assembled"].groupBy("doc_id")
-               .agg(F.max("source").alias("source"),
-                    F.count("*").alias("n_copies"),
-                    F.max("split").alias("split")))
-        return a["provenance"].join(agg, "doc_id", "left")
-
-    def q_semdedup_merged(spark, sf_dir):
-        # component assignment over ALL vectors + the keep flag
-        emb = _t(spark, sf_dir, "embeddings")
-        comp = _semdedup(spark, sf_dir)["components"]
-        return (emb.select("vec_id").join(comp, "vec_id", "left")
-                .select("vec_id",
-                        F.coalesce("component", "vec_id")
-                        .alias("component"))
-                .withColumn("kept",
-                            F.col("component") == F.col("vec_id")))
-
-    def q_dedup_corpus_merged(spark, sf_dir):
-        # verified near-dup pairs + pairwise-keep survivors, tagged
-        out = dedup.dedup_corpus(_t(spark, sf_dir, "documents"), **_DC)
-        pairs = out["pairs"].select(
-            F.lit("pair").alias("part"), F.col("doc_a").alias("a"),
-            F.col("doc_b").alias("b"), F.col("jaccard"))
-        keep = out["keep"].select(
-            F.lit("keep").alias("part"), F.col("doc_id").alias("a"),
-            F.lit(None).cast("bigint").alias("b"),
-            F.lit(None).cast("double").alias("jaccard"))
-        return pairs.unionByName(keep)
-
-    def q_dedup_clusters(spark, sf_dir):
-        # transitive closure: component per doc + cluster-keep flag
-        d = _t(spark, sf_dir, "documents")
-        comp = dedup.dedup_corpus_clusters(d, **_DC)["components"]
-        return (d.select("doc_id").join(comp, "doc_id", "left")
-                .select("doc_id",
-                        F.coalesce("component", "doc_id")
-                        .alias("component"))
-                .withColumn("kept",
-                            F.col("component") == F.col("doc_id")))
-
-    def q_minhash_lsh(spark, sf_dir):
-        # signatures + band-join candidate pairs + pairwise survivors.
-        # The signature table feeds every arm (sig rows, and the band
-        # join behind the pair rows and keep's anti-join side); without
-        # a persist each reference re-runs the full shingle explode +
-        # 64-perm aggregation. Persisted within the query (released by
-        # dedup.release_caches()), so the executed plan reads it
-        # through InMemoryTableScans instead of re-scanning shingles.
-        d = _t(spark, sf_dir, "documents")
-        sig_full = dedup.persist(dedup.minhash_signatures(d))
-        sig = sig_full.select(
-            F.lit("sig").alias("part"), F.col("doc_id").alias("a"),
-            F.lit(None).cast("bigint").alias("b"),
-            F.concat_ws(",", *[F.col(f"s{i}").cast("string")
-                               for i in range(8)]).alias("val"))
-        pairs_df = dedup._lsh_pairs_from_signatures(
-            sig_full, max_bucket=None)
-        pairs = pairs_df.select(
-            F.lit("pair").alias("part"), F.col("doc_a").alias("a"),
-            F.col("doc_b").alias("b"),
-            F.lit(None).cast("string").alias("val"))
-        dupes = pairs_df.select(
-            F.col("doc_b").alias("doc_id")).distinct()
-        keep = (d.join(dupes, "doc_id", "left_anti")
-                .select(F.lit("keep").alias("part"),
-                        F.col("doc_id").alias("a"),
-                        F.lit(None).cast("bigint").alias("b"),
-                        F.lit(None).cast("string").alias("val")))
-        return sig.unionByName(pairs).unionByName(keep)
-
-    def q_simhash_merged(spark, sf_dir):
-        # 60-bit fingerprints + banded-hamming verified pairs, tagged.
-        # The fingerprint table feeds both arms (sig rows AND the
-        # banded pair join's two sides); persisted within the query so
-        # the token explode + 60 vote aggregations run once instead of
-        # twice (released by dedup.release_caches()).
-        d = _t(spark, sf_dir, "documents", fan=False)
-        fp = dedup.persist(dedup.simhash(d))
-        sig = fp.select(
-            F.lit("sig").alias("part"), F.col("doc_id").alias("a"),
-            F.lit(None).cast("bigint").alias("b"),
-            F.col("simhash").cast("bigint").alias("val"))
-        pr = dedup.simhash_pairs_from_fingerprints(
-            fp, max_hamming=3).select(
-            F.lit("pair").alias("part"), F.col("doc_a").alias("a"),
-            F.col("doc_b").alias("b"),
-            F.col("hamming").cast("bigint").alias("val"))
-        return sig.unionByName(pr)
-
-    def q_ann_topk(spark, sf_dir):
-        # exact brute-force baseline + LSH multi-probe + IVF-Flat.
-        # The three arm builders are independent driver work — the IVF
-        # arm runs an eager 16-row centroid TakeOrdered job and parses
-        # two large centroid-literal expressions, the brute/LSH arms
-        # are pure expression construction — so they run from a small
-        # thread pool (guide §2.6) instead of back-to-back; the union
-        # order is fixed by the argument order
-        emb = _t(spark, sf_dir, "embeddings")
-
-        def arm(method, topk):
-            return lambda: topk(emb, k=5).select(
-                F.lit(method).alias("method"), "query_id",
-                "neighbor_id", "cosine", "rank")
-
-        return reduce(DataFrame.unionByName, _overlap(
-            arm("brute", similarity.cosine_topk),
-            arm("lsh", similarity.ann_topk_lsh),
-            arm("ivf", similarity.ann_topk_ivf)))
-
-    def q_media_sampling(spark, sf_dir):
-        # audio 30s chunk windows + every-5th video frames, tagged.
-        # Both arms derive from the same media-ref table (explode +
-        # distinct over the spans scan); persisted within the query so
-        # that shuffle runs once (released by dedup.release_caches()).
-        from pdf_table_spark.ops.multimodal import (
-            media_refs_with_payloads)
-        refs = media_refs_with_payloads(
-            _spans_df(spark, sf_dir)).select("media_ref")
-        au = q_audio_chunks(refs).select(
-            "media_ref", F.lit("audio").alias("modality"),
-            F.col("chunk_idx").alias("idx"),
-            F.col("start_sec").alias("t0"),
-            F.col("end_sec").alias("t1"))
-        vi = q_video_frames(refs).select(
-            "media_ref", F.lit("video").alias("modality"),
-            F.col("frame_idx").alias("idx"),
-            F.col("ts_sec").alias("t0"),
-            F.lit(None).cast("double").alias("t1"))
-        return au.unionByName(vi)
-
-    def q_media_meta(spark, sf_dir):
-        # decode metadata (n_bytes) + aspect-preserving thumbnail fit.
-        # Two arms: the utf8-ref pseudo-payloads (deterministic stub
-        # decode, md5 oracle twin) AND the planted REAL PNG/BMP/PNM
-        # corpus — genuine codec bytes pixel-decoded distributed
-        # (core.codecs); the oracle twin for that arm is encode-side
-        # truth recorded in golden_media_meta.parquet BEFORE encoding,
-        # so agreement is a real encoder↔decoder inverse check
-        from pdf_table_spark.ops.multimodal import (
-            describe_media, media_refs_with_payloads)
-        refs = media_refs_with_payloads(_spans_df(spark, sf_dir))
-        fake = describe_media(refs)
-        planted = _read_pq(spark, os.path.join(
-            _fixture_dir(sf_dir), "media_payloads.parquet")).filter(
-            F.col("media_ref").startswith("media://img/"))
-        real = describe_media(planted)
-        return fake.unionByName(real)
-
-    def q_model_scores(spark, sf_dir):
-        # all three broadcast-weights heads: page layout + doc quality
-        # + page orientation (M1/M4's PULC classifier half)
-        from pdf_table_spark.spark.model_stage import (
-            score_doc_quality, score_layout_cnn, score_orient_cnn,
-            score_page_layout, score_page_orientation)
-        # selectExpr strings: each arm's ~9-column Column-object select
-        # cost ~20 py4j round trips of driver chatter per build —
-        # ONE parsed string per arm is plan-identical. The five arm
-        # builders (weight loads + broadcasts + scans) run from a
-        # thread pool so their eager driver work overlaps (guide §2.6).
-        sp_df = _spans_df(spark, sf_dir)
-        docs_df = _t(spark, sf_dir, "documents")
-        fx = _fixture_dir(sf_dir)
-        cnn_npz = os.path.join(fx, "ocr_cnn.npz")
-
-        def scans(name):
-            return _read_pq(spark, os.path.join(fx, name))
-
-        return reduce(DataFrame.unionByName, _overlap(
-            lambda: score_page_layout(sp_df).selectExpr(
-                "'layout' as head", "doc_id", "offset",
-                "score_table as score_a", "score_text as score_b",
-                "score_figure as score_c",
-                "cast(null as double) as score_d",
-                "layout_class as label"),
-            lambda: score_doc_quality(docs_df).selectExpr(
-                "'quality' as head",
-                "cast(doc_id as string) as doc_id",
-                "cast(-1 as int) as offset",
-                "score_keep as score_a", "score_drop as score_b",
-                "cast(null as double) as score_c",
-                "cast(null as double) as score_d",
-                "pred as label"),
-            lambda: score_page_orientation(sp_df).selectExpr(
-                "'orient' as head", "doc_id", "offset",
-                "score_rot0 as score_a", "score_rot90 as score_b",
-                "score_rot180 as score_c", "score_rot270 as score_d",
-                "concat_ws(':', pred_rot, declared_rot) as label"),
-            # orient-CNN arm (round 5c): REAL image-based vote —
-            # rotate the scan 4 ways, det+rec forward each, argmax of
-            # decoded confidence mass. The oracle's pred_rot column is
-            # the PLANTED angle (encode-side), so a wrong distributed
-            # prediction fails the hash gate; vote scores are the
-            # same-artifact single-process twin.
-            lambda: score_orient_cnn(
-                scans("orient_scan_pages.parquet"), weights_path=cnn_npz
-            ).selectExpr(
-                "'orient_cnn' as head", "media_ref as doc_id",
-                "cast(-1 as int) as offset",
-                "score_rot0 as score_a", "score_rot90 as score_b",
-                "score_rot180 as score_c", "score_rot270 as score_d",
-                "cast(pred_rot as string) as label"),
-            # layout-CNN arm (round 5c): REAL image-based layout
-            # analysis — coarse-ink region proposals classified
-            # table/text/figure from conv-derived features via a
-            # broadcast linear head. The oracle's label column (class
-            # + tight bbox) is the PLANTED truth; scores are the
-            # single-process same-artifact twin.
-            lambda: score_layout_cnn(
-                scans("layout_scan_pages.parquet"), weights_path=cnn_npz
-            ).selectExpr(
-                "'layout_cnn' as head", "media_ref as doc_id",
-                "offset",
-                "score_table as score_a", "score_text as score_b",
-                "score_figure as score_c",
-                "cast(null as double) as score_d", "label")))
-
-    def q_exports(spark, sf_dir):
-        # S7 fan-out melted long (fmt, payload) + merged doc HTML.
-        # Both arms consume the extraction output; without a persist
-        # the full pipeline (scan → Arrow decode → reassembly) ran
-        # TWICE per action. Persisted within the query (released by
-        # dedup.release_caches()).
-        from pdf_table_spark.ops.export import export_tables
-        flat = _extract_flat(spark, sf_dir)
-        ex = export_tables(flat)
-        off_ty = dict(ex.dtypes)["offset"]
-        melted = ex.select(
-            "doc_id", "offset", F.expr(
-                "stack(7, "
-                "'shape', concat(cast(n_rows as string), 'x', "
-                "cast(n_cols as string)), "
-                "'csv', csv, 'markdown', markdown, "
-                "'json_rows', json_rows, 'sqlite_sql', sqlite_sql, "
-                "'excel_xml', excel_xml, 'html_db', html_db) "
-                "as (fmt, payload)"))
-        dh = q_doc_html(flat).select(
-            "doc_id", F.lit(-1).cast(off_ty).alias("offset"),
-            F.lit("doc_html").alias("fmt"),
-            F.col("html").alias("payload"))
-        return melted.unionByName(dh)
-
-    def q_tables_per_doc(spark, sf_dir):
-        # per-doc table counts + top-20 rank (TakeOrderedAndProject
-        # bounds the ranked side; the window runs on 20 rows)
-        from pyspark.sql.window import Window
-        counts = q_extract_tables_per_doc(spark, sf_dir)
-        top = (counts.orderBy(F.col("n_tables").desc(), "doc_id")
-               .limit(20)
-               .withColumn("top_rank", F.row_number().over(
-                   Window.orderBy(F.col("n_tables").desc(), "doc_id"))
-                   .cast("int"))
-               .select("doc_id", "top_rank"))
-        return counts.join(top, "doc_id", "left")
-
-    def q_doc_profile(spark, sf_dir):
-        # S6 imaged-doc classifier + S2 page-range keep counts
-        return q_imaged_doc_classifier(spark, sf_dir).join(
-            q_page_select(spark, sf_dir), "doc_id")
-
-    def q_ocr_from_model(spark, sf_dir):
-        # artifact → model output with NO pre-filled fixture payloads,
-        # two heads (the reference's base_infer_task model dispatch,
-        # base_infer_task.py:311-315):
-        #  * TSR arm — the .npz TSR head infers (polygons, logi) from
-        #    det boxes at runtime, decoded by core.logicell to HTML;
-        #  * det/rec arm — the .npz det head recovers text-line boxes
-        #    + text from per-character glyph EVIDENCE (core.dethead),
-        #    never reading the planted det_cells; the oracle is an
-        #    independent SQL interval-merge twin over the plants;
-        #  * contour arm (O4) — top-10 ink-blob region proposals per
-        #    page from the same detected lines, one shared boundary;
-        #  * neural-postprocess arm (round 5) — DBNet probability-map
-        #    → boxes (core.dbnet: regions, min-area rect, score,
-        #    unclip — NO planted det_cells on this path), CTC greedy
-        #    label decode (core.ctchead), SLANet structure-token
-        #    decode (core.slanethead), one shared boundary; the db
-        #    oracle twin recomputes grow/scale/round_even from the
-        #    planted blob coords in pure SQL.
-        #  * det-CNN arm (round 5b) — REAL forward pass: scan-page
-        #    PNGs (real codec decode) → numpy conv/pool/sigmoid CNN
-        #    (.npz tensors, core.nn) → probability map → the same
-        #    core.dbnet postprocess; no planted model output on the
-        #    whole path. Golden twin = the same .npz run
-        #    single-process at fixture build (the TSR pattern).
-        #  * full-OCR arm (round 5c) — the COMPLETE imaged-page path:
-        #    scan PNG → pixel decode → morphological rulings → det-CNN
-        #    forward → DBNet postprocess → rec-CNN forward + CTC
-        #    greedy decode → lattice grid/merge/placement → table
-        #    shape/cells/HTML + free lines. The oracle twin is the
-        #    PLANTED truth (encode-side, media_gen.ocr_scan_truth) —
-        #    an independent inverse, not a same-code golden.
-        from pdf_table_spark.spark.model_stage import (
-            score_det_cnn, score_det_contours, score_neural_decoders,
-            score_ocr_cnn, score_table_structure)
-        fx = _fixture_dir(sf_dir)
-        # the five arm builders each read an .npz from disk, broadcast
-        # the tensors, and plan a scan — independent, driver-side
-        # eager work; built from a small thread pool so the broadcasts
-        # and parquet footer reads overlap (guide §2.6)
-        sp_df = _spans_df(spark, sf_dir)
-
-        def fxp(name):
-            return os.path.join(fx, name)
-
-        return reduce(DataFrame.unionByName, _overlap(
-            lambda: score_table_structure(
-                sp_df, weights_path=fxp("tsr_head.npz")),
-            lambda: score_det_contours(
-                sp_df, weights_path=fxp("det_head.npz")),
-            lambda: score_neural_decoders(
-                sp_df, weights_path=fxp("neural_head.npz")),
-            lambda: score_det_cnn(
-                _read_pq(spark, fxp("scan_pages.parquet")),
-                weights_path=fxp("det_cnn.npz")
-            ).select(F.col("media_ref").alias("doc_id"),
-                     F.col("box_idx").alias("offset"), "kind", "text"),
-            lambda: score_ocr_cnn(
-                _read_pq(spark, fxp("ocr_scan_pages.parquet")),
-                weights_path=fxp("ocr_cnn.npz")
-            ).select(F.col("media_ref").alias("doc_id"), "offset",
-                     "kind", "text")))
-
-    return {
-        "extract_spans": q_extract_spans,
-        "extract_spans_lattice": q_extract_spans_lattice,
-        "extract_spans_stream": q_extract_spans_stream,
-        "table_quality": q_table_quality,
-        "ocr_table_match": q_ocr_table_match,
-        "ocr_table_logi": q_ocr_table_logi,
-        "ocr_table_lgpma": q_ocr_table_lgpma,
-        "html_main_content": q_html_main_content,
-        "extract_kind_stats": q_extract_kind_stats,
-        "span_inventory": q_span_inventory,
-        "doc_text_stats": q_doc_text_stats,
-        "corpus_stats": q_corpus_stats,
-        "lang_id": q_lang_id_both,
-        "fingerprint": q_fingerprint_both,
-        "exact_dedup": q_exact_dedup,
-        "gopher_quality": q_gopher_quality_full,
-        "c4_filters": q_c4_pii,
-        "corpus_clean": q_corpus_clean,
-        "span_dedup": q_span_dedup,
-        "decontaminate": q_decontaminate,
-        "assemble": q_assemble,
-        "resample_mixture": q_resample_mixture,
-        "semdedup": q_semdedup_merged,
-        "data_selection": q_data_selection,
-        "corpus_diff": q_corpus_diff,
-        "top_ngrams": q_top_ngrams,
-        "corpus_split": q_corpus_split,
-        "stratified_sample": q_stratified_sample,
-        "pack_chunks": q_pack_chunks,
-        "prepare_corpus": q_prepare_corpus,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dedup_corpus": q_dedup_corpus_merged,
-        "dedup_clusters": q_dedup_clusters,
-        "minhash_lsh": q_minhash_lsh,
-        "simhash": q_simhash_merged,
-        "ann_topk": q_ann_topk,
-        "media_sampling": q_media_sampling,
-        "media_meta": q_media_meta,
-        "embedding_neardup": q_embedding_neardup,
-        "doc_metrics": q_doc_metrics,
-        "paragraph_rank": q_paragraph_rank,
-        "tables_per_doc": q_tables_per_doc,
-        "model_scores": q_model_scores,
-        "doc_profile": q_doc_profile,
-        "ocr_from_model": q_ocr_from_model,
-        "exports": q_exports,
-        "pricing_summary": q_pricing_summary,
-        "top_revenue_orders": q_top_revenue_orders,
-        "salted_priority_revenue": q_salted_priority_revenue,
-        "event_sessions": q_event_sessions,
-    }
-
-
-# --------------------------------------------------------------------
-# oracles (DuckDB SQL, sf0.01 views pre-registered by the driver)
-# --------------------------------------------------------------------
-
-
-def _dk_minhash_bands_cte() -> str:
-    from pdf_table_spark.ops.dedup import BANDS, PERM_CONSTS, ROWS_PER_BAND
-    mins = ", ".join(
-        f"min(({a} * h % {P} + {b}) % {P}) as s{i}"
-        for i, (a, b) in enumerate(PERM_CONSTS))
-    band_rows = " union all ".join(
-        "select doc_id, {b} as band, md5({cols}) as bh from sig".format(
-            b=b,
-            cols=" || ',' || ".join(
-                f"cast(s{b * ROWS_PER_BAND + j} as varchar)"
-                for j in range(ROWS_PER_BAND)))
-        for b in range(BANDS))
-    return f"""
-        with toks as (
-          select doc_id, {DK_TOKENS} as toks from documents
-        ), sh as (
-          select doc_id, unnest({DK_SHINGLES}) as shingle from toks
-        ), hashed as (
-          select doc_id, {DK_H60.format(s='shingle')} % {P} as h from sh
-        ), sig as (
-          select doc_id, {mins} from hashed group by doc_id
-        ), bands as ({band_rows})
-    """
-
-
-def _dk_dedup_corpus_cte(threshold: float, max_df: int,
-                         max_bucket: int,
-                         src: str = "documents",
-                         lead: str = "with ") -> str:
-    """DuckDB twin of ``ops.dedup.dedup_corpus(hash_fn='md5')`` — the
-    full capped production pipeline: df-capped 60-bit shingle hashes →
-    MinHash signatures → band join with bucket cap → exact Jaccard
-    verify on candidates. Ends with a ``pairs`` CTE; callers select
-    pairs or the anti-joined survivors."""
-    from pdf_table_spark.ops.dedup import BANDS, PERM_CONSTS, ROWS_PER_BAND
-    mins = ", ".join(
-        f"min(({a} * h % {P} + {b}) % {P}) as s{i}"
-        for i, (a, b) in enumerate(PERM_CONSTS))
-    band_rows = " union all ".join(
-        "select doc_id, {b} as band, md5({cols}) as bh from sig".format(
-            b=b,
-            cols=" || ',' || ".join(
-                f"cast(s{b * ROWS_PER_BAND + j} as varchar)"
-                for j in range(ROWS_PER_BAND)))
-        for b in range(BANDS))
-    # distinct over HASHES (not shingle strings), mirroring the Spark
-    # md5 variant of shingle_hash_rows
-    sh_hash = DK_H60.format(
-        s="array_to_string(list_slice(toks, i, i + 2), ' ')")
-    return f"""
-        {lead}toks as (
-          select doc_id, {DK_TOKENS} as toks from {src}
-        ), shs as (
-          select doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, greatest(len(toks) - 2, 1)),
-            i -> {sh_hash}))) as sh
-          from toks
-        ), dfok as (
-          select sh from shs group by sh having count(*) <= {max_df}
-        ), shc as (
-          select s.doc_id, s.sh from shs s join dfok using (sh)
-        ), hashed as (
-          select doc_id, sh % {P} as h from shc
-        ), sig as (
-          select doc_id, {mins} from hashed group by doc_id
-        ), bands as ({band_rows}
-        ), bok as (
-          select band, bh from bands
-          group by band, bh having count(*) <= {max_bucket}
-        ), bandc as (
-          select b.doc_id, b.band, b.bh
-          from bands b join bok using (band, bh)
-        ), cand as (
-          select distinct x.doc_id as doc_a, y.doc_id as doc_b
-          from bandc x join bandc y
-            on x.band = y.band and x.bh = y.bh and x.doc_id < y.doc_id
-        ), sizes as (
-          select doc_id, count(*) as n_sh from shc group by doc_id
-        ), inter as (
-          select c.doc_a, c.doc_b, count(*) as n_inter
-          from cand c
-          join shc a on a.doc_id = c.doc_a
-          join shc b on b.doc_id = c.doc_b and b.sh = a.sh
-          group by 1, 2
-        ), pairs as (
-          select doc_a, doc_b,
-                 round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6)
-                   as jaccard
-          from inter
-          join sizes sa on sa.doc_id = doc_a
-          join sizes sb on sb.doc_id = doc_b
-          where round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6)
-                >= {threshold}
-        )
-    """
-
-
-def _dk_prepare_sql() -> str:
-    """DuckDB twin of ``ops.prepare.prepare_corpus`` at the driver
-    query's knobs — the full ingest program: clean gates (shared
-    snippets, _dk_gates) -> capped near-dedup among survivors
-    (_dk_dedup_corpus_cte over the survivors CTE) -> quality-model
-    gate (literal QUALITY_WEIGHTS) -> first-failing-stage provenance.
-    """
-    from pdf_table_spark.spark.model_stage import QUALITY_WEIGHTS
-    g = _dk_gates()
-    lined, lines = g["lined"], g["lines"]
-    redact, gopher_sig = g["redact"], g["gopher_sig"]
-    pass_gopher, c4_kept = g["pass_gopher"], g["c4_kept"]
-    n_sentences, keep_c4 = g["n_sentences"], g["keep_c4"]
-    stop_arr = g["stop_arr"]
-    w = QUALITY_WEIGHTS
-
-    def qscore(j):
-        return (f"round(f0 * {w[0][j]} + f1 * {w[1][j]} + "
-                f"f2 * {w[2][j]} + f3 * {w[3][j]} + {w[4][j]}, 6)")
-
-    dedup_cte = _dk_dedup_corpus_cte(0.5, 20, 10, src="survivors",
-                                     lead="")
-    return f"""
-        with lined as ({lined}),
-        alldocs as (
-          select cast(doc_id as varchar) as doc_id, text from lined
-          union all
-          (select 'dup_' || doc_id as doc_id, text from
-           (select * from lined order by doc_id limit 20))
-        ), ranked as (
-          select doc_id, text, row_number() over (
-            partition by md5(text) order by doc_id) as rn
-          from alldocs
-        ), base as (
-          select doc_id, text, rn, {lines} as lines,
-                 {DK_TOKENS_CASED} as ws, {DK_TOKENS} as wsl
-          from ranked
-        ), gop as (
-          select doc_id, text, rn, lines, {gopher_sig}
-          from base
-        ), ct as (
-          select *, coalesce(array_to_string(kl, chr(10)), '') as clean_text
-          from (select *, {c4_kept} as kl from gop)
-        ), sent as (
-          select *, {n_sentences} as n_sentences from ct
-        ), cstage as (
-          select doc_id, text, clean_text,
-            case when rn > 1 then 'dup'
-                 when not {pass_gopher(10, 1)} then 'gopher'
-                 when not {keep_c4} then 'c4'
-                 else 'kept' end as stage
-          from sent
-        ), survivors as (
-          select doc_id, text from cstage where stage = 'kept'
-        ), {dedup_cte}
-        , nddrop as (
-          select distinct doc_b as doc_id from pairs
-        ), qbase as (
-          select s.doc_id, {DK_TOKENS_CASED} as ws, {DK_TOKENS} as wsl
-          from survivors s
-          left join nddrop n using (doc_id)
-          where n.doc_id is null
-        ), qfeats as (
-          select doc_id,
-            len(ws)::double as f0,
-            coalesce(list_sum(list_transform(ws, t -> length(t))),
-                     0)::double as f1,
-            len(list_filter(ws, t -> regexp_matches(t, '[A-Za-z]')))
-              ::double as f2,
-            len(list_intersect(list_distinct(wsl), [{stop_arr}]))
-              ::double as f3
-          from qbase
-        ), qpred as (
-          select doc_id,
-                 case when {qscore(0)} >= {qscore(1)} then 'keep'
-                      else 'drop' end as pred
-          from qfeats
-        ), final as (
-          select c.doc_id, c.clean_text,
-            case when c.stage <> 'kept' then c.stage
-                 when n.doc_id is not null then 'neardup'
-                 when q.pred = 'drop' then 'model'
-                 else 'kept' end as stage
-          from cstage c
-          left join nddrop n using (doc_id)
-          left join qpred q using (doc_id)
-        )
-        select doc_id, stage, stage = 'kept' as kept,
-               case when stage = 'kept'
-                    then md5({redact('clean_text')}) end as clean_fp
-        from final
-    """
-
-
-def _dk_assemble_sql(select: str) -> str:
-    """DuckDB twin of ``ops.prepare.assemble_training_set`` at the
-    driver query's knobs: injected-dup corpus (source <> src0) ->
-    exact-dup rank + Gopher(10,1) (C4 off via min_sentences=0) ->
-    capped near-dedup + recursive-CTE connected components (one
-    canonical per cluster) -> 13-gram decontamination vs src0 ->
-    mixture (src1 x2, src2 x0.5, default 1) -> 90/5/5 split.
-    ``select`` picks the final projection (provenance vs assembled
-    rows)."""
-    g = _dk_gates()
-    lines, gopher_sig = g["lines"], g["gopher_sig"]
-    pass_gopher = g["pass_gopher"]
-    dedup_cte = _dk_dedup_corpus_cte(0.5, 20, 10, src="survivors",
-                                     lead="")
-    grams = ("list_distinct(list_transform("
-             "generate_series(1, greatest(len(tk) - 12, 0)), "
-             "i -> md5(array_to_string(list_slice(tk, i, i + 12), "
-             "' '))))")
-    return f"""
-        with recursive corpus as (
-          select doc_id, source, text from documents
-          where source <> 'src0'
-          union all
-          select doc_id + 1000000 as doc_id, source, text from
-            (select * from documents where source <> 'src0'
-             order by doc_id limit 20)
-        ), ranked as (
-          select doc_id, source, text, row_number() over (
-            partition by md5(text) order by doc_id) as rn
-          from corpus
-        ), base as (
-          select doc_id, source, text, rn, {lines} as lines,
-                 {DK_TOKENS_CASED} as ws, {DK_TOKENS} as wsl
-          from ranked
-        ), gop as (
-          select doc_id, source, text, rn, lines, {gopher_sig}
-          from base
-        ), cstage as (
-          select doc_id, source, text,
-            case when rn > 1 then 'dup'
-                 when not {pass_gopher(10, 1)} then 'gopher'
-                 else 'kept' end as cst
-          from gop
-        ), survivors as (
-          select doc_id, text from cstage where cst = 'kept'
-        ), {dedup_cte}
-        , edges as (
-          select doc_a as u, doc_b as v from pairs
-          union select doc_b, doc_a from pairs
-        ), reach as (
-          select u as node, v as r from edges
-          union
-          select e.u, reach.r from edges e
-            join reach on reach.node = e.v
-        ), comp as (
-          select node as doc_id, least(node, min(r)) as component
-          from reach group by node
-        ), nddrop as (
-          select doc_id from comp where doc_id <> component
-        ), decon_in as (
-          select s.doc_id, s.text from survivors s
-            left join nddrop n using (doc_id)
-          where n.doc_id is null
-        ), tgrams as (
-          select doc_id, unnest({grams}) as gg
-          from (select doc_id,
-                  list_filter(string_split_regex(lower(text), '\\s+'),
-                              t -> t <> '') as tk
-                from decon_in)
-          where len(tk) >= 13
-        ), bgrams as (
-          select distinct unnest({grams}) as gg
-          from (select list_filter(string_split_regex(lower(text),
-                       '\\s+'), t -> t <> '') as tk
-                from documents where source = 'src0')
-          where len(tk) >= 13
-        ), cont as (
-          select distinct t.doc_id from tgrams t join bgrams using (gg)
-        -- materialized: the merged oracle reads final AND assembled
-        -- (which re-derives from final); without the hint DuckDB
-        -- inlines the whole recursive chain twice and runs out of
-        -- memory
-        ), final as materialized (
-          select c.doc_id, c.source,
-            case when c.cst <> 'kept' then c.cst
-                 when n.doc_id is not null then 'neardup'
-                 when ct.doc_id is not null then 'contaminated'
-                 else 'kept' end as stage
-          from cstage c
-            left join nddrop n using (doc_id)
-            left join cont ct using (doc_id)
-        ), kept as (
-          select doc_id, source from final where stage = 'kept'
-        ), assembled as (
-          -- mixture AND split in one pass over kept: a second
-          -- reference to the recursive chain would re-execute it
-          select doc_id, source,
-                 unnest(generate_series(0, nc - 1)) as copy, split
-          from (select doc_id, source,
-                  cast(floor(wt) + (case when b < (wt - floor(wt))
-                       * 10000 then 1 else 0 end) as bigint) as nc,
-                  case when sb < 9000 then 'train'
-                       when sb < 9500 then 'val'
-                       else 'test' end as split
-                from (select doc_id, source,
-                        (case source when 'src1' then 2.0
-                                     when 'src2' then 0.5
-                                     else 1.0 end) as wt,
-                        cast('0x' || substr(md5(cast(doc_id as varchar)
-                             || 'assemble-v1-mix'), 1, 15) as bigint)
-                          % 10000 as b,
-                        cast('0x' || substr(md5(cast(doc_id as varchar)
-                             || 'assemble-v1-split'), 1, 15) as bigint)
-                          % 10000 as sb
-                      from kept))
-          where nc >= 1
-        )
-        {select}
-    """
-
-
-def _dk_lang_ngram_sql(top_n: int = 20) -> str:
-    """DuckDB twin of ``ops.text.lang_id_ngram`` over the 40 data-file
-    trigram profiles: Cavnar-Trenkle out-of-place scores per language,
-    ascending (penalty, lang) rank, winner + confidence margin."""
-    from pdf_table_spark.ops.text import LANG_TRIGRAM_PROFILES, OOP_MAX
-    langs = sorted(LANG_TRIGRAM_PROFILES)
-
-    def score(la: str) -> str:
-        prof = ", ".join(f"'{g}'" for g in LANG_TRIGRAM_PROFILES[la])
-        return (
-            f"cast(case when len(top) = 0 then {OOP_MAX * top_n} "
-            f"else coalesce(list_sum(list_transform("
-            f"generate_series(1, len(top)), i -> "
-            f"case when coalesce(list_position([{prof}], top[i].g), 0)"
-            f" = 0 then {OOP_MAX} "
-            f"else abs(i - list_position([{prof}], top[i].g)) end)), 0)"
-            f" end as bigint) as score_{la}")
-
-    scores = ",\n".join(score(la) for la in langs)
-    pairs = ", ".join(
-        f"{{'s': score_{la}, 'lang': '{la}'}}" for la in langs)
-    return f"""
-        with tri as (
-          select doc_id, list_filter(list_transform(
-            generate_series(1, greatest(length(lower(text)) - 2, 1)),
-            i -> substr(lower(text), i, 3)),
-            g -> regexp_matches(g, '^[a-z][a-z][a-z]$')) as tri
-          from documents
-        ), tops as (
-          select doc_id, list_slice(list_sort(list_transform(
-            list_distinct(tri),
-            g -> {{'nc': -len(list_filter(tri, x -> x = g)),
-                  'g': g}})), 1, {top_n}) as top
-          from tri
-        ), scored as (
-          select doc_id, len(top) as n_grams,
-          {scores}
-          from tops
-        ), ranked as (
-          select doc_id, n_grams, list_sort([{pairs}]) as r
-          from scored
-        )
-        select doc_id,
-               case when n_grams = 0 then 'und' else r[1].lang end
-                 as pred_lang,
-               r[1].s as top_score,
-               case when n_grams = 0 then cast(0 as bigint)
-                    else r[2].s - r[1].s end as margin
-        from ranked
-    """
-
-
-def _dk_simhash_sql(n_bits: int = 60) -> str:
-    votes = ", ".join(
-        f"sum(case when (h // {1 << b}) % 2 = 1 then 1 else -1 end) as v{b}"
-        for b in range(n_bits))
-    bits = " + ".join(
-        f"case when v{b} > 0 then cast({1 << b} as bigint) else 0 end"
-        for b in range(n_bits))
-    return f"""
-        with toks as (
-          select doc_id, unnest(list_distinct({DK_TOKENS})) as tok
-          from documents
-        ), hashed as (
-          select doc_id, {DK_H60.format(s='tok')} as h from toks
-        ), votes as (
-          select doc_id, {votes} from hashed group by doc_id
-        )
-        select doc_id, {bits} as simhash from votes
-    """
-
-
-def _dk_ann_ivf_sql(k: int = 5, n_centroids: int = 16,
-                    n_probe: int = 4) -> str:
-    # same deterministic quantizer (smallest-vec_id seeds), assignment
-    # and probe ranking by (cosine desc, centroid_id asc) on rounded
-    # cosines — mirrors ops.similarity.ann_topk_ivf exactly
-    cos = ("round(list_dot_product({a}, {b}) / "
-           "(sqrt(list_dot_product({a}, {a})) * "
-           "sqrt(list_dot_product({b}, {b}))), 9)")
-    return f"""
-        with emb as (
-          select vec_id, embedding::DOUBLE[] as emb from embeddings
-        ), cents as (
-          select vec_id as cid, emb as c_emb from emb
-          order by vec_id limit {n_centroids}
-        ), scored as (
-          select e.vec_id, e.emb, c.cid,
-                 {cos.format(a='e.emb', b='c.c_emb')} as cos
-          from emb e cross join cents c
-        ), cells as (
-          select vec_id, emb, cid from (
-            select *, row_number() over (
-              partition by vec_id order by cos desc, cid) as rn
-            from scored) where rn = 1
-        ), qprobes as (
-          select vec_id as query_id, emb as q_emb, cid as probe from (
-            select *, row_number() over (
-              partition by vec_id order by cos desc, cid) as rn
-            from scored where vec_id < 10) where rn <= {n_probe}
-        ), pairs as (
-          select p.query_id, b.vec_id as neighbor_id,
-                 {cos.format(a='p.q_emb', b='b.emb')} as cosine
-          from cells b, qprobes p
-          where b.cid = p.probe and b.vec_id <> p.query_id
-        ), ranked as (
-          select *, row_number() over (
-            partition by query_id order by cosine desc, neighbor_id
-          ) as rank from pairs
-        )
-        select query_id, neighbor_id, cosine, cast(rank as int) as rank
-        from ranked where rank <= {k}
-    """
-
-
-def _dk_plane_literal(dim: int, plane_idx: int) -> str:
-    from pdf_table_spark.ops.similarity import hyperplane
-    return "[" + ", ".join(
-        "1.0" if c > 0 else "-1.0"
-        for c in hyperplane(dim, plane_idx)) + "]"
-
-
-def _dk_bucket_expr(dim: int, n_planes: int, emb: str = "emb") -> str:
-    bits = []
-    for p in range(n_planes):
-        bits.append(
-            f"case when list_dot_product({emb}, {_dk_plane_literal(dim, p)})"
-            f" > 0 then {1 << p}::bigint else 0 end")
-    return " + ".join(bits)
-
-
-def _dk_ann_lsh_sql(k: int = 5, dim: int = 64, n_planes: int = 8) -> str:
-    # multi-probe: the query's bucket plus every 1-bit-flip bucket
-    probe_list = ", ".join(
-        ["q_bucket"] + [f"xor(q_bucket, {1 << i})" for i in range(n_planes)])
-    return f"""
-        with bucketed as (
-          select vec_id, embedding::DOUBLE[] as emb,
-                 {_dk_bucket_expr(dim, n_planes)} as bucket
-          from embeddings
-        ), q as (
-          select vec_id as query_id, emb as q_emb, bucket as q_bucket
-          from bucketed where vec_id < 10
-        ), probes as (
-          select query_id, q_emb, unnest([{probe_list}]) as probe from q
-        ), pairs as (
-          select p.query_id, b.vec_id as neighbor_id,
-                 round(list_dot_product(p.q_emb, b.emb) /
-                       (sqrt(list_dot_product(p.q_emb, p.q_emb)) *
-                        sqrt(list_dot_product(b.emb, b.emb))), 9) as cosine
-          from bucketed b, probes p
-          where b.bucket = p.probe and b.vec_id <> p.query_id
-        ), ranked as (
-          select *, row_number() over (
-            partition by query_id order by cosine desc, neighbor_id
-          ) as rank from pairs
-        )
-        select query_id, neighbor_id, cosine, cast(rank as int) as rank
-        from ranked where rank <= {k}
-    """
-
-
-def _dk_band_key_expr(dim: int, band: int, rows_per_band: int,
-                      emb: str = "emb") -> str:
-    bits = []
-    for r in range(rows_per_band):
-        p = band * rows_per_band + r
-        bits.append(
-            f"case when list_dot_product({emb}, {_dk_plane_literal(dim, p)})"
-            f" > 0 then {1 << r}::bigint else 0::bigint end")
-    return " + ".join(bits)
-
-
-def _dk_neardup_sql(threshold: float = 0.95, dim: int = 64,
-                    bands: int = 6, rows_per_band: int = 8,
-                    as_cte: bool = False) -> str:
-    """``as_cte`` wraps the final select in a ``pairs`` CTE (with a
-    ``with recursive`` lead) so callers can append the connected-
-    components reachability CTEs (semdedup)."""
-    band_rows = " union all ".join(
-        f"select vec_id, emb, {b} as band, "
-        f"{_dk_band_key_expr(dim, b, rows_per_band)} as key from base"
-        for b in range(bands))
-    lead = "with recursive " if as_cte else "with "
-    inner = f"""
-        select distinct a.vec_id as vec_a, b.vec_id as vec_b,
-               round(list_dot_product(a.emb, b.emb) /
-                     (sqrt(list_dot_product(a.emb, a.emb)) *
-                      sqrt(list_dot_product(b.emb, b.emb))), 9) as cosine
-        from banded a join banded b
-          on a.band = b.band and a.key = b.key and a.vec_id < b.vec_id
-        where round(list_dot_product(a.emb, b.emb) /
-                    (sqrt(list_dot_product(a.emb, a.emb)) *
-                     sqrt(list_dot_product(b.emb, b.emb))), 9) >= {threshold}
-    """
-    ctes = f"""
-        {lead}base as (
-          select vec_id, embedding::DOUBLE[] as emb from embeddings
-        ), banded as ({band_rows})"""
-    if as_cte:
-        return ctes + f", pairs as ({inner})"
-    return ctes + inner
-
-
-def _dk_layout_scores_sql(spans_rel: str) -> str:
-    from pdf_table_spark.spark.model_stage import WEIGHTS
-    w = WEIGHTS
-    score = ("(f0 * {a} + f1 * {b} + f2 * {c} + {d})")
-    s_tab = score.format(a=w[0][0], b=w[1][0], c=w[2][0], d=w[3][0])
-    s_txt = score.format(a=w[0][1], b=w[1][1], c=w[2][1], d=w[3][1])
-    s_fig = score.format(a=w[0][2], b=w[1][2], c=w[2][2], d=w[3][2])
-    return f"""
-        with pages as (
-          select doc_id, s."offset" as "offset", s.text as text
-          from (select doc_id, unnest(spans) as s from {spans_rel})
-          where s.kind = 'pdf_page'
-        ), feats as (
-          select doc_id, "offset", json_valid(text) as ok,
-                 case when json_valid(text) then coalesce(
-                   json_array_length(text, '$.text_lines'), 0)::double
-                   else 0 end as f0,
-                 case when json_valid(text) then coalesce(
-                   json_array_length(text, '$.rects'), 0)::double
-                   else 0 end as f1,
-                 case when json_valid(text) then coalesce(
-                   json_array_length(text, '$.images'), 0)::double
-                   else 0 end as f2
-          from pages
-        )
-        select doc_id, "offset" as offset,
-               case when ok then round({s_tab}, 6) else 0.0 end
-                 as score_table,
-               case when ok then round({s_txt}, 6) else 0.0 end
-                 as score_text,
-               case when ok then round({s_fig}, 6) else 0.0 end
-                 as score_figure,
-               case when not ok then 'error'
-                    when {s_tab} >= {s_txt} and {s_tab} >= {s_fig}
-                      then 'table'
-                    when {s_txt} >= {s_fig} then 'text'
-                    else 'figure' end as layout_class
-        from feats
-    """
-
-
-def _dk_orient_sql(spans_rel: str) -> str:
-    """DuckDB twin of ``model_stage.score_page_orientation``: same
-    first-text-line features (is_vertical, cx/w, cy/h, bias), same 4x4
-    literal matmul rounded to 6dp, argmax with ties toward the lower
-    class, pred in degrees. Poison contract mirrored exactly for the
-    fixture domain: invalid JSON OR a first line with a missing /
-    non-numeric coordinate → scores 0, pred = declared = -1."""
-    from pdf_table_spark.spark.model_stage import ORIENT_WEIGHTS
-    w = ORIENT_WEIGHTS
-
-    def score(j):
-        return (f"round(f0 * {w[0][j]} + f1 * {w[1][j]} + "
-                f"f2v * {w[2][j]} + {w[3][j]}, 6)")
-
-    # Sanitize ONCE: DuckDB may reorder/vectorize CASE/AND conjuncts, so
-    # a `case when json_valid(text) then json_extract(text, ...)` guard
-    # can still evaluate json_extract on a poisoned (truncated) page
-    # payload and abort the whole query. Substitute '{}' for invalid
-    # JSON up front and run every extract on the sanitized column; the
-    # jok flag preserves the poison contract downstream.
-    coord = ("try_cast(json_extract(jtext, '$.text_lines[0].{c}') "
-             "as double)")
-    dim = ("coalesce(nullif(try_cast(json_extract(jtext, '$.{c}') "
-           "as double), 0.0), 1.0)")
-    return f"""
-        with pages as (
-          select doc_id, s."offset" as "offset",
-                 json_valid(s.text) as jok,
-                 case when json_valid(s.text) then s.text
-                      else '{{}}' end as jtext
-          from (select doc_id, unnest(spans) as s from {spans_rel})
-          where s.kind = 'pdf_page'
-        ), feats as (
-          select doc_id, "offset", jok,
-                 coalesce(json_array_length(jtext, '$.text_lines'), 0)
-                   as n_lines,
-                 {coord.format(c='x0')} as x0,
-                 {coord.format(c='x1')} as x1,
-                 {coord.format(c='y0')} as y0,
-                 {coord.format(c='y1')} as y1,
-                 {dim.format(c='width')} as w,
-                 {dim.format(c='height')} as h,
-                 case when json_extract_string(
-                   jtext, '$.text_lines[0].dir') = 'v'
-                   then 1.0 else 0.0 end as isv,
-                 coalesce(try_cast(
-                   json_extract(jtext, '$.rotation') as int), 0)
-                   as decl
-          from pages
-        ), f2 as (
-          select doc_id, "offset",
-                 (jok and (n_lines = 0 or (x0 is not null and
-                   x1 is not null and y0 is not null and
-                   y1 is not null))) as ok,
-                 case when n_lines = 0 then 0.0 else isv end as f0,
-                 case when n_lines = 0 then 0.5
-                      else (x0 + x1) / 2 / w end as f1,
-                 case when n_lines = 0 then 0.5
-                      else (y0 + y1) / 2 / h end as f2v,
-                 decl
-          from feats
-        ), sc as (
-          select doc_id, "offset", ok, decl,
-                 {score(0)} as s0, {score(1)} as s1,
-                 {score(2)} as s2, {score(3)} as s3
-          from f2
-        )
-        select doc_id, "offset" as offset,
-               case when ok then s0 else 0.0 end as score_rot0,
-               case when ok then s1 else 0.0 end as score_rot90,
-               case when ok then s2 else 0.0 end as score_rot180,
-               case when ok then s3 else 0.0 end as score_rot270,
-               case when not ok then -1
-                    when s0 >= s1 and s0 >= s2 and s0 >= s3 then 0
-                    when s1 >= s2 and s1 >= s3 then 90
-                    when s2 >= s3 then 180
-                    else 270 end as pred_rot,
-               case when ok then decl else -1 end as declared_rot
-        from sc
-    """
-
-
-def _dk_quality_model_sql() -> str:
-    """DuckDB twin of ``model_stage.score_doc_quality`` (the literal
-    QUALITY_WEIGHTS head): integer text features cast to double, the
-    same 5x2 matmul, argmax over the ROUNDED scores with keep winning
-    ties — exactly what the Arrow stage computes."""
-    from pdf_table_spark.ops.textfilters import GOPHER_STOPWORDS
-    from pdf_table_spark.spark.model_stage import QUALITY_WEIGHTS
-    w = QUALITY_WEIGHTS
-    stop_arr = ", ".join(f"'{x}'" for x in GOPHER_STOPWORDS)
-
-    def score(j):
-        return (f"round(f0 * {w[0][j]} + f1 * {w[1][j]} + "
-                f"f2 * {w[2][j]} + f3 * {w[3][j]} + {w[4][j]}, 6)")
-
-    return f"""
-        with base as (
-          select doc_id, {DK_TOKENS_CASED} as ws, {DK_TOKENS} as wsl
-          from documents
-        ), feats as (
-          select doc_id,
-            len(ws)::double as f0,
-            coalesce(list_sum(list_transform(ws, t -> length(t))),
-                     0)::double as f1,
-            len(list_filter(ws, t -> regexp_matches(t, '[A-Za-z]')))
-              ::double as f2,
-            len(list_intersect(list_distinct(wsl), [{stop_arr}]))
-              ::double as f3
-          from base
-        ), scored as (
-          select doc_id, {score(0)} as score_keep,
-                 {score(1)} as score_drop
-          from feats
-        )
-        select doc_id, score_keep, score_drop,
-               case when score_keep >= score_drop then 'keep'
-                    else 'drop' end as pred
-        from scored
-    """
-
-
-def _dk_gates() -> dict:
-    """Shared DuckDB snippet pieces for the corpus filter gates —
-    single source for every oracle that embeds the gate formulas
-    (_dk_filter_sqls AND _dk_prepare_sql), so the two can never
-    drift apart."""
-    from pdf_table_spark.ops.textfilters import (GOPHER_STOPWORDS,
-                                                 PII_PATTERNS)
-
-    lined = ("select doc_id, replace(text, 'table ', 'table.' || "
-             "chr(10)) as text from documents")
-    lines = "string_split(text, chr(10))"
-    stop_arr = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
-    email, ip, phone = (PII_PATTERNS["email"], PII_PATTERNS["ip"],
-                        PII_PATTERNS["phone"])
-
-    def redact(col):
-        return (
-            f"regexp_replace(regexp_replace(regexp_replace({col}, "
-            f"'{email}', '[EMAIL]', 'g'), "
-            f"'{ip}', '[IP]', 'g'), "
-            f"'{phone}', '[PHONE]', 'g')"
-        )
-
-    # the seven Gopher signals over (text, lines, ws, wsl) columns
-    gopher_sig = f"""
-          len(ws) as n_words,
-          coalesce(list_sum(list_transform(ws, w -> length(w))), 0)
-            / greatest(len(ws), 1) as mean_word_len,
-          ((length(text) - length(replace(text, '#', ''))) +
-           (length(text) - length(replace(text, '...', ''))) // 3 +
-           (length(text) - length(replace(text, '…', ''))))
-            / greatest(len(ws), 1) as symbol_word_ratio,
-          len(list_filter(lines, l -> starts_with(ltrim(l), '- ')
-              or starts_with(ltrim(l), '* ')
-              or starts_with(ltrim(l), '•')))
-            / greatest(len(lines), 1) as bullet_line_frac,
-          len(list_filter(lines, l -> ends_with(rtrim(l), '...')
-              or ends_with(rtrim(l), '…')))
-            / greatest(len(lines), 1) as ellipsis_line_frac,
-          len(list_filter(ws, w -> regexp_matches(w, '[A-Za-z]')))
-            / greatest(len(ws), 1) as alpha_word_frac,
-          len(list_intersect(list_distinct(wsl), [{stop_arr}]))
-            as stopword_hits"""
-
-    def pass_gopher(min_words, min_hits):
-        return (
-            f"(n_words >= {min_words} and n_words <= 100000 and "
-            "mean_word_len >= 3.0 and mean_word_len <= 10.0 and "
-            "symbol_word_ratio <= 0.1 and bullet_line_frac <= 0.9 and "
-            "ellipsis_line_frac <= 0.3 and alpha_word_frac >= 0.8 and "
-            f"stopword_hits >= {min_hits})"
-        )
-
-    # C4 kept-lines filter over a `lines` column (min 5 words, line
-    # ends with terminal punctuation, no 'javascript' line)
-    c4_kept = """list_filter(lines, l -> (ends_with(rtrim(l), '.')
-          or ends_with(rtrim(l), '!') or ends_with(rtrim(l), '?')
-          or ends_with(rtrim(l), '"')) and
-          len(list_filter(string_split_regex(l, '\\s+'),
-              w -> w <> '')) >= 5
-          and not contains(lower(l), 'javascript'))"""
-    n_sentences = (
-        "(length(clean_text) - length(replace(clean_text, '.', '')))"
-        " + (length(clean_text) - length(replace(clean_text, '!', '')))"
-        " + (length(clean_text) - length(replace(clean_text, '?', '')))"
-    )
-    keep_c4 = (
-        "(n_sentences >= 3 and not contains(lower(text), 'lorem ipsum')"
-        " and not contains(text, '{'))"
-    )
-    return {
-        "lined": lined, "lines": lines, "stop_arr": stop_arr,
-        "email": email, "ip": ip, "phone": phone, "redact": redact,
-        "gopher_sig": gopher_sig, "pass_gopher": pass_gopher,
-        "c4_kept": c4_kept, "n_sentences": n_sentences,
-        "keep_c4": keep_c4,
-    }
-
-
-def _dk_filter_sqls() -> dict[str, str]:
-    """DuckDB twins for the corpus filter gates (ops/textfilters.py):
-    the four consecutive ``queries()`` entries ``gopher_quality``
-    (Gopher gates joined with the repetition signals), ``c4_filters``
-    (C4 gates joined with PII counts), ``corpus_clean`` and
-    ``span_dedup``.
-
-    Float discipline mirrors the Spark side: integer counts, one final
-    division — so the doubles are bit-identical across engines.
-    """
-    g = _dk_gates()
-    lined, lines, stop_arr = g["lined"], g["lines"], g["stop_arr"]
-    email, ip, phone = g["email"], g["ip"], g["phone"]
-    redact, gopher_sig = g["redact"], g["gopher_sig"]
-    pass_gopher, c4_kept = g["pass_gopher"], g["c4_kept"]
-    n_sentences, keep_c4 = g["n_sentences"], g["keep_c4"]
-
-    repetition = f"""
-        with lined as ({lined}),
-        base as (
-          select doc_id, text, {lines} as lines,
-                 {DK_TOKENS_CASED} as ws
-          from lined
-        ), grams as (
-          select *,
-            list_transform(generate_series(1, greatest(len(ws) - 1, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 1), ' ')) as g2,
-            list_transform(generate_series(1, greatest(len(ws) - 2, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 2), ' ')) as g3,
-            list_transform(generate_series(1, greatest(len(ws) - 3, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 3), ' ')) as g4,
-            list_transform(generate_series(1, greatest(len(ws) - 4, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 4), ' ')) as g5,
-            list_transform(generate_series(1, greatest(len(ws) - 5, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 5), ' ')) as g6,
-            list_transform(generate_series(1, greatest(len(ws) - 6, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 6), ' ')) as g7,
-            list_transform(generate_series(1, greatest(len(ws) - 7, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 7), ' ')) as g8,
-            list_transform(generate_series(1, greatest(len(ws) - 8, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 8), ' ')) as g9,
-            list_transform(generate_series(1, greatest(len(ws) - 9, 1)),
-              i -> array_to_string(list_slice(ws, i, i + 9), ' ')) as g10
-          from base
-        ), tops as (
-          select *,
-            list_max(list_transform(list_distinct(g2),
-              g -> {{'c': len(list_filter(g2, x -> x = g)), 'g': g}})) as t2,
-            list_max(list_transform(list_distinct(g3),
-              g -> {{'c': len(list_filter(g3, x -> x = g)), 'g': g}})) as t3,
-            list_max(list_transform(list_distinct(g4),
-              g -> {{'c': len(list_filter(g4, x -> x = g)), 'g': g}})) as t4
-          from grams
-        ), sig as (
-        select doc_id,
-          len(lines) as n_lines,
-          (len(lines) - len(list_distinct(lines)))
-            / greatest(len(lines), 1) as dup_line_frac,
-          coalesce(list_sum(list_transform(list_distinct(lines),
-              l -> (len(list_filter(lines, x -> x = l)) - 1)
-                   * length(l))), 0)
-            / greatest(coalesce(list_sum(list_transform(lines,
-              l -> length(l))), 0), 1) as dup_line_char_frac,
-          case when len(ws) < 2 then cast(0.0 as double)
-               else t2.c * length(t2.g) / greatest(length(text), 1)
-          end as top_2gram_char_frac,
-          case when len(ws) < 3 then cast(0.0 as double)
-               else t3.c * length(t3.g) / greatest(length(text), 1)
-          end as top_3gram_char_frac,
-          case when len(ws) < 4 then cast(0.0 as double)
-               else t4.c * length(t4.g) / greatest(length(text), 1)
-          end as top_4gram_char_frac,
-          case when len(ws) < 5 then cast(0.0 as double)
-               else coalesce(list_sum(list_transform(list_distinct(g5),
-                 g -> case when len(list_filter(g5, x -> x = g)) > 1
-                      then len(list_filter(g5, x -> x = g)) * length(g)
-                      else 0 end)), 0) / greatest(length(text), 1)
-          end as dup_5gram_char_frac,
-          case when len(ws) < 6 then cast(0.0 as double)
-               else coalesce(list_sum(list_transform(list_distinct(g6),
-                 g -> case when len(list_filter(g6, x -> x = g)) > 1
-                      then len(list_filter(g6, x -> x = g)) * length(g)
-                      else 0 end)), 0) / greatest(length(text), 1)
-          end as dup_6gram_char_frac,
-          case when len(ws) < 7 then cast(0.0 as double)
-               else coalesce(list_sum(list_transform(list_distinct(g7),
-                 g -> case when len(list_filter(g7, x -> x = g)) > 1
-                      then len(list_filter(g7, x -> x = g)) * length(g)
-                      else 0 end)), 0) / greatest(length(text), 1)
-          end as dup_7gram_char_frac,
-          case when len(ws) < 8 then cast(0.0 as double)
-               else coalesce(list_sum(list_transform(list_distinct(g8),
-                 g -> case when len(list_filter(g8, x -> x = g)) > 1
-                      then len(list_filter(g8, x -> x = g)) * length(g)
-                      else 0 end)), 0) / greatest(length(text), 1)
-          end as dup_8gram_char_frac,
-          case when len(ws) < 9 then cast(0.0 as double)
-               else coalesce(list_sum(list_transform(list_distinct(g9),
-                 g -> case when len(list_filter(g9, x -> x = g)) > 1
-                      then len(list_filter(g9, x -> x = g)) * length(g)
-                      else 0 end)), 0) / greatest(length(text), 1)
-          end as dup_9gram_char_frac,
-          case when len(ws) < 10 then cast(0.0 as double)
-               else coalesce(list_sum(list_transform(list_distinct(g10),
-                 g -> case when len(list_filter(g10, x -> x = g)) > 1
-                      then len(list_filter(g10, x -> x = g)) * length(g)
-                      else 0 end)), 0) / greatest(length(text), 1)
-          end as dup_10gram_char_frac
-        from tops
-        )
-        select *, (dup_line_frac <= 0.3 and dup_line_char_frac <= 0.2 and top_2gram_char_frac <= 0.2 and top_3gram_char_frac <= 0.18 and top_4gram_char_frac <= 0.16 and dup_5gram_char_frac <= 0.15 and dup_6gram_char_frac <= 0.14 and dup_7gram_char_frac <= 0.13 and dup_8gram_char_frac <= 0.12 and dup_9gram_char_frac <= 0.11 and dup_10gram_char_frac <= 0.1) as pass_repetition from sig
-    """
-
-    span_dedup = f"""
-        with lined as ({lined}),
-        alldocs as (
-          select cast(doc_id as varchar) as doc_id, text from lined
-          union all
-          (select 'dup_' || doc_id as doc_id, text from
-           (select * from lined order by doc_id limit 20))
-        ), sents0 as (
-          select doc_id, list_filter(list_transform(
-            string_split_regex(text, '[.!?]'), s -> trim(s)),
-            s -> s <> '') as ss
-          from alldocs
-        ), sents as (
-          select doc_id, u.i - 1 as idx, ss[u.i] as s
-          from sents0 cross join
-               unnest(generate_series(1, len(ss))) as u(i)
-        ), spans as (
-          select doc_id, u.i - 1 as start,
-                 md5(array_to_string(
-                   list_slice(ss, u.i, u.i + 2), ' ')) as h
-          from sents0 cross join
-               unnest(generate_series(1, len(ss) - 2)) as u(i)
-          where len(ss) >= 3
-        ), dup as (
-          select h, min({{'d': doc_id, 'st': start}}) as canon
-          from spans group by h having count(*) > 1
-        ), noncanon as (
-          select s.doc_id, s.start from spans s join dup d using (h)
-          where s.doc_id <> d.canon.d or s.start <> d.canon.st
-        ), dropped as (
-          select distinct doc_id, start + u.i as idx
-          from noncanon cross join
-               unnest(generate_series(0, 2)) as u(i)
-        ), kept as (
-          select s.doc_id, s.idx, s.s from sents s
-          left join dropped dr
-            on s.doc_id = dr.doc_id and s.idx = dr.idx
-          where dr.idx is null
-        ), perdoc as (
-          select doc_id, count(*) as n_kept,
-                 string_agg(s, ' ' order by idx) as clean_text
-          from kept group by doc_id
-        ), totals as (
-          select doc_id, count(*) as n_sentences
-          from sents group by doc_id
-        ), tk0 as (
-          select doc_id, list_filter(string_split_regex(
-            lower(text), '\\s+'), t -> t <> '') as tk
-          from alldocs
-        ), tks as (
-          select doc_id, u.i - 1 as idx, tk[u.i] as t
-          from tk0 cross join
-               unnest(generate_series(1, len(tk))) as u(i)
-        ), tspans as (
-          select doc_id, u.i - 1 as start,
-                 md5(array_to_string(
-                   list_slice(tk, u.i, u.i + 19), ' ')) as h
-          from tk0 cross join
-               unnest(generate_series(1, len(tk) - 19)) as u(i)
-          where len(tk) >= 20
-        ), tdup as (
-          select h, min({{'d': doc_id, 'st': start}}) as canon
-          from tspans group by h having count(*) > 1
-        ), tnoncanon as (
-          select s.doc_id, s.start from tspans s join tdup d using (h)
-          where s.doc_id <> d.canon.d or s.start <> d.canon.st
-        ), tdropped as (
-          select distinct doc_id, start + u.i as idx
-          from tnoncanon cross join
-               unnest(generate_series(0, 19)) as u(i)
-        ), tkept as (
-          select s.doc_id, s.idx, s.t from tks s
-          left join tdropped dr
-            on s.doc_id = dr.doc_id and s.idx = dr.idx
-          where dr.idx is null
-        ), tperdoc as (
-          select doc_id, count(*) as n_kept,
-                 string_agg(t, ' ' order by idx) as clean_text
-          from tkept group by doc_id
-        )
-        select a.doc_id, 'c4_sent3' as method,
-               coalesce(t.n_sentences, 0) as n_units,
-               coalesce(t.n_sentences, 0) - coalesce(p.n_kept, 0)
-                 as n_dropped,
-               coalesce(p.clean_text, '') as clean_text
-        from alldocs a
-        left join totals t using (doc_id)
-        left join perdoc p using (doc_id)
-        union all
-        select k.doc_id, 'exact_substr20' as method,
-               len(k.tk) as n_units,
-               len(k.tk) - coalesce(tp.n_kept, 0) as n_dropped,
-               coalesce(tp.clean_text, '') as clean_text
-        from tk0 k
-        left join tperdoc tp using (doc_id)
-    """
-
-    gopher = f"""
-        with lined as ({lined}),
-        base as (
-          select doc_id, text, {lines} as lines,
-                 {DK_TOKENS_CASED} as ws, {DK_TOKENS} as wsl
-          from lined
-        ), sig as (
-          select doc_id, {gopher_sig}
-          from base
-        )
-        select *, {pass_gopher(10, 1)} as pass_gopher from sig
-    """
-
-    c4 = f"""
-        with lined as ({lined}),
-        base as (
-          select doc_id, text, {c4_kept} as kl
-          from (select doc_id, text, {lines} as lines from lined)
-        ), ct as (
-          select doc_id, text,
-                 coalesce(array_to_string(kl, chr(10)), '') as clean_text,
-                 len(kl) as n_lines_kept
-          from base
-        ), sent as (
-          select *, {n_sentences} as n_sentences from ct
-        )
-        select doc_id, clean_text, n_lines_kept, n_sentences,
-               contains(lower(text), 'lorem ipsum') as has_lorem,
-               contains(text, '{{') as has_brace,
-               {keep_c4} as keep_c4
-        from sent
-    """
-
-    pii = f"""
-        with injected as (
-          select doc_id, text || ' contact ' || doc_id ||
-                 '@example.com tel +44 20 7946 0958 at 192.168.1.77.'
-                 as text
-          from documents
-        )
-        select doc_id,
-               cast(len(regexp_extract_all(text, '{email}')) as int)
-                 as n_emails,
-               cast(len(regexp_extract_all(text, '{ip}')) as int)
-                 as n_ips,
-               cast(len(regexp_extract_all(text, '{phone}')) as int)
-                 as n_phones,
-               {redact('text')} as redacted
-        from injected
-    """
-
-    clean = f"""
-        with lined as ({lined}),
-        alldocs as (
-          select cast(doc_id as varchar) as doc_id, text from lined
-          union all
-          (select 'dup_' || doc_id as doc_id, text from
-           (select * from lined order by doc_id limit 20))
-        ), ranked as (
-          select doc_id, text, row_number() over (
-            partition by md5(text) order by doc_id) as rn
-          from alldocs
-        ), base as (
-          select doc_id, text, rn, {lines} as lines,
-                 {DK_TOKENS_CASED} as ws, {DK_TOKENS} as wsl
-          from ranked
-        ), gop as (
-          select doc_id, text, rn, lines, {gopher_sig}
-          from base
-        ), ct as (
-          select *, coalesce(array_to_string(kl, chr(10)), '') as clean_text
-          from (select *, {c4_kept} as kl from gop)
-        ), sent as (
-          select *, {n_sentences} as n_sentences from ct
-        ), staged as (
-          select doc_id, clean_text,
-            case when rn > 1 then 'dup'
-                 when not {pass_gopher(10, 1)} then 'gopher'
-                 when not {keep_c4} then 'c4'
-                 else 'kept' end as stage
-          from sent
-        )
-        select doc_id, stage, stage = 'kept' as kept,
-               case when stage = 'kept'
-                    then md5({redact('clean_text')}) end as clean_fp
-        from staged
-    """
-
-    return {
-        "gopher_quality": f"""
-        with g as ({gopher}),
-             r as ({repetition})
-        select g.*, r.* exclude (doc_id)
-        from g join r using (doc_id)
-    """,
-        "c4_filters": f"""
-        with c as ({c4}), p as ({pii})
-        select c.*, p.* exclude (doc_id)
-        from c join p using (doc_id)
-    """,
-        "corpus_clean": clean,
-        "span_dedup": span_dedup,
-    }
+    from pdf_table_spark.queries import records
+    return {q.name: q.build for q in records()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """One DuckDB twin per query, keyed and ordered as ``queries()``.
-    A merged query's twin is a UNION ALL or join of the single-operator
-    bodies defined just above the returned dict, so merging changes no
-    per-operator semantics."""
-    from pdf_table_spark.ops.text import (LANG_STOPWORDS, cjk_count_exprs,
-                                          cjk_gate_expr)
-
-    golden = f"read_parquet('{GOLDEN_001}')"
-    spans = f"read_parquet('{SPANS_001}/*.parquet')"
-
-    langs = sorted(LANG_STOPWORDS)
-    lang_scores = ", ".join(
-        "len(list_filter(toks, t -> list_contains([{w}], t))) as score_{la}"
-        .format(w=", ".join(f"'{x}'" for x in LANG_STOPWORDS[la]), la=la)
-        for la in langs)
-    # winner by (score desc, lang asc) == ascending sort of
-    # (-score, lang) structs; duckdb compares structs field-by-field
-    # like spark. [1] = winner, [2] = runner-up → margin.
-    pairs = ", ".join(
-        f"{{'neg': -score_{la}, 'lang': '{la}'}}" for la in langs)
-    gs = ", ".join(f"score_{la}" for la in langs)
-    # CJK script tier mirrored exactly: same literal-codepoint
-    # character classes as ops.text (duckdb regexp_replace needs the
-    # explicit 'g' flag; spark's is global already)
-    cjk = cjk_count_exprs(global_flag=", 'g'")
-    cjk_cols = ", ".join(f"{e} as {n}" for n, e in cjk.items())
-    cjk_gate = cjk_gate_expr(matcher="regexp_matches(text, '[{cls}]')")
-    lang_sql = f"""
-        with scored as (
-          select doc_id, {cjk_cols}, {lang_scores}
-          from (select doc_id, text, {cjk_gate} as _cjk,
-                       {DK_TOKENS} as toks
-                from documents)
-        ), ranked as (
-          select doc_id, greatest({gs}) as g,
-                 n_kana + n_hangul + n_han as cjk_total,
-                 case when n_kana > 0 then 'japan'
-                      when n_hangul > 0 then 'korean'
-                      when n_trad > n_simp then 'chinese_cht'
-                      else 'ch' end as cjk_lang,
-                 list_sort([{pairs}]) as r
-          from scored
-        )
-        select doc_id,
-               case when cjk_total > g then cjk_lang
-                    when g = 0 then 'und'
-                    else r[1].lang end as pred_lang,
-               cast(case when cjk_total > g then cjk_total
-                    else -r[1].neg end as bigint) as top_score,
-               cast(case when cjk_total > g then cjk_total - g
-                    else r[2].neg - r[1].neg end as bigint) as margin
-        from ranked
-    """
-
-    jacc = """
-        with toks as (
-          select doc_id, {DK_TOKENS} as toks from documents
-        ), sh as (
-          select distinct doc_id, unnest({DK_SHINGLES}) as shingle from toks
-        ), sizes as (
-          select doc_id, count(*) as n_sh from sh group by doc_id
-        ), inter as (
-          select a.doc_id as doc_a, b.doc_id as doc_b, count(*) as n_inter
-          from sh a join sh b on a.shingle = b.shingle and a.doc_id < b.doc_id
-          group by 1, 2
-        )
-        select doc_a, doc_b,
-               round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) as jaccard
-        from inter
-        join sizes sa on sa.doc_id = doc_a
-        join sizes sb on sb.doc_id = doc_b
-        where round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.5
-    """.format(DK_TOKENS=DK_TOKENS, DK_SHINGLES=DK_SHINGLES)
-
-    cosine = """
-        with q as (
-          select vec_id as query_id, embedding::DOUBLE[] as q_emb
-          from embeddings where vec_id < 10
-        ), pairs as (
-          select q.query_id, e.vec_id as neighbor_id,
-                 round(list_dot_product(q.q_emb, e.embedding::DOUBLE[]) /
-                       (sqrt(list_dot_product(q.q_emb, q.q_emb)) *
-                        sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                              e.embedding::DOUBLE[]))), 9)
-                   as cosine
-          from embeddings e, q where e.vec_id <> q.query_id
-        ), ranked as (
-          select *, row_number() over (
-            partition by query_id order by cosine desc, neighbor_id
-          ) as rank from pairs
-        )
-        select query_id, neighbor_id, cosine, cast(rank as int) as rank
-        from ranked where rank <= 5
-    """
-
-    # single-operator bodies composed by the merged twins below
-    token_stats = f"""
-            select doc_id,
-                   len(toks) as n_tokens,
-                   len(list_distinct(toks)) as n_distinct_tokens,
-                   length(text) as n_chars_seen,
-                   round(list_sum(list_transform(toks, t -> length(t)))
-                         / greatest(len(toks), 1), 4) as mean_token_len,
-                   cast(list_sum(list_transform(toks,
-                        t -> ceil(length(t) / 4.0))) as bigint)
-                     as n_subword_units
-            from (select doc_id, text, {DK_TOKENS_CASED} as toks
-                  from documents)
-        """
-    quality_score = f"""
-            with base as (
-              select doc_id, text, {DK_TOKENS_CASED} as toks,
-                     length(regexp_replace(text, '[^!-/:-@\\[-`{{-~]', '', 'g'))
-                       as punct
-              from documents
-            ), m as (
-              select doc_id,
-                     len(toks) as n_tokens,
-                     punct / greatest(length(text), 1) as punct_ratio,
-                     len(list_distinct(toks)) / greatest(len(toks), 1)
-                       as diversity,
-                     least(len(toks) / 20.0, 1.0) as length_ok
-              from base
-            )
-            select doc_id, n_tokens,
-                   round(punct_ratio, 4) as punct_ratio,
-                   round(diversity, 4) as lexical_diversity,
-                   round(length_ok * (1 - punct_ratio) * (0.5 + diversity / 2),
-                         4) as quality
-            from m
-        """
-    text_normalize = f"""
-            select doc_id,
-                   length(regexp_replace(text, '[!-/:-@\\[-`{{-~]', '', 'g'))
-                     as n_chars_no_punct,
-                   len(list_filter({DK_TOKENS_CASED},
-                       t -> regexp_matches(t, '^[0-9.,%+-]+$')
-                        and regexp_matches(t, '[0-9]')))
-                     as n_numberish_tokens,
-                   len(list_filter({DK_TOKENS_CASED},
-                       t -> t in ('O', 'o'))) as n_ocr_zero_tokens
-            from documents
-        """
-    md5_fp = f"""
-            select doc_id,
-                   md5(array_to_string({DK_TOKENS}, ' ')) as fingerprint
-            from documents
-        """
-    # winnowing: k=8 char-gram h60 hashes, min per window of 4,
-    # distinct; summarized per doc (count/min/max/xor of the set)
-    winnow_fp = """
-            with norm as (
-              select doc_id,
-                     regexp_replace(lower(text), '\\s+', ' ', 'g') as t
-              from documents
-            ), grams as (
-              select doc_id, list_transform(
-                generate_series(1, greatest(length(t) - 7, 1)),
-                i -> cast('0x' || substr(md5(substr(t, i, 8)), 1, 15)
-                     as bigint)) as hs
-              from norm
-            ), wins as (
-              select doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(hs) - 3, 1)),
-                i -> list_min(list_slice(hs, i, i + 3))))) as fp
-              from grams
-            )
-            select doc_id, count(*) as n_fps,
-                   min(fp) as min_fp, max(fp) as max_fp,
-                   bit_xor(fp) as xor_fp
-            from wins group by doc_id
-        """
-    imaged_doc_classifier = f"""
-            select doc_id,
-                   len(list_filter(spans, s -> s.kind = 'image')) > 0
-                     as has_media,
-                   len(list_filter(spans,
-                       s -> s.kind in ('text', 'pdf_page'))) > 0 as has_text,
-                   len(list_filter(spans, s -> s.kind = 'image')) > 0 and
-                   len(list_filter(spans,
-                       s -> s.kind in ('text', 'pdf_page'))) = 0 as is_imaged
-            from {spans}
-        """
-    page_select = f"""
-            with po as (
-              select doc_id, spans,
-                     list_transform(
-                       list_filter(spans, p -> p.kind = 'pdf_page'),
-                       p -> p."offset") as pg_offsets
-              from {spans}
-            ), kept as (
-              select doc_id,
-                     list_transform(
-                       list_filter(
-                         list_transform(spans, s -> {{'s': s,
-                           'pg': len(list_filter(pg_offsets,
-                                     o -> o <= s."offset"))}}),
-                         x -> x.s.kind is distinct from 'pdf_page'
-                              or x.pg >= 2),
-                       x -> x.s) as spans
-              from po
-            )
-            select doc_id,
-                   len(list_filter(spans, s -> s.kind = 'pdf_page'))
-                     as n_pages_kept,
-                   len(spans) as n_spans_kept
-            from kept
-        """
-    tables_per_doc = (
-        f"select doc_id, count(*) as n_tables from {golden} "
-        f"where kind = 'table_html' group by doc_id")
-    media_resize = f"""
-            with refs as (
-              select distinct s.media_ref as media_ref
-              from (select unnest(spans) as s from {spans})
-              where s.kind = 'image'
-            ), dims as (
-              select media_ref,
-                64 + cast('0x' || substr(md5(media_ref), 1, 2) as int) * 8
-                  as sw,
-                64 + cast('0x' || substr(md5(media_ref), 3, 2) as int) * 8
-                  as sh,
-                (['png', 'jpeg', 'webp'])[
-                  cast('0x' || substr(md5(media_ref), 5, 2) as int) % 3 + 1]
-                  as format
-              from refs
-            )
-            select media_ref,
-                   cast(floor(sw * least(256.0 / sw, 256.0 / sh, 1.0))
-                        as int) as width,
-                   cast(floor(sh * least(256.0 / sw, 256.0 / sh, 1.0))
-                        as int) as height,
-                   sw as src_width, sh as src_height, format
-            from dims
-        """
-    video_frames = f"""
-            with refs as (
-              select distinct s.media_ref as media_ref
-              from (select unnest(spans) as s from {spans})
-              where s.kind = 'image'
-            ), videos as (
-              select media_ref,
-                     cast((cast('0x' || substr(md5(media_ref), 1, 15) as bigint) % 240) + 1 as int) as n_frames,
-                     cast((cast('0x' || substr(md5(media_ref || 'f'), 1, 15) as bigint) % 30) + 1 as double) as fps
-              from refs
-            )
-            select media_ref, cast(frame_idx as int) as frame_idx,
-                   frame_idx / fps as ts_sec
-            from (select media_ref, fps,
-                         unnest(generate_series(0, n_frames - 1, 5))
-                           as frame_idx
-                  from videos where n_frames > 0)
-        """
-    audio_chunks = f"""
-            with refs as (
-              select distinct s.media_ref as media_ref
-              from (select unnest(spans) as s from {spans})
-              where s.kind = 'image'
-            ), audio as (
-              select media_ref,
-                     cast(({DK_H60.format(s='media_ref')} % 90) + 1
-                          as double) as dur
-              from refs
-            ), chunks as (
-              select media_ref, dur,
-                     unnest(generate_series(0,
-                       greatest(cast(ceil((dur - 30.0) / 30.0) as int),
-                                0), 1)) as chunk_idx
-              from audio
-            )
-            select media_ref, cast(chunk_idx as int) as chunk_idx,
-                   cast(chunk_idx * 30.0 as double) as start_sec,
-                   cast(least(chunk_idx * 30.0 + 30.0, dur) as double)
-                     as end_sec
-            from chunks where chunk_idx * 30.0 < dur
-        """
-    # table_exports: checked against golden_exports.parquet, rendered
-    # by the same core.export_render function inside the
-    # single-process oracle (fixtures/build.py) — the extract_spans
-    # pattern applied to the S7 export fan-out.
-    table_exports = (
-        f'select doc_id, "offset" as offset, n_rows, n_cols, '
-        f"csv, markdown, json_rows, sqlite_sql, excel_xml, html_db "
-        f"from read_parquet('{EXPORTS_001}')")
-    doc_html = f"""
-            with g as (
-              select doc_id, "offset", kind, text, media_ref,
-                     lag(src_offset) over (partition by doc_id
-                                           order by "offset") as prev,
-                     src_offset
-              from {golden}
-            )
-            select doc_id,
-                   string_agg(
-                     (case when prev is not null and prev <> src_offset
-                           then '@@@@@@' || chr(10) else '' end) ||
-                     case when kind = 'paragraph'
-                            then '<p>' || text || '</p>'
-                          when kind = 'table_html' then text
-                          when kind = 'image'
-                            then '<img src="' || media_ref || '"/>'
-                          else '' end,
-                     chr(10) order by "offset") as html
-            from g group by doc_id
-        """
-    sig_concat = " || ',' || ".join(
-        f"cast(s{i} as varchar)" for i in range(8))
-    media_golden = os.path.join(FIXTURE_ROOT, "sf0.01",
-                                "golden_media_meta.parquet")
-
-    return {
-        "extract_spans": (
-            f'select doc_id, "offset" as offset, kind, text, media_ref, '
-            f"src_offset, accuracy, whitespace from {golden}"),
-        "extract_spans_lattice": (
-            f'select doc_id, "offset" as offset, kind, text, media_ref, '
-            f"src_offset, accuracy, whitespace from read_parquet('"
-            + os.path.join(FIXTURE_ROOT, "sf0.01",
-                           "golden_flat_lattice.parquet") + "')"),
-        "extract_spans_stream": (
-            f'select doc_id, "offset" as offset, kind, text, media_ref, '
-            f"src_offset, accuracy, whitespace from read_parquet('"
-            + os.path.join(FIXTURE_ROOT, "sf0.01",
-                           "golden_flat_stream.parquet") + "')"),
-        # A9 per-table quality (placement accuracy out of 100, % empty
-        # base cells) — reference compute_accuracy/compute_whitespace,
-        # pdf_utils.py:1142-1193
-        "table_quality": (
-            f'select doc_id, "offset" as offset, accuracy, whitespace '
-            f"from {golden} where kind = 'table_html'"),
-        "ocr_table_match": f"""
-            select g.doc_id, g."offset" as offset, g.kind, g.text
-            from {golden} g
-            join (select doc_id from {spans}
-                  where len(list_filter(spans,
-                        s -> s.kind = 'ocr_page')) > 0) d
-              on g.doc_id = d.doc_id
-        """,
-        "ocr_table_logi": f"""
-            select g.doc_id, g."offset" as offset, g.kind, g.text
-            from {golden} g
-            join (select doc_id from {spans}
-                  where len(list_filter(spans,
-                        s -> s.kind = 'ocr_page'
-                        and s.text like '%"logi"%')) > 0) d
-              on g.doc_id = d.doc_id
-        """,
-        "ocr_table_lgpma": f"""
-            select g.doc_id, g."offset" as offset, g.kind, g.text
-            from {golden} g
-            join (select doc_id from {spans}
-                  where len(list_filter(spans,
-                        s -> s.kind = 'ocr_page'
-                        and s.text like '%"lgpma"%')) > 0) d
-              on g.doc_id = d.doc_id
-        """,
-        "html_main_content": f"""
-            select g.doc_id, g."offset" as offset, g.kind, g.text,
-                   g.media_ref
-            from {golden} g
-            join (select doc_id from {spans}
-                  where len(list_filter(spans,
-                        s -> s.kind = 'html_page')) > 0) d
-              on g.doc_id = d.doc_id
-        """,
-        # casts: DuckDB sum(bigint) returns HUGEINT (int128); Spark
-        # returns BIGINT — cast so the driver's value hash matches.
-        "extract_kind_stats": (
-            f"select kind, count(*) as n_spans, "
-            f"cast(sum(length(text)) as bigint) as "
-            f"total_chars from {golden} group by kind"),
-        "span_inventory": f"""
-            select s.kind as kind, count(*) as n, max(s.offset) as max_offset
-            from (select unnest(spans) as s from {spans})
-            group by s.kind
-        """,
-        "doc_text_stats": f"""
-        with t as ({token_stats}),
-             q as ({quality_score}),
-             n as ({text_normalize})
-        select t.*, q.punct_ratio, q.lexical_diversity, q.quality,
-               n.n_chars_no_punct, n.n_numberish_tokens,
-               n.n_ocr_zero_tokens
-        from t join q using (doc_id) join n using (doc_id)
-    """,
-        "corpus_stats": f"""
-            with per_doc as (
-              select len({DK_TOKENS_CASED}) as n_tokens,
-                     length(text) as n_chars
-              from documents
-            )
-            select count(*) as n_docs,
-                   cast(sum(n_tokens) as bigint) as total_tokens,
-                   cast(sum(n_chars) as bigint) as total_chars,
-                   min(n_tokens) as min_tokens,
-                   quantile_cont(n_tokens, 0.25) as p25_tokens,
-                   quantile_cont(n_tokens, 0.5) as median_tokens,
-                   quantile_cont(n_tokens, 0.75) as p75_tokens,
-                   max(n_tokens) as max_tokens,
-                   cast(sum(n_tokens) as double) / count(*) as mean_tokens
-            from per_doc
-        """,
-        "lang_id": f"""
-        with sw as ({lang_sql}), ng as ({_dk_lang_ngram_sql()})
-        select doc_id, 'stopword' as method, pred_lang, top_score,
-               margin
-        from sw
-        union all
-        select doc_id, 'trigram', pred_lang, top_score, margin
-        from ng
-    """,
-        "fingerprint": f"""
-        with md as ({md5_fp}),
-             wn as ({winnow_fp})
-        select doc_id, 'md5' as method, fingerprint as fp from md
-        union all
-        select doc_id, 'winnow',
-               cast(n_fps as varchar) || ':' || cast(min_fp as varchar)
-               || ':' || cast(max_fp as varchar) || ':'
-               || cast(xor_fp as varchar)
-        from wn
-    """,
-        "exact_dedup": """
-            select md5(text) as text_hash, min(doc_id) as keeper_doc_id,
-                   count(*) as n_docs
-            from documents group by md5(text) having count(*) > 1
-        """,
-        **_dk_filter_sqls(),
-        "decontaminate": r"""
-            with toks as (
-              select doc_id, source,
-                     list_filter(string_split_regex(lower(text), '\s+'),
-                                 t -> t <> '') as tk
-              from documents
-            ), grams as (
-              select doc_id, source, unnest(list_distinct(list_transform(
-                       generate_series(1, greatest(len(tk) - 12, 0)),
-                       i -> md5(array_to_string(
-                              list_slice(tk, i, i + 12), ' '))))) as g
-              from toks where len(tk) >= 13
-            ), bench as (
-              select distinct g from grams where source = 'src0'
-            )
-            select t.doc_id, count(*) as n_hits
-            from grams t join bench using (g)
-            where t.source <> 'src0'
-            group by t.doc_id
-        """,
-        "assemble": _dk_assemble_sql("""
-        select f.doc_id, f.stage, f.stage = 'kept' as kept,
-               a.source, a.n_copies, a.split
-        from final f left join (
-          select doc_id, max(source) as source,
-                 count(*) as n_copies, max(split) as split
-          from assembled group by doc_id) a using (doc_id)
-    """),
-        "resample_mixture": """
-            with w as (
-              select doc_id, source,
-                     (case source when 'src1' then 2.4
-                                  when 'src2' then 0.25
-                                  when 'src3' then 0.0
-                                  else 1.0 end) as wt,
-                     cast('0x' || substr(md5(cast(doc_id as varchar)
-                          || 'mix-v1'), 1, 15) as bigint) % 10000 as b
-              from documents
-            ), n as (
-              select doc_id, source,
-                     cast(floor(wt) + (case when b < (wt - floor(wt))
-                          * 10000 then 1 else 0 end) as bigint) as nc
-              from w
-            )
-            select doc_id, source,
-                   unnest(generate_series(0, nc - 1)) as copy
-            from n where nc >= 1
-        """,
-        "semdedup": _dk_neardup_sql(0.45, as_cte=True) + """
-        , edges as (
-          select vec_a as u, vec_b as v from pairs
-          union select vec_b, vec_a from pairs
-        ), reach as (
-          select u as node, v as r from edges
-          union
-          select e.u, reach.r from edges e
-            join reach on reach.node = e.v
-        ), comp as (
-          select node as vec_id, least(node, min(r)) as component
-          from reach group by node
-        )
-        select e.vec_id,
-               coalesce(c.component, e.vec_id) as component,
-               coalesce(c.component, e.vec_id) = e.vec_id as kept
-        from embeddings e left join comp c on e.vec_id = c.vec_id
-    """,
-        "data_selection": r"""
-            with t as (
-              select doc_id, cast(n_chars as double) as score,
-                     cast(len(list_filter(string_split_regex(
-                       lower(text), '\s+'), x -> x <> '')) as bigint)
-                       as n_tok
-              from documents
-            ), o as (
-              select doc_id, score, n_tok,
-                     cast(coalesce(sum(n_tok) over (
-                       order by score desc, doc_id asc
-                       rows between unbounded preceding and 1
-                       preceding), 0) as bigint) as cum_before
-              from t
-            ),
-            -- DSIR arms (Xie et al. 2023): hashed unigram+bigram
-            -- buckets (md5 60-bit % 512), add-1-smoothed log ratio
-            -- quantized to integer micro-nats, per-doc BIGINT sum
-            tok as (
-              select doc_id, source,
-                     list_filter(string_split_regex(lower(text),
-                       '\s+'), x -> x <> '') as tk
-              from documents
-            ), g as (
-              select doc_id, source,
-                     list_concat(tk, case when len(tk) < 2 then []
-                       else list_transform(range(1, len(tk)),
-                         i -> tk[i] || ' ' || tk[i+1]) end) as grams
-              from tok
-            ), bk as (
-              select doc_id, source,
-                     cast('0x' || substr(md5(gr), 1, 15) as bigint)
-                       % 512 as bk
-              from (select doc_id, source, unnest(grams) as gr from g)
-            ), tc as (select bk, count(*) as c from bk
-                      where source = 'src1' group by bk),
-               rc as (select bk, count(*) as c from bk
-                      where source <> 'src1' group by bk),
-               tot as (select
-                 (select count(*) from bk where source = 'src1')
-                   as tt,
-                 (select count(*) from bk where source <> 'src1')
-                   as rr),
-               lr as (
-                 select u.bk,
-                        cast(floor((ln((coalesce(tc.c, 0) + 1.0)
-                             / (tot.tt + 512.0))
-                          - ln((coalesce(rc.c, 0) + 1.0)
-                             / (tot.rr + 512.0))) * 1e6 + 0.5)
-                          as bigint) as lre6
-                 from (select distinct bk from bk) u
-                 cross join tot
-                 left join tc using (bk) left join rc using (bk)),
-               sc as (
-                 select bk.doc_id,
-                        cast(sum(lr.lre6) as bigint) as score_e6
-                 from bk join lr using (bk)
-                 where bk.source <> 'src1'
-                 group by bk.doc_id)
-            select 'budget' as arm, doc_id, score,
-                   n_tok as aux, cum_before as aux2
-            from o where cum_before + n_tok <= 10000
-            union all
-            select 'dsir' as arm, doc_id,
-                   cast(score_e6 as double) / 1e6 as score,
-                   score_e6 as aux, score_e6 as aux2
-            from (select * from sc
-                  order by score_e6 desc, doc_id asc limit 50)
-            union all
-            select 'dsir_gumbel' as arm, doc_id,
-                   cast(score_e6 as double) / 1e6 as score,
-                   score_e6 as aux, key_e6 as aux2
-            from (select doc_id, score_e6,
-                         score_e6 + cast(floor(-ln(-ln(
-                           (cast('0x' || substr(md5(cast(doc_id as
-                              varchar) || 'dsir-v1'), 1, 15)
-                            as bigint) + 0.5)
-                           / 1152921504606846976.0)) * 1e6 + 0.5)
-                           as bigint) as key_e6
-                  from sc
-                  order by key_e6 desc, doc_id asc limit 50)
-        """,
-        "corpus_diff": """
-            with fp as (
-              select doc_id, md5(array_to_string(list_filter(
-                string_split_regex(lower(text), '\\s+'),
-                t -> t <> ''), ' ')) as f
-              from documents
-            ), newdocs as (
-              select doc_id,
-                     case when doc_id % 50 = 1 then text || ' v2'
-                          else text end as text
-              from documents where doc_id % 50 != 0
-            ), nfp as (
-              select doc_id, md5(array_to_string(list_filter(
-                string_split_regex(lower(text), '\\s+'),
-                t -> t <> ''), ' ')) as f
-              from newdocs
-            )
-            select coalesce(a.doc_id, b.doc_id) as doc_id,
-                   case when a.doc_id is null then 'added'
-                        when b.doc_id is null then 'removed'
-                        when a.f <> b.f then 'changed'
-                        else 'unchanged' end as status
-            from fp a full outer join nfp b on a.doc_id = b.doc_id
-        """,
-        "top_ngrams": """
-            with toks as (
-              select doc_id,
-                     list_filter(string_split_regex(lower(text), '\\s+'),
-                                 t -> t <> '') as tk
-              from documents
-            ), grams as (
-              select doc_id, unnest(list_transform(
-                       generate_series(1, greatest(len(tk) - 1, 0)),
-                       i -> array_to_string(
-                              list_slice(tk, i, i + 1), ' '))) as gram
-              from toks where len(tk) >= 2
-            )
-            select gram, count(*) as occurrences,
-                   count(distinct doc_id) as n_docs
-            from grams group by gram
-            order by occurrences desc, gram asc limit 20
-        """,
-        "corpus_split": """
-            select doc_id,
-                   case when b < 9000 then 'train'
-                        when b < 9500 then 'val'
-                        else 'test' end as split
-            from (select doc_id,
-                    cast('0x' || substr(md5(cast(doc_id as varchar)
-                         || 'split-v1'), 1, 15) as bigint) % 10000 as b
-                  from documents)
-        """,
-        "stratified_sample": """
-            select doc_id, lang
-            from (select doc_id, lang,
-                    cast('0x' || substr(md5(cast(doc_id as varchar)
-                         || 'sample-v1'), 1, 15) as bigint) % 10000 as b
-                  from documents)
-            where b < (case lang when 'en' then 0.5
-                                 when 'de' then 1.0
-                                 else 0.1 end) * 10000
-        """,
-        "pack_chunks": r"""
-            with toks as (
-              select doc_id,
-                     len(list_filter(string_split_regex(lower(text),
-                         '\s+'), t -> t <> '')) as n_tok
-              from documents
-            ), offs as (
-              select doc_id, n_tok,
-                     coalesce(sum(n_tok) over (order by doc_id
-                       rows between unbounded preceding and 1 preceding),
-                       0)::bigint as off
-              from toks
-            ), spans as (
-              select doc_id, n_tok, off,
-                     unnest(generate_series(cast(off // 512 as bigint),
-                            cast((off + n_tok - 1) // 512 as bigint)))
-                       as chunk_id
-              from offs where n_tok > 0
-            )
-            select chunk_id, count(*) as n_docs,
-                   cast(sum(least(off + n_tok, (chunk_id + 1) * 512)
-                        - greatest(off, chunk_id * 512)) as bigint)
-                     as n_tokens,
-                   min(doc_id) as first_doc, max(doc_id) as last_doc
-            from spans group by chunk_id
-        """,
-        "prepare_corpus": _dk_prepare_sql(),
-        "ngram_jaccard": jacc,
-        "dedup_corpus": _dk_dedup_corpus_cte(0.5, 20, 10) + """
-        select 'pair' as part, doc_a as a, doc_b as b, jaccard
-        from pairs
-        union all
-        select 'keep', d.doc_id, cast(null as bigint),
-               cast(null as double)
-        from documents d
-        left join (select distinct doc_b from pairs) p
-          on d.doc_id = p.doc_b
-        where p.doc_b is null
-    """,
-        "dedup_clusters": _dk_dedup_corpus_cte(
-            0.5, 20, 10, lead="with recursive ") + """
-        , edges as (
-          select doc_a as u, doc_b as v from pairs
-          union select doc_b, doc_a from pairs
-        ), reach as (
-          select u as node, v as r from edges
-          union
-          select e.u, reach.r from edges e
-            join reach on reach.node = e.v
-        ), comp as (
-          select node as doc_id, least(node, min(r)) as component
-          from reach group by node
-        )
-        select d.doc_id,
-               coalesce(c.component, d.doc_id) as component,
-               coalesce(c.component, d.doc_id) = d.doc_id as kept
-        from documents d left join comp c on d.doc_id = c.doc_id
-    """,
-        "minhash_lsh": _dk_minhash_bands_cte() + f"""
-        , cand as (
-          select distinct x.doc_id as doc_a, y.doc_id as doc_b
-          from bands x join bands y
-            on x.band = y.band and x.bh = y.bh and x.doc_id < y.doc_id
-        )
-        select 'pair' as part, doc_a as a, doc_b as b,
-               cast(null as varchar) as val from cand
-        union all
-        select 'keep', d.doc_id, cast(null as bigint),
-               cast(null as varchar)
-        from documents d
-        where d.doc_id not in (select doc_b from cand)
-        union all
-        select 'sig', doc_id, cast(null as bigint), {sig_concat}
-        from sig
-    """,
-        "simhash": f"""
-        with sims as ({_dk_simhash_sql()})
-        select 'sig' as part, doc_id as a, cast(null as bigint) as b,
-               simhash as val from sims
-        union all
-        select 'pair', x.doc_id, y.doc_id,
-               cast(bit_count(xor(x.simhash, y.simhash)) as bigint)
-        from sims x join sims y on x.doc_id < y.doc_id
-        where bit_count(xor(x.simhash, y.simhash)) <= 3
-    """,
-        "ann_topk": f"""
-        with b as ({cosine}),
-             l as ({_dk_ann_lsh_sql()}),
-             i as ({_dk_ann_ivf_sql()})
-        select 'brute' as method, * from b
-        union all select 'lsh', * from l
-        union all select 'ivf', * from i
-    """,
-        "media_sampling": f"""
-        with au as ({audio_chunks}),
-             vi as ({video_frames})
-        select media_ref, 'audio' as modality, chunk_idx as idx,
-               start_sec as t0, end_sec as t1 from au
-        union all
-        select media_ref, 'video', frame_idx, ts_sec,
-               cast(null as double) from vi
-    """,
-        # second arm: encode-side truth for the planted REAL media corpus
-        # (dims/format/n_bytes recorded before core.codecs encoding; the
-        # thumbnail fit is recomputed here independently in SQL)
-        "media_meta": f"""
-        with r as ({media_resize}),
-             g as (select * from read_parquet('{media_golden}'))
-        select media_ref, width, height, src_width, src_height, format,
-               cast(length(media_ref) as bigint) as n_bytes
-        from r
-        union all
-        select media_ref,
-               cast(floor(src_width * least(256.0 / src_width,
-                    256.0 / src_height, 1.0)) as int) as width,
-               cast(floor(src_height * least(256.0 / src_width,
-                    256.0 / src_height, 1.0)) as int) as height,
-               src_width, src_height, format, n_bytes
-        from g
-    """,
-        "embedding_neardup": _dk_neardup_sql(),
-        "doc_metrics": f"""
-            select doc_id, count(*) as n_spans,
-                   cast(sum(case when kind = 'table_html' then 1 else 0 end)
-                     as bigint) as n_tables,
-                   cast(sum(case when kind = 'paragraph' then 1 else 0 end)
-                     as bigint) as n_paragraphs,
-                   cast(sum(length(text)) as bigint) as total_chars
-            from {golden} group by doc_id
-        """,
-        "paragraph_rank": f"""
-            select doc_id, "offset" as offset, length(text) as n_chars,
-                   cast(row_number() over (
-                     partition by doc_id
-                     order by length(text) desc, "offset" asc
-                   ) as int) as para_rank
-            from {golden} where kind = 'paragraph'
-        """,
-        "tables_per_doc": f"""
-        with c as ({tables_per_doc}),
-        t as (select doc_id, cast(row_number() over (
-                order by n_tables desc, doc_id) as int) as top_rank
-              from c order by n_tables desc, doc_id limit 20)
-        select c.doc_id, c.n_tables, t.top_rank
-        from c left join t using (doc_id)
-    """,
-        "model_scores": f"""
-        with l as ({_dk_layout_scores_sql(spans)}),
-             q as ({_dk_quality_model_sql()}),
-             r as ({_dk_orient_sql(spans)})
-        select 'layout' as head, doc_id, "offset" as offset,
-               score_table as score_a, score_text as score_b,
-               score_figure as score_c, cast(null as double) as score_d,
-               layout_class as label
-        from l
-        union all
-        select 'quality', cast(doc_id as varchar), cast(-1 as int),
-               score_keep, score_drop, cast(null as double),
-               cast(null as double), pred
-        from q
-        union all
-        select 'orient', doc_id, "offset",
-               score_rot0, score_rot90, score_rot180, score_rot270,
-               cast(pred_rot as varchar) || ':' ||
-                 cast(declared_rot as varchar)
-        from r
-        union all
-        select 'orient_cnn', doc_id, cast(-1 as int),
-               score_rot0, score_rot90, score_rot180, score_rot270,
-               cast(pred_rot as varchar)
-        from read_parquet('{os.path.join(FIXTURE_ROOT, "sf0.01",
-                                         "golden_orient_cnn.parquet")}')
-        union all
-        select 'layout_cnn', doc_id, "offset",
-               score_table, score_text, score_figure,
-               cast(null as double), label
-        from read_parquet('{os.path.join(FIXTURE_ROOT, "sf0.01",
-                                         "golden_layout_cnn.parquet")}')
-    """,
-        "doc_profile": f"""
-        with i as ({imaged_doc_classifier}),
-             p as ({page_select})
-        select i.*, p.* exclude (doc_id)
-        from i join p using (doc_id)
-    """,
-        # from-model, two arms. TSR: checked against
-        # golden_model_tsr.parquet — written by fixtures/build.py from the
-        # SAME .npz artifact through the single-process core.tsrhead +
-        # core.logicell path (the extract_spans golden pattern applied to
-        # the model seam). det/rec: an INDEPENDENT pure-SQL twin — the
-        # head works from glyph evidence, the oracle merges the PLANTED
-        # det intervals (same visual line = same y-extent here; x-gaps >=
-        # 2x the median char width split detections, >= 0.5x insert the
-        # space) — code-disjoint ground truth, not a shared golden.
-        "ocr_from_model": (
-            f'select doc_id, "offset" as offset, kind, text '
-            f"from read_parquet('"
-            + os.path.join(FIXTURE_ROOT, "sf0.01",
-                           "golden_model_tsr.parquet") + "')"
-            + f"""
-        union all
-        select * from (
-        with pages as materialized (
-          -- materialized: DuckDB may otherwise evaluate a pushed-down
-          -- json_extract before the kind/json_valid scan filter and
-          -- throw on a non-JSON page payload (seen flaking)
-          select doc_id, s."offset" as "offset", s.text as text
-          from (select doc_id, unnest(spans) as s
-                from {spans})
-          where s.kind = 'ocr_page' and json_valid(s.text)
-        ), dets as (
-          select doc_id, "offset",
-                 unnest(json_transform(json_extract(text,
-                   '$.det_cells'),
-                   '[{{"x0":"DOUBLE","y0":"DOUBLE","x1":"DOUBLE",'
-                   '"y1":"DOUBLE","text":"VARCHAR"}}]'),
-                   recursive := true)
-          from pages
-        ), mw as (
-          select doc_id, "offset",
-                 median((x1 - x0) / length(text)) as mw
-          from dets group by 1, 2
-        ), gapped as (
-          select d.doc_id, d."offset", d.x0, d.y0, d.x1, d.y1,
-                 d.text, m.mw, d.x0 - lag(d.x1) over w as gap
-          from dets d join mw m using (doc_id, "offset")
-          window w as (partition by d.doc_id, d."offset", d.y0, d.y1
-                       order by d.x0)
-        ), islands as (
-          select *, sum(case when gap is null or gap >= 2 * mw
-                             then 1 else 0 end)
-                   over (partition by doc_id, "offset", y0, y1
-                         order by x0) as isl
-          from gapped
-        ), lines as (
-          select doc_id, "offset", min(x0) as x0, y0,
-                 max(x1) as x1, y1,
-                 string_agg(
-                   case when gap is null or gap >= 2 * mw then ''
-                        when gap >= 0.5 * mw then ' '
-                        else '' end || text, '' order by x0) as text
-          from islands
-          group by doc_id, "offset", y0, y1, isl
-        ), lh as (
-          select doc_id, "offset", median(y1 - y0) as mh
-          from lines group by 1, 2
-        ), reach as (
-          select l.*, h.mh,
-                 max(l.y1) over (partition by l.doc_id, l."offset"
-                   order by l.y0, l.x0
-                   rows between unbounded preceding and 1 preceding)
-                   as prev_reach
-          from lines l join lh h using (doc_id, "offset")
-        ), blob as (
-          select *, sum(case when prev_reach is null
-                              or y0 > prev_reach + 1.5 * mh
-                             then 1 else 0 end)
-                   over (partition by doc_id, "offset"
-                         order by y0, x0) as bid
-          from reach
-        ), bb as (
-          select doc_id, "offset", min(x0) as x0, min(y0) as y0,
-                 max(x1) as x1, max(y1) as y1,
-                 (max(x1) - min(x0)) * (max(y1) - min(y0)) as area
-          from blob group by doc_id, "offset", bid
-        ), ranked as (
-          select *, row_number() over (partition by doc_id, "offset"
-                   order by area desc, y0, x0) as rk
-          from bb
-        )
-        select doc_id, "offset", 'det_cell',
-               printf('%.1f,%.1f,%.1f,%.1f|%s', x0, y0, x1, y1, text)
-        from lines
-        union all
-        select doc_id, "offset", 'contour',
-               printf('%d|%.1f,%.1f,%.1f,%.1f|%.1f',
-                      rk, x0, y0, x1, y1, area)
-        from ranked where rk <= 10
-        )
-        union all
-        -- round-5 neural-postprocess arms. db_box: an INDEPENDENT
-        -- arithmetic twin — expected boxes recomputed from the
-        -- planted blob coords (unclip distance d = w*h*ratio/(2(w+h))
-        -- with ratio 2.0; grow by d; map->dest scale; banker's
-        -- round_even mirrors np.round; clip AFTER rounding), applying
-        -- the same gates the postprocess applies: binarize > 0.3,
-        -- first sside >= 3, score (= blob value on the planted maps)
-        -- >= 0.7, grown sside >= 5. rec_text / slanet: the planted
-        -- ground truth the decoders must invert.
-        select * from (
-        with opages as materialized (
-          -- materialized: see the pages CTE note — keeps json_extract
-          -- from running ahead of the kind/json_valid filter
-          select doc_id, s."offset" as "offset", s.text as text
-          from (select doc_id, unnest(spans) as s
-                from {spans})
-          where s.kind = 'ocr_page' and json_valid(s.text)
-        ), dblob as (
-          select doc_id, "offset",
-                 cast(json_extract(text, '$.db_prob.w') as double)
-                   as mw,
-                 cast(json_extract(text, '$.db_prob.h') as double)
-                   as mh,
-                 cast(json_extract(text, '$.db_prob.dest_w')
-                   as double) as dw,
-                 cast(json_extract(text, '$.db_prob.dest_h')
-                   as double) as dh,
-                 unnest(json_transform(
-                   json_extract(text, '$.db_prob.blobs'),
-                   '[["DOUBLE"]]')) as b
-          from opages
-          where json_extract(text, '$.db_prob') is not null
-        ), dgeom as (
-          select doc_id, "offset", mw, mh, dw, dh,
-                 b[1] as x0, b[2] as y0, b[3] as x1, b[4] as y1,
-                 b[5] as p, b[3] - b[1] as w, b[4] - b[2] as h,
-                 (b[3] - b[1]) * (b[4] - b[2]) * 2.0
-                   / (2.0 * ((b[3] - b[1]) + (b[4] - b[2]))) as d
-          from dblob
-        ), dbox as (
-          select doc_id, "offset",
-                 least(greatest(round_even((x0 - d) / mw * dw, 0),
-                       0), dw) as gx0,
-                 least(greatest(round_even((y0 - d) / mh * dh, 0),
-                       0), dh) as gy0,
-                 least(greatest(round_even((x1 + d) / mw * dw, 0),
-                       0), dw) as gx1,
-                 least(greatest(round_even((y1 + d) / mh * dh, 0),
-                       0), dh) as gy1,
-                 p
-          from dgeom
-          where p > 0.3 and least(w, h) >= 3 and p >= 0.7
-                and least(w, h) + 2 * d >= 5
-        ), rec as (
-          select doc_id, "offset",
-                 unnest(json_transform(
-                   json_extract(text, '$.rec_lines'),
-                   '[{{"gt": "VARCHAR"}}]')) as r
-          from opages
-          where json_extract(text, '$.rec_lines') is not null
-        ), cnp as (
-          -- Cycle-CenterNet twin (M6): recompute the cell polygons
-          -- from the planted peak arrays alone — subpixel center =
-          -- peak + reg, vertex_j = center - c2v_j, corner snap = the
-          -- corner peak whose link equals this center replaces its
-          -- nearest computed vertex, then the inverse preprocessing
-          -- affine (x - out/2) * (s/out) + c. All planted values are
-          -- exact dyadics so the float path is bit-identical to the
-          -- decoder's.
-          select doc_id, "offset",
-                 cast(json_extract(text, '$.centernet.out_w')
-                   as double) as ow,
-                 cast(json_extract(text, '$.centernet.out_h')
-                   as double) as oh,
-                 cast(json_extract(text, '$.centernet.s')
-                   as double) as sc,
-                 json_transform(json_extract(text, '$.centernet.c'),
-                   '["DOUBLE"]') as cc,
-                 json_transform(
-                   json_extract(text, '$.centernet.centers'),
-                   '[["DOUBLE"]]') as centers,
-                 json_transform(
-                   json_extract(text, '$.centernet.corners'),
-                   '[["DOUBLE"]]') as corners
-          from opages
-          where json_extract(text, '$.centernet') is not null
-        ), cnc as (
-          select doc_id, "offset", ow, oh, sc,
-                 cc[1] as cx, cc[2] as cy, unnest(centers) as ctr
-          from cnp
-        ), cnv as (
-          select doc_id, "offset", ow, oh, sc, cx, cy,
-                 ctr[1] + ctr[4] as pcx, ctr[2] + ctr[5] as pcy,
-                 ctr[3] as score, js.j as j,
-                 ctr[1] + ctr[4] - ctr[6 + 2 * js.j] as vx,
-                 ctr[2] + ctr[5] - ctr[7 + 2 * js.j] as vy
-          from cnc cross join (values (0), (1), (2), (3)) js(j)
-          where ctr[3] > 0.3
-        ), cnl as (
-          select doc_id, "offset",
-                 cr[1] + cr[4] as gvx, cr[2] + cr[5] as gvy,
-                 cr[1] + cr[4] - cr[6 + 2 * isq.i] as lx,
-                 cr[2] + cr[5] - cr[7 + 2 * isq.i] as ly
-          from (select doc_id, "offset", unnest(corners) as cr
-                from cnp) c0
-          cross join (values (0), (1), (2), (3)) isq(i)
-          where cr[3] > 0.3
-            and not (cr[6 + 2 * isq.i] = 0 and cr[7 + 2 * isq.i] = 0)
-        ), cns as (
-          select v.doc_id, v."offset", v.pcx, v.pcy, v.j,
-                 l.gvx, l.gvy,
-                 row_number() over (
-                   partition by v.doc_id, v."offset", v.pcx, v.pcy,
-                                l.gvx, l.gvy
-                   order by (v.vx - l.gvx) * (v.vx - l.gvx)
-                          + (v.vy - l.gvy) * (v.vy - l.gvy), v.j)
-                   as rn
-          from cnv v
-          join cnl l on l.doc_id = v.doc_id
-                    and l."offset" = v."offset"
-                    and l.lx = v.pcx and l.ly = v.pcy
-        ), cnf as (
-          select v.doc_id, v."offset", v.pcx, v.pcy, v.score, v.j,
-                 (coalesce(s.gvx, v.vx) - v.ow / 2) * (v.sc / v.ow)
-                   + v.cx as ix,
-                 (coalesce(s.gvy, v.vy) - v.oh / 2) * (v.sc / v.ow)
-                   + v.cy as iy
-          from cnv v
-          left join (select * from cns where rn = 1) s
-            on s.doc_id = v.doc_id and s."offset" = v."offset"
-           and s.pcx = v.pcx and s.pcy = v.pcy and s.j = v.j
-        ), plv as (
-          -- PicoDet twin (M2): the planted DFL bin sets decode to
-          -- their exact mean (equal-logit softmax), so box =
-          -- anchor center ± mean·stride, clipped to the ORIGINAL
-          -- shape before the scale division (warp_boxes quirk), and
-          -- hard-NMS reduces to keep-max-score per identical
-          -- (class, box) — the only planted overlaps are exact
-          -- duplicates.
-          select doc_id, "offset",
-                 cast(json_extract(text, '$.picodet.org_shape[0]')
-                   as double) as oh2,
-                 cast(json_extract(text, '$.picodet.org_shape[1]')
-                   as double) as ow2,
-                 cast(json_extract(text, '$.picodet.scale_factor[0]')
-                   as double) as sy,
-                 cast(json_extract(text, '$.picodet.scale_factor[1]')
-                   as double) as sx,
-                 unnest(json_transform(
-                   json_extract(text, '$.picodet.levels'),
-                   '[{{"stride":"INTEGER","anchors":[{{"r":"INTEGER",
-                      "c":"INTEGER","cls":"INTEGER","score":"DOUBLE",
-                      "bl":["INTEGER"],"bt":["INTEGER"],
-                      "br":["INTEGER"],"bb":["INTEGER"]}}]}}]')) as lv
-          from opages
-          where json_extract(text, '$.picodet') is not null
-        ), panch as (
-          select doc_id, "offset", oh2, ow2, sy, sx,
-                 lv.stride as st, unnest(lv.anchors) as a
-          from plv
-        ), pbox as (
-          select doc_id, "offset", a.cls as cls, a.score as score,
-            least(greatest((a.c + 0.5) * st
-              - st * list_aggregate(a.bl, 'avg'), 0), ow2) / sx as x0,
-            least(greatest((a.r + 0.5) * st
-              - st * list_aggregate(a.bt, 'avg'), 0), oh2) / sy as y0,
-            least(greatest((a.c + 0.5) * st
-              + st * list_aggregate(a.br, 'avg'), 0), ow2) / sx as x1,
-            least(greatest((a.r + 0.5) * st
-              + st * list_aggregate(a.bb, 'avg'), 0), oh2) / sy as y1
-          from panch where a.score > 0.5
-        ), pkept as (
-          select doc_id, "offset", cls, x0, y0, x1, y1,
-                 max(score) as score
-          from pbox group by all
-        ), mast as (
-          -- TableMaster twin (M10): html rides on the planted gt;
-          -- the BOX path is recomputed here from the planted rows +
-          -- decoded token string alone — td-family mask, [0,1]
-          -- validity, denormalize by pad_shape, divide by
-          -- scale_factor, truncate to token count, sum>1 survivor
-          -- filter, xywh → int-truncated xyxy
-          select doc_id, "offset",
-                 string_split(json_extract_string(text,
-                   '$.master.gt_tokens'), ',') as toks,
-                 json_transform(json_extract(text, '$.master.bboxes'),
-                   '[["DOUBLE"]]') as bbs,
-                 cast(json_extract(text, '$.master.pad_shape[0]')
-                   as double) as mph,
-                 cast(json_extract(text, '$.master.pad_shape[1]')
-                   as double) as mpw,
-                 cast(json_extract(text, '$.master.scale_factor[0]')
-                   as double) as msy,
-                 cast(json_extract(text, '$.master.scale_factor[1]')
-                   as double) as msx
-          from opages
-          where json_extract(text, '$.master') is not null
-        ), mrow as (
-          select doc_id, "offset", mph, mpw, msy, msx, toks,
-                 unnest(bbs) as bb, generate_subscripts(bbs, 1) as i
-          from mast
-        ), mbox as (
-          select doc_id, "offset",
-                 bb[1] * mpw / msx as mcx, bb[2] * mph / msy as mcy,
-                 bb[3] * mpw / msx as mws, bb[4] * mph / msy as mhs
-          from mrow
-          where i <= len(toks)
-            and toks[i] in ('<td></td>', '<td')
-            and bb[1] between 0 and 1 and bb[2] between 0 and 1
-            and bb[3] between 0 and 1 and bb[4] between 0 and 1
-        )
-        select doc_id, "offset", 'db_box' as kind,
-               printf('%d,%d,%d,%d,%d,%d,%d,%d|%.4f',
-                      cast(gx0 as bigint), cast(gy0 as bigint),
-                      cast(gx1 as bigint), cast(gy0 as bigint),
-                      cast(gx1 as bigint), cast(gy1 as bigint),
-                      cast(gx0 as bigint), cast(gy1 as bigint),
-                      p) as text
-        from dbox
-        union all
-        select doc_id, "offset", 'rec_text', r.gt || '|0.9000'
-        from rec
-        union all
-        select doc_id, "offset", 'slanet',
-               json_extract_string(text, '$.slanet.gt')
-        from opages
-        where json_extract(text, '$.slanet') is not null
-        union all
-        select doc_id, "offset", 'cn_poly',
-               printf('%.2f,%.2f,%.2f,%.2f,%.2f,%.2f,%.2f,%.2f|%.4f',
-                      max(case when j = 0 then ix end),
-                      max(case when j = 0 then iy end),
-                      max(case when j = 1 then ix end),
-                      max(case when j = 1 then iy end),
-                      max(case when j = 2 then ix end),
-                      max(case when j = 2 then iy end),
-                      max(case when j = 3 then ix end),
-                      max(case when j = 3 then iy end),
-                      score)
-        from cnf
-        group by doc_id, "offset", pcx, pcy, score
-        union all
-        select doc_id, "offset", 'layout_box',
-               printf('%s|%d|%.4f|%.2f,%.2f,%.2f,%.2f',
-                      ['text', 'title', 'figure', 'figure_caption',
-                       'table', 'table_caption', 'header', 'footer',
-                       'reference', 'equation'][cls + 1],
-                      cls, score, x0, y0, x1, y1)
-        from pkept
-        union all
-        select doc_id, "offset", 'master_html',
-               json_extract_string(text, '$.master.gt_html')
-        from opages
-        where json_extract(text, '$.master') is not null
-        union all
-        select doc_id, "offset", 'master_box',
-               printf('%d,%d,%d,%d',
-                      cast(trunc(mcx - mws / 2) as bigint),
-                      cast(trunc(mcy - mhs / 2) as bigint),
-                      cast(trunc(mcx + mws / 2) as bigint),
-                      cast(trunc(mcy + mhs / 2) as bigint))
-        from mbox where mcx + mcy + mws + mhs > 1
-        )
-        union all
-        select doc_id, "offset" as offset, kind, text
-        from read_parquet('"""
-            + os.path.join(FIXTURE_ROOT, "sf0.01",
-                           "golden_scan_boxes.parquet") + """')
-        union all
-        select doc_id, "offset" as offset, kind, text
-        from read_parquet('"""
-            + os.path.join(FIXTURE_ROOT, "sf0.01",
-                           "golden_ocr_scan.parquet") + "')"),
-        "exports": f"""
-        with e as ({table_exports}), d as ({doc_html})
-        select doc_id, "offset" as offset, 'shape' as fmt,
-               cast(n_rows as varchar) || 'x' || cast(n_cols as varchar)
-                 as payload from e
-        union all select doc_id, "offset", 'csv', csv from e
-        union all select doc_id, "offset", 'markdown', markdown from e
-        union all select doc_id, "offset", 'json_rows', json_rows from e
-        union all
-        select doc_id, "offset", 'sqlite_sql', sqlite_sql from e
-        union all select doc_id, "offset", 'excel_xml', excel_xml from e
-        union all select doc_id, "offset", 'html_db', html_db from e
-        union all select doc_id, -1, 'doc_html', html from d
-    """,
-        "pricing_summary": """
-            select l_returnflag, l_linestatus,
-                   sum(l_quantity) as sum_qty,
-                   sum(l_extendedprice) as sum_base_price,
-                   sum(l_extendedprice * (1 - l_discount)) as sum_disc_price,
-                   round(avg(l_quantity), 6) as avg_qty,
-                   count(*) as count_order
-            from lineitem
-            where l_shipdate <= timestamp '1998-09-02'
-            group by l_returnflag, l_linestatus
-        """,
-        "top_revenue_orders": """
-            with rev as (
-              select l_orderkey,
-                     round(sum(l_extendedprice * (1 - l_discount)), 6)
-                       as revenue
-              from lineitem group by l_orderkey
-            )
-            select o_orderkey, revenue, o_orderdate
-            from orders
-            join customer on o_custkey = c_custkey
-              and c_mktsegment = 'BUILDING'
-            join rev on o_orderkey = l_orderkey
-            order by revenue desc, o_orderkey
-            limit 10
-        """,
-        "salted_priority_revenue": """
-            select o_orderpriority,
-                   cast(round(sum(l_extendedprice * (1 - l_discount)))
-                        as bigint) as revenue,
-                   count(*) as n_items
-            from lineitem
-            join orders on l_orderkey = o_orderkey
-            group by o_orderpriority
-        """,
-        "event_sessions": """
-            with flagged as (
-              select user_id, ts, event_id,
-                     case when epoch(ts) - lag(epoch(ts)) over (
-                       partition by user_id order by ts, event_id) > 1800
-                       then 1 else 0 end as new_session
-              from events
-            ), sess as (
-              select user_id,
-                     sum(new_session) over (
-                       partition by user_id
-                       order by ts, event_id
-                       rows between unbounded preceding and current row)
-                       as session_id
-              from flagged
-            )
-            select user_id, cast(max(session_id) + 1 as bigint) as n_sessions,
-                   count(*) as n_events
-            from sess group by user_id
-        """,
-    }
-
+    """One DuckDB twin per query (over the sf0.01 views that
+    ``scripts/check_correctness.py`` registers), keyed and ordered as
+    ``queries()``."""
+    from pdf_table_spark.queries import records
+    return {q.name: q.oracle if isinstance(q.oracle, str) else q.oracle()
+            for q in records()}

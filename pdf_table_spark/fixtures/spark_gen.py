@@ -12,8 +12,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-SPANS_SQL_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
-                    "text:string,media_ref:string,offset:int>>")
+from ..sources.corpus import CORPUS_SCHEMA
 
 
 def _gen_batches_heavy(batches):
@@ -40,7 +39,7 @@ def _gen_batches_heavy(batches):
 def generate_corpus(spark: SparkSession, n_docs: int, out_dir: str,
                     n_files: int = 64) -> str:
     (spark.range(n_docs).repartition(n_files)
-     .mapInArrow(_gen_batches_heavy, schema=SPANS_SQL_SCHEMA)
+     .mapInArrow(_gen_batches_heavy, schema=CORPUS_SCHEMA)
      .write.mode("overwrite").parquet(out_dir))
     return out_dir
 

@@ -3,7 +3,7 @@ tables: dedup, similarity search, text analysis, multimodal plumbing.
 
 Everything here is expressed with built-in ``pyspark.sql.functions``
 (JVM-side, whole-stage codegen) unless genuinely impossible; each op
-has a DuckDB-SQL oracle twin in ``__spark_entry__.oracle_sql`` built
-from the same formula (shared md5-based hashing so both engines agree
-bit-for-bit).
+has a DuckDB-SQL oracle twin next to its query in
+``pdf_table_spark.queries``, built from the same formula (shared
+md5-based hashing so both engines agree bit-for-bit).
 """

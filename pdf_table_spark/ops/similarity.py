@@ -396,8 +396,8 @@ def _topk_final(partial: DataFrame, k: int) -> DataFrame:
                     F.col("rank").cast("int").alias("rank")))
 
 
-def cosine_topk_np(emb: DataFrame, query_ids=None, k: int = 5,
-                   batch_rows: int = 65536) -> DataFrame:
+def cosine_topk_np(emb: DataFrame, query_ids=None,
+                   k: int = 5) -> DataFrame:
     """Exact brute-force top-k, vectorized: mapInPandas computes one
     (batch x dim) @ (dim x n_queries) matmul per Arrow batch and emits
     only each batch's top-k rows per query — the shuffle carries

@@ -19,8 +19,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-CORPUS_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
-                 "text:string,media_ref:string,offset:int>>")
+# the span corpus, spelled once: every reader, writer and generator of
+# (doc_id, spans) imports these
+SPAN_STRUCT = ("struct<kind:string,text:string,media_ref:string,"
+               "offset:int>")
+CORPUS_SCHEMA = f"doc_id string, spans array<{SPAN_STRUCT}>"
 
 _FORMATS = ("parquet", "json")
 

@@ -33,6 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .iceberg_meta import commit_snapshot, read_table_snapshot
 from .pipeline import extract_documents, flatten_output
 
 MANIFEST_DIR = "_manifests"
@@ -127,50 +128,6 @@ def metadata_fingerprints(spark: SparkSession, docs: DataFrame,
             json.dumps(sorted(ents)).encode()).hexdigest()
         fps[val] = (f"md:{digest}", None)  # doc count unknown (no scan)
     return fps
-
-
-def read_table_snapshot(table_path: str) -> dict | None:
-    """Current snapshot of an Iceberg-layout table from its METADATA
-    ONLY — the table-spec files are plain JSON, so no Iceberg runtime
-    is needed to read the transactional version (this sandbox ships no
-    iceberg-spark-runtime jar; with one on the classpath the same ids
-    come from ``spark.sql("select snapshot_id from …snapshots")``).
-
-    Resolution follows the Hadoop-catalog layout of the public spec:
-    ``metadata/version-hint.text`` names the current
-    ``v<N>.metadata.json``; without a hint the newest
-    ``*.metadata.json`` wins. Returns {snapshot_id, sequence_number,
-    last_updated_ms, metadata_file} or None when the path is not an
-    Iceberg-layout table."""
-    meta_dir = os.path.join(table_path, "metadata")
-    if not os.path.isdir(meta_dir):
-        return None
-    meta_file = None
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if os.path.exists(hint):
-        with open(hint) as f:
-            v = f.read().strip()
-        for cand in (f"v{v}.metadata.json", f"{v}.metadata.json"):
-            p = os.path.join(meta_dir, cand)
-            if os.path.exists(p):
-                meta_file = p
-                break
-    if meta_file is None:
-        cands = sorted(n for n in os.listdir(meta_dir)
-                       if n.endswith(".metadata.json"))
-        if not cands:
-            return None
-        meta_file = os.path.join(meta_dir, cands[-1])
-    with open(meta_file) as f:
-        meta = json.load(f)
-    if "current-snapshot-id" not in meta:
-        return None
-    return {
-        "snapshot_id": meta["current-snapshot-id"],
-        "sequence_number": meta.get("last-sequence-number"),
-        "last_updated_ms": meta.get("last-updated-ms"),
-        "metadata_file": os.path.basename(meta_file),
-    }
 
 
 def _snapshot_marker_path(out_dir: str) -> str:
@@ -356,7 +313,6 @@ def run_checkpointed(spark: SparkSession, docs: DataFrame, out_dir: str,
                 status="ok")
             done.append(part_id)
             if commit_output_snapshots:
-                from . import iceberg_meta
                 pdir = os.path.join(
                     out_dir,
                     f"part_id={escape_partition_value(str(part_id))}")
@@ -366,7 +322,7 @@ def run_checkpointed(spark: SparkSession, docs: DataFrame, out_dir: str,
                      "rows": None, "partition": str(part_id)}
                     for n in sorted(os.listdir(pdir))
                     if n.endswith(".parquet")]
-                snap_committed = iceberg_meta.commit_snapshot(
+                snap_committed = commit_snapshot(
                     out_dir, added, operation="overwrite",
                     replace_partition=str(part_id),
                     summary={"run-id": run_id, "partition": part_id,

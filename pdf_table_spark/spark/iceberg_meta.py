@@ -1,10 +1,9 @@
-"""Transactional snapshot commits for output tables (Iceberg-layout).
+"""Iceberg-layout table metadata: the one reader and writer of the
+Hadoop-catalog layout (plain JSON — no runtime jar needed).
 
-``checkpoint.read_table_snapshot`` has always READ the Iceberg
-Hadoop-catalog metadata layout (plain JSON — no runtime jar needed);
-this module adds the WRITE side: every completed unit of work can be
-committed as a new table snapshot with the transactional properties
-the Iceberg spec provides —
+``read_table_snapshot`` resolves a table's current snapshot, and
+every completed unit of work can be committed as a new table snapshot
+with the transactional properties the Iceberg spec provides —
 
   * **atomic visibility** — a snapshot exists iff its
     ``v<N>.metadata.json`` exists; the file appears atomically via
@@ -74,6 +73,31 @@ def current_version(table_path: str) -> int:
             except ValueError:
                 continue
     return best
+
+
+def read_table_snapshot(table_path: str) -> dict | None:
+    """Current snapshot of an Iceberg-layout table from its METADATA
+    ONLY, with no iceberg-spark-runtime jar (with one on the classpath
+    the same ids come from ``spark.sql("select snapshot_id from
+    …snapshots")``). The current metadata is the
+    highest ``v<N>.metadata.json`` by version number
+    (``current_version``). Returns {snapshot_id, sequence_number,
+    last_updated_ms, metadata_file}, or None when the path holds no
+    versioned metadata."""
+    v = current_version(table_path)
+    if v == 0:
+        return None
+    meta_file = _version_file(table_path, v)
+    with open(meta_file) as f:
+        meta = json.load(f)
+    if "current-snapshot-id" not in meta:
+        return None
+    return {
+        "snapshot_id": meta["current-snapshot-id"],
+        "sequence_number": meta.get("last-sequence-number"),
+        "last_updated_ms": meta.get("last-updated-ms"),
+        "metadata_file": os.path.basename(meta_file),
+    }
 
 
 def read_metadata(table_path: str) -> dict | None:

@@ -44,10 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.corpus import SPAN_STRUCT  # noqa: F401 (re-export)
 from .stages import run_extract_stage
-
-SPAN_STRUCT = ("struct<kind:string,text:string,media_ref:string,"
-               "offset:int>")
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:

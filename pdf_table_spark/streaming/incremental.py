@@ -38,10 +38,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.corpus import CORPUS_SCHEMA
 from ..spark.pipeline import extract_documents, flatten_output
-
-SPANS_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
-                "text:string,media_ref:string,offset:int>>")
 
 
 def extract_stream(spark: SparkSession, input_dir: str, output_dir: str,
@@ -50,7 +48,7 @@ def extract_stream(spark: SparkSession, input_dir: str, output_dir: str,
     parquet append."""
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     stream = (
-        spark.readStream.schema(SPANS_SCHEMA)
+        spark.readStream.schema(CORPUS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )

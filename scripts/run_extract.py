@@ -80,8 +80,10 @@ def main(argv=None):
 
     t0 = time.perf_counter()
     if args.checkpointed:
-        summary = run_checkpointed(spark, docs, args.output,
-                                   n_buckets=args.buckets)
+        summary = run_checkpointed(
+            spark, docs, args.output, n_buckets=args.buckets,
+            transform=lambda d: flatten_output(
+                extract_documents(d, flavor=args.flavor)))
         wall = time.perf_counter() - t0
         extra = {"buckets_done": len(summary["done"]),
                  "buckets_skipped": len(summary["skipped"])}

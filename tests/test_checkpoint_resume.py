@@ -338,3 +338,49 @@ def test_non_iceberg_path_ignores_snapshot_fast_path(spark, docs,
     s2 = cp.run_checkpointed(spark, docs, out, n_buckets=2,
                              run_id="r2", snapshot_path=str(tmp_path))
     assert len(s2["skipped"]) == 2 and "snapshot_skip" not in s2
+
+
+def test_run_extract_checkpointed_keeps_flavor(spark, fixture_root,
+                                               tmp_path, monkeypatch):
+    """``run_extract.py --checkpointed --flavor lattice`` hands the
+    checkpointed run a transform that extracts with that flavor."""
+    import importlib.util
+
+    from pdf_table_spark.api import read_documents_flat
+    from pdf_table_spark.spark import checkpoint, session
+
+    class Shared:
+        """The test session, minus the script's closing ``stop()``."""
+
+        def __getattr__(self, name):
+            return getattr(spark, name)
+
+        def stop(self):
+            pass
+
+    seen = {}
+
+    def fake_run(spark_, docs, out_dir, **kw):
+        seen.update(kw)
+        return {"done": [], "skipped": []}
+
+    monkeypatch.setattr(session, "build_session",
+                        lambda *a, **k: Shared())
+    monkeypatch.setattr(checkpoint, "run_checkpointed", fake_run)
+    script = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts", "run_extract.py")
+    spec = importlib.util.spec_from_file_location("run_extract", script)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    path = os.path.join(fixture_root, "sf0.001", "documents_spans.parquet")
+    mod.main(["--input", path, "--output", str(tmp_path / "out"),
+              "--checkpointed", "--flavor", "lattice", "--buckets", "2"])
+
+    from pdf_table_spark.spark.pipeline import (extract_documents,
+                                                flatten_output)
+    transform = seen.get("transform") or (
+        lambda d: flatten_output(extract_documents(d)))
+    got = transform(spark.read.parquet(path))
+    want = read_documents_flat(spark, path, flavor="lattice")
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0

@@ -89,6 +89,23 @@ def test_read_table_snapshot_roundtrip(tmp_path):
     assert open(hint).read().strip() == str(im.current_version(t))
 
 
+def test_read_table_snapshot_orders_versions_numerically(tmp_path):
+    # eleven versions: v9 sorts after v11 as a string. The listing's
+    # numeric maximum is the current metadata, with the hint gone or
+    # stale (it is advisory)
+    t = str(tmp_path / "tbl")
+    snaps = [im.commit_snapshot(t, _files(1, f"p{k}")) for k in range(10)]
+    assert im.current_version(t) == 11
+    hint = os.path.join(t, "metadata", "version-hint.text")
+    os.unlink(hint)
+    got = read_table_snapshot(t)
+    assert got["snapshot_id"] == snaps[-1]["snapshot-id"]
+    assert got["metadata_file"] == "v11.metadata.json"
+    with open(hint, "w") as f:
+        f.write("3")
+    assert read_table_snapshot(t)["snapshot_id"] == snaps[-1]["snapshot-id"]
+
+
 def test_lost_race_rebases(tmp_path):
     # simulate a concurrent winner: pre-claim the next version file;
     # the commit must rebase onto it, not overwrite or corrupt it
