@@ -14,6 +14,7 @@ collect per session.
 from __future__ import annotations
 
 from collections import Counter
+from math import isfinite
 
 START_DIFF_ERROR = 10.0
 
@@ -23,9 +24,16 @@ START, MIDDLE, END = "start", "middle", "end"
 def page_margin_modes(text_lines):
     """Most-common rounded start-x, end-x, and font size (line height)
     across the page's prose lines — the A5 mode statistics.
-    Ties break on the smaller value for determinism."""
+    Ties break on the smaller value for determinism. A NaN or
+    infinite coordinate (JSON payloads can carry them) has no rounded
+    value, so it stays out of the statistics; its line still counts
+    as text."""
     if not text_lines:
         return 0.0, 0.0, 10.0
+
+    def rounded(vals):
+        return [round(v) for v in vals
+                if not isinstance(v, float) or isfinite(v)]
 
     def mode(vals, default):
         if not vals:
@@ -34,11 +42,10 @@ def page_margin_modes(text_lines):
         best = max(cnt.items(), key=lambda kv: (kv[1], -kv[0]))
         return float(best[0])
 
-    start_x = mode([round(t["x0"]) for t in text_lines], 0.0)
-    end_x = mode([round(t["x1"]) for t in text_lines], 0.0)
-    font = mode(
-        [round(t["y1"] - t["y0"]) for t in text_lines
-         if round(t["y1"] - t["y0"]) > 0], 10.0)
+    start_x = mode(rounded(t["x0"] for t in text_lines), 0.0)
+    end_x = mode(rounded(t["x1"] for t in text_lines), 0.0)
+    font = mode([h for h in rounded(t["y1"] - t["y0"] for t in text_lines)
+                 if h > 0], 10.0)
     return start_x, end_x, font
 
 

@@ -10,6 +10,8 @@
     cosine c, P(agree per plane) = 1 - acos(c)/π, so at c=0.99 the
     probe set catches ~0.98 of true nearest neighbors while still
     shrinking the search space ~2^n/(n+1)-fold.
+  * IVF-Flat ANN — every vector joins its max-cosine centroid cell and
+    each query searches its ``n_probe`` nearest cells.
   * embedding near-dup — OR-of-bands (the MinHash-LSH shape applied to
     hyperplane signs): NEARDUP_BANDS bands × NEARDUP_ROWS planes; a
     pair is a candidate when ANY band's sign-pattern matches. At
@@ -17,29 +19,35 @@
     for the previous single-bucket probe; random pairs still collide
     at only ~bands/2^rows ≈ 2.3%, so the quadratic step stays bounded.
 
-Dot products are computed as a sequential left fold in double
-precision — the same order DuckDB's list_dot_product uses — so oracle
-values match bit-for-bit. A measured recall-vs-brute-force gate lives
-in tests/test_similarity_recall.py.
+The three top-k operators differ only in their candidate rows and
+probes: ``_topk`` is their one search body (broadcast probe join,
+staged-norm cosine, window top-k), and ``_sign_key`` builds both the
+LSH bucket and the near-dup band keys. Dot products are computed as a
+sequential left fold in double precision — the same order DuckDB's
+list_dot_product uses — so oracle values match bit-for-bit. A
+zero-norm vector gets a NULL cosine (``try_divide``), as in the DuckDB
+twins, instead of failing an ANSI-mode job. A measured
+recall-vs-brute-force gate lives in tests/test_similarity_recall.py.
+
+The numpy half (``cosine_topk_np``, ``ivf_assign``, ``ann_topk_ivf_np``,
+``semdedup_kmeans``) is the same search with the inner loop in one
+matmul per Arrow batch: interpreted lambdas cost ~10 ns per
+multiply-add, too slow at 10^6+ vectors. Its two searches share one
+block kernel, ``_block_topk``. It has no oracle twin; the tests
+compare it against the interpreted operators.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-COS_EXPR = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
-    " 0D, (acc, v) -> acc + v)"
-    " / (sqrt(aggregate({a}, 0D, (acc, v) -> acc + cast(v as double) * cast(v as double)))"
-    " * sqrt(aggregate({b}, 0D, (acc, v) -> acc + cast(v as double) * cast(v as double))))"
-)
-
-# staged-norm building blocks: the pair scorers below compute each
-# row's norm ONCE as a column and divide the dot product by the
-# product of staged norms — the same IEEE operation sequence as
-# COS_EXPR (dot / (sqrt(Σa²) · sqrt(Σb²)), all left folds), so
+# staged-norm building blocks: the pair scorers compute each row's
+# norm ONCE as a column and divide the dot product by the product of
+# staged norms — the same IEEE operation sequence as folding both
+# norms per pair (dot / (sqrt(Σa²) · sqrt(Σb²)), all left folds), so
 # cosines are bit-identical, but the two norm folds stop being
 # recomputed per PAIR (for brute force that was 2/3 of the
 # interpreted flops: 128 of 192 multiply-adds per pair).
@@ -49,6 +57,15 @@ DOT_EXPR = (
 )
 NORM_EXPR = ("sqrt(aggregate({a}, 0D, (acc, v) -> "
              "acc + cast(v as double) * cast(v as double)))")
+
+
+def _cosine(a: str, b: str, na: str, nb: str) -> str:
+    """dot(a, b) / (na * nb); NULL when a norm is zero."""
+    return f"try_divide({DOT_EXPR.format(a=a, b=b)}, {na} * {nb})"
+
+
+COS_EXPR = _cosine("{a}", "{b}", NORM_EXPR.format(a="{a}"),
+                   NORM_EXPR.format(a="{b}"))
 
 
 def _fold_norm(vec) -> float:
@@ -61,6 +78,55 @@ def _fold_norm(vec) -> float:
     return math.sqrt(acc)
 
 
+def _query_rows(df: DataFrame, query_ids) -> DataFrame:
+    """The query subset of ``df``: ``query_ids``, by default vec_id < 10."""
+    return df.filter(F.col("vec_id").isin([int(q) for q in query_ids])
+                     if query_ids is not None else F.col("vec_id") < 10)
+
+
+def _probes(rows: DataFrame, query_ids, probe: str | None = None,
+            *extra) -> DataFrame:
+    """(query_id, q_emb, _qn, *extra) of the query subset of ``rows``;
+    with ``probe``, one row per element of that array expression, as
+    column ``probe``."""
+    queries = _query_rows(rows, query_ids).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
+        F.col("_n").alias("_qn"), *extra)
+    if probe is None:
+        return queries
+    return queries.select("query_id", "q_emb", "_qn",
+                          F.explode(F.expr(probe)).alias("probe"))
+
+
+def _rank(pairs: DataFrame, k: int, cosine="cosine") -> DataFrame:
+    """Each query's top ``k`` pairs by cosine desc, neighbor_id asc."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (pairs.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", cosine,
+                    F.col("rank").cast("int").alias("rank")))
+
+
+def _topk(rows: DataFrame, probes: DataFrame, k: int,
+          key: str | None = None) -> DataFrame:
+    """The one interpreted search body: candidate ``rows`` (vec_id,
+    embedding, _n) join the broadcast ``probes`` (query_id, q_emb,
+    _qn, and ``probe`` when ``key`` is set) on ``key == probe`` and
+    vec_id != query_id; each pair is scored by the staged-norm cosine
+    rounded to 9 places and each query keeps its top ``k``. A
+    candidate holds one key, so the join yields no duplicate
+    (query, neighbor) rows."""
+    on = F.col("vec_id") != F.col("query_id")
+    if key is not None:
+        on = (F.col(key) == F.col("probe")) & on
+    pairs = rows.join(F.broadcast(probes), on).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"),
+        F.expr(f"round({_cosine('q_emb', 'embedding', '_qn', '_n')}, 9)")
+        .alias("cosine"))
+    return _rank(pairs, k)
+
+
 def cosine_topk(emb: DataFrame, query_ids=None, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -68,32 +134,9 @@ def cosine_topk(emb: DataFrame, query_ids=None, k: int = 5) -> DataFrame:
     (it is small by construction); ranking ties break on neighbor id so
     results are total-ordered and oracle-stable.
     """
-    emb_n = emb.select(
-        "vec_id", "embedding",
-        F.expr(NORM_EXPR.format(a="embedding")).alias("_n"))
-    queries = emb_n.filter(
-        F.col("vec_id").isin(list(query_ids)) if query_ids is not None
-        else F.col("vec_id") < 10
-    ).select(F.col("vec_id").alias("query_id"),
-             F.col("embedding").alias("q_emb"),
-             F.col("_n").alias("_qn"))
-    pairs = (
-        emb_n.join(F.broadcast(queries),
-                   F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(DOT_EXPR.format(a="q_emb", b="embedding"))
-                    / (F.col("_qn") * F.col("_n")), 9)
-            .alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine",
-                F.col("rank").cast("int").alias("rank"))
-    )
+    rows = emb.select("vec_id", "embedding",
+                      F.expr(NORM_EXPR.format(a="embedding")).alias("_n"))
+    return _topk(rows, _probes(rows, query_ids), k)
 
 
 def hyperplane(dim: int, plane_idx: int) -> list[float]:
@@ -115,56 +158,32 @@ def _plane_literal(dim: int, plane_idx: int) -> str:
     return f"array({comps})"
 
 
+def _sign_key(dim: int, planes) -> str:
+    """Bigint key whose bit i is the sign of dot(embedding, planes[i])."""
+    return " + ".join(
+        f"if(aggregate(zip_with(embedding, {_plane_literal(dim, p)},"
+        f" (x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v) > 0,"
+        f" cast({1 << i} as bigint), 0L)" for i, p in enumerate(planes))
+
+
 def lsh_bucket(emb: DataFrame, dim: int = 64, n_planes: int = 8) -> DataFrame:
     """Bucket id per vector: bit i = sign of dot(embedding, plane_i).
     Buckets ~ 2^n_planes; the ANN search space shrinks ~256x."""
-    bits = []
-    for p in range(n_planes):
-        dot = (f"aggregate(zip_with(embedding, {_plane_literal(dim, p)},"
-               f" (x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v)")
-        bits.append(f"if({dot} > 0, cast({1 << p} as bigint), 0L)")
-    return emb.withColumn("bucket", F.expr(" + ".join(bits)))
+    return emb.withColumn("bucket", F.expr(_sign_key(dim, range(n_planes))))
 
 
 def ann_topk_lsh(emb: DataFrame, query_ids=None, k: int = 5,
                  dim: int = 64, n_planes: int = 8) -> DataFrame:
     """Approximate top-k: multi-probe LSH — candidates from the query's
     bucket plus the n_planes buckets one bit-flip away. Same output
-    schema as cosine_topk. A candidate lives in exactly one bucket, so
-    the probe join produces no duplicate (query, neighbor) rows."""
+    schema as cosine_topk."""
     bucketed = lsh_bucket(emb, dim, n_planes).withColumn(
         "_n", F.expr(NORM_EXPR.format(a="embedding")))
-    queries = bucketed.filter(
-        F.col("vec_id").isin(list(query_ids)) if query_ids is not None
-        else F.col("vec_id") < 10
-    ).select(F.col("vec_id").alias("query_id"),
-             F.col("embedding").alias("q_emb"),
-             F.col("_n").alias("_qn"),
-             F.col("bucket").alias("q_bucket"))
     probe_list = ", ".join(
         ["q_bucket"] + [f"q_bucket ^ {1 << i}L" for i in range(n_planes)])
-    probes = queries.select(
-        "query_id", "q_emb", "_qn",
-        F.explode(F.expr(f"array({probe_list})")).alias("probe"))
-    pairs = (
-        bucketed.join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("vec_id") != F.col("query_id")))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(DOT_EXPR.format(a="q_emb", b="embedding"))
-                    / (F.col("_qn") * F.col("_n")), 9)
-            .alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine",
-                F.col("rank").cast("int").alias("rank"))
-    )
+    probes = _probes(bucketed, query_ids, f"array({probe_list})",
+                     F.col("bucket").alias("q_bucket"))
+    return _topk(bucketed, probes, k, key="bucket")
 
 
 def _vec_literal(vals) -> str:
@@ -203,9 +222,8 @@ def _cell_structs(cents, col: str = "embedding",
         if norm_col is None:
             cos = COS_EXPR.format(a=col, b=_vec_literal(vec))
         else:
-            cos = (f"{DOT_EXPR.format(a=col, b=_vec_literal(vec))}"
-                   f" / ({norm_col}"
-                   f" * cast({_fold_norm(vec)!r} as double))")
+            cos = _cosine(col, _vec_literal(vec), norm_col,
+                          f"cast({_fold_norm(vec)!r} as double)")
         structs.append(f"struct(round({cos}, 9) as c, {-cid}L as nid)")
     return ", ".join(structs)
 
@@ -221,8 +239,7 @@ def ann_topk_ivf(emb: DataFrame, query_ids=None, k: int = 5,
     The 100 TB plan: assignment is embarrassingly parallel scan work;
     the candidate join keys on the cell id with the tiny probe set
     broadcast — the search space shrinks ~n_centroids/n_probe-fold and
-    no cross join ever materializes. A vector lives in exactly one
-    cell, so probes yield no duplicate (query, neighbor) rows."""
+    no cross join ever materializes."""
     cents = ivf_centroids(emb, n_centroids)
     cells = emb.withColumn(
         "_n", F.expr(NORM_EXPR.format(a="embedding"))
@@ -230,39 +247,14 @@ def ann_topk_ivf(emb: DataFrame, query_ids=None, k: int = 5,
         "cell",
         F.expr(f"(array_max(array("
                f"{_cell_structs(cents, norm_col='_n')})).nid * -1L)"))
-    queries = cells.filter(
-        F.col("vec_id").isin(list(query_ids)) if query_ids is not None
-        else F.col("vec_id") < 10
-    ).select(F.col("vec_id").alias("query_id"),
-             F.col("embedding").alias("q_emb"),
-             F.col("_n").alias("_qn"))
     # n_probe nearest cells per query: sort (cosine asc, -cid asc) then
     # reverse → cosine desc with centroid_id asc on rounded ties
-    probes = queries.select(
-        "query_id", "q_emb", "_qn",
-        F.explode(F.expr(
-            f"transform(slice(reverse(array_sort(array("
-            f"{_cell_structs(cents, col='q_emb', norm_col='_qn')}"
-            f"))), 1, {n_probe}), s -> s.nid * -1L)")).alias("probe"))
-    pairs = (
-        cells.join(
-            F.broadcast(probes),
-            (F.col("cell") == F.col("probe"))
-            & (F.col("vec_id") != F.col("query_id")))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(DOT_EXPR.format(a="q_emb", b="embedding"))
-                    / (F.col("_qn") * F.col("_n")), 9)
-            .alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine",
-                F.col("rank").cast("int").alias("rank"))
-    )
+    probes = _probes(
+        cells, query_ids,
+        f"transform(slice(reverse(array_sort(array("
+        f"{_cell_structs(cents, col='q_emb', norm_col='_qn')}"
+        f"))), 1, {n_probe}), s -> s.nid * -1L)")
+    return _topk(cells, probes, k, key="cell")
 
 
 NEARDUP_BANDS = 6
@@ -275,18 +267,11 @@ def lsh_band_rows(emb: DataFrame, dim: int = 64,
     """(vec_id, embedding, band, key): one row per band, key = the
     band's rows_per_band sign bits. Plane index = band*rows + row, so
     bands use disjoint hyperplane sets."""
-    structs = []
-    for b in range(bands):
-        bits = []
-        for r in range(rows_per_band):
-            p = b * rows_per_band + r
-            dot = (f"aggregate(zip_with(embedding, {_plane_literal(dim, p)},"
-                   f" (x, y) -> cast(x as double) * y),"
-                   f" 0D, (acc, v) -> acc + v)")
-            bits.append(f"if({dot} > 0, cast({1 << r} as bigint), 0L)")
-        structs.append(F.struct(
-            F.lit(b).alias("band"),
-            F.expr(" + ".join(bits)).alias("key")))
+    structs = [
+        F.struct(F.lit(b).alias("band"), F.expr(_sign_key(
+            dim, range(b * rows_per_band, (b + 1) * rows_per_band)))
+            .alias("key"))
+        for b in range(bands)]
     # the row norm is staged BEFORE the band explode (once per vector,
     # not once per band row, and never per candidate pair) — the
     # staged-norm scorer in embedding_neardup_pairs divides by it
@@ -314,6 +299,7 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
     banded = lsh_band_rows(emb, dim, bands, rows_per_band)
     a = banded.alias("a")
     b = banded.alias("b")
+    cos = _cosine("a.embedding", "b.embedding", "a._n", "b._n")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.key") == F.col("b.key"))
@@ -321,9 +307,7 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(F.expr(DOT_EXPR.format(
-                a="a.embedding", b="b.embedding"))
-                / (F.col("a._n") * F.col("b._n")), 9).alias("cosine"))
+            F.expr(f"round({cos}, 9)").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
         .distinct()
     )
@@ -355,45 +339,51 @@ def semdedup(emb: DataFrame, threshold: float = 0.95, dim: int = 64,
 
 
 # ---------------------------------------------------------------------------
-# Vectorized scale path: numpy/Arrow ANN for corpus-size vector tables.
-#
-# The operators above are the ORACLE-CHECKED contracts: interpreted
-# zip_with/aggregate dot products whose fold order DuckDB reproduces
-# bit-for-bit. Interpreted HOFs cost ~10 ns per multiply-add, which is
-# fine at fixture scale and hopeless at 10^6+ vectors x 64 cells. The
-# functions below are the production path for that regime: the same
-# candidate-generation plans (broadcast probes, keyed cell join, never
-# a cartesian), with the inner-loop arithmetic moved to numpy over
-# Arrow batches — one matmul per batch instead of per-element lambdas.
-# Query SETS stay driver-collected and broadcast (bounded, the same
-# small-model shape as ivf_centroids).
+# Vectorized scale path: numpy over Arrow batches for corpus-size vector
+# tables — the same candidate-generation plans (broadcast probes, keyed
+# cells, never a cartesian) with one matmul per batch instead of
+# per-element lambdas. Query SETS stay driver-collected and broadcast
+# (bounded, the same small-model shape as ivf_centroids).
 # ---------------------------------------------------------------------------
 
 TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double"
 
 
+def _unit(vecs) -> np.ndarray:
+    """The vectors as float64 rows scaled to unit length; an all-zero
+    row stays zero."""
+    m = np.array(list(vecs), dtype="float64")
+    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
+    return m
+
+
+def _block_topk(m, vid, q, qids, k: int):
+    """The numpy search kernel: unit rows ``m`` (ids ``vid``) scored
+    against unit queries ``q`` (ids ``qids``), each query's own row
+    excluded; each query keeps its top min(k, rows) rows (argpartition,
+    unordered) as a (query_id, neighbor_id, cosine) frame, non-finite
+    scores dropped."""
+    import pandas as pd
+    s = m @ q.T                                 # (rows, queries)
+    pos = {int(x): j for j, x in enumerate(qids)}
+    for i in np.nonzero(np.isin(vid, qids))[0]:
+        s[i, pos[int(vid[i])]] = -np.inf
+    kk = min(k, len(vid))
+    top = np.argpartition(-s, kth=kk - 1, axis=0)[:kk]
+    out = pd.DataFrame({
+        "query_id": np.repeat(qids, kk),
+        "neighbor_id": vid[top.T.ravel()],
+        "cosine": np.take_along_axis(s, top, axis=0).T.ravel()})
+    return out[np.isfinite(out.cosine.to_numpy())]
+
+
 def _query_matrix(emb: DataFrame, query_ids):
     """Collect the (small) query set to the driver as a normalized
     numpy matrix + id vector."""
-    import numpy as np
-    rows = (emb.filter(
-        F.col("vec_id").isin([int(q) for q in query_ids])
-        if query_ids is not None else F.col("vec_id") < 10)
-        .select("vec_id", "embedding").collect())
+    rows = (_query_rows(emb, query_ids)
+            .select("vec_id", "embedding").collect())
     qids = np.array([int(r.vec_id) for r in rows], dtype="int64")
-    q = np.array([r.embedding for r in rows], dtype="float64")
-    q /= np.linalg.norm(q, axis=1, keepdims=True)
-    return qids, q
-
-
-def _topk_final(partial: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.round("cosine", 9).alias("cosine"),
-                    F.col("rank").cast("int").alias("rank")))
+    return qids, _unit(r.embedding for r in rows)
 
 
 def cosine_topk_np(emb: DataFrame, query_ids=None,
@@ -405,48 +395,28 @@ def cosine_topk_np(emb: DataFrame, query_ids=None,
     Same output schema and tie rule as ``cosine_topk`` (which remains
     the oracle contract); this is the 10^6+-vector baseline the
     approximate paths are measured against."""
-    import numpy as np
-    qids, q = _query_matrix(emb, query_ids)
-    spark = emb.sparkSession
-    bq = spark.sparkContext.broadcast((qids, q))
+    bq = emb.sparkSession.sparkContext.broadcast(
+        _query_matrix(emb, query_ids))
 
     def part(batches):
-        import pandas as pd
         ids_b, q_b = bq.value
-        pos = {int(x): j for j, x in enumerate(ids_b)}
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
+            m = _unit(pdf["embedding"])
+            vid = pdf["vec_id"].to_numpy("int64")
             # chunk the query axis so the (rows x queries) score
             # matrix stays ~32 MB per worker regardless of the query
             # count — 32 workers x an unchunked 16k x several-k
             # matrix was pure allocator churn
-            q_chunk = max(1, (4 << 20) // n)
-            m = np.array(list(pdf["embedding"]), dtype="float64")
-            vid = pdf["vec_id"].to_numpy("int64")
-            m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True),
-                            1e-300)
-            kk = min(k, n)
-            self_rows = np.nonzero(np.isin(vid, ids_b))[0]
-            for lo in range(0, len(ids_b), q_chunk):
-                sub = slice(lo, lo + q_chunk)
-                s = m @ q_b[sub].T              # (n, q_chunk)
-                for i in self_rows:             # self-exclusion
-                    j = pos[int(vid[i])] - lo
-                    if 0 <= j < s.shape[1]:
-                        s[i, j] = -np.inf
-                top = np.argpartition(-s, kth=kk - 1, axis=0)[:kk]
-                out = pd.DataFrame({
-                    "query_id": np.repeat(ids_b[sub], kk),
-                    "neighbor_id": vid[top.T.ravel()],
-                    "cosine": np.take_along_axis(s, top, axis=0)
-                    .T.ravel()})
-                yield out[np.isfinite(out.cosine.to_numpy())]
+            step = max(1, (4 << 20) // len(pdf))
+            for lo in range(0, len(ids_b), step):
+                yield _block_topk(m, vid, q_b[lo:lo + step],
+                                  ids_b[lo:lo + step], k)
 
     partial = (emb.select("vec_id", "embedding")
                .mapInPandas(part, TOPK_SCHEMA))
-    return _topk_final(partial, k)
+    return _rank(partial, k, F.round("cosine", 9).alias("cosine"))
 
 
 def ivf_centroids_kmeans(emb: DataFrame, n_centroids: int = 64,
@@ -472,11 +442,8 @@ def ivf_centroids_kmeans(emb: DataFrame, n_centroids: int = 64,
 
 
 def _centroid_matrix(centroids):
-    import numpy as np
-    cmat = np.array([c for _, c in centroids], dtype="float64")
-    cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
     cids = np.array([cid for cid, _ in centroids], dtype="int64")
-    return cids, cmat
+    return cids, _unit(c for _, c in centroids)
 
 
 def ivf_assign(emb: DataFrame, centroids: list) -> DataFrame:
@@ -486,21 +453,16 @@ def ivf_assign(emb: DataFrame, centroids: list) -> DataFrame:
     production deployment runs it once per corpus snapshot, persists
     the result partitioned by cell, and amortizes it over every query
     wave — pass the persisted frame to ``ann_topk_ivf_np(cells=...)``."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
-    cids, cmat = _centroid_matrix(centroids)
-    bc = emb.sparkSession.sparkContext.broadcast((cids, cmat))
+    bc = emb.sparkSession.sparkContext.broadcast(_centroid_matrix(centroids))
 
     @pandas_udf("long")
     def _cell(embs):
         import pandas as pd
         ids_c, c = bc.value
-        m = np.array(list(embs), dtype="float64")
-        if not len(m):
+        if not len(embs):
             return pd.Series([], dtype="int64")
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True),
-                        1e-300)
-        return pd.Series(ids_c[np.argmax(m @ c.T, axis=1)])
+        return pd.Series(ids_c[np.argmax(_unit(embs) @ c.T, axis=1)])
 
     return emb.select("vec_id", "embedding",
                       _cell("embedding").alias("cell"))
@@ -512,14 +474,11 @@ def ann_topk_ivf_np(emb: DataFrame, centroids: list, query_ids=None,
     """IVF-Flat search, vectorized: assignment from ``ivf_assign``
     (or a precomputed/persisted ``cells`` frame); each query's
     ``n_probe`` nearest cells are computed driver-side from the same
-    centroid matrix; candidates come from a keyed join of the cells
-    against the broadcast probe list; candidate scoring is one matmul
-    per Arrow batch with per-batch top-k, so the final window sees
-    only n_partitions x n_queries x k rows. The 100 TB plan shape is
-    identical to ``ann_topk_ivf`` — only the per-element lambdas are
-    replaced by numpy."""
-    import numpy as np
-    spark = emb.sparkSession
+    centroid matrix; each probed cell's candidates are scored by the
+    block kernel against the queries probing it, with per-batch
+    top-k, so the final window sees only n_partitions x n_queries x k
+    rows. The 100 TB plan shape is identical to ``ann_topk_ivf`` —
+    only the per-element lambdas are replaced by numpy."""
     cids, cmat = _centroid_matrix(centroids)
     if cells is None:
         cells = ivf_assign(emb, centroids)
@@ -536,41 +495,24 @@ def ann_topk_ivf_np(emb: DataFrame, centroids: list, query_ids=None,
     for j, row in enumerate(probe_cells):
         for c in row:
             probes_by_cell.setdefault(int(cids[c]), []).append(j)
-    bq = spark.sparkContext.broadcast((qids, q, probes_by_cell))
+    bq = emb.sparkSession.sparkContext.broadcast((qids, q, probes_by_cell))
 
     def score(batches):
         import pandas as pd
         ids_b, q_b, by_cell = bq.value
         for pdf in batches:
-            if not len(pdf):
-                continue
             parts = []
             for cell, g in pdf.groupby("cell"):
                 qidx = by_cell.get(int(cell))
-                if not qidx:
-                    continue
-                m = np.array(list(g["embedding"]), dtype="float64")
-                vid = g["vec_id"].to_numpy("int64")
-                m /= np.maximum(
-                    np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
-                sub_ids = ids_b[qidx]
-                s = m @ q_b[qidx].T            # (n_g, nq_cell)
-                pos = {int(x): jj for jj, x in enumerate(sub_ids)}
-                for i in np.nonzero(np.isin(vid, sub_ids))[0]:
-                    s[i, pos[int(vid[i])]] = -np.inf
-                kk = min(k, len(vid))
-                top = np.argpartition(-s, kth=kk - 1, axis=0)[:kk]
-                parts.append(pd.DataFrame({
-                    "query_id": np.repeat(sub_ids, kk),
-                    "neighbor_id": vid[top.T.ravel()],
-                    "cosine": np.take_along_axis(s, top, axis=0)
-                    .T.ravel()}))
+                if qidx:
+                    parts.append(_block_topk(
+                        _unit(g["embedding"]), g["vec_id"].to_numpy("int64"),
+                        q_b[qidx], ids_b[qidx], k))
             if parts:
-                out = pd.concat(parts)
-                out = out[np.isfinite(out.cosine.to_numpy())]
                 # per-batch per-query top-k keeps the shuffle at
                 # n_batches x n_queries x k rows
-                yield (out.sort_values("cosine", ascending=False)
+                yield (pd.concat(parts)
+                       .sort_values("cosine", ascending=False)
                        .groupby("query_id", sort=False).head(k))
 
     # unprobed cells are skipped entirely (partition-pruned when the
@@ -580,7 +522,7 @@ def ann_topk_ivf_np(emb: DataFrame, centroids: list, query_ids=None,
     searched = cells if len(probed) == len(cids) else cells.filter(
         F.col("cell").isin(probed))
     partial = searched.mapInPandas(score, TOPK_SCHEMA)
-    return _topk_final(partial, k)
+    return _rank(partial, k, F.round("cosine", 9).alias("cosine"))
 
 
 def write_ivf_index(cells: DataFrame, path: str,
@@ -686,7 +628,6 @@ def semdedup_kmeans(emb: DataFrame, n_clusters: int = 64,
         ({int(c): i for i, c in enumerate(cids)}, cmat))
 
     def dedup_cell(pdf):
-        import numpy as np
         import pandas as pd
         # deterministic order: union-find + tie-breaks keyed on the
         # sorted vec_id sequence, not partition arrival order
@@ -699,9 +640,7 @@ def semdedup_kmeans(emb: DataFrame, n_clusters: int = 64,
                 f"whole cell materializes as one pandas group — "
                 f"raise n_clusters to split it (or max_cell if the "
                 f"executors have the memory)")
-        m = np.array(list(pdf["embedding"]), dtype="float64")
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True),
-                        1e-300)
+        m = _unit(pdf["embedding"])
         rows_by_cid, cmat_b = bc.value
         cent = cmat_b[rows_by_cid[int(pdf["cell"].iloc[0])]]
         cent_cos = m @ cent

@@ -208,8 +208,9 @@ def test_page_payload_parse_keeps_json_semantics():
     para = [("paragraph", "Alpha betagamma delta", "", None, None)]
     want = {
         "nan_field": para,
-        "nan_coord": [("error", "pdf_page:ValueError", "m.png", None, None)],
-        "infinity": [("error", "pdf_page:OverflowError", "m.png",
+        "nan_coord": [("paragraph", "Alpha betagamma deltanan line", "",
+                       None, None)],
+        "infinity": [("paragraph", "Alpha betagamma deltawide", "",
                       None, None)],
         "lone_surrogate": [("paragraph",
                             "Alpha betagamma deltax\ud800y", "", None, None)],

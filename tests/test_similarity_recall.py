@@ -297,3 +297,68 @@ def test_ivf_index_at_rest_prunes_unprobed_cells(spark, planted,
         df, cents, qids, k=3, n_probe=2,
         cells=read_ivf_index(spark, path)).collect()))
     assert mem == disk
+
+
+def test_zero_norm_vectors_match_duckdb_twins(spark):
+    """An all-zero embedding has no cosine: every arm gives it a NULL
+    cosine, as the DuckDB twins do, instead of failing the job on an
+    ANSI-mode divide by zero. One zero vector is a query (and an IVF
+    seed centroid), one a candidate; a planted near-dup pair keeps the
+    near-dup output non-empty."""
+    import duckdb
+    import pyarrow as pa
+
+    from pdf_table_spark.ops.similarity import (ann_topk_ivf, ann_topk_lsh,
+                                                cosine_topk,
+                                                embedding_neardup_pairs)
+    from pdf_table_spark.queries.duplicates import ann_topk_sql, neardup_sql
+
+    rng = np.random.RandomState(11)
+    arr = rng.randn(42, DIM).astype(np.float32)
+    arr[3] = 0.0
+    arr[25] = 0.0
+    arr[31] = arr[30] + np.float32(0.01) * rng.randn(DIM).astype(np.float32)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(arr)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with duckdb.connect() as con:
+        con.register("embeddings", pa.table({
+            "vec_id": pa.array(range(len(arr)), pa.int64()),
+            "embedding": pa.array([list(v) for v in arr],
+                                  pa.list_(pa.float32()))}))
+        twins = sorted(con.execute(ann_topk_sql()).fetchall())
+        neardup_twin = sorted(con.execute(neardup_sql()).fetchall())
+
+    def spark_rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    for method, topk in (("brute", cosine_topk), ("lsh", ann_topk_lsh),
+                         ("ivf", ann_topk_ivf)):
+        got = spark_rows(topk(df, k=5))
+        assert got == [r[1:] for r in twins if r[0] == method], method
+        if method == "brute":
+            assert [c for q, _, c, _ in got if q == 3] == [None] * 5
+    pairs = spark_rows(embedding_neardup_pairs(df))
+    assert pairs == neardup_twin
+    assert [(a, b) for a, b, _ in pairs] == [(30, 31)]
+
+
+def test_ann_ivf_np_all_probes_equals_brute_np(spark, planted):
+    """IVF probing every cell searches the whole corpus, so the block
+    kernel's two callers must agree: same (query, rank) -> neighbor and
+    cosines within 1e-9."""
+    from pdf_table_spark.ops.similarity import (ann_topk_ivf_np,
+                                                cosine_topk_np,
+                                                ivf_centroids)
+    df, _, _ = planted
+    cents = ivf_centroids(df, 8)
+    qids = list(range(56))
+    brute = {(r.query_id, r.rank): (r.neighbor_id, r.cosine)
+             for r in cosine_topk_np(df, qids, k=5).collect()}
+    ivf = {(r.query_id, r.rank): (r.neighbor_id, r.cosine)
+           for r in ann_topk_ivf_np(df, cents, qids, k=5,
+                                    n_probe=len(cents)).collect()}
+    assert len(brute) == 56 * 5
+    assert set(ivf) == set(brute)
+    for key, (nid, cos) in brute.items():
+        assert ivf[key][0] == nid, key
+        assert abs(ivf[key][1] - cos) <= 1e-9, key
