@@ -59,8 +59,6 @@ from .nn import maxpool2d, sigmoid
 CN_PARAMS = {"K": 1000, "MK": 4000, "score_thresh": 0.3,
              "v2c_dist_thred": 2.0, "c2v_dist_thred": 0.5}
 
-CN_VERSION = "centernet-postprocess-v1"
-
 
 def peak_keep(heat: np.ndarray, kernel: int = 3) -> np.ndarray:
     """table_process.py:115-121 ``_nms``: keep only values equal to

@@ -452,9 +452,6 @@ def resize_box(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
         else out.reshape(out_h, out_w, arr.shape[2])
 
 
-FEATURE_GRID = 4
-
-
 def image_feature(arr: np.ndarray, dim: int = 16) -> list[float]:
     """Unit-norm float32 feature: the luma image box-binned to a
     4x4 grid of means, flattened. Deterministic (integer bin means,

@@ -29,8 +29,6 @@ from __future__ import annotations
 # + space and the fixture punctuation (use_space_char-style extension)
 CTC_CHARSET = ["blank"] + list("0123456789abcdefghijklmnopqrstuvwxyz .-%")
 
-CTC_VERSION = "ctc-greedy-v1"
-
 
 def ctc_decode(path, probs=None, charset=None):
     """Greedy CTC decode of one index path → (text, confidence).

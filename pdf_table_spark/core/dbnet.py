@@ -42,8 +42,6 @@ import numpy as np
 DB_PARAMS = {"thresh": 0.3, "box_thresh": 0.7, "max_candidates": 1000,
              "unclip_ratio": 2.0, "min_size": 3}
 
-DB_VERSION = "db-postprocess-v1"
-
 
 def connected_regions(bitmap: np.ndarray, cap: int = 1000):
     """8-connected regions of a {0,1} map → list of (ys, xs) integer

@@ -71,8 +71,6 @@ UKN, MSOS, MEOS, MPAD = "<UKN>", "<SOS>", "<EOS>", "<PAD>"
 # td-family tokens that carry a bbox (_get_pred_bbox_mask)
 MASTER_TD = ("<td></td>", "<td")
 
-MASTER_VERSION = "master-decode-v1"
-
 
 def master_dict(alphabet=None) -> list[str]:
     """idx2char for with_unknown=True, start_end_same=False:

@@ -168,7 +168,6 @@ def det_forward(img: np.ndarray, weights: dict | None = None
 
 # ------------------------------------------------- the OCR det CNN
 
-OCRDET_VERSION = "ocr-det-cnn-v1"
 OCRCNN_VERSION = "ocr-cnn-v1"  # the combined det_*/rec_* artifact
 
 # DET_CNN + a leading 3x3 max-pool: same density/run filters, but the
@@ -177,8 +176,6 @@ OCR_DET_CNN = dict(DET_CNN, pre=np.array([3.0, 3.0]))
 
 
 # ----------------------------------------------------- the rec CNN
-
-RECCNN_VERSION = "rec-cnn-v1"
 
 REC_GAIN = 200.0    # logit = gain * (correlation - thresh)
 REC_THRESH = 0.95   # one flipped pixel costs 2/35 ~ 0.057 > 0.05

@@ -128,7 +128,6 @@ def ocr_scan_page(gray: np.ndarray, det_weights: dict | None = None,
 
 
 LAYOUT_CLASSES = ("table", "text", "figure")
-LAYOUTCNN_VERSION = "layout-cnn-v1"
 
 # linear classification head over the three conv-derived region
 # features (d = ink density in bbox, r = ruling-ink fraction of the

@@ -46,8 +46,6 @@ LAYOUT_LABELS = ("text", "title", "figure", "figure_caption", "table",
                  "table_caption", "header", "footer", "reference",
                  "equation")
 
-PICODET_VERSION = "picodet-postprocess-v1"
-
 
 def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     m = x.max(axis=axis, keepdims=True)

@@ -45,8 +45,6 @@ SOS, EOS = "sos", "eos"
 # the td-family tokens that carry a bbox (table_postprocess.py:197)
 TD_TOKENS = ("<td>", "<td", "<td></td>")
 
-SLANET_VERSION = "slanet-decode-v1"
-
 
 def slanet_dict(merge_no_span_structure: bool = False) -> list[str]:
     """The decode dictionary: [sos] + alphabet + [eos]

@@ -1,29 +1,37 @@
 """Build fixture parquet: interleaved documents corpus + golden outputs.
 
 Written with pyarrow directly (no Spark needed) so the DuckDB oracle
-and pytest can consume the same files. Layout:
-
-    <root>/sf<SF>/documents_spans.parquet   (doc_id, spans[])
-    <root>/sf<SF>/golden_flat.parquet       (doc_id, offset, kind,
-                                             text, media_ref)
+and pytest can consume the same files. ``OUTPUTS`` lists the 22 names
+written under ``<root>/sf<SF>/``: the ``documents_spans.parquet``
+directory of (doc_id, spans[]) shards, the goldens, the media and scan
+corpora and the ``.npz`` head artifacts.
 
 Scale knobs per FIXTURES.md §3: sf0.001→50 docs, sf0.01→500,
-sf0.1→5000. Deterministic (seed 42): rebuilding bit-identical files is
-always safe; build is skipped when files already exist unless
-``force``.
+sf0.1→5000. Deterministic (seed 42): a scale whose files all exist is
+skipped; delete its directory to rebuild it.
 
 Usage: python -m pdf_table_spark.fixtures.build [root] [sf ...]
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from ..core import codecs, nn
+from ..core.dbnet import DB_PARAMS, db_postprocess, format_db_box
+from ..core.dethead import DET_VERSION, DET_WEIGHTS
+from ..core.export_render import render_table_html
+from ..core.ocrpage import LAYOUT_CNN, layout_regions, orient_scan_page
 from ..core.page import extract_document
+from ..core.tsrhead import TSR_VERSION, TSR_WEIGHTS, extract_page_from_model
+from ..spark.model_stage import (DB_PARAM_VECTOR, NEURAL_VERSION, _prefixed,
+                                 _split, save_weights, save_weights_dict)
+from . import media_gen
 from .generator import gen_corpus
 
 DOC_COUNTS = {"0.001": 50, "0.01": 500, "0.1": 5000}
@@ -45,6 +53,18 @@ def _doc_count(sf: str) -> int:
 # cluster size, which poisons the N→4N scaling measurement.
 N_SHARDS = {"0.001": 8, "0.01": 16, "0.1": 64}
 
+OUTPUTS = (
+    "documents_spans.parquet", "golden_flat.parquet",
+    "golden_flat_lattice.parquet", "golden_flat_stream.parquet",
+    "golden_exports.parquet", "tsr_head.npz", "det_head.npz",
+    "neural_head.npz", "golden_model_tsr.parquet",
+    "media_payloads.parquet", "golden_media_meta.parquet",
+    "golden_wav_meta.parquet", "scan_pages.parquet",
+    "golden_scan_boxes.parquet", "det_cnn.npz", "ocr_scan_pages.parquet",
+    "golden_ocr_scan.parquet", "ocr_cnn.npz", "layout_scan_pages.parquet",
+    "golden_layout_cnn.parquet", "orient_scan_pages.parquet",
+    "golden_orient_cnn.parquet")
+
 SPAN_TYPE = pa.struct([
     ("kind", pa.string()), ("text", pa.string()),
     ("media_ref", pa.string()), ("offset", pa.int32())])
@@ -65,329 +85,179 @@ EXPORTS_SCHEMA = pa.schema([
     ("json_rows", pa.string()), ("sqlite_sql", pa.string()),
     ("excel_xml", pa.string()), ("html_db", pa.string())])
 
+# the (media_ref, payload) corpora and the (doc_id, offset, kind, text)
+# wire goldens
+PAYLOAD_SCHEMA = pa.schema([("media_ref", pa.string()),
+                            ("payload", pa.binary())])
+WIRE_SCHEMA = pa.schema([
+    ("doc_id", pa.string()), ("offset", pa.int32()),
+    ("kind", pa.string()), ("text", pa.string())])
+
+MEDIA_SCHEMA = pa.schema([
+    ("media_ref", pa.string()), ("src_width", pa.int32()),
+    ("src_height", pa.int32()), ("format", pa.string()),
+    ("n_bytes", pa.int64()), ("px_sum", pa.int64())])
+WAV_SCHEMA = pa.schema([
+    ("media_ref", pa.string()), ("sample_rate", pa.int32()),
+    ("n_channels", pa.int32()), ("n_frames", pa.int64()),
+    ("duration_ms", pa.int64()), ("peak", pa.int32())])
+LAYOUT_SCHEMA = pa.schema([
+    ("doc_id", pa.string()), ("offset", pa.int32()),
+    ("score_table", pa.float64()), ("score_text", pa.float64()),
+    ("score_figure", pa.float64()), ("label", pa.string())])
+ORIENT_SCHEMA = pa.schema([
+    ("doc_id", pa.string()), ("score_rot0", pa.float64()),
+    ("score_rot90", pa.float64()), ("score_rot180", pa.float64()),
+    ("score_rot270", pa.float64()), ("pred_rot", pa.int32())])
+
 
 def fixture_dir(root: str, sf: str) -> str:
     return os.path.join(root, f"sf{sf}")
 
 
-def build_sf(root: str, sf: str, force: bool = False) -> dict:
+def _write(path: str, rows: list[dict], schema: pa.Schema) -> None:
+    """One parquet file from dict rows; keys outside ``schema`` are
+    ignored."""
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+
+
+def _golden(corpus: list, flavor: str) -> list[dict]:
+    """The single-process extraction oracle over the whole corpus."""
+    return [{"doc_id": doc_id, **o} for doc_id, spans in corpus
+            for o in extract_document(spans, flavor=flavor)]
+
+
+def _gray(payload: bytes):
+    img, _fmt = codecs.decode_image(payload)
+    return codecs.to_gray(img)
+
+
+def build_sf(root: str, sf: str) -> dict:
     out_dir = fixture_dir(root, sf)
-    docs_path = os.path.join(out_dir, "documents_spans.parquet")
-    golden_path = os.path.join(out_dir, "golden_flat.parquet")
-    exports_path = os.path.join(out_dir, "golden_exports.parquet")
-    tsr_model_path = os.path.join(out_dir, "tsr_head.npz")
-    det_model_path = os.path.join(out_dir, "det_head.npz")
-    neural_model_path = os.path.join(out_dir, "neural_head.npz")
-    tsr_golden_path = os.path.join(out_dir, "golden_model_tsr.parquet")
-    media_path = os.path.join(out_dir, "media_payloads.parquet")
-    media_golden_path = os.path.join(out_dir, "golden_media_meta.parquet")
-    wav_golden_path = os.path.join(out_dir, "golden_wav_meta.parquet")
-    scan_path = os.path.join(out_dir, "scan_pages.parquet")
-    scan_golden_path = os.path.join(out_dir, "golden_scan_boxes.parquet")
-    detcnn_path = os.path.join(out_dir, "det_cnn.npz")
-    ocr_scan_path = os.path.join(out_dir, "ocr_scan_pages.parquet")
-    ocr_golden_path = os.path.join(out_dir, "golden_ocr_scan.parquet")
-    ocrcnn_path = os.path.join(out_dir, "ocr_cnn.npz")
-    orient_scan_path = os.path.join(out_dir, "orient_scan_pages.parquet")
-    orient_golden_path = os.path.join(out_dir, "golden_orient_cnn.parquet")
-    layout_scan_path = os.path.join(out_dir, "layout_scan_pages.parquet")
-    layout_golden_path = os.path.join(out_dir, "golden_layout_cnn.parquet")
-    flavor_paths = {
-        fl: os.path.join(out_dir, f"golden_flat_{fl}.parquet")
-        for fl in ("lattice", "stream")}
-    if (not force and os.path.isdir(docs_path)
-            and os.path.exists(golden_path)
-            and os.path.exists(exports_path)
-            and os.path.exists(tsr_model_path)
-            and os.path.exists(det_model_path)
-            and os.path.exists(neural_model_path)
-            and os.path.exists(tsr_golden_path)
-            and os.path.exists(media_path)
-            and os.path.exists(media_golden_path)
-            and os.path.exists(wav_golden_path)
-            and os.path.exists(scan_path)
-            and os.path.exists(scan_golden_path)
-            and os.path.exists(detcnn_path)
-            and os.path.exists(ocr_scan_path)
-            and os.path.exists(ocr_golden_path)
-            and os.path.exists(ocrcnn_path)
-            and os.path.exists(orient_scan_path)
-            and os.path.exists(orient_golden_path)
-            and os.path.exists(layout_scan_path)
-            and os.path.exists(layout_golden_path)
-            and all(os.path.exists(p) for p in flavor_paths.values())):
+    path = {name: os.path.join(out_dir, name) for name in OUTPUTS}
+    if all(os.path.exists(p) for p in path.values()):
         return {"sf": sf, "skipped": True}
-    if os.path.isfile(docs_path):  # migrate old single-file layout
-        os.remove(docs_path)
-    os.makedirs(out_dir, exist_ok=True)
+    docs_dir = path["documents_spans.parquet"]
+    os.makedirs(docs_dir, exist_ok=True)
 
     n_docs = _doc_count(sf)
-    doc_ids, span_lists = [], []
-    g_doc, g_off, g_kind, g_text, g_ref = [], [], [], [], []
-    g_src, g_acc, g_ws = [], [], []
-    n_pages = 0
-    for doc_id, spans, _family in gen_corpus(n_docs):
-        doc_ids.append(doc_id)
-        span_lists.append(spans)
-        n_pages += sum(1 for s in spans if s["kind"] == "pdf_page")
-        for o in extract_document(spans):
-            g_doc.append(doc_id)
-            g_off.append(o["offset"])
-            g_kind.append(o["kind"])
-            g_text.append(o["text"])
-            g_ref.append(o["media_ref"])
-            g_src.append(o["src_offset"])
-            g_acc.append(o["accuracy"])
-            g_ws.append(o["whitespace"])
-
+    corpus = [(doc_id, spans) for doc_id, spans, _ in gen_corpus(n_docs)]
     # unknown SFs shard by the same ~78-docs-per-shard density the
     # committed table encodes (0.1 -> 64), clamped to [8, 256]
     n_shards = N_SHARDS.get(sf, min(max(n_docs // 78, 8), 256))
-    os.makedirs(docs_path, exist_ok=True)
     per = (n_docs + n_shards - 1) // n_shards
-    for shard in range(n_shards):
-        lo, hi = shard * per, min((shard + 1) * per, n_docs)
-        if lo >= hi:
-            break
-        tbl = pa.Table.from_pydict(
-            {"doc_id": doc_ids[lo:hi], "spans": span_lists[lo:hi]},
-            schema=DOCS_SCHEMA)
-        pq.write_table(tbl, os.path.join(
-            docs_path, f"part-{shard:05d}.parquet"))
-    golden_tbl = pa.Table.from_pydict(
-        {"doc_id": g_doc, "offset": g_off, "kind": g_kind,
-         "text": g_text, "media_ref": g_ref, "src_offset": g_src,
-         "accuracy": g_acc, "whitespace": g_ws}, schema=GOLDEN_SCHEMA)
-    pq.write_table(golden_tbl, golden_path)
+    for shard, lo in enumerate(range(0, n_docs, per)):
+        _write(os.path.join(docs_dir, f"part-{shard:05d}.parquet"),
+               [{"doc_id": d, "spans": s} for d, s in corpus[lo:lo + per]],
+               DOCS_SCHEMA)
+    flat = _golden(corpus, "auto")
+    _write(path["golden_flat.parquet"], flat, GOLDEN_SCHEMA)
+    # flavor-forced goldens (the read_pdf flavor kwarg surface)
+    for fl in ("lattice", "stream"):
+        _write(path[f"golden_flat_{fl}.parquet"], _golden(corpus, fl),
+               GOLDEN_SCHEMA)
 
-    # S7 export oracle: render every golden table through the same
-    # csv/markdown/json renderer the Spark stage uses (core.export_render)
-    from ..core.export_render import render_table_html
-    names = [f.name for f in EXPORTS_SCHEMA]
-    e = {k: [] for k in names}
-    for d, o, k, t in zip(g_doc, g_off, g_kind, g_text):
-        if k != "table_html":
-            continue
-        rendered = render_table_html(t or "")
-        e["doc_id"].append(d)
-        e["offset"].append(o)
-        for name, val in zip(names[2:], rendered):
-            e[name].append(val)
-    pq.write_table(pa.Table.from_pydict(e, schema=EXPORTS_SCHEMA),
-                   exports_path)
+    # S7 export oracle: every golden table through the same renderer
+    # the Spark stage uses (core.export_render)
+    exports = [{"doc_id": r["doc_id"], "offset": r["offset"],
+                **dict(zip(EXPORTS_SCHEMA.names[2:],
+                           render_table_html(r["text"] or "")))}
+               for r in flat if r["kind"] == "table_html"]
+    _write(path["golden_exports.parquet"], exports, EXPORTS_SCHEMA)
 
-    # from-model TSR oracle: write the .npz head artifact, then run
-    # every ocr_page payload through the SAME deterministic head +
-    # logicell decode single-process (core.tsrhead) — what
+    # from-model TSR oracle: the .npz head artifacts, then every
+    # ocr_page payload through the SAME deterministic head + logicell
+    # decode single-process (core.tsrhead) — what
     # spark.model_stage.score_table_structure(weights_path=…) must
     # reproduce distributed
-    import json as _json
+    save_weights(path["tsr_head.npz"], TSR_WEIGHTS, TSR_VERSION)
+    save_weights(path["det_head.npz"], DET_WEIGHTS, DET_VERSION)
+    save_weights(path["neural_head.npz"], DB_PARAM_VECTOR, NEURAL_VERSION)
+    _write(path["golden_model_tsr.parquet"],
+           [{"doc_id": doc_id, "offset": s["offset"], "kind": "table_html",
+             "text": extract_page_from_model(json.loads(s["text"]),
+                                             TSR_WEIGHTS)}
+            for doc_id, spans in corpus for s in spans
+            if s["kind"] == "ocr_page"], WIRE_SCHEMA)
 
-    from ..core.dethead import DET_VERSION, DET_WEIGHTS
-    from ..core.tsrhead import (TSR_VERSION, TSR_WEIGHTS,
-                                extract_page_from_model)
-    from ..spark.model_stage import (DB_PARAM_VECTOR, NEURAL_VERSION,
-                                     save_weights)
-    save_weights(tsr_model_path, TSR_WEIGHTS, TSR_VERSION)
-    save_weights(det_model_path, DET_WEIGHTS, DET_VERSION)
-    save_weights(neural_model_path, DB_PARAM_VECTOR, NEURAL_VERSION)
-    tg = {"doc_id": [], "offset": [], "kind": [], "text": []}
-    for doc_id, spans in zip(doc_ids, span_lists):
-        for s in spans:
-            if s["kind"] != "ocr_page":
-                continue
-            tg["doc_id"].append(doc_id)
-            tg["offset"].append(s["offset"])
-            tg["kind"].append("table_html")
-            tg["text"].append(extract_page_from_model(
-                _json.loads(s["text"]), TSR_WEIGHTS))
-    pq.write_table(pa.Table.from_pydict(tg, schema=pa.schema([
-        ("doc_id", pa.string()), ("offset", pa.int32()),
-        ("kind", pa.string()), ("text", pa.string())])),
-        tsr_golden_path)
-
-    # flavor-forced goldens (the read_pdf flavor kwarg surface): same
-    # corpus decoded lattice-only / stream-only
-    for fl, fpath in flavor_paths.items():
-        fg = {k: [] for k in ("doc_id", "offset", "kind", "text",
-                              "media_ref", "src_offset",
-                              "accuracy", "whitespace")}
-        for doc_id, spans in zip(doc_ids, span_lists):
-            for o in extract_document(spans, flavor=fl):
-                fg["doc_id"].append(doc_id)
-                fg["offset"].append(o["offset"])
-                fg["kind"].append(o["kind"])
-                fg["text"].append(o["text"])
-                fg["media_ref"].append(o["media_ref"])
-                fg["src_offset"].append(o["src_offset"])
-                fg["accuracy"].append(o["accuracy"])
-                fg["whitespace"].append(o["whitespace"])
-        pq.write_table(pa.Table.from_pydict(fg, schema=GOLDEN_SCHEMA),
-                       fpath)
     # planted REAL media corpus (core.codecs encoders) + encode-side
     # truth: the S4 decode gate — the Spark decode stage must reproduce
     # dims/format/n_bytes recorded here BEFORE encoding
-    from .media_gen import media_payloads, media_truth, wav_truth
-    mp = media_payloads()
-    pq.write_table(pa.Table.from_pydict(
-        {"media_ref": [r["media_ref"] for r in mp],
-         "payload": [r["payload"] for r in mp]},
-        schema=pa.schema([("media_ref", pa.string()),
-                          ("payload", pa.binary())])), media_path)
-    mt = media_truth()
-    pq.write_table(pa.Table.from_pydict(
-        {k: [r[k] for r in mt] for k in
-         ("media_ref", "src_width", "src_height", "format",
-          "n_bytes", "px_sum")},
-        schema=pa.schema([
-            ("media_ref", pa.string()), ("src_width", pa.int32()),
-            ("src_height", pa.int32()), ("format", pa.string()),
-            ("n_bytes", pa.int64()), ("px_sum", pa.int64())])),
-        media_golden_path)
-    wt = wav_truth()
-    pq.write_table(pa.Table.from_pydict(
-        {k: [r[k] for r in wt] for k in
-         ("media_ref", "sample_rate", "n_channels", "n_frames",
-          "duration_ms", "peak")},
-        schema=pa.schema([
-            ("media_ref", pa.string()), ("sample_rate", pa.int32()),
-            ("n_channels", pa.int32()), ("n_frames", pa.int64()),
-            ("duration_ms", pa.int64()), ("peak", pa.int32())])),
-        wav_golden_path)
+    _write(path["media_payloads.parquet"], media_gen.media_payloads(),
+           PAYLOAD_SCHEMA)
+    _write(path["golden_media_meta.parquet"], media_gen.media_truth(),
+           MEDIA_SCHEMA)
+    _write(path["golden_wav_meta.parquet"], media_gen.wav_truth(),
+           WAV_SCHEMA)
+
     # scan-page corpus (REAL PNG pages) + det-CNN artifact + golden:
     # the image → CNN forward → DBNet postprocess path, run here
     # single-process through the SAME .npz weights the distributed
     # score_det_cnn stage loads (the golden_model_tsr pattern)
-    from ..core import codecs as _codecs
-    from ..core import nn as _nn
-    from ..core.dbnet import DB_PARAMS, db_postprocess, format_db_box
-    from ..spark.model_stage import save_weights_dict
-    from .media_gen import scan_payloads
-    sp = scan_payloads()
-    pq.write_table(pa.Table.from_pydict(
-        {"media_ref": [r["media_ref"] for r in sp],
-         "payload": [r["payload"] for r in sp]},
-        schema=pa.schema([("media_ref", pa.string()),
-                          ("payload", pa.binary())])), scan_path)
-    save_weights_dict(detcnn_path, _nn.DET_CNN, _nn.DETCNN_VERSION)
-    sg = {"doc_id": [], "offset": [], "kind": [], "text": []}
-    for r in sp:
-        scan, _fmt = _codecs.decode_image(r["payload"])
-        prob = _nn.det_forward(_nn.ink_from_scan(_codecs.to_gray(scan)),
-                               _nn.DET_CNN)
-        boxes, scores = db_postprocess(prob, prob.shape[1],
-                                       prob.shape[0], DB_PARAMS)
-        for j, (b, s) in enumerate(zip(boxes, scores)):
-            sg["doc_id"].append(r["media_ref"])
-            sg["offset"].append(j)
-            sg["kind"].append("db_cnn_box")
-            sg["text"].append(format_db_box(b, s))
-    pq.write_table(pa.Table.from_pydict(sg, schema=pa.schema([
-        ("doc_id", pa.string()), ("offset", pa.int32()),
-        ("kind", pa.string()), ("text", pa.string())])),
-        scan_golden_path)
-    # full-OCR scan corpus (ruled tables + free text rendered with
-    # the core.font glyphs, real PNG) + combined det/rec artifact +
-    # PLANTED-TRUTH golden: unlike the det-CNN golden above, these
-    # rows come from the plants alone (media_gen.ocr_scan_truth), so
-    # the oracle is an independent inverse of the whole pixel
-    # pipeline, not a same-code twin
-    from .media_gen import ocr_scan_payloads, ocr_scan_truth
-    op = ocr_scan_payloads()
-    pq.write_table(pa.Table.from_pydict(
-        {"media_ref": [r["media_ref"] for r in op],
-         "payload": [r["payload"] for r in op]},
-        schema=pa.schema([("media_ref", pa.string()),
-                          ("payload", pa.binary())])),
-        ocr_scan_path)
-    from ..core.ocrpage import LAYOUT_CNN
-    ocr_tensors = {f"det_{k}": v for k, v in _nn.OCR_DET_CNN.items()}
-    ocr_tensors.update(
-        {f"rec_{k}": v for k, v in _nn.REC_CNN.items()})
-    ocr_tensors.update(
-        {f"layout_{k}": v for k, v in LAYOUT_CNN.items()})
-    save_weights_dict(ocrcnn_path, ocr_tensors, _nn.OCRCNN_VERSION)
-    ot = ocr_scan_truth()
-    pq.write_table(pa.Table.from_pydict(
-        {"doc_id": [r["media_ref"] for r in ot],
-         "offset": [r["offset"] for r in ot],
-         "kind": [r["kind"] for r in ot],
-         "text": [r["text"] for r in ot]},
-        schema=pa.schema([
-            ("doc_id", pa.string()), ("offset", pa.int32()),
-            ("kind", pa.string()), ("text", pa.string())])),
-        ocr_golden_path)
+    scans = media_gen.scan_payloads()
+    _write(path["scan_pages.parquet"], scans, PAYLOAD_SCHEMA)
+    save_weights_dict(path["det_cnn.npz"], nn.DET_CNN, nn.DETCNN_VERSION)
+    db_boxes = []
+    for r in scans:
+        prob = nn.det_forward(nn.ink_from_scan(_gray(r["payload"])),
+                              nn.DET_CNN)
+        db_boxes += [{"doc_id": r["media_ref"], "offset": j,
+                      "kind": "db_cnn_box", "text": format_db_box(b, s)}
+                     for j, (b, s) in enumerate(zip(*db_postprocess(
+                         prob, prob.shape[1], prob.shape[0], DB_PARAMS)))]
+    _write(path["golden_scan_boxes.parquet"], db_boxes, WIRE_SCHEMA)
+
+    # full-OCR scan corpus (ruled tables + free text rendered with the
+    # core.font glyphs, real PNG) + combined det/rec/layout artifact +
+    # PLANTED-TRUTH golden: these rows come from the plants alone
+    # (media_gen.ocr_scan_truth), so the oracle is an independent
+    # inverse of the whole pixel pipeline, not a same-code twin
+    _write(path["ocr_scan_pages.parquet"], media_gen.ocr_scan_payloads(),
+           PAYLOAD_SCHEMA)
+    ocr_tensors = _prefixed(det=nn.OCR_DET_CNN, rec=nn.REC_CNN,
+                            layout=LAYOUT_CNN)
+    save_weights_dict(path["ocr_cnn.npz"], ocr_tensors, nn.OCRCNN_VERSION)
+    _write(path["golden_ocr_scan.parquet"],
+           [{"doc_id": r["media_ref"], **r}
+            for r in media_gen.ocr_scan_truth()], WIRE_SCHEMA)
+
     # layout corpus + golden: label (class + tight bbox) is PLANTED
     # truth — a wrong distributed region, class or geometry fails the
     # gate; the three scores are the same-artifact single-process twin
-    from ..core.ocrpage import layout_regions
-    from .media_gen import layout_scan_payloads, layout_scan_truth
-    lpp = layout_scan_payloads()
-    pq.write_table(pa.Table.from_pydict(
-        {"media_ref": [r["media_ref"] for r in lpp],
-         "payload": [r["payload"] for r in lpp]},
-        schema=pa.schema([("media_ref", pa.string()),
-                          ("payload", pa.binary())])),
-        layout_scan_path)
-    ldet = {k[4:]: v for k, v in ocr_tensors.items()
-            if k.startswith("det_")}
-    llay = {k[7:]: v for k, v in ocr_tensors.items()
-            if k.startswith("layout_")}
-    lg = {"doc_id": [], "offset": [], "score_table": [],
-          "score_text": [], "score_figure": [], "label": []}
-    ltruth = {}
-    for r in layout_scan_truth():
-        ltruth[(r["media_ref"], r["offset"])] = r["label"]
-    for r in lpp:
-        img, _fmt = _codecs.decode_image(r["payload"])
-        for j, reg in enumerate(layout_regions(
-                _codecs.to_gray(img), weights=llay, det_weights=ldet)):
-            lg["doc_id"].append(r["media_ref"])
-            lg["offset"].append(j)
-            lg["score_table"].append(reg["scores"][0])
-            lg["score_text"].append(reg["scores"][1])
-            lg["score_figure"].append(reg["scores"][2])
-            lg["label"].append(ltruth[(r["media_ref"], j)])
-    pq.write_table(pa.Table.from_pydict(lg, schema=pa.schema([
-        ("doc_id", pa.string()), ("offset", pa.int32()),
-        ("score_table", pa.float64()), ("score_text", pa.float64()),
-        ("score_figure", pa.float64()), ("label", pa.string())])),
-        layout_golden_path)
+    layouts = media_gen.layout_scan_payloads()
+    _write(path["layout_scan_pages.parquet"], layouts, PAYLOAD_SCHEMA)
+    det_w, lay_w = _split("det_", "layout_")(ocr_tensors)
+    label = {(r["media_ref"], r["offset"]): r["label"]
+             for r in media_gen.layout_scan_truth()}
+    _write(path["golden_layout_cnn.parquet"],
+           [{"doc_id": r["media_ref"], "offset": j,
+             **dict(zip(LAYOUT_SCHEMA.names[2:5], reg["scores"])),
+             "label": label[(r["media_ref"], j)]}
+            for r in layouts for j, reg in enumerate(layout_regions(
+                _gray(r["payload"]), weights=lay_w, det_weights=det_w))],
+           LAYOUT_SCHEMA)
+
     # orientation corpus + golden: pred_rot is the PLANTED correction
     # angle (encode-side truth — a wrong distributed prediction fails
     # the gate), the four vote scores are the same-artifact
     # single-process run (the det-CNN golden pattern)
-    from ..core.ocrpage import orient_scan_page
-    from .media_gen import orient_scan_payloads, orient_scan_truth
-    opp = orient_scan_payloads()
-    pq.write_table(pa.Table.from_pydict(
-        {"media_ref": [r["media_ref"] for r in opp],
-         "payload": [r["payload"] for r in opp]},
-        schema=pa.schema([("media_ref", pa.string()),
-                          ("payload", pa.binary())])),
-        orient_scan_path)
-    og = {"doc_id": [], "score_rot0": [], "score_rot90": [],
-          "score_rot180": [], "score_rot270": [], "pred_rot": []}
-    odet = {k[4:]: v for k, v in ocr_tensors.items()
-            if k.startswith("det_")}
-    orec = {k[4:]: v for k, v in ocr_tensors.items()
-            if k.startswith("rec_")}
-    for r, tr in zip(opp, orient_scan_truth()):
-        img, _fmt = _codecs.decode_image(r["payload"])
-        _pred, votes = orient_scan_page(
-            _codecs.to_gray(img), det_weights=odet, rec_weights=orec)
-        og["doc_id"].append(r["media_ref"])
-        for j, col in enumerate(("score_rot0", "score_rot90",
-                                 "score_rot180", "score_rot270")):
-            og[col].append(float(votes[j]))
-        og["pred_rot"].append(tr["angle"])
-    pq.write_table(pa.Table.from_pydict(og, schema=pa.schema([
-        ("doc_id", pa.string()), ("score_rot0", pa.float64()),
-        ("score_rot90", pa.float64()), ("score_rot180", pa.float64()),
-        ("score_rot270", pa.float64()), ("pred_rot", pa.int32())])),
-        orient_golden_path)
-    return {"sf": sf, "docs": n_docs, "pages": n_pages,
-            "golden_rows": len(g_doc), "export_rows": len(e["doc_id"]),
+    turned = media_gen.orient_scan_payloads()
+    _write(path["orient_scan_pages.parquet"], turned, PAYLOAD_SCHEMA)
+    det_w, rec_w = _split("det_", "rec_")(ocr_tensors)
+    orient = []
+    for r, truth in zip(turned, media_gen.orient_scan_truth()):
+        _pred, votes = orient_scan_page(_gray(r["payload"]),
+                                        det_weights=det_w,
+                                        rec_weights=rec_w)
+        orient.append({"doc_id": r["media_ref"],
+                       **{c: float(v) for c, v in
+                          zip(ORIENT_SCHEMA.names[1:5], votes)},
+                       "pred_rot": truth["angle"]})
+    _write(path["golden_orient_cnn.parquet"], orient, ORIENT_SCHEMA)
+    return {"sf": sf, "docs": n_docs,
+            "pages": sum(s["kind"] == "pdf_page"
+                         for _, spans in corpus for s in spans),
+            "golden_rows": len(flat), "export_rows": len(exports),
             "skipped": False}
 
 

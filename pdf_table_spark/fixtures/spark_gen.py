@@ -18,11 +18,9 @@ from ..sources.corpus import CORPUS_SCHEMA
 def _gen_batches_heavy(batches):
     import pyarrow as pa
 
+    from .build import SPAN_TYPE
     from .generator import gen_doc
 
-    span_type = pa.struct([
-        ("kind", pa.string()), ("text", pa.string()),
-        ("media_ref", pa.string()), ("offset", pa.int32())])
     for batch in batches:
         ids = batch.column(0).to_pylist()
         doc_ids, span_lists = [], []
@@ -32,7 +30,7 @@ def _gen_batches_heavy(batches):
             span_lists.append(spans)
         yield pa.RecordBatch.from_arrays(
             [pa.array(doc_ids, pa.string()),
-             pa.array(span_lists, pa.list_(span_type))],
+             pa.array(span_lists, pa.list_(SPAN_TYPE))],
             names=["doc_id", "spans"])
 
 

@@ -33,7 +33,8 @@ The numpy half (``cosine_topk_np``, ``ivf_assign``, ``ann_topk_ivf_np``,
 ``semdedup_kmeans``) is the same search with the inner loop in one
 matmul per Arrow batch: interpreted lambdas cost ~10 ns per
 multiply-add, too slow at 10^6+ vectors. Its two searches share one
-block kernel, ``_block_topk``. It has no oracle twin; the tests
+block kernel, ``_block_topk``, which gives a zero-norm vector the same
+NULL cosine and last-place rank. It has no oracle twin; the tests
 compare it against the interpreted operators.
 """
 
@@ -351,8 +352,10 @@ TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double"
 
 def _unit(vecs) -> np.ndarray:
     """The vectors as float64 rows scaled to unit length; an all-zero
-    row stays zero."""
+    row stays zero, and no vectors give a (0, 0) matrix."""
     m = np.array(list(vecs), dtype="float64")
+    if not len(m):
+        return m.reshape(0, 0)
     m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
     return m
 
@@ -362,19 +365,29 @@ def _block_topk(m, vid, q, qids, k: int):
     against unit queries ``q`` (ids ``qids``), each query's own row
     excluded; each query keeps its top min(k, rows) rows (argpartition,
     unordered) as a (query_id, neighbor_id, cosine) frame, non-finite
-    scores dropped."""
+    scores dropped. A pair with an all-zero side has a NaN cosine (NULL
+    in Spark, as in ``cosine_topk``) and is selected after every
+    scored row, by neighbor id."""
     import pandas as pd
     s = m @ q.T                                 # (rows, queries)
+    zero_row, zero_q = ~m.any(axis=1), ~q.any(axis=1)
+    if zero_row.any() or zero_q.any():
+        # NULL pairs score in (-3, -2], below any cosine, in
+        # neighbor-id order, and leave as NaN
+        null = -2.0 - np.argsort(np.argsort(vid, kind="stable")) / len(vid)
+        s[zero_row] = null[zero_row, None]
+        s[:, zero_q] = null[:, None]
     pos = {int(x): j for j, x in enumerate(qids)}
     for i in np.nonzero(np.isin(vid, qids))[0]:
         s[i, pos[int(vid[i])]] = -np.inf
     kk = min(k, len(vid))
     top = np.argpartition(-s, kth=kk - 1, axis=0)[:kk]
+    cos = np.take_along_axis(s, top, axis=0).T.ravel()
     out = pd.DataFrame({
         "query_id": np.repeat(qids, kk),
         "neighbor_id": vid[top.T.ravel()],
-        "cosine": np.take_along_axis(s, top, axis=0).T.ravel()})
-    return out[np.isfinite(out.cosine.to_numpy())]
+        "cosine": np.where(cos <= -2.0, np.nan, cos)})
+    return out[np.isfinite(cos)]
 
 
 def _query_matrix(emb: DataFrame, query_ids):
@@ -484,7 +497,8 @@ def ann_topk_ivf_np(emb: DataFrame, centroids: list, query_ids=None,
         cells = ivf_assign(emb, centroids)
 
     qids, q = _query_matrix(emb, query_ids)
-    probe_cells = np.argsort(-(q @ cmat.T), axis=1)[:, :n_probe]
+    probe_cells = (np.argsort(-(q @ cmat.T), axis=1)[:, :n_probe]
+                   if len(q) else [])
     # cell -> indices of the queries probing it: a broadcast dict, not
     # a join — a probe JOIN would replicate every candidate's 64-dim
     # embedding once per probing query (n_queries x n_probe/n_cells
@@ -512,7 +526,8 @@ def ann_topk_ivf_np(emb: DataFrame, centroids: list, query_ids=None,
                 # per-batch per-query top-k keeps the shuffle at
                 # n_batches x n_queries x k rows
                 yield (pd.concat(parts)
-                       .sort_values("cosine", ascending=False)
+                       .sort_values(["cosine", "neighbor_id"],
+                                    ascending=[False, True])
                        .groupby("query_id", sort=False).head(k))
 
     # unprobed cells are skipped entirely (partition-pruned when the

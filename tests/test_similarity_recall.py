@@ -362,3 +362,54 @@ def test_ann_ivf_np_all_probes_equals_brute_np(spark, planted):
     for key, (nid, cos) in brute.items():
         assert ivf[key][0] == nid, key
         assert abs(ivf[key][1] - cos) <= 1e-9, key
+
+
+@pytest.fixture(scope="module")
+def zero_norm(spark):
+    """20 random 8-d vectors; vec_ids 3 (a default query and an IVF
+    seed centroid) and 12 are all-zero."""
+    arr = np.random.default_rng(0).standard_normal((20, 8))
+    arr[[3, 12]] = 0.0
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(arr)],
+        "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("k", [20, 5])
+def test_zero_norm_np_matches_interpreted(spark, zero_norm, k):
+    """A pair with a zero-norm side has a NULL cosine in the numpy half
+    too, and ranks after every scored neighbour by neighbor_id, both
+    for a zero candidate (query 0 → 3, 12) and a zero query (3)."""
+    from pdf_table_spark.ops.similarity import (ann_topk_ivf_np,
+                                                cosine_topk, cosine_topk_np,
+                                                ivf_centroids)
+    cents = ivf_centroids(zero_norm, 4)
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    want = rows(cosine_topk(zero_norm, k=k))
+
+    def ranked(query):
+        return sorted((r, n, c) for q, n, c, r in want if q == query)
+
+    assert ranked(3) == [(r, n, None) for r, n in enumerate(
+        [n for n in range(20) if n != 3][:k], 1)]
+    if k == 20:
+        assert ranked(0)[-2:] == [(18, 3, None), (19, 12, None)]
+    assert rows(cosine_topk_np(zero_norm, k=k)) == want
+    assert rows(ann_topk_ivf_np(zero_norm, cents, k=k,
+                                n_probe=len(cents))) == want
+
+
+def test_np_empty_query_set_gives_empty_frame(spark, zero_norm):
+    """No vector matches the query set: the numpy searches return an
+    empty frame, as ``cosine_topk`` does, instead of failing on the
+    driver."""
+    from pdf_table_spark.ops.similarity import (ann_topk_ivf_np,
+                                                cosine_topk, cosine_topk_np,
+                                                ivf_centroids)
+    cents = ivf_centroids(zero_norm, 4)
+    assert cosine_topk(zero_norm, query_ids=[99]).collect() == []
+    assert cosine_topk_np(zero_norm, query_ids=[99]).collect() == []
+    assert ann_topk_ivf_np(zero_norm, cents, query_ids=[99]).collect() == []
