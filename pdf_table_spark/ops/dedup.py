@@ -159,13 +159,12 @@ def shingle_hash_rows(docs: DataFrame,
                            out="sh")
 
 
-def shingle_hash_arrays(docs: DataFrame,
-                        hash_fn: str = "xxhash64") -> DataFrame:
+def shingle_hash_arrays(docs: DataFrame) -> DataFrame:
     """(doc_id, shs: array<bigint>) — the pre-explode form of
-    ``shingle_hash_rows`` (distinct shingle hashes per doc), for
-    operators that want per-doc array math before any shuffle."""
+    ``shingle_hash_rows`` (distinct xxhash64 shingle hashes per doc),
+    for operators that want per-doc array math before any shuffle."""
     shs = grams.windows("tk", SHINGLE_K, whole_doc=True,
-                        fn=grams.hash_sql(hash_fn))
+                        fn=grams.hash_sql("xxhash64"))
     return (grams.tokenized(docs)
             .select("doc_id", F.expr(f"array_distinct({shs})")
                     .alias("shs")))
@@ -517,7 +516,10 @@ def join_candidate_mass(sh: DataFrame):
             .collect()[0]["mass"])
 
 
-def simhash(docs: DataFrame, n_bits: int = 60) -> DataFrame:
+SIMHASH_BITS = 60  # the width of grams.H60, the token hash
+
+
+def simhash(docs: DataFrame) -> DataFrame:
     """Per-doc SimHash over distinct tokens: bit b set iff
     sum(+1 if bit b of h60(token) else -1) > 0. Returns the fingerprint
     as a bigint. All built-in expressions: explode → 60 conditional
@@ -530,21 +532,21 @@ def simhash(docs: DataFrame, n_bits: int = 60) -> DataFrame:
         "doc_id", F.expr(grams.hash_sql("md5", "tok")).alias("h"))
     votes = [
         F.expr(f"sum(if((h div {1 << b}) % 2 = 1, 1, -1)) as v{b}")
-        for b in range(n_bits)
+        for b in range(SIMHASH_BITS)
     ]
     agg = h.groupBy("doc_id").agg(*votes)
     bit_terms = " + ".join(
-        f"if(v{b} > 0, cast({1 << b} as bigint), 0L)" for b in range(n_bits))
+        f"if(v{b} > 0, cast({1 << b} as bigint), 0L)"
+        for b in range(SIMHASH_BITS))
     return agg.select("doc_id", F.expr(bit_terms).alias("simhash"))
 
 
 def simhash_pairs_from_fingerprints(sig: DataFrame, max_hamming: int = 3,
-                                    n_bits: int = 60,
                                     max_bucket: int | None = None
                                     ) -> DataFrame:
     """Hamming-close pairs from a (doc_id, simhash) fingerprint table.
 
-    Banding with the pigeonhole guarantee: the n_bits fingerprint is
+    Banding with the pigeonhole guarantee: the SIMHASH_BITS fingerprint is
     split into (max_hamming + 1) bit bands; two fingerprints within
     hamming distance max_hamming differ in at most max_hamming bands,
     so they share AT LEAST ONE band verbatim — the band equi-join
@@ -559,11 +561,11 @@ def simhash_pairs_from_fingerprints(sig: DataFrame, max_hamming: int = 3,
     should have removed upstream.
     """
     n_bands = max_hamming + 1
-    width = n_bits // n_bands
+    width = SIMHASH_BITS // n_bands
     band_cols = []
     for bidx in range(n_bands):
         shift = bidx * width
-        w = (n_bits - shift) if bidx == n_bands - 1 else width
+        w = (SIMHASH_BITS - shift) if bidx == n_bands - 1 else width
         band_cols.append(F.struct(
             F.lit(bidx).alias("band"),
             F.expr(f"(simhash div {1 << shift}) % {1 << w}").alias("bv")))
@@ -593,15 +595,13 @@ def simhash_pairs_from_fingerprints(sig: DataFrame, max_hamming: int = 3,
     )
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
-                  n_bits: int = 60,
-                  max_bucket: int | None = None) -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup candidate pairs end-to-end: fingerprint →
-    banded hamming join → exact verify. Exhaustive for the given
-    max_hamming when max_bucket is None (the oracle-checked contract);
-    set max_bucket in production."""
-    return simhash_pairs_from_fingerprints(
-        simhash(docs, n_bits), max_hamming, n_bits, max_bucket)
+    banded hamming join → exact verify, exhaustive for the given
+    max_hamming (the oracle-checked contract; a production run with
+    degenerate buckets caps them through
+    ``simhash_pairs_from_fingerprints(max_bucket=...)``)."""
+    return simhash_pairs_from_fingerprints(simhash(docs), max_hamming)
 
 
 def exact_substring_dedup(docs: DataFrame, n: int = 50,

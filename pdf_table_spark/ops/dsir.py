@@ -57,13 +57,14 @@ from pyspark.sql import functions as F
 from . import grams
 
 _TWO60 = float(1 << 60)
+N_BUCKETS = 512  # default hashed feature space of the fit
 
 
-def _with_buckets(df: DataFrame, text_col: str, n_buckets: int,
-                  hash_fn: str, keep: list[str] | None = None,
+def _with_buckets(df: DataFrame, n_buckets: int, hash_fn: str,
+                  keep: list[str] | None = None,
                   explode: bool = False) -> DataFrame:
     """``keep`` columns (default all) plus the hashed bucket ids of
-    ``text_col``'s unigrams and bigrams (duplicates kept — counts
+    ``text``'s unigrams and bigrams (duplicates kept — counts
     matter): an array ``_bks``, or with ``explode`` one ``bk`` row per
     gram, exploded where it is built (see ``grams.gram_rows``). The
     hash is ``grams.hash_sql``'s non-negative 60-bit form, whose md5
@@ -73,21 +74,19 @@ def _with_buckets(df: DataFrame, text_col: str, n_buckets: int,
     bks = F.expr(f"transform(concat(_toks, {grams.windows('_toks', 2)}), "
                  f"g -> {h} % {int(n_buckets)})")
     return (df
-            .select(*keep, F.expr(grams.tokens(text_col)).alias("_toks"))
+            .select(*keep, F.expr(grams.tokens()).alias("_toks"))
             .select(*keep, F.explode(bks).alias("bk") if explode
                     else bks.alias("_bks")))
 
 
-def bucket_counts(df: DataFrame, text_col: str = "text",
-                  n_buckets: int = 512,
+def bucket_counts(df: DataFrame, n_buckets: int = N_BUCKETS,
                   hash_fn: str = "md5") -> tuple[list[int], int]:
     """(dense per-bucket gram counts, total grams). One explode +
     ≤n_buckets-key groupBy (map-side combinable) + bounded collect."""
     if not 2 <= n_buckets <= 65536:
         raise ValueError("n_buckets must be in [2, 65536] — the fit "
                          "is a driver-side collect of that many rows")
-    rows = (_with_buckets(df, text_col, n_buckets, hash_fn, keep=[],
-                          explode=True)
+    rows = (_with_buckets(df, n_buckets, hash_fn, keep=[], explode=True)
             .groupBy("bk").count().collect())
     counts = [0] * n_buckets
     total = 0
@@ -97,9 +96,7 @@ def bucket_counts(df: DataFrame, text_col: str = "text",
     return counts, total
 
 
-def bucket_counts_tagged(docs: DataFrame, target_expr: str,
-                         text_col: str = "text", n_buckets: int = 512,
-                         hash_fn: str = "md5"
+def bucket_counts_tagged(docs: DataFrame, target_expr: str
                          ) -> tuple[list[int], int, list[int], int]:
     """Target AND raw per-bucket counts from ONE scan: when both
     sides are predicates over the same table (the common DSIR setup —
@@ -110,16 +107,12 @@ def bucket_counts_tagged(docs: DataFrame, target_expr: str,
     the two filtered frames. Rows matching neither side are excluded
     by construction (the predicate is boolean, so every row lands in
     target or raw — pre-filter the frame if some rows belong to
-    neither)."""
-    if not 2 <= n_buckets <= 65536:
-        raise ValueError("n_buckets must be in [2, 65536] — the fit "
-                         "is a driver-side collect of that many rows")
-    tagged = docs.select(F.expr(target_expr).alias("_tgt"),
-                         F.col(text_col))
-    rows = (_with_buckets(tagged, text_col, n_buckets, hash_fn,
-                          keep=["_tgt"], explode=True)
+    neither). Text column ``text``, ``N_BUCKETS`` buckets, md5."""
+    tagged = docs.select(F.expr(target_expr).alias("_tgt"), F.col("text"))
+    rows = (_with_buckets(tagged, N_BUCKETS, "md5", keep=["_tgt"],
+                          explode=True)
             .groupBy("_tgt", "bk").count().collect())
-    t, r = [0] * n_buckets, [0] * n_buckets
+    t, r = [0] * N_BUCKETS, [0] * N_BUCKETS
     tt = rr = 0
     for row in rows:
         if row["_tgt"]:
@@ -139,20 +132,17 @@ def _logratio_e6(t, tt, r, rr, n_buckets: int) -> list[int]:
         for i in range(n_buckets)]
 
 
-def fit_logratio_e6_tagged(docs: DataFrame, target_expr: str,
-                           text_col: str = "text",
-                           n_buckets: int = 512,
-                           hash_fn: str = "md5") -> list[int]:
+def fit_logratio_e6_tagged(docs: DataFrame,
+                           target_expr: str) -> list[int]:
     """``fit_logratio_e6`` when target and raw are predicate halves of
     one table: identical integers, one scan/shuffle/collect instead of
     two (see :func:`bucket_counts_tagged`)."""
-    t, tt, r, rr = bucket_counts_tagged(docs, target_expr, text_col,
-                                        n_buckets, hash_fn)
-    return _logratio_e6(t, tt, r, rr, n_buckets)
+    t, tt, r, rr = bucket_counts_tagged(docs, target_expr)
+    return _logratio_e6(t, tt, r, rr, N_BUCKETS)
 
 
 def fit_logratio_e6(target: DataFrame, raw: DataFrame,
-                    text_col: str = "text", n_buckets: int = 512,
+                    n_buckets: int = N_BUCKETS,
                     hash_fn: str = "md5") -> list[int]:
     """Per-bucket quantized log importance ratio, add-1 smoothed:
 
@@ -164,15 +154,14 @@ def fit_logratio_e6(target: DataFrame, raw: DataFrame,
     last-ulp libm divergence unless the true value straddles a floor
     boundary — empirically zero mismatches on this box, see module
     docstring)."""
-    t, tt = bucket_counts(target, text_col, n_buckets, hash_fn)
-    r, rr = bucket_counts(raw, text_col, n_buckets, hash_fn)
+    t, tt = bucket_counts(target, n_buckets, hash_fn)
+    r, rr = bucket_counts(raw, n_buckets, hash_fn)
     return _logratio_e6(t, tt, r, rr, n_buckets)
 
 
 def score_e6(docs: DataFrame, lr_e6: list[int],
-             text_col: str = "text", hash_fn: str = "md5",
-             out_col: str = "score_e6") -> DataFrame:
-    """Adds ``out_col``: the doc's integer micro-nat log importance
+             hash_fn: str = "md5") -> DataFrame:
+    """Adds ``score_e6``: the doc's integer micro-nat log importance
     weight — a whole-stage-codegen HOF sum against a constant-folded
     lookup array (no Python boundary, no shuffle, no floats). Docs
     with zero grams (empty/whitespace text) are dropped: they carry
@@ -187,20 +176,17 @@ def score_e6(docs: DataFrame, lr_e6: list[int],
     # the projection and re-evaluate the gram chain per row.
     lut = "array(" + ",".join(f"{int(v)}L" for v in lr_e6) + ")"
     cols = docs.columns
-    nonempty = docs.filter(
-        F.expr(f"size({grams.tokens(text_col)}) > 0"))
-    return (_with_buckets(nonempty, text_col, len(lr_e6), hash_fn,
-                          keep=cols)
+    nonempty = docs.filter(F.expr(f"size({grams.tokens()}) > 0"))
+    return (_with_buckets(nonempty, len(lr_e6), hash_fn, keep=cols)
             .select(*cols, F.col("_bks"), F.expr(lut).alias("_lut"))
             .select(*cols, F.expr(
                 "aggregate(_bks, 0L, (acc, b) -> "
                 "acc + element_at(_lut, cast(b + 1 as int)))")
-                .alias(out_col)))
+                .alias("score_e6")))
 
 
 def score_np(docs: DataFrame, lr_e6: list[int],
-             text_col: str = "text", hash_fn: str = "md5",
-             out_col: str = "score_e6") -> DataFrame:
+             hash_fn: str = "md5") -> DataFrame:
     """Vectorized Arrow twin of :func:`score_e6` for LARGE bucket
     counts: the per-row lookup-array trick tops out around B≈1k
     (CreateArray is evaluated per row — at B=65536 that is a 512 KiB
@@ -216,10 +202,8 @@ def score_np(docs: DataFrame, lr_e6: list[int],
     import pyarrow as pa
 
     lut_vals = lr_e6  # closure-captured; ~0.5 MiB at B=65536
-    nonempty = docs.filter(
-        F.expr(f"size({grams.tokens(text_col)}) > 0"))
-    bks = _with_buckets(nonempty, text_col, len(lr_e6), hash_fn,
-                        keep=["doc_id"])
+    nonempty = docs.filter(F.expr(f"size({grams.tokens()}) > 0"))
+    bks = _with_buckets(nonempty, len(lr_e6), hash_fn, keep=["doc_id"])
 
     def score_batches(batches):
         import numpy as np
@@ -234,27 +218,26 @@ def score_np(docs: DataFrame, lr_e6: list[int],
             scores = cs[offs[1:]] - cs[offs[:-1]]
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), pa.array(scores, pa.int64())],
-                names=["doc_id", out_col])
+                names=["doc_id", "score_e6"])
 
     return bks.mapInArrow(
         score_batches,
-        schema=f"doc_id {dict(docs.dtypes)['doc_id']}, "
-               f"{out_col} bigint")
+        schema=f"doc_id {dict(docs.dtypes)['doc_id']}, score_e6 bigint")
 
 
-def gumbel_e6_expr(seed: str = "dsir-v1", key: str = "doc_id") -> str:
+def gumbel_e6_expr(seed: str = "dsir-v1") -> str:
     """Deterministic quantized Gumbel(0,1) draw per doc: the md5
-    60-bit hash of (key, seed) → u = (h + 0.5)/2^60 ∈ (0,1) →
+    60-bit hash of (doc_id, seed) → u = (h + 0.5)/2^60 ∈ (0,1) →
     floor(−ln(−ln(u))·1e6 + 0.5). Same-libm/quantized like the log
     ratios, so Spark and DuckDB agree bit-for-bit; reruns and retries
     redraw the identical noise."""
-    h = grams.H60.format(s=f"concat(cast(`{key}` as string), '{seed}')")
+    h = grams.H60.format(s=f"concat(cast(`doc_id` as string), '{seed}')")
     return (f"cast(floor(-ln(-ln(({h} + 0.5d) / {_TWO60!r}d)) * 1e6 "
             f"+ 0.5) as bigint)")
 
 
 def dsir_select(docs: DataFrame, lr_e6: list[int], k: int,
-                text_col: str = "text", hash_fn: str = "md5",
+                hash_fn: str = "md5",
                 mode: str = "topk",
                 seed: str = "dsir-v1",
                 scored: DataFrame | None = None) -> DataFrame:
@@ -286,9 +269,9 @@ def dsir_select(docs: DataFrame, lr_e6: list[int], k: int,
         raise ValueError(f"mode must be topk|gumbel, got {mode!r}")
     if scored is None:
         if len(lr_e6) <= 1024:
-            scored = score_e6(docs, lr_e6, text_col, hash_fn)
+            scored = score_e6(docs, lr_e6, hash_fn)
         else:
-            scored = score_np(docs, lr_e6, text_col, hash_fn)
+            scored = score_np(docs, lr_e6, hash_fn)
     key = (F.col("score_e6") if mode == "topk"
            else F.col("score_e6") + F.expr(gumbel_e6_expr(seed)))
     return (scored

@@ -36,13 +36,13 @@ _HASHES = {
 }
 
 
-def tokens(col: str = "text", lower: bool = True) -> str:
-    """SQL token array of ``col``: whitespace split, empty tokens
+def tokens(lower: bool = True) -> str:
+    """SQL token array of ``text``: whitespace split, empty tokens
     dropped, lowercased unless ``lower`` is False (the Gopher word
     counts are case-sensitive)."""
     if lower:
-        return f"filter(split(lower({col}), '\\\\s+'), t -> t <> '')"
-    return f"filter(split({col}, '\\\\s+'), t -> t <> '')"
+        return "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
+    return "filter(split(text, '\\\\s+'), t -> t <> '')"
 
 
 def tokenized(docs: DataFrame) -> DataFrame:

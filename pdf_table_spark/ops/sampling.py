@@ -12,6 +12,8 @@ makes train/test leakage unauditable.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,8 +34,8 @@ def _hash_expr(seed: str, key: str = "doc_id") -> str:
     return grams.H60.format(s=f"concat(cast(`{key}` as string), '{seed}')")
 
 
-def _bucket_expr(seed: str, key: str = "doc_id") -> str:
-    return f"{_hash_expr(seed, key)} % {_BUCKETS}"
+def _bucket_expr(seed: str) -> str:
+    return f"{_hash_expr(seed)} % {_BUCKETS}"
 
 
 def split_expr(weights: dict[str, float] | None = None,
@@ -77,20 +79,42 @@ def split_corpus(docs: DataFrame,
 
 def sample_stratified(docs: DataFrame,
                       fractions: dict[str, float],
-                      strata_col: str = "lang",
-                      default: float = 0.0,
-                      seed: str = "sample-v1") -> DataFrame:
-    """Deterministic stratified sampling: keep a doc iff its md5
-    bucket < fraction(stratum) * 10000. Unlike ``df.sampleBy`` the
-    result is a pure function of (doc_id, seed) — stable across
-    retries, resumes, and cluster sizes. Strata not in ``fractions``
-    use ``default``. Narrow; no shuffle."""
+                      default: float = 0.0) -> DataFrame:
+    """Deterministic stratified sampling by ``lang``: keep a doc iff
+    its md5 bucket < fraction(lang) * 10000. Unlike ``df.sampleBy``
+    the result is a pure function of doc_id — stable across retries,
+    resumes, and cluster sizes. Languages not in ``fractions`` use
+    ``default``. Narrow; no shuffle."""
     frac = (f"coalesce(map({', '.join(repr(x) for kv in fractions.items() for x in kv)})"
-            f"[{strata_col}], cast({default} as double))")
+            f"[lang], cast({default} as double))")
     return (docs
-            .withColumn("_b", F.expr(_bucket_expr(seed)))
+            .withColumn("_b", F.expr(_bucket_expr("sample-v1")))
             .filter(F.expr(f"_b < {frac} * {_BUCKETS}"))
             .drop("_b"))
+
+
+def _prefix_sum(counted: DataFrame, order: list, cols: list[str],
+                name: str) -> DataFrame:
+    """The two-pass distributed prefix sum of ``n_tok`` over
+    ``counted``, whose ``bucket`` column ranges the total ``order``:
+    bucket totals — B tiny rows — cumsummed with a window over B rows
+    only and broadcast back, plus the running sum in ``order`` within
+    a window PARTITIONED by bucket (parallel across buckets). Returns
+    ``cols`` and, as ``name``, the tokens of every earlier row."""
+    w_b = Window.orderBy("bucket").rowsBetween(
+        Window.unboundedPreceding, -1)
+    bases = (counted.groupBy("bucket").agg(F.sum("n_tok").alias("t"))
+             .select("bucket",
+                     F.coalesce(F.sum("t").over(w_b), F.lit(0))
+                     .alias("base")))
+    w_i = (Window.partitionBy("bucket").orderBy(*order)
+           .rowsBetween(Window.unboundedPreceding, -1))
+    return (counted
+            .join(F.broadcast(bases), "bucket")
+            .select(*cols,
+                    (F.col("base")
+                     + F.coalesce(F.sum("n_tok").over(w_i), F.lit(0)))
+                    .alias(name)))
 
 
 def pack_chunks(docs: DataFrame, ctx_len: int = 512,
@@ -133,23 +157,8 @@ def pack_chunks(docs: DataFrame, ctx_len: int = 512,
     counted = counted.withColumn(
         "bucket", ((F.col("doc_id") - lo) / span).cast("long"))
 
-    # 2. bucket base offsets: B rows, windowed over B rows only
-    w_b = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1)
-    bases = (counted.groupBy("bucket").agg(F.sum("n_tok").alias("t"))
-             .select("bucket",
-                     F.coalesce(F.sum("t").over(w_b), F.lit(0))
-                     .alias("base")))
-
-    # 3. intra-bucket prefix (parallel) + base
-    w_i = (Window.partitionBy("bucket").orderBy("doc_id")
-           .rowsBetween(Window.unboundedPreceding, -1))
-    offs = (counted
-            .join(F.broadcast(bases), "bucket")
-            .select("doc_id", "n_tok",
-                    (F.col("base")
-                     + F.coalesce(F.sum("n_tok").over(w_i), F.lit(0)))
-                    .alias("off")))
+    # 2.-3. bucket base offsets + intra-bucket prefix
+    offs = _prefix_sum(counted, ["doc_id"], ["doc_id", "n_tok"], "off")
 
     c = ctx_len
     spans = offs.filter("n_tok > 0").select(
@@ -186,8 +195,9 @@ def resample_mixture(docs: DataFrame,
     distinct rows. Narrow (hash + guarded sequence explode) — no
     shuffle, no rand().
     """
-    if any(w < 0 for w in weights.values()) or default < 0:
-        raise ValueError("mixture weights must be >= 0")
+    # NaN and infinity would reach the map literal as bare names
+    if not all(0 <= w < math.inf for w in (*weights.values(), default)):
+        raise ValueError("mixture weights must be finite and >= 0")
     if weights:
         wexpr = (f"coalesce(map({', '.join(repr(x) for kv in weights.items() for x in kv)})"
                  f"[{source_col}], cast({default} as double))")
@@ -280,20 +290,7 @@ def select_token_budget(docs: DataFrame, budget: int,
         bucket = F.lit(0)
     counted = counted.withColumn("bucket", bucket)
 
-    w_b = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1)
-    bases = (counted.groupBy("bucket").agg(F.sum("n_tok").alias("t"))
-             .select("bucket",
-                     F.coalesce(F.sum("t").over(w_b), F.lit(0))
-                     .alias("base")))
-    w_i = (Window.partitionBy("bucket")
-           .orderBy(F.desc("score"), F.asc("doc_id"))
-           .rowsBetween(Window.unboundedPreceding, -1))
-    return (counted
-            .join(F.broadcast(bases), "bucket")
-            .select("doc_id", "score", "n_tok",
-                    (F.col("base")
-                     + F.coalesce(F.sum("n_tok").over(w_i), F.lit(0)))
-                    .alias("cum_before"))
+    return (_prefix_sum(counted, [F.desc("score"), F.asc("doc_id")],
+                        ["doc_id", "score", "n_tok"], "cum_before")
             .filter(F.col("cum_before") + F.col("n_tok")
                     <= F.lit(int(budget))))

@@ -4,9 +4,9 @@
     (small) query set, JVM-side zip_with/aggregate dot products, window
     top-k. No Python, no cartesian shuffle (broadcast join).
   * LSH-bucketed ANN — the scale path: sign-of-dot-product against
-    ``n_planes`` deterministic hyperplanes → bucket key; candidates
+    ``LSH_PLANES`` deterministic hyperplanes → bucket key; candidates
     searched in the query's bucket AND every bucket at Hamming
-    distance 1 (multi-probe: n_planes+1 probes). For a neighbor at
+    distance 1 (multi-probe: LSH_PLANES+1 probes). For a neighbor at
     cosine c, P(agree per plane) = 1 - acos(c)/π, so at c=0.99 the
     probe set catches ~0.98 of true nearest neighbors while still
     shrinking the search space ~2^n/(n+1)-fold.
@@ -34,11 +34,14 @@ The numpy half (``cosine_topk_np``, ``ivf_assign``, ``ann_topk_ivf_np``,
 matmul per Arrow batch: interpreted lambdas cost ~10 ns per
 multiply-add, too slow at 10^6+ vectors. Its two searches share one
 block kernel, ``_block_topk``, which gives a zero-norm vector the same
-NULL cosine and last-place rank. It has no oracle twin; the tests
+NULL cosine and last-place rank, and a vector with a NaN component the
+same NaN cosine and first-place rank. It has no oracle twin; the tests
 compare it against the interpreted operators.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -68,11 +71,25 @@ def _cosine(a: str, b: str, na: str, nb: str) -> str:
 COS_EXPR = _cosine("{a}", "{b}", NORM_EXPR.format(a="{a}"),
                    NORM_EXPR.format(a="{b}"))
 
+DIM = 64          # embedding width the hyperplane literals are built for
+LSH_PLANES = 8    # sign bits of the ANN bucket key
+
+
+def _double(v) -> str:
+    """SQL double literal of ``v``: ``repr`` for a finite value, the
+    quoted name for NaN and ±Infinity (a bare ``nan`` or ``inf`` would
+    parse as a column name)."""
+    v = float(v)
+    if math.isnan(v):
+        return "cast('NaN' as double)"
+    if math.isinf(v):
+        return f"cast('{'-' if v < 0 else ''}Infinity' as double)"
+    return f"cast({v!r} as double)"
+
 
 def _fold_norm(vec) -> float:
     """Driver-side twin of NORM_EXPR: the identical sequential left
     fold in IEEE doubles, for embedding centroid norms as literals."""
-    import math
     acc = 0.0
     for v in vec:
         acc += float(v) * float(v)
@@ -153,43 +170,41 @@ def hyperplane(dim: int, plane_idx: int) -> list[float]:
     ]
 
 
-def _plane_literal(dim: int, plane_idx: int) -> str:
+def _plane_literal(plane_idx: int) -> str:
     comps = ", ".join(
-        f"{'1.0D' if c > 0 else '-1.0D'}" for c in hyperplane(dim, plane_idx))
+        f"{'1.0D' if c > 0 else '-1.0D'}" for c in hyperplane(DIM, plane_idx))
     return f"array({comps})"
 
 
-def _sign_key(dim: int, planes) -> str:
+def _sign_key(planes) -> str:
     """Bigint key whose bit i is the sign of dot(embedding, planes[i])."""
     return " + ".join(
-        f"if(aggregate(zip_with(embedding, {_plane_literal(dim, p)},"
+        f"if(aggregate(zip_with(embedding, {_plane_literal(p)},"
         f" (x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v) > 0,"
         f" cast({1 << i} as bigint), 0L)" for i, p in enumerate(planes))
 
 
-def lsh_bucket(emb: DataFrame, dim: int = 64, n_planes: int = 8) -> DataFrame:
+def lsh_bucket(emb: DataFrame) -> DataFrame:
     """Bucket id per vector: bit i = sign of dot(embedding, plane_i).
-    Buckets ~ 2^n_planes; the ANN search space shrinks ~256x."""
-    return emb.withColumn("bucket", F.expr(_sign_key(dim, range(n_planes))))
+    Buckets ~ 2^LSH_PLANES; the ANN search space shrinks ~256x."""
+    return emb.withColumn("bucket", F.expr(_sign_key(range(LSH_PLANES))))
 
 
-def ann_topk_lsh(emb: DataFrame, query_ids=None, k: int = 5,
-                 dim: int = 64, n_planes: int = 8) -> DataFrame:
+def ann_topk_lsh(emb: DataFrame, query_ids=None, k: int = 5) -> DataFrame:
     """Approximate top-k: multi-probe LSH — candidates from the query's
-    bucket plus the n_planes buckets one bit-flip away. Same output
+    bucket plus the LSH_PLANES buckets one bit-flip away. Same output
     schema as cosine_topk."""
-    bucketed = lsh_bucket(emb, dim, n_planes).withColumn(
+    bucketed = lsh_bucket(emb).withColumn(
         "_n", F.expr(NORM_EXPR.format(a="embedding")))
     probe_list = ", ".join(
-        ["q_bucket"] + [f"q_bucket ^ {1 << i}L" for i in range(n_planes)])
+        ["q_bucket"] + [f"q_bucket ^ {1 << i}L" for i in range(LSH_PLANES)])
     probes = _probes(bucketed, query_ids, f"array({probe_list})",
                      F.col("bucket").alias("q_bucket"))
     return _topk(bucketed, probes, k, key="bucket")
 
 
 def _vec_literal(vals) -> str:
-    comps = ", ".join(f"cast({float(v)!r} as double)" for v in vals)
-    return f"array({comps})"
+    return f"array({', '.join(_double(v) for v in vals)})"
 
 
 def ivf_centroids(emb: DataFrame, n_centroids: int = 16) -> list:
@@ -224,7 +239,7 @@ def _cell_structs(cents, col: str = "embedding",
             cos = COS_EXPR.format(a=col, b=_vec_literal(vec))
         else:
             cos = _cosine(col, _vec_literal(vec), norm_col,
-                          f"cast({_fold_norm(vec)!r} as double)")
+                          _double(_fold_norm(vec)))
         structs.append(f"struct(round({cos}, 9) as c, {-cid}L as nid)")
     return ", ".join(structs)
 
@@ -262,17 +277,15 @@ NEARDUP_BANDS = 6
 NEARDUP_ROWS = 8  # planes per band
 
 
-def lsh_band_rows(emb: DataFrame, dim: int = 64,
-                  bands: int = NEARDUP_BANDS,
-                  rows_per_band: int = NEARDUP_ROWS) -> DataFrame:
+def lsh_band_rows(emb: DataFrame) -> DataFrame:
     """(vec_id, embedding, band, key): one row per band, key = the
-    band's rows_per_band sign bits. Plane index = band*rows + row, so
+    band's NEARDUP_ROWS sign bits. Plane index = band*rows + row, so
     bands use disjoint hyperplane sets."""
     structs = [
         F.struct(F.lit(b).alias("band"), F.expr(_sign_key(
-            dim, range(b * rows_per_band, (b + 1) * rows_per_band)))
+            range(b * NEARDUP_ROWS, (b + 1) * NEARDUP_ROWS)))
             .alias("key"))
-        for b in range(bands)]
+        for b in range(NEARDUP_BANDS)]
     # the row norm is staged BEFORE the band explode (once per vector,
     # not once per band row, and never per candidate pair) — the
     # staged-norm scorer in embedding_neardup_pairs divides by it
@@ -286,10 +299,8 @@ def lsh_band_rows(emb: DataFrame, dim: int = 64,
     )
 
 
-def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
-                            dim: int = 64,
-                            bands: int = NEARDUP_BANDS,
-                            rows_per_band: int = NEARDUP_ROWS) -> DataFrame:
+def embedding_neardup_pairs(emb: DataFrame,
+                            threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via OR-of-bands LSH: a
     pair is compared when ANY band's sign pattern matches (recall ≈
     1-(1-p^rows)^bands, measured ≥0.9 in the recall gate), and the
@@ -297,7 +308,7 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
     in several bands are deduped by the final distinct (cosine is
     deterministic, so the rows are identical). Returns (vec_a, vec_b,
     cosine >= threshold)."""
-    banded = lsh_band_rows(emb, dim, bands, rows_per_band)
+    banded = lsh_band_rows(emb)
     a = banded.alias("a")
     b = banded.alias("b")
     cos = _cosine("a.embedding", "b.embedding", "a._n", "b._n")
@@ -314,9 +325,7 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
     )
 
 
-def semdedup(emb: DataFrame, threshold: float = 0.95, dim: int = 64,
-             bands: int = NEARDUP_BANDS,
-             rows_per_band: int = NEARDUP_ROWS) -> dict:
+def semdedup(emb: DataFrame, threshold: float = 0.95) -> dict:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): embedding-
     cosine near-dup pairs (OR-of-bands LSH, measured recall ≥0.9) →
     connected components → keep exactly one vector (the minimum
@@ -329,8 +338,7 @@ def semdedup(emb: DataFrame, threshold: float = 0.95, dim: int = 64,
     """
     from .dedup import connected_components
 
-    pairs = embedding_neardup_pairs(emb, threshold, dim, bands,
-                                    rows_per_band)
+    pairs = embedding_neardup_pairs(emb, threshold)
     comp = (connected_components(pairs, a="vec_a", b="vec_b")
             .withColumnsRenamed({"doc_id": "vec_id"}))
     dropped = (comp.filter(F.col("vec_id") != F.col("component"))
@@ -364,19 +372,28 @@ def _block_topk(m, vid, q, qids, k: int):
     """The numpy search kernel: unit rows ``m`` (ids ``vid``) scored
     against unit queries ``q`` (ids ``qids``), each query's own row
     excluded; each query keeps its top min(k, rows) rows (argpartition,
-    unordered) as a (query_id, neighbor_id, cosine) frame, non-finite
-    scores dropped. A pair with an all-zero side has a NaN cosine (NULL
-    in Spark, as in ``cosine_topk``) and is selected after every
-    scored row, by neighbor id."""
+    unordered) as a (query_id, neighbor_id, cosine) frame.
+
+    Pairs without a cosine rank as ``cosine_topk`` ranks them, in
+    neighbor-id order among themselves: a pair with an all-zero side
+    (NULL in Spark) after every scored row, leaving as NaN, which the
+    Arrow boundary turns into NULL; a pair with a NaN or infinite
+    component (NaN in Spark, which orders NaN above every double)
+    before every scored row, leaving as +inf, which ``_np_cosine``
+    turns back into NaN."""
     import pandas as pd
     s = m @ q.T                                 # (rows, queries)
+    nan = np.isnan(s)
     zero_row, zero_q = ~m.any(axis=1), ~q.any(axis=1)
-    if zero_row.any() or zero_q.any():
-        # NULL pairs score in (-3, -2], below any cosine, in
-        # neighbor-id order, and leave as NaN
-        null = -2.0 - np.argsort(np.argsort(vid, kind="stable")) / len(vid)
+    if nan.any() or zero_row.any() or zero_q.any():
+        # selection scores: NULL pairs in (-3, -2], NaN pairs in
+        # (2, 3], both in neighbor-id order; a NaN side wins over a
+        # zero one, as in Spark's 0 * NaN
+        order = np.argsort(np.argsort(vid, kind="stable")) / len(vid)
+        null = -2.0 - order
         s[zero_row] = null[zero_row, None]
         s[:, zero_q] = null[:, None]
+        s[nan] = np.broadcast_to(3.0 - order[:, None], s.shape)[nan]
     pos = {int(x): j for j, x in enumerate(qids)}
     for i in np.nonzero(np.isin(vid, qids))[0]:
         s[i, pos[int(vid[i])]] = -np.inf
@@ -386,8 +403,16 @@ def _block_topk(m, vid, q, qids, k: int):
     out = pd.DataFrame({
         "query_id": np.repeat(qids, kk),
         "neighbor_id": vid[top.T.ravel()],
-        "cosine": np.where(cos <= -2.0, np.nan, cos)})
+        "cosine": np.select([cos <= -2.0, cos > 2.0], [np.nan, np.inf],
+                            cos)})
     return out[np.isfinite(cos)]
+
+
+def _np_cosine():
+    """The output cosine of the numpy searches: rounded like the
+    interpreted ones, with the block kernel's +inf back to NaN."""
+    return (F.when(F.col("cosine") == math.inf, F.expr(_double(math.nan)))
+            .otherwise(F.round("cosine", 9)).alias("cosine"))
 
 
 def _query_matrix(emb: DataFrame, query_ids):
@@ -429,26 +454,22 @@ def cosine_topk_np(emb: DataFrame, query_ids=None,
 
     partial = (emb.select("vec_id", "embedding")
                .mapInPandas(part, TOPK_SCHEMA))
-    return _rank(partial, k, F.round("cosine", 9).alias("cosine"))
+    return _rank(partial, k, _np_cosine())
 
 
 def ivf_centroids_kmeans(emb: DataFrame, n_centroids: int = 64,
-                         max_iter: int = 10, seed: int = 42,
-                         train_fraction: float | None = None) -> list:
+                         max_iter: int = 10) -> list:
     """Lloyd-refined IVF coarse quantizer via Spark MLlib's
-    distributed k-means|| — the production replacement for the
-    deterministic seed quantizer (``ivf_centroids``, kept as the
-    oracle contract). ``train_fraction`` samples the training set (a
-    quantizer does not need every vector; FAISS trains on ~256 points
-    per centroid). Returns the same [(centroid_id, [float, ...])]
-    shape, so both quantizers plug into the same search."""
+    distributed k-means|| (seed 42, trained on every vector) — the
+    production replacement for the deterministic seed quantizer
+    (``ivf_centroids``, kept as the oracle contract). Returns the same
+    [(centroid_id, [float, ...])] shape, so both quantizers plug into
+    the same search."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-    train = emb if train_fraction is None else emb.sample(
-        fraction=train_fraction, seed=seed)
-    feats = train.select(array_to_vector(
+    feats = emb.select(array_to_vector(
         F.col("embedding").cast("array<double>")).alias("features"))
-    model = KMeans(k=n_centroids, maxIter=max_iter, seed=seed,
+    model = KMeans(k=n_centroids, maxIter=max_iter, seed=42,
                    featuresCol="features").fit(feats)
     return [(i, [float(x) for x in c])
             for i, c in enumerate(model.clusterCenters())]
@@ -537,38 +558,23 @@ def ann_topk_ivf_np(emb: DataFrame, centroids: list, query_ids=None,
     searched = cells if len(probed) == len(cids) else cells.filter(
         F.col("cell").isin(probed))
     partial = searched.mapInPandas(score, TOPK_SCHEMA)
-    return _rank(partial, k, F.round("cosine", 9).alias("cosine"))
+    return _rank(partial, k, _np_cosine())
 
 
-def write_ivf_index(cells: DataFrame, path: str,
-                    mode: str = "overwrite",
-                    files_per_cell: int | None = 1) -> None:
+def write_ivf_index(cells: DataFrame, path: str) -> None:
     """Persist an ``ivf_assign`` output AT REST, hive-partitioned by
-    cell — the production index layout. Every probe-time filter
-    ``cell IN (probes)`` then becomes a PARTITION filter at the
-    parquet scan: unprobed cells' files are never opened (proved by
-    scan metrics in tests and BENCH_ann — not just by the plan
-    text). One directory per cell; rewrite per corpus snapshot.
+    cell — the production index layout — overwriting ``path``. Every
+    probe-time filter ``cell IN (probes)`` then becomes a PARTITION
+    filter at the parquet scan: unprobed cells' files are never opened
+    (proved by scan metrics in tests and BENCH_ann — not just by the
+    plan text). One directory per cell; rewrite per corpus snapshot.
 
-    ``files_per_cell`` repartitions by cell (+ a salt when > 1)
-    before the write so each cell directory holds AT MOST that many
-    files instead of one per upstream task — without it, n_cells x
-    n_partitions tiny files dominate probe-time open cost (measured
-    4.6x slower at 256 cells x 16 partitions). AQE may coalesce
-    below the cap when cells are small (size-driven — desirable);
-    the salt's job is letting one HUGE cell spread over up to
-    files_per_cell writer tasks. None = keep the input
-    partitioning. At 100 TB pick files_per_cell so each file
-    is a few hundred MB."""
-    if files_per_cell == 1:
-        cells = cells.repartition(F.col("cell"))
-    elif files_per_cell and files_per_cell > 1:
-        # pmod, not %: xxhash64 is signed and Spark's % keeps the
-        # sign, which would double the salt alphabet to 2f-1
-        cells = cells.repartition(
-            F.col("cell"),
-            F.expr(f"pmod(xxhash64(vec_id), {int(files_per_cell)})"))
-    cells.write.mode(mode).partitionBy("cell").parquet(path)
+    The write repartitions by cell first, so each cell directory
+    holds one file instead of one per upstream task — without it,
+    n_cells x n_partitions tiny files dominate probe-time open cost
+    (measured 4.6x slower at 256 cells x 16 partitions)."""
+    (cells.repartition(F.col("cell"))
+     .write.mode("overwrite").partitionBy("cell").parquet(path))
 
 
 def read_ivf_index(spark, path: str) -> DataFrame:
@@ -600,9 +606,7 @@ def scan_file_metrics(df: DataFrame) -> dict:
 def semdedup_kmeans(emb: DataFrame, n_clusters: int = 64,
                     threshold: float = 0.95,
                     centroids: list | None = None,
-                    train_fraction: float | None = None,
                     chunk: int = 1024,
-                    seed: int = 42,
                     max_cell: int = 1_000_000) -> DataFrame:
     """SemDeDup exactly as published (Abbas et al. 2023,
     arXiv:2303.09540 §3): k-means the embedding space, compute
@@ -633,9 +637,7 @@ def semdedup_kmeans(emb: DataFrame, n_clusters: int = 64,
     centroid, and whether SemDeDup keeps it.
     """
     if centroids is None:
-        centroids = ivf_centroids_kmeans(
-            emb, n_centroids=n_clusters, seed=seed,
-            train_fraction=train_fraction)
+        centroids = ivf_centroids_kmeans(emb, n_centroids=n_clusters)
     cells = ivf_assign(emb, centroids)
     cids, cmat = _centroid_matrix(centroids)
     # centroid ids need not be dense row indices — map id -> row

@@ -61,15 +61,15 @@ def cjk_gate_expr(matcher: str = "text rlike '[{cls}]'") -> str:
     return matcher.format(cls=KANA_RANGE + HANGUL_RANGE + HAN_RANGE)
 
 
-def cjk_count_exprs(global_flag: str = "",
-                    gate: str = "_cjk") -> dict[str, str]:
+def cjk_count_exprs(global_flag: str = "") -> dict[str, str]:
     """SQL count-of-chars-in-class expressions shared by the Spark
     query and the DuckDB oracle (identical literal-codepoint character
     classes; DuckDB needs the ``'g'`` regexp_replace flag, Spark's is
-    global already — pass ``global_flag=", 'g'"`` for DuckDB). ``gate``
-    names a staged boolean column from :func:`cjk_gate_expr`."""
+    global already — pass ``global_flag=", 'g'"`` for DuckDB). Each
+    counts only where the staged boolean column ``_cjk`` (from
+    :func:`cjk_gate_expr`) holds."""
     def cnt(cls: str) -> str:
-        return (f"case when {gate} then "
+        return (f"case when _cjk then "
                 f"length(regexp_replace(text, '[^{cls}]', ''"
                 f"{global_flag})) else 0 end")
     return {
@@ -236,14 +236,18 @@ def fingerprint(docs: DataFrame) -> DataFrame:
     )
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 8,
-                        w: int = 4,
-                        hash_fn: str = "md5") -> DataFrame:
+# winnowing: char k-gram length and window width (k-grams per window)
+WINNOW_K = 8
+WINNOW_W = 4
+
+
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al.'s local
     algorithm, the rolling-hash dedup classic): hash every char k-gram
-    of the whitespace-normalized text, keep the minimum hash of each
-    window of w consecutive k-grams, distinct per doc. Guarantee: two
-    docs sharing a substring of >= k+w-1 chars share a fingerprint.
+    (k = ``WINNOW_K``) of the whitespace-normalized text, keep the
+    minimum hash of each window of w = ``WINNOW_W`` consecutive
+    k-grams, distinct per doc. Guarantee: two docs sharing a substring
+    of >= k+w-1 chars share a fingerprint.
 
     All JVM array expressions — grams via substring (O(n·k) hashing; a
     true rolling recurrence only changes the constant, not the plan).
@@ -251,7 +255,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8,
     the fingerprint set) so the result stays one row per doc at any
     scale; use ``winnow_fingerprint_rows`` for the exploded set.
     """
-    rows = winnow_fingerprint_rows(docs, k, w, hash_fn)
+    rows = winnow_fingerprint_rows(docs)
     return (
         rows.groupBy("doc_id")
         .agg(F.count("*").alias("n_fps"),
@@ -261,8 +265,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8,
     )
 
 
-def winnow_fingerprint_rows(docs: DataFrame, k: int = 8,
-                            w: int = 4,
+def winnow_fingerprint_rows(docs: DataFrame,
                             hash_fn: str = "md5") -> DataFrame:
     """(doc_id, fp) — the distinct winnowing fingerprints themselves
     (the join key layout for fingerprint-overlap dedup).
@@ -275,6 +278,7 @@ def winnow_fingerprint_rows(docs: DataFrame, k: int = 8,
     is per-gram CPU only; the plan is identical.
     """
     norm = "regexp_replace(lower(text), '\\\\s+', ' ')"
+    k, w = WINNOW_K, WINNOW_W
     h = grams.hash_sql(hash_fn, f"substring(t, i, {k})")
     expr = f"""
         array_distinct(transform(
@@ -295,12 +299,13 @@ def winnow_fingerprint_rows(docs: DataFrame, k: int = 8,
 # most frequent words; rank order is the signal). Deterministic
 # literals so the DuckDB oracle embeds identical values.
 OOP_MAX = 20  # out-of-place penalty for grams absent from a profile
+TOP_N = 20    # doc trigrams scored against the profiles
 
 
-def lang_id_ngram(docs: DataFrame, top_n: int = 20) -> DataFrame:
+def lang_id_ngram(docs: DataFrame) -> DataFrame:
     """Character-n-gram language ID (Cavnar-Trenkle out-of-place):
     rank the doc's letter trigrams by (count desc, gram asc), keep the
-    top ``top_n``, and score each language profile by the summed
+    top ``TOP_N``, and score each language profile by the summed
     rank displacement (absent grams cost ``OOP_MAX``). Winner = min
     (score, language); 'und' when the doc has no letter trigrams.
 
@@ -332,7 +337,7 @@ def lang_id_ngram(docs: DataFrame, top_n: int = 20) -> DataFrame:
         f"struct(cast(-(if(j = size(starts), size(st) + 1, "
         f"element_at(starts, j + 1)) - element_at(starts, j)) "
         f"as bigint) as nc, "
-        f"element_at(st, element_at(starts, j)) as g))), 1, {top_n}))"
+        f"element_at(st, element_at(starts, j)) as g))), 1, {TOP_N}))"
     )
     staged = (
         docs.select("doc_id", F.expr(txt).alias("t"))
@@ -344,9 +349,9 @@ def lang_id_ngram(docs: DataFrame, top_n: int = 20) -> DataFrame:
     # ONE displacement pass per doc over a constant
     # gram -> per-language rank map (0 = absent from that profile),
     # instead of one aggregate+array_position scan per language: the
-    # old shape cost |langs| x top_n x profile-length interpreted ops
-    # per doc (~16k at 40 profiles); this one costs top_n map probes
-    # + top_n x |langs| integer ops (~480). Scores are bit-identical:
+    # old shape cost |langs| x TOP_N x profile-length interpreted ops
+    # per doc (~16k at 40 profiles); this one costs TOP_N map probes
+    # + TOP_N x |langs| integer ops (~480). Scores are bit-identical:
     # rank displacement per gram, OOP_MAX when absent.
     ranks: dict[str, list[int]] = {}
     for li, lang in enumerate(langs):
@@ -358,7 +363,7 @@ def lang_id_ngram(docs: DataFrame, top_n: int = 20) -> DataFrame:
     absent = f"array_repeat(0, {len(langs)})"
     scores_arr = (
         f"if(size(top) = 0, "
-        f"array_repeat({OOP_MAX * top_n}L, {len(langs)}), "
+        f"array_repeat({OOP_MAX * TOP_N}L, {len(langs)}), "
         f"aggregate(sequence(1, size(top)), "
         f"array_repeat(0L, {len(langs)}), (acc, i) -> "
         f"zip_with(acc, coalesce("

@@ -56,6 +56,24 @@ PII_PATTERNS = {
     "phone": r"\+?\d[\d() -]{6,}\d",
 }
 
+# the published Gopher quality thresholds (Rae et al. 2021 App. A) and
+# C4 line rules (Raffel et al. 2020 §2.2) — one copy, shared by
+# gopher_quality, c4_line_filter, corpus_clean and the streaming gate.
+# Callers may override only min words, min stopword hits and min
+# sentences; the constants are those parameters' defaults.
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN = 3.0
+GOPHER_MAX_MEAN_WORD_LEN = 10.0
+GOPHER_MAX_SYMBOL_WORD_RATIO = 0.1
+GOPHER_MAX_BULLET_LINE_FRAC = 0.9
+GOPHER_MAX_ELLIPSIS_LINE_FRAC = 0.3
+GOPHER_MIN_ALPHA_WORD_FRAC = 0.8
+GOPHER_MIN_STOPWORD_HITS = 2
+C4_MIN_LINE_WORDS = 5
+C4_MIN_SENTENCES = 3
+C4_SPAN_SENTENCES = 3   # span length of the cross-document dedup
+
 _WORDS = grams.tokens(lower=False)
 
 
@@ -246,18 +264,19 @@ def repetition_signals(docs: DataFrame,
 
 
 def _with_gopher(df: DataFrame,
-                 min_words: int,
-                 max_words: int,
-                 min_mean_word_len: float,
-                 max_mean_word_len: float,
-                 max_symbol_word_ratio: float,
-                 max_bullet_line_frac: float,
-                 max_ellipsis_line_frac: float,
-                 min_alpha_word_frac: float,
-                 min_stopword_hits: int,
-                 line_sep: str) -> DataFrame:
+                 min_words: int = GOPHER_MIN_WORDS,
+                 max_words: int = GOPHER_MAX_WORDS,
+                 min_mean_word_len: float = GOPHER_MIN_MEAN_WORD_LEN,
+                 max_mean_word_len: float = GOPHER_MAX_MEAN_WORD_LEN,
+                 max_symbol_word_ratio: float = GOPHER_MAX_SYMBOL_WORD_RATIO,
+                 max_bullet_line_frac: float = GOPHER_MAX_BULLET_LINE_FRAC,
+                 max_ellipsis_line_frac: float = GOPHER_MAX_ELLIPSIS_LINE_FRAC,
+                 min_alpha_word_frac: float = GOPHER_MIN_ALPHA_WORD_FRAC,
+                 min_stopword_hits: int = GOPHER_MIN_STOPWORD_HITS,
+                 line_sep: str = "\\n") -> DataFrame:
     """Append the Gopher signal + ``pass_gopher`` columns (needs a
-    ``text`` column; preserves every existing column)."""
+    ``text`` column; preserves every existing column). Every threshold
+    defaults to its published value."""
     lines = _lines(line_sep)
     n_words = f"size({_WORDS})"
     word_chars = f"aggregate({_WORDS}, 0L, (a, w) -> a + length(w))"
@@ -312,29 +331,19 @@ def _with_gopher(df: DataFrame,
 
 
 def gopher_quality(docs: DataFrame,
-                   min_words: int = 50,
-                   max_words: int = 100_000,
-                   min_mean_word_len: float = 3.0,
-                   max_mean_word_len: float = 10.0,
-                   max_symbol_word_ratio: float = 0.1,
-                   max_bullet_line_frac: float = 0.9,
-                   max_ellipsis_line_frac: float = 0.3,
-                   min_alpha_word_frac: float = 0.8,
-                   min_stopword_hits: int = 2,
-                   line_sep: str = "\\n") -> DataFrame:
+                   min_words: int = GOPHER_MIN_WORDS,
+                   min_stopword_hits: int = GOPHER_MIN_STOPWORD_HITS
+                   ) -> DataFrame:
     """Gopher / MassiveText document quality rules (Rae et al. 2021
     App. A): each signal as a column plus the conjunction
-    ``pass_gopher``. Thresholds default to the published values.
+    ``pass_gopher``. The thresholds are the published values (the
+    ``GOPHER_*`` constants); ``min_words`` and ``min_stopword_hits``
+    default to theirs.
 
     Narrow map, integer counts, one division per ratio.
     """
-    return _with_gopher(
-        docs.select("doc_id", "text"),
-        min_words, max_words, min_mean_word_len, max_mean_word_len,
-        max_symbol_word_ratio, max_bullet_line_frac,
-        max_ellipsis_line_frac, min_alpha_word_frac,
-        min_stopword_hits, line_sep,
-    ).drop("text")
+    return _with_gopher(docs.select("doc_id", "text"), min_words,
+                        min_stopword_hits=min_stopword_hits).drop("text")
 
 
 # --------------------------------------------------------------------
@@ -343,9 +352,9 @@ def gopher_quality(docs: DataFrame,
 
 
 def _with_c4(df: DataFrame,
-             min_line_words: int,
-             min_sentences: int,
-             line_sep: str) -> DataFrame:
+             min_line_words: int = C4_MIN_LINE_WORDS,
+             min_sentences: int = C4_MIN_SENTENCES,
+             line_sep: str = "\\n") -> DataFrame:
     """Append ``clean_text``, ``n_lines_kept``, ``n_sentences``,
     ``has_lorem``, ``has_brace``, ``keep_c4`` (needs ``text``)."""
     lines = _lines(line_sep)
@@ -386,23 +395,17 @@ def _with_c4(df: DataFrame,
     )
 
 
-def c4_line_filter(docs: DataFrame,
-                   min_line_words: int = 5,
-                   min_sentences: int = 3,
-                   line_sep: str = "\\n") -> DataFrame:
+def c4_line_filter(docs: DataFrame) -> DataFrame:
     """C4's line-level clean + document gate (Raffel et al. 2020
     §2.2): keep lines that end in terminal punctuation ('.', '!',
-    '?', '\"') and have >= ``min_line_words`` words; keep the doc when
-    the cleaned text still has >= ``min_sentences`` sentence enders
-    and contains neither 'lorem ipsum' nor '{'.
+    '?', '\"') and have >= ``C4_MIN_LINE_WORDS`` words; keep the doc
+    when the cleaned text still has >= ``C4_MIN_SENTENCES`` sentence
+    enders and contains neither 'lorem ipsum' nor '{'.
 
     Returns doc_id, clean_text (kept lines re-joined), n_lines_kept,
     n_sentences, has_lorem, has_brace, keep_c4. Narrow map.
     """
-    return _with_c4(
-        docs.select("doc_id", "text"),
-        min_line_words, min_sentences, line_sep,
-    ).drop("text")
+    return _with_c4(docs.select("doc_id", "text")).drop("text")
 
 
 # --------------------------------------------------------------------
@@ -421,14 +424,13 @@ def _redact_col(t: Column) -> Column:
         PII_PATTERNS["phone"], "[PHONE]")
 
 
-def pii_redact(docs: DataFrame,
-               text_col: str = "text") -> DataFrame:
-    """Regex PII scrub over ``text_col``; counts are measured per
+def pii_redact(docs: DataFrame) -> DataFrame:
+    """Regex PII scrub over ``text``; counts are measured per
     pattern on the ORIGINAL text. Patterns restricted to the
     Java-regex/RE2 common subset so the DuckDB oracle matches
     byte-for-byte. Narrow map.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     return docs.select(
         "doc_id",
         F.regexp_count(t, F.lit(PII_PATTERNS["email"]))
@@ -446,16 +448,16 @@ def pii_redact(docs: DataFrame,
 
 
 def corpus_clean(docs: DataFrame,
-                 min_words: int = 50,
-                 max_words: int = 100_000,
-                 min_sentences: int = 3,
-                 min_stopword_hits: int = 2,
+                 min_words: int = GOPHER_MIN_WORDS,
+                 min_sentences: int = C4_MIN_SENTENCES,
+                 min_stopword_hits: int = GOPHER_MIN_STOPWORD_HITS,
                  line_sep: str = "\\n") -> DataFrame:
     """The composed training-corpus gate — the op a 100 TB ingest
     actually runs:
 
       1. exact dedup   — md5(text) content key, min doc_id survives
-      2. Gopher rules  — published thresholds (word count overridable)
+      2. Gopher rules  — published thresholds (word count and
+                         stopword hits overridable)
       3. C4 line gate  — cleaned text must keep >= min_sentences
                          (the whole stage, lorem/brace included, is
                          skipped when min_sentences <= 0)
@@ -486,11 +488,12 @@ def corpus_clean(docs: DataFrame,
         docs.select("doc_id", "text", F.md5("text").alias("fp"))
         .withColumn("rn", F.row_number().over(w))
     )
-    staged = _with_gopher(
-        staged, min_words, max_words, 3.0, 10.0, 0.1, 0.9, 0.3, 0.8,
-        min_stopword_hits, line_sep)
+    staged = _with_gopher(staged, min_words,
+                          min_stopword_hits=min_stopword_hits,
+                          line_sep=line_sep)
     if min_sentences > 0:
-        staged = _with_c4(staged, 5, min_sentences, line_sep)
+        staged = _with_c4(staged, min_sentences=min_sentences,
+                          line_sep=line_sep)
     else:
         # C4 stage OFF entirely (including the lorem/brace sub-gates):
         # the clean text is the input text and no doc can land in the
@@ -522,17 +525,17 @@ def corpus_clean(docs: DataFrame,
 # --------------------------------------------------------------------
 
 
-def c4_span_dedup(docs: DataFrame, window: int = 3) -> DataFrame:
+def c4_span_dedup(docs: DataFrame) -> DataFrame:
     """C4's corpus-level span dedup (Raffel et al. 2020 §2.2):
     "discard all but one of any three-sentence span of text occurring
     more than once".
 
     Sentences are the non-empty trimmed segments split on ``[.!?]``
     (the RE2/Java-regex common subset — no lookbehind, so both engines
-    segment identically). Every ``window``-sentence sliding span is
-    hashed; the canonical occurrence of a repeated span is the
-    smallest (doc_id, start_idx); every sentence covered by a
-    NON-canonical repeated span is dropped from its doc.
+    segment identically). Every ``C4_SPAN_SENTENCES``-sentence
+    sliding span is hashed; the canonical occurrence of a repeated
+    span is the smallest (doc_id, start_idx); every sentence covered
+    by a NON-canonical repeated span is dropped from its doc.
 
     Returns (doc_id, n_sentences, n_dropped, clean_text) with
     clean_text = surviving sentences in order, joined by ' '.
@@ -553,7 +556,7 @@ def c4_span_dedup(docs: DataFrame, window: int = 3) -> DataFrame:
         F.expr(
             "filter(transform(split(text, '[.!?]'), s -> trim(s)),"
             " s -> s <> '')").alias("ss"))
-    spans = grams.gram_rows(ss, "ss", window, "md5", form="hex",
+    spans = grams.gram_rows(ss, "ss", C4_SPAN_SENTENCES, "md5", form="hex",
                             start=True, out="h")
     dup_occurrences = (
         spans.groupBy("h").agg(
@@ -567,7 +570,8 @@ def c4_span_dedup(docs: DataFrame, window: int = 3) -> DataFrame:
     drops = (
         dup_occurrences.select(
             "doc_id", F.explode(F.expr(
-                f"sequence(start, start + {window - 1})")).alias("idx"))
+                f"sequence(start, start + {C4_SPAN_SENTENCES - 1})"))
+            .alias("idx"))
         .distinct()
         .groupBy("doc_id").agg(F.collect_set("idx").alias("drop_idx"))
     )

@@ -147,13 +147,12 @@ def read_corpus(spark: SparkSession, path: str,
     return fan_small_scan(spark, df, path)
 
 
-def write_corpus(docs: DataFrame, path: str, fmt: str = "parquet",
-                 mode: str = "overwrite") -> None:
+def write_corpus(docs: DataFrame, path: str, fmt: str = "parquet") -> None:
     """Write a corpus back out in either format (JSONL for interchange,
-    parquet for everything else)."""
+    parquet for everything else), overwriting ``path``."""
     if fmt not in _FORMATS:
         raise ValueError(f"unknown corpus format {fmt!r}")
-    w = docs.write.mode(mode)
+    w = docs.write.mode("overwrite")
     if fmt == "json":
         w.json(path)
     else:

@@ -60,15 +60,16 @@ def with_part_id(docs: DataFrame, n_buckets: int) -> DataFrame:
         "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)))
 
 
-def input_fingerprint(docs: DataFrame, part_id_col: str = "part_id") -> DataFrame:
-    """Order-insensitive per-bucket content fingerprint: xor of per-doc
-    hashes — cheap, associative, reorder-proof. Hashes every non-bucket
-    column, so it works for spans corpora and flat text tables alike."""
-    cols = [c for c in docs.columns if c != part_id_col]
+def input_fingerprint(docs: DataFrame) -> DataFrame:
+    """Order-insensitive per-bucket (``part_id``) content fingerprint:
+    xor of per-doc hashes — cheap, associative, reorder-proof. Hashes
+    every non-bucket column, so it works for spans corpora and flat
+    text tables alike."""
+    cols = [c for c in docs.columns if c != "part_id"]
     per_doc = docs.select(
-        part_id_col,
+        "part_id",
         F.xxhash64(F.to_json(F.struct(*cols))).alias("h"))
-    return per_doc.groupBy(part_id_col).agg(
+    return per_doc.groupBy("part_id").agg(
         F.expr("bit_xor(h)").alias("fp"), F.count("*").alias("n_docs"))
 
 

@@ -108,7 +108,7 @@ def read_metadata(table_path: str) -> dict | None:
         return json.load(f)
 
 
-def init_table(table_path: str, schema: list[dict] | None = None,
+def init_table(table_path: str,
                partition_col: str | None = None) -> dict:
     """Create v1 metadata for a new table (no snapshots yet).
     Idempotent: an existing table is returned as-is."""
@@ -123,7 +123,7 @@ def init_table(table_path: str, schema: list[dict] | None = None,
         "last-sequence-number": 0,
         "last-updated-ms": int(time.time() * 1000),
         "schemas": [{"schema-id": 0,
-                     "fields": schema or []}],
+                     "fields": []}],
         "current-schema-id": 0,
         "partition-specs": [{"spec-id": 0, "fields": (
             [{"name": partition_col, "transform": "identity"}]

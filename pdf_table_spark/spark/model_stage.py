@@ -659,48 +659,44 @@ def score_page_layout(docs_spans: DataFrame, weights_path: str | None = None,
     return run_head(docs_spans, LAYOUT_HEAD, weights_path, _mat_counter)
 
 
-def score_doc_quality(docs: DataFrame, weights_path: str | None = None,
-                      _mat_counter=None) -> DataFrame:
+def score_doc_quality(docs: DataFrame,
+                      weights_path: str | None = None) -> DataFrame:
     """documents(doc_id, text) → (doc_id, score_keep, score_drop,
     pred). Narrow — no shuffle; at 100 TB this runs at scan speed."""
-    return run_head(docs, QUALITY_HEAD, weights_path, _mat_counter)
+    return run_head(docs, QUALITY_HEAD, weights_path)
 
 
 def score_table_structure(docs_spans: DataFrame,
-                          weights_path: str | None = None,
-                          _mat_counter=None) -> DataFrame:
+                          weights_path: str | None = None) -> DataFrame:
     """documents(doc_id, spans) → one (doc_id, offset, 'table_html',
     html) row per ocr_page span, the STRUCTURE inferred at runtime
     (core.tsrhead: grid clustering + linear axis head) and decoded
     through core.logicell — no pre-filled fixture structure anywhere
     on the path."""
-    return run_head(docs_spans, TSR_HEAD, weights_path, _mat_counter)
+    return run_head(docs_spans, TSR_HEAD, weights_path)
 
 
 def score_page_orientation(docs_spans: DataFrame,
-                           weights_path: str | None = None,
-                           _mat_counter=None) -> DataFrame:
+                           weights_path: str | None = None) -> DataFrame:
     """documents(doc_id, spans) → one orientation prediction per
     pdf_page span: (scores over rot0/90/180/270, pred_rot in degrees,
     declared_rot from the payload for parity checks; -1 on a poisoned
     payload)."""
-    return run_head(docs_spans, ORIENT_HEAD, weights_path, _mat_counter)
+    return run_head(docs_spans, ORIENT_HEAD, weights_path)
 
 
 def score_det_contours(docs_spans: DataFrame,
-                       weights_path: str | None = None,
-                       _mat_counter=None) -> DataFrame:
+                       weights_path: str | None = None) -> DataFrame:
     """Det/rec + O4 contour proposals per ocr_page span: the text
     lines recovered from the page's per-character ``glyphs`` with NO
     access to the planted det_cells (``det_cell`` rows,
     ``core.dethead.detect_lines``) and the page's top-10 ink-blob
     region proposals (``contour`` rows) in the driver wire format."""
-    return run_head(docs_spans, DET_CONTOURS_HEAD, weights_path, _mat_counter)
+    return run_head(docs_spans, DET_CONTOURS_HEAD, weights_path)
 
 
 def score_neural_decoders(docs_spans: DataFrame,
-                          weights_path: str | None = None,
-                          _mat_counter=None) -> DataFrame:
+                          weights_path: str | None = None) -> DataFrame:
     """The deterministic postprocess decoders over one scan and ONE
     Python boundary: DBNet probability map → text boxes
     (``core.dbnet``, M3's postprocess half — NO planted det_cells on
@@ -715,11 +711,11 @@ def score_neural_decoders(docs_spans: DataFrame,
     payload carries. The weights are the DBPostProcess parameter
     vector; the per-step rec probability is the contract constant 0.9
     (fixtures plant the argmax path)."""
-    return run_head(docs_spans, NEURAL_HEAD, weights_path, _mat_counter)
+    return run_head(docs_spans, NEURAL_HEAD, weights_path)
 
 
-def score_det_cnn(scans: DataFrame, weights_path: str | None = None,
-                  _mat_counter=None) -> DataFrame:
+def score_det_cnn(scans: DataFrame,
+                  weights_path: str | None = None) -> DataFrame:
     """Scan-page image (PNG/BMP/PNM, ``core.codecs``) → text boxes
     through the REAL forward pass: ``core.nn.det_forward`` (conv →
     relu → max-pool dilation → conv → sigmoid) feeding the same
@@ -728,11 +724,11 @@ def score_det_cnn(scans: DataFrame, weights_path: str | None = None,
     (``model/ocr_pdf/base_infer_task.py:317-381``). Defaults to the
     hand-constructed ``core.nn.DET_CNN`` tensors (the swap point for a
     trained checkpoint)."""
-    return run_head(scans, DET_CNN_HEAD, weights_path, _mat_counter)
+    return run_head(scans, DET_CNN_HEAD, weights_path)
 
 
-def score_ocr_cnn(scans: DataFrame, weights_path: str | None = None,
-                  _mat_counter=None) -> DataFrame:
+def score_ocr_cnn(scans: DataFrame,
+                  weights_path: str | None = None) -> DataFrame:
     """The complete imaged-page OCR path: pixel decode → ruling
     extraction → det-CNN forward → DBNet postprocess → rec-CNN forward
     + CTC decode → lattice grid / logical-cell merge / text placement
@@ -742,23 +738,23 @@ def score_ocr_cnn(scans: DataFrame, weights_path: str | None = None,
     ``table/table_extractor_lattice.py``). ``weights_path``: a
     ``save_weights_dict`` artifact with ``det_*`` and ``rec_*``
     tensors."""
-    return run_head(scans, OCR_CNN_HEAD, weights_path, _mat_counter)
+    return run_head(scans, OCR_CNN_HEAD, weights_path)
 
 
-def score_layout_cnn(scans: DataFrame, weights_path: str | None = None,
-                     _mat_counter=None) -> DataFrame:
+def score_layout_cnn(scans: DataFrame,
+                     weights_path: str | None = None) -> DataFrame:
     """Layout analysis from pixels (M2's PicoDet/DocXLayout half):
     coarse-ink region proposals, each classified table / text / figure
     from conv-derived features through a linear head
     (``core.ocrpage.layout_regions``); ``layout_*`` tensors ride the
     same artifact as the ``det_*`` ones."""
-    return run_head(scans, LAYOUT_CNN_HEAD, weights_path, _mat_counter)
+    return run_head(scans, LAYOUT_CNN_HEAD, weights_path)
 
 
-def score_orient_cnn(scans: DataFrame, weights_path: str | None = None,
-                     _mat_counter=None) -> DataFrame:
+def score_orient_cnn(scans: DataFrame,
+                     weights_path: str | None = None) -> DataFrame:
     """Image-based page orientation (M1's PULC text-image-orientation
     model): try all four 90° corrections and score each by how much
     text the det+rec forwards decode (``core.ocrpage.orient_scan_page``);
     the argmax is the predicted counter-clockwise correction."""
-    return run_head(scans, ORIENT_CNN_HEAD, weights_path, _mat_counter)
+    return run_head(scans, ORIENT_CNN_HEAD, weights_path)

@@ -137,8 +137,7 @@ def extract_documents(docs: DataFrame, metrics=None,
     return reassemble(_fragments(docs, metrics, flavor))
 
 
-def extract_fragments(docs: DataFrame, metrics=None,
-                      flavor: str = "auto") -> DataFrame:
+def extract_fragments(docs: DataFrame) -> DataFrame:
     """The pre-reassembly fragment stream, sentinels dropped:
     (doc_id, offset, frag_idx, kind, text, media_ref, accuracy,
     whitespace) where ``offset`` is the SOURCE span offset.
@@ -151,7 +150,7 @@ def extract_fragments(docs: DataFrame, metrics=None,
     this instead and skip the reassembly shuffle + per-doc array
     build entirely — at any scale that is one full pass of the output
     strings over the network saved."""
-    return (_fragments(docs, metrics, flavor)
+    return (_fragments(docs, None, "auto")
             .filter(F.col("kind") != "__empty__"))
 
 

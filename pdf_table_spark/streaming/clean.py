@@ -31,24 +31,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops import grams
-from ..ops.textfilters import _redact_col, _with_c4, _with_gopher
+from ..ops.textfilters import (C4_MIN_SENTENCES, GOPHER_MIN_STOPWORD_HITS,
+                               GOPHER_MIN_WORDS, _redact_col, _with_c4,
+                               _with_gopher)
 
 DOCS_SCHEMA = "doc_id string, text string, ingest_ts timestamp"
+BENCH_NGRAM = 13  # the GPT-3 decontamination gram length
+DEDUP_HORIZON = "1 hour"  # how long a content key stays in dedup state
 
 
 def clean_docs_stream(docs: DataFrame,
-                      ts_col: str = "ingest_ts",
-                      dedup_horizon: str = "1 hour",
-                      min_words: int = 50,
-                      max_words: int = 100_000,
-                      min_sentences: int = 3,
-                      min_stopword_hits: int = 2,
-                      line_sep: str = "\\n",
-                      benchmark: DataFrame | None = None,
-                      ngram_n: int = 13) -> DataFrame:
-    """Transform a streaming ``documents(doc_id, text, <ts_col>)``
+                      min_words: int = GOPHER_MIN_WORDS,
+                      min_sentences: int = C4_MIN_SENTENCES,
+                      min_stopword_hits: int = GOPHER_MIN_STOPWORD_HITS,
+                      benchmark: DataFrame | None = None) -> DataFrame:
+    """Transform a streaming ``documents(doc_id, text, ingest_ts)``
     DataFrame into the cleaned stream: one row per first-seen doc with
-    (doc_id, <ts_col>, stage, kept, clean_fp). Pure transformation —
+    (doc_id, ingest_ts, stage, kept, clean_fp). Pure transformation —
     attach any source/sink; append output mode.
 
     ``benchmark`` (a STATIC DataFrame of eval docs) adds the GPT-3
@@ -58,15 +57,15 @@ def clean_docs_stream(docs: DataFrame,
     no streaming state beyond the dedup horizon).
     """
     deduped = (
-        docs.select("doc_id", ts_col, "text",
+        docs.select("doc_id", "ingest_ts", "text",
                     F.md5("text").alias("fp"))
-        .withWatermark(ts_col, dedup_horizon)
+        .withWatermark("ingest_ts", DEDUP_HORIZON)
         .dropDuplicatesWithinWatermark(["fp"])
     )
-    staged = _with_gopher(
-        deduped, min_words, max_words, 3.0, 10.0, 0.1, 0.9, 0.3, 0.8,
-        min_stopword_hits, line_sep)
-    staged = _with_c4(staged, 5, min_sentences, line_sep)
+    staged = _with_c4(
+        _with_gopher(deduped, min_words,
+                     min_stopword_hits=min_stopword_hits),
+        min_sentences=min_sentences)
     if benchmark is not None:
         # a stream-side explode+groupBy would be a STATEFUL streaming
         # aggregation (wrong for append mode); instead the bench gram
@@ -79,7 +78,7 @@ def clean_docs_stream(docs: DataFrame,
 
         from ..ops.textfilters import _ngram_hash_rows
         bench_hashes = {r.g for r in _ngram_hash_rows(benchmark,
-                                                      ngram_n)
+                                                      BENCH_NGRAM)
                         .select("g").distinct().collect()}
         bc = docs.sparkSession.sparkContext.broadcast(bench_hashes)
 
@@ -92,7 +91,7 @@ def clean_docs_stream(docs: DataFrame,
 
         # the token array is its own column: inlined into the window
         # lambda it would be re-split at every n-gram position
-        ngrams = grams.windows("_tk", ngram_n,
+        ngrams = grams.windows("_tk", BENCH_NGRAM,
                                fn=grams.hash_sql("md5", form="hex"))
         staged = (staged
                   .withColumn("_tk", F.expr(grams.tokens()))
@@ -108,7 +107,7 @@ def clean_docs_stream(docs: DataFrame,
         .otherwise(F.lit("kept"))
     )
     return staged.select(
-        "doc_id", ts_col,
+        "doc_id", "ingest_ts",
         stage.alias("stage"),
         (stage == "kept").alias("kept"),
         F.when(stage == "kept",
@@ -119,10 +118,9 @@ def clean_docs_stream(docs: DataFrame,
 
 def clean_stream(spark: SparkSession, input_dir: str, output_dir: str,
                  checkpoint_dir: str,
-                 dedup_horizon: str = "1 hour",
-                 min_words: int = 50,
-                 min_sentences: int = 3,
-                 min_stopword_hits: int = 2,
+                 min_words: int = GOPHER_MIN_WORDS,
+                 min_sentences: int = C4_MIN_SENTENCES,
+                 min_stopword_hits: int = GOPHER_MIN_STOPWORD_HITS,
                  benchmark: DataFrame | None = None) -> None:
     """File-source runner: discover new corpus parquet files, push them
     through the streaming gate, append survivors to ``output_dir``.
@@ -133,8 +131,7 @@ def clean_stream(spark: SparkSession, input_dir: str, output_dir: str,
     os.makedirs(checkpoint_dir, exist_ok=True)
     stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
     cleaned = clean_docs_stream(
-        stream, dedup_horizon=dedup_horizon, min_words=min_words,
-        min_sentences=min_sentences,
+        stream, min_words=min_words, min_sentences=min_sentences,
         min_stopword_hits=min_stopword_hits, benchmark=benchmark)
     q = (cleaned.writeStream.outputMode("append")
          .format("parquet").option("path", output_dir)

@@ -60,18 +60,17 @@ class _utc_session_tz:
 
 
 def windowed_ingest_stats(spark: SparkSession, input_dir: str,
-                          output_dir: str, checkpoint_dir: str,
-                          window: str = "10 minutes",
-                          watermark: str = "10 minutes") -> None:
-    """Tumbling-window ingest statistics with late-data handling:
-    windows finalize once the watermark passes their end; rows arriving
-    later than the watermark never mutate a finalized window."""
+                          output_dir: str, checkpoint_dir: str) -> None:
+    """Tumbling 10-minute-window ingest statistics with late-data
+    handling: windows finalize once the 10-minute watermark passes
+    their end; rows arriving later than the watermark never mutate a
+    finalized window."""
     os.makedirs(checkpoint_dir, exist_ok=True)
     with _utc_session_tz(spark):
         stream = spark.readStream.schema(INGEST_SCHEMA).parquet(input_dir)
         agg = (
-            stream.withWatermark("event_ts", watermark)
-            .groupBy(F.window("event_ts", window))
+            stream.withWatermark("event_ts", "10 minutes")
+            .groupBy(F.window("event_ts", "10 minutes"))
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_spans").alias("total_spans"))
             .select(F.col("window.start").alias("window_start"),

@@ -134,6 +134,18 @@ def test_resample_mixture_rejects_negative(spark):
         resample_mixture(docs, {"a": -1.0})
 
 
+def test_resample_mixture_rejects_non_finite(spark):
+    """NaN and infinite weights, per source or as the default, fail on
+    the driver instead of reaching the weight map as bare names."""
+    docs = spark.createDataFrame([(1, "x", "a")],
+                                 "doc_id long, text string, source string")
+    for w in (float("nan"), float("inf")):
+        with pytest.raises(ValueError):
+            resample_mixture(docs, {"a": w})
+        with pytest.raises(ValueError):
+            resample_mixture(docs, {"a": 1.0}, default=w)
+
+
 def test_write_shards_balanced_and_idempotent(spark, tmp_path):
     rows = [(i, f"doc {i}") for i in range(1000)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")

@@ -413,3 +413,72 @@ def test_np_empty_query_set_gives_empty_frame(spark, zero_norm):
     assert cosine_topk(zero_norm, query_ids=[99]).collect() == []
     assert cosine_topk_np(zero_norm, query_ids=[99]).collect() == []
     assert ann_topk_ivf_np(zero_norm, cents, query_ids=[99]).collect() == []
+
+
+def _nan_table(spark):
+    """The 42 vectors of ``test_zero_norm_vectors_match_duckdb_twins``
+    (zero vectors 3 and 25, near-dup pair 30/31) with one NaN component
+    in vec_id 5, a default query and an IVF seed centroid."""
+    rng = np.random.RandomState(11)
+    arr = rng.randn(42, DIM).astype(np.float32)
+    arr[3] = 0.0
+    arr[25] = 0.0
+    arr[31] = arr[30] + np.float32(0.01) * rng.randn(DIM).astype(np.float32)
+    arr[5, 7] = np.nan
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(arr)]
+    return arr, spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>")
+
+
+def _reprs(rows):
+    """Rows as sorted tuples of ``repr``s: NaN equals NaN only so."""
+    return sorted(tuple(repr(x) for x in r) for r in rows)
+
+
+def test_nan_component_matches_duckdb_twins(spark):
+    """A NaN embedding component gives NaN cosines in every arm, as in
+    the DuckDB twins, and ranks first; the IVF arm renders the NaN seed
+    centroid as a SQL literal instead of failing the job."""
+    import duckdb
+    import pyarrow as pa
+
+    from pdf_table_spark.ops.similarity import (ann_topk_ivf, ann_topk_lsh,
+                                                cosine_topk,
+                                                embedding_neardup_pairs)
+    from pdf_table_spark.queries.duplicates import ann_topk_sql, neardup_sql
+
+    arr, df = _nan_table(spark)
+    with duckdb.connect() as con:
+        con.register("embeddings", pa.table({
+            "vec_id": pa.array(range(len(arr)), pa.int64()),
+            "embedding": pa.array([list(v) for v in arr],
+                                  pa.list_(pa.float32()))}))
+        twins = con.execute(ann_topk_sql()).fetchall()
+        neardup_twin = con.execute(neardup_sql()).fetchall()
+    for method, topk in (("brute", cosine_topk), ("lsh", ann_topk_lsh),
+                         ("ivf", ann_topk_ivf)):
+        got = topk(df, k=5).collect()
+        assert _reprs(got) == _reprs(
+            r[1:] for r in twins if r[0] == method), method
+    first = [r for r in cosine_topk(df, k=5).collect()
+             if r.query_id == 0 and r.rank == 1]
+    assert _reprs(first) == _reprs([(0, 5, float("nan"), 1)])
+    assert _reprs(embedding_neardup_pairs(df).collect()) == \
+        _reprs(neardup_twin)
+
+
+def test_nan_component_np_matches_interpreted(spark):
+    """The numpy half ranks a NaN pair as Spark orders NaN, above every
+    cosine in neighbor-id order, and returns it as NaN: both searches
+    equal ``cosine_topk`` row for row, NULL (zero-norm) pairs included."""
+    from pdf_table_spark.ops.similarity import (ann_topk_ivf_np,
+                                                cosine_topk, cosine_topk_np,
+                                                ivf_centroids)
+    _, df = _nan_table(spark)
+    cents = ivf_centroids(df, 4)
+    assert all(np.isfinite(c).all() for _, c in cents)
+    want = _reprs(cosine_topk(df, k=8).collect())
+    assert ("5", "0", "nan", "1") in want
+    assert _reprs(cosine_topk_np(df, k=8).collect()) == want
+    assert _reprs(ann_topk_ivf_np(df, cents, k=8,
+                                  n_probe=len(cents)).collect()) == want
